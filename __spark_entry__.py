@@ -656,7 +656,7 @@ def _events_images_fast(spark, sf_dir):
     Two results-identical optimizations (guide §2.3/§2.5):
     - ``image_id`` stays the int64 ``event_id``: the encode kernel
       parses the ``img-%012d`` string right back to int64
-      (``_extract_arrays`` str.slice(4).astype), so the string build,
+      (``_extract_arrays_arrow`` utf8 slice + cast), so the string build,
       its ~20 shuffle bytes/row, and the 3M-object Arrow transfer were
       pure overhead. Decoded ``feature_id`` is the same int64 either
       way, and the (z, x, y, image_id) encode sort orders int64 ids
@@ -695,7 +695,7 @@ _GATE_CAP = 1 << 41
 
 def q_tile_encode(spark, sf_dir):
     """Flagship: events-derived points -> COVT tile payloads at z2/z4/z6
-    (single hash(z,x,y) exchange + sorted-stream mapInPandas encode; §3.1
+    (single hash(z,x,y) exchange + sorted-stream mapInArrow encode; §3.1
     lifecycle) -> decoded back to the exploded feature table. The DuckDB
     twin computes the same feature table directly from events, so a value
     hash match proves the engine's encode->decode roundtrip is lossless

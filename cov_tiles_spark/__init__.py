@@ -11,12 +11,14 @@ A from-scratch re-expression of the capabilities of springmeyer/cov-tiles
                  point-in-polygon and kNN spatial joins.
 - ``operators``: large-scale training-data pipeline operators (dedup,
                  similarity search, text analysis, multimodal columns).
-- ``pipeline`` : tile materialization (groupBy(z,x,y).applyInPandas encode),
-                 salting for hot low-zoom tiles, lineage/checkpoint tables.
+- ``pipeline`` : tile materialization (hash(z,x,y) exchange + sorted-stream
+                 ``mapInArrow`` encode with a per-tile cap), salting for hot
+                 low-zoom tiles, lineage/checkpoint tables.
 - ``io``       : deterministic synthetic corpora (images+captions) and
                  IcebergLite (partitioned parquet + manifest) sinks.
 
-All heavy kernels are vectorized numpy inside Arrow-batched pandas UDFs; the
+All heavy kernels are vectorized numpy inside Arrow-batched Python UDFs
+(``mapInArrow`` on the tile path, pandas UDFs in the operators); the
 relational plan is plain DataFrame API so Catalyst handles pushdown/pruning.
 """
 

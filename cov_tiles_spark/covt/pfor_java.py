@@ -59,15 +59,6 @@ PAGE = 65536
 
 # ---------------------------------------------------------------- helpers
 
-def _bit_widths(u: np.ndarray) -> np.ndarray:
-    """Per-value bit width (Util.bits: 32 - numberOfLeadingZeros)."""
-    w = np.zeros(len(u), dtype=np.int64)
-    nz = u > 0
-    if nz.any():
-        w[nz] = np.floor(np.log2(u[nz].astype(np.float64))).astype(np.int64) + 1
-    return w
-
-
 def _pack_lsb(vals: np.ndarray, width: int) -> np.ndarray:
     """Pack values LSB-first into consecutive 32-bit words.
 

@@ -22,7 +22,6 @@ from __future__ import annotations
 import numpy as np
 
 from cov_tiles_spark.covt.varint import (
-    decode_varint,
     decode_varints,
     encode_varints,
     encode_varints_with_ends,

@@ -139,19 +139,3 @@ def hilbert_decode(code: np.ndarray, extent: int, bits: int) -> tuple[np.ndarray
     shift = np.int64(extent // 2)
     x, y = hilbert_d2xy(bits, code)
     return x.astype(np.int64) - shift, y.astype(np.int64) - shift
-
-
-def zorder_10bit(x_zz: np.ndarray, y_zz: np.ndarray) -> np.ndarray:
-    """10-bit normalized z-order of zigzag-coded coords.
-
-    Mirrors `spaceFillingCurveUtils.ts:4-23`: zigzag-decode, scale to a
-    1024 grid by adding 512 (tile coords are ~[-512, 511] at that scale),
-    then interleave.
-    """
-    from cov_tiles_spark.covt.varint import zigzag_decode
-
-    x = zigzag_decode(np.asarray(x_zz)) + 512
-    y = zigzag_decode(np.asarray(y_zz)) + 512
-    return morton_interleave(
-        x.astype(np.uint64) & np.uint64(0x3FF), y.astype(np.uint64) & np.uint64(0x3FF)
-    )

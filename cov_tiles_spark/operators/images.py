@@ -136,10 +136,6 @@ def phash64(pixels: np.ndarray) -> int:
     return int(np.frombuffer(packed.tobytes(), dtype="<u8")[0].view(np.int64))
 
 
-def phash_batch(pixel_list: list[np.ndarray]) -> np.ndarray:
-    return np.array([phash64(p) for p in pixel_list], dtype=np.int64)
-
-
 def hamming64(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """Vectorized Hamming distance between int64 hash arrays."""
     x = (np.asarray(a).astype(np.int64).view(np.uint64)

@@ -29,8 +29,6 @@ from the raw table in pure SQL):
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 

@@ -105,18 +105,6 @@ def quality_score(text: Column) -> Column:
     return F.round(len_band + wl_band + punct_band, 4)
 
 
-def text_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Per-document analysis row: tokens, chars, lang guess, quality."""
-    t = F.col(text_col)
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.length(t).alias("n_chars_computed"),
-        token_count(t).alias("n_tokens"),
-        lang_id(t).alias("lang_pred"),
-        quality_score(t).alias("quality"),
-    )
-
-
 @F.pandas_udf(LongType())
 def fingerprint64(texts: pd.Series) -> pd.Series:
     """Rolling polynomial hash (mod 2^64) of lowercased alnum text — a

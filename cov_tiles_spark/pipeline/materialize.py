@@ -4,18 +4,25 @@ The Spark lifecycle equivalent of the reference's per-tile converter loop
 (`CovtConverter.java:103-175`, traced in SURVEY.md §3.1):
 
     records → withColumn(tile ids)              narrow, codegen
+            → mapInArrow(pre-cap)               narrow per-partition
+                                                top-cap superset (only
+                                                when the cap can bind)
             → repartition(hash(z,x,y))          the ONLY wide exchange
             → sortWithinPartitions(keys, _sk)   sample-ordered tiles
-            → mapInPandas(streaming encode)     inline per-tile cap +
+            → mapInArrow(streaming encode)      inline per-tile cap +
                                                 vectorized codec work
             → (z, x, y, payload, stats)
+
+Every Python stage takes and returns Arrow record batches; no stage
+converts to pandas.
 
 Scale design (SURVEY.md §4.2):
 - **Bounded groups**: low-zoom tiles are inherently hot (z2 = 16 tiles
   worldwide). Groups are bounded *by construction* with a deterministic
-  per-tile feature cap (hash-ranked uniform sample, ``cap_tile_features``)
-  — real tile pipelines cap per-tile features at low zoom for the same
-  reason.
+  per-tile feature cap: the first ``max_features_per_tile`` rows of a
+  tile in ``(xxhash64(image_id, z), image_id)`` order, a hash-ranked
+  uniform sample — real tile pipelines cap per-tile features at low
+  zoom for the same reason.
 - **AQE skew split** handles residual partition skew in the shuffle
   (spark.sql.adaptive.skewJoin/coalescePartitions enabled in session.py).
 - **Map-side partial agg**: raster-grid aggregates use built-in
@@ -29,8 +36,7 @@ Scale design (SURVEY.md §4.2):
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cov_tiles_spark.covt.decoder import GeometryColumn, decode_covt
@@ -73,27 +79,6 @@ def assign_tiles(
     return images.withColumn("tile", F.explode(F.array(*per_zoom))).select(
         "*", "tile.*"
     ).drop("tile")
-
-
-def cap_tile_features(assigned: DataFrame, max_features: int) -> DataFrame:
-    """Window-based per-tile cap (standalone operator).
-
-    Rank by ``xxhash64(image_id, z)`` (a deterministic uniform sample —
-    spatially unbiased, unlike a Hilbert-prefix cut) with image_id
-    tie-break; keep the first ``max_features``. JVM-only expressions.
-
-    ``materialize_tiles`` applies the *same selection* inline in its
-    sorted encode stream (zero extra exchange); this window form remains
-    for capping ahead of other consumers.
-    """
-    w = Window.partitionBy("z", "x", "y").orderBy(
-        F.xxhash64("image_id", F.col("z")), F.col("image_id")
-    )
-    return (
-        assigned.withColumn("_rank", F.row_number().over(w))
-        .filter(F.col("_rank") <= max_features)
-        .drop("_rank")
-    )
 
 
 def _encode_tile_rows(
@@ -180,34 +165,13 @@ _STREAM_COLS = ("z", "x", "y", "image_id", "local_x", "local_y",
                 "caption", "fmt", "w", "h", "phash")
 
 
-def _extract_arrays(pdf: pd.DataFrame) -> dict[str, np.ndarray]:
-    ids = (
-        pdf["image_id"].str.slice(4).astype(np.int64).to_numpy()
-        if pdf["image_id"].dtype == object
-        else pdf["image_id"].to_numpy(np.int64)
-    )
-    return {
-        "z": pdf["z"].to_numpy(np.int64),
-        "x": pdf["x"].to_numpy(np.int64),
-        "y": pdf["y"].to_numpy(np.int64),
-        "ids": ids,
-        "local_x": pdf["local_x"].to_numpy(np.int64),
-        "local_y": pdf["local_y"].to_numpy(np.int64),
-        "caption": pdf["caption"].to_numpy(dtype=object),
-        "fmt": pdf["fmt"].to_numpy(dtype=object),
-        "w": pdf["w"].to_numpy(np.int64),
-        "h": pdf["h"].to_numpy(np.int64),
-        "phash": pdf["phash"].to_numpy(np.int64),
-    }
-
-
 def _concat_arrays(a: dict, b: dict) -> dict:
     return {k: np.concatenate([a[k], b[k]]) for k in a}
 
 
 def _extract_arrays_arrow(batch) -> dict[str, np.ndarray]:
-    """Arrow-native twin of :func:`_extract_arrays` (guide §4.1/§4.2):
-    taking the record batch directly skips the Arrow→pandas conversion,
+    """Record batch → the encode kernel's numpy columns (guide §4.1/§4.2):
+    taking the record batch directly skips an Arrow→pandas conversion,
     whose per-row Python string objects (image_id/caption/fmt over 3M
     rows) were ~2/3 of the encode stage's wall at sf1. Strings are
     dictionary-encoded in C and materialized as an object GATHER over
@@ -390,7 +354,7 @@ def _make_encode_stream(
     return encode_stream
 
 
-def _make_precap_stream(cap: int, schema_cols: list[str]):
+def _make_precap_stream(cap: int):
     """Narrow per-input-partition pre-cap BEFORE the encode exchange.
 
     Emits, per (z, x, y) tile, a small superset of the ``cap`` smallest
@@ -413,16 +377,18 @@ def _make_precap_stream(cap: int, schema_cols: list[str]):
     """
 
     def precap(batches):
+        import pyarrow as pa
+
         counts: dict[int, int] = {}       # tile -> rows kept so far
         tracked: dict[int, np.ndarray] = {}  # saturated tile -> cap smallest _sk
-        for pdf in batches:
-            n = len(pdf)
+        for rb in batches:
+            n = rb.num_rows
             if n == 0:
                 continue
-            z = pdf["z"].to_numpy(np.int64)
-            x = pdf["x"].to_numpy(np.int64)
-            y = pdf["y"].to_numpy(np.int64)
-            sk = pdf["_sk"].to_numpy(np.int64)
+            z, x, y, sk = (
+                rb.column(c).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+                for c in ("z", "x", "y", "_sk")
+            )
             tile = (z << 52) | (x << 26) | y
             order = np.lexsort((sk, tile))
             tile_s = tile[order]
@@ -471,23 +437,13 @@ def _make_precap_stream(cap: int, schema_cols: list[str]):
                     s, e = int(starts[gi]), int(ends[gi])
                     tracked[t] = np.sort(sk_s[s:e][keep[s:e]])[:cap]
             if keep.all():
-                yield pdf
-                continue
-            out_mask = np.zeros(n, dtype=bool)
-            out_mask[order] = keep
-            kept_pdf = pdf.loc[out_mask]
-            if len(kept_pdf):
-                yield kept_pdf[schema_cols]
+                yield rb
+            elif keep.any():
+                out_mask = np.zeros(n, dtype=bool)
+                out_mask[order] = keep
+                yield rb.filter(pa.array(out_mask))
 
     return precap
-
-
-def _encode_group(pdf: pd.DataFrame, with_mvt_baseline: bool = True) -> pd.DataFrame:
-    """Grouped-map compatibility wrapper around the array kernel."""
-    arrs = _extract_arrays(pdf)
-    out: list[dict] = []
-    _encode_tiles_in(arrs, len(pdf), with_mvt_baseline, out)
-    return pd.DataFrame(out)
 
 
 def materialize_tiles(
@@ -515,7 +471,7 @@ def materialize_tiles(
     #   times; range partitioning would balance rows exactly but its
     #   sampling pass recomputes the whole upstream — a net loss).
     #   Identical keys stay in one partition, so every tile is encoded
-    #   whole; AQE skew-split cannot help a pandas stage, granularity can.
+    #   whole; AQE skew-split cannot help a Python stage, granularity can.
     # - explicit partition count pins parallelism: the encode stage is
     #   Python-CPU-bound, not bytes-bound, so AQE's byte-based coalescing
     #   must not shrink it.
@@ -575,14 +531,9 @@ def encode_assigned(
         sample_key = F.xxhash64("image_id", F.col("z"))
     staged = assigned.withColumn("_sk", sample_key)
     if pre_cap:
-        cols = [*_STREAM_COLS, "_sk"]
-        staged = staged.select(*cols)
-        schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in staged.schema.fields
-        )
-        staged = staged.mapInPandas(
-            _make_precap_stream(max_features_per_tile, cols), schema=schema
+        staged = staged.select(*_STREAM_COLS, "_sk")
+        staged = staged.mapInArrow(
+            _make_precap_stream(max_features_per_tile), schema=staged.schema
         )
     part = staged.repartition(num_parts, "z", "x", "y").sortWithinPartitions(
         "z", "x", "y", "_sk", "image_id"
@@ -701,42 +652,31 @@ def decode_tiles_via_mvt(payloads: DataFrame) -> DataFrame:
     and the resulting MVT decoded — a full-pipeline drive of the export
     direction whose output must equal :func:`decode_tiles` row-for-row
     (the driver gate checks it against the same oracle)."""
+    fields = [f.split() for f in DECODE_SCHEMA.split(", ")]
+    names = [name for name, _ in fields]
+    types = [{"int": "int32", "long": "int64", "string": "string"}[t] for _, t in fields]
+    props = (*_STR_PROPS, *_INT_PROPS)
 
     def _decode(batches):
+        import pyarrow as pa
+
         from cov_tiles_spark.covt.mvt import decode_mvt
         from cov_tiles_spark.pipeline.transcode import covt_to_mvt
 
-        for pdf in batches:
-            outs = []
-            for _, row in pdf.iterrows():
-                mvt = covt_to_mvt(bytes(row["payload"]))
-                (lay,) = decode_mvt(mvt)
-                n = len(lay.features)
-                rec = {
-                    "z": np.full(n, row["z"], np.int32),
-                    "x": np.full(n, row["x"], np.int32),
-                    "y": np.full(n, row["y"], np.int32),
-                    "feature_id": np.array(
-                        [f.id for f in lay.features], np.int64
-                    ),
-                    "local_x": np.array(
-                        [f.geometry[0][0][0] for f in lay.features], np.int32
-                    ),
-                    "local_y": np.array(
-                        [f.geometry[0][0][1] for f in lay.features], np.int32
-                    ),
-                }
-                for name in ("caption", "fmt"):
-                    rec[name] = np.array(
-                        [f.properties[name] for f in lay.features], dtype=object
-                    )
-                for name in ("w", "h", "phash"):
-                    rec[name] = np.array(
-                        [f.properties[name] for f in lay.features], np.int64
-                    )
-                outs.append(pd.DataFrame(rec))
-            yield pd.concat(outs) if outs else pd.DataFrame(
-                columns=[f.split()[0] for f in DECODE_SCHEMA.split(", ")]
-            )
+        for rb in batches:
+            rows = []
+            for z, x, y, payload in zip(
+                *(rb.column(c).to_pylist() for c in ("z", "x", "y", "payload"))
+            ):
+                (lay,) = decode_mvt(covt_to_mvt(payload))
+                rows += [
+                    (z, x, y, f.id, *f.geometry[0][0], *(f.properties[p] for p in props))
+                    for f in lay.features
+                ]
+            if rows:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(col, type=t) for col, t in zip(zip(*rows), types)],
+                    names=names,
+                )
 
-    return payloads.mapInPandas(_decode, schema=DECODE_SCHEMA)
+    return payloads.mapInArrow(_decode, schema=DECODE_SCHEMA)

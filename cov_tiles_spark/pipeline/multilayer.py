@@ -8,7 +8,6 @@ stage is a cheap equi-join + scalar concat, not a decode/re-encode.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 

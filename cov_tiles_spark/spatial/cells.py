@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-from cov_tiles_spark.covt.sfc import hilbert_xy2d, morton_interleave
+from cov_tiles_spark.covt.sfc import hilbert_xy2d
 from cov_tiles_spark.spatial.tiling import mercator_np
 
 S2_BITS = 13
@@ -65,27 +65,6 @@ def h3r9_cell_np(
     return (qi << 25) | ri
 
 
-def hex_neighbors_np(cell: np.ndarray) -> np.ndarray:
-    """The 6 axial neighbors + self for each cell id -> (n, 7) int64."""
-    c = np.asarray(cell, dtype=np.int64)
-    q = (c >> 25) - _HEX_OFFSET
-    r = (c & ((1 << 25) - 1)) - _HEX_OFFSET
-    dq = np.array([0, 1, 1, 0, -1, -1, 0], dtype=np.int64)
-    dr = np.array([0, 0, -1, -1, 0, 1, 1], dtype=np.int64)
-    nq = q[:, None] + dq[None, :] + _HEX_OFFSET
-    nr = r[:, None] + dr[None, :] + _HEX_OFFSET
-    return (nq << 25) | nr
-
-
-def morton_cell_np(lon: np.ndarray, lat: np.ndarray, bits: int = 16) -> np.ndarray:
-    """Morton (z-order) cell id — SQL-expressible twin of the Hilbert cell."""
-    mx, my = mercator_np(lon, lat)
-    n = 1 << bits
-    gx = np.clip((mx * n).astype(np.int64), 0, n - 1).astype(np.uint64)
-    gy = np.clip((my * n).astype(np.int64), 0, n - 1).astype(np.uint64)
-    return morton_interleave(gx, gy).astype(np.int64)
-
-
 # ---------- pandas UDFs (Arrow-batched; register once per session) ----------
 
 @F.pandas_udf(LongType())
@@ -96,11 +75,6 @@ def cell_s2l13(lon: pd.Series, lat: pd.Series) -> pd.Series:
 @F.pandas_udf(LongType())
 def cell_h3r9(lon: pd.Series, lat: pd.Series) -> pd.Series:
     return pd.Series(h3r9_cell_np(lon.to_numpy(), lat.to_numpy()))
-
-
-@F.pandas_udf(LongType())
-def cell_morton16(lon: pd.Series, lat: pd.Series) -> pd.Series:
-    return pd.Series(morton_cell_np(lon.to_numpy(), lat.to_numpy()))
 
 
 def cell_stats_rollup(

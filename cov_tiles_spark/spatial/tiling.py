@@ -68,16 +68,6 @@ def tile_local_y(lat: Column, z: int, y: Column, extent: int = DEFAULT_EXTENT) -
     return F.floor((mercator_y(lat) * n - y.cast("double")) * F.lit(float(extent))).cast("int")
 
 
-def with_tile(df, lon_col: str, lat_col: str, z: int, extent: int = DEFAULT_EXTENT):
-    """Append z/x/y/local_x/local_y columns for one zoom level (narrow op)."""
-    lon, lat = F.col(lon_col), F.col(lat_col)
-    df = df.withColumn("z", F.lit(z))
-    df = df.withColumn("x", tile_x(lon, z)).withColumn("y", tile_y(lat, z))
-    df = df.withColumn("local_x", tile_local_x(lon, z, F.col("x"), extent))
-    df = df.withColumn("local_y", tile_local_y(lat, z, F.col("y"), extent))
-    return df
-
-
 # ---------- numpy twin (UDF kernels + pytest oracle) ----------
 
 def mercator_np(lon: np.ndarray, lat: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -87,16 +77,6 @@ def mercator_np(lon: np.ndarray, lat: np.ndarray) -> tuple[np.ndarray, np.ndarra
     rad = np.radians(lat)
     my = 0.5 - np.log(np.tan(math.pi / 4.0 + rad / 2.0)) / (2.0 * math.pi)
     return mx, my
-
-
-def tile_np(
-    lon: np.ndarray, lat: np.ndarray, z: int
-) -> tuple[np.ndarray, np.ndarray]:
-    mx, my = mercator_np(lon, lat)
-    n = 1 << z
-    tx = np.clip(np.floor(mx * n), 0, n - 1).astype(np.int32)
-    ty = np.clip(np.floor(my * n), 0, n - 1).astype(np.int32)
-    return tx, ty
 
 
 def tile_local_np(
@@ -110,17 +90,3 @@ def tile_local_np(
     lx = np.floor((mx * n - tx) * extent).astype(np.int32)
     ly = np.floor((my * n - ty) * extent).astype(np.int32)
     return tx, ty, lx, ly
-
-
-def tile_bounds_lonlat(z: int, x: int, y: int) -> tuple[float, float, float, float]:
-    """(lon_min, lat_min, lon_max, lat_max) of tile (z, x, y)."""
-    n = 1 << z
-    lon_min = x / n * 360.0 - 180.0
-    lon_max = (x + 1) / n * 360.0 - 180.0
-
-    def lat_of(my: float) -> float:
-        return math.degrees(math.atan(math.sinh(math.pi * (1 - 2 * my))))
-
-    lat_max = lat_of(y / n)
-    lat_min = lat_of((y + 1) / n)
-    return lon_min, lat_min, lon_max, lat_max

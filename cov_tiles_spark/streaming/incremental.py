@@ -24,7 +24,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from cov_tiles_spark.covt.decoder import GeometryColumn, decode_covt
 from cov_tiles_spark.covt.encoder import LayerInput, PropertyInput, encode_tile

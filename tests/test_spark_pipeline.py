@@ -137,6 +137,39 @@ def test_cap_bounds_groups(spark, corpus):
     assert mx <= 50
 
 
+def test_cap_selects_the_window_subset(spark, corpus):
+    """With a binding cap, the decoded features are exactly each tile's
+    first ``cap`` rows under ``row_number()`` over (z, x, y) ordered by
+    ``(xxhash64(image_id, z), image_id)`` — the windowed reference form
+    of the cap that the pre-cap and the inline stream cap reproduce
+    without a second exchange. String ids; 8 input partitions so the
+    pre-cap's per-partition supersets must merge correctly."""
+    from pyspark.sql import Window
+
+    cap = 8  # the corpus's sparsest z2 tile holds 9 rows
+    images = corpus.repartition(8)
+    assigned = assign_tiles(images, [2])
+    sizes = assigned.groupBy("z", "x", "y").count().collect()
+    assert len(sizes) > 1 and min(r["count"] for r in sizes) > cap
+
+    w = Window.partitionBy("z", "x", "y").orderBy(
+        F.xxhash64("image_id", F.col("z")), F.col("image_id")
+    )
+    cols = ["z", "x", "y", "feature_id", "local_x", "local_y",
+            "caption", "fmt", "w", "h", "phash"]
+    want = (
+        assigned.withColumn("_rank", F.row_number().over(w))
+        .filter(F.col("_rank") <= cap)
+        .withColumn("feature_id", F.substring("image_id", 5, 12).cast("long"))
+        .select(*cols)
+        .collect()
+    )
+    tiles = materialize_tiles(images, [2], max_features_per_tile=cap)
+    got = decode_tiles(tiles).select(*cols).collect()
+    assert len(want) == cap * len(sizes)
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
 def test_precap_is_byte_identical_to_postcap_only(spark, corpus):
     """The map-side pre-cap (``_make_precap_stream``) must select the
     exact same per-tile subset as the inline post-shuffle cap alone —
@@ -170,34 +203,40 @@ def test_precap_reduces_exchange_rows_on_hot_tile(spark):
     tapping the pre-exchange stage output row count via the Spark UI
     accumulators is flaky in local mode, so instead assert the pre-cap
     stream itself drops rows: feed one partition of 5000 rows for one
-    tile with cap 100 and check the emitted superset is ~cap, not 5000."""
-    import pandas as pd
+    tile with cap 100 and check the emitted superset is ~cap, not 5000.
+    A sixth batch ranks wholly after the tracked top-cap, so every row
+    of it is dropped — and no zero-row batch may be emitted for it."""
+    import pyarrow as pa
 
     from cov_tiles_spark.pipeline.materialize import _make_precap_stream
 
     rng = np.random.default_rng(7)
-    cols = ["z", "x", "y", "image_id", "local_x", "local_y",
-            "caption", "fmt", "w", "h", "phash", "_sk"]
-    batches = []
-    for b in range(5):
-        n = 1000
-        batches.append(pd.DataFrame({
-            "z": np.zeros(n, np.int64), "x": np.zeros(n, np.int64),
-            "y": np.zeros(n, np.int64),
+    n = 1000
+
+    def batch(b, sk):
+        zeros = np.zeros(n, np.int32)
+        return pa.RecordBatch.from_pydict({
+            "z": zeros, "x": zeros, "y": zeros,
             "image_id": [f"img_{b * n + i}" for i in range(n)],
-            "local_x": np.zeros(n, np.int64), "local_y": np.zeros(n, np.int64),
-            "caption": "c", "fmt": "png",
+            "local_x": zeros, "local_y": zeros,
+            "caption": ["c"] * n, "fmt": ["png"] * n,
             "w": np.ones(n, np.int64), "h": np.ones(n, np.int64),
             "phash": np.zeros(n, np.int64),
-            "_sk": rng.integers(-(2**62), 2**62, n),
-        }))
-    out = list(_make_precap_stream(100, cols)(iter(batches)))
-    emitted = sum(len(p) for p in out)
+            "_sk": sk,
+        })
+
+    batches = [batch(b, rng.integers(-(2**62), 2**62, n)) for b in range(5)]
+    batches.append(batch(5, np.arange(n, dtype=np.int64) + 2**62))
+    out = list(_make_precap_stream(100)(iter(batches)))
+    assert all(rb.num_rows > 0 for rb in out)
+    assert all(rb.schema == batches[0].schema for rb in out)
+    emitted = sum(rb.num_rows for rb in out)
     # bound: <= cap survivors per batch once tracking engages; far
-    # below the 5000 input rows, and a superset of the global top-100
+    # below the 6000 input rows, and a superset of the global top-100
     assert emitted < 600
-    all_sk = np.sort(np.concatenate([p["_sk"].to_numpy() for p in out]))
+    all_sk = np.sort(np.concatenate([rb.column("_sk").to_numpy() for rb in out]))
+    assert all_sk[-1] < 2**62  # the sixth batch contributed nothing
     true_top = np.sort(
-        np.concatenate([b["_sk"].to_numpy() for b in batches])
+        np.concatenate([rb.column("_sk").to_numpy() for rb in batches])
     )[:100]
     assert np.isin(true_top, all_sk).all()
