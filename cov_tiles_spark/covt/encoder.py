@@ -17,8 +17,11 @@ the reference TS decoder understand (self-describing stream names,
 - boolean data bitset dense over all features (`:1060-1074`),
 - present streams for all property columns (`README.md:143-145`).
 
-Everything is numpy; per-tile arrays are bounded by the grouping layer
-above (salted applyInPandas groups), so no kernel sees unbounded input.
+Per-tile arrays are bounded by the tile pipeline's per-tile feature cap
+(pipeline/materialize.py), so no kernel sees unbounded input. Most tiles
+hold a few features, so small inputs take Python-level paths where numpy
+or pandas per-call setup would dominate (:func:`first_occurrence_codes`,
+the RLE and varint writers).
 """
 
 from __future__ import annotations
@@ -68,6 +71,29 @@ class PropertyInput:
     data_type: ColumnDataType
     values: np.ndarray
     present: np.ndarray | None = None
+
+
+def first_occurrence_codes(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Dictionary-code ``values`` (object or int64 array) in
+    first-appearance order, as the string dictionary requires
+    (CovtConverter.java:1294-1324): returns int64 ``codes`` and the
+    ``uniques`` array with ``uniques[codes] == values``.
+
+    Same codes as ``pd.factorize(values, use_na_sentinel=False)``; a
+    None unique comes back as None up to 256 values and as NaN above, as
+    pandas returns it. Up to 256 values a Python dict walk is used:
+    pandas pays tens of µs of setup per call, which dominated the
+    few-feature tiles of the write path. Above that its C hash table
+    wins, most on high-cardinality columns.
+    """
+    if len(values) > 256:
+        import pandas as pd
+
+        codes, uniques = pd.factorize(values, use_na_sentinel=False)
+        return codes.astype(np.int64, copy=False), np.asarray(uniques)
+    seen: dict = {}
+    codes = [seen.setdefault(v, len(seen)) for v in values.tolist()]
+    return np.array(codes, dtype=np.int64), np.array(list(seen), dtype=values.dtype)
 
 
 def _varint(v: int) -> bytes:
@@ -316,14 +342,10 @@ def encode_property_column(
     elif prop.data_type == ColumnDataType.STRING:
         vals = np.asarray(prop.values, dtype=object)
         sparse = vals if len(vals) == n_present else vals[present]
-        # first-occurrence dictionary (CovtConverter.java:1294-1324);
-        # pandas.factorize preserves first-occurrence order, vectorized
-        import pandas as _pd
-
-        codes, uniques = _pd.factorize(_pd.Series(sparse), use_na_sentinel=False)
-        idx = codes.astype(np.int64)
+        # first-occurrence dictionary (CovtConverter.java:1294-1324)
+        codes, uniques = first_occurrence_codes(sparse)
         dict_raw = [s.encode("utf-8") for s in uniques]
-        data_bytes = encode_int_rle(idx, signed=False)
+        data_bytes = encode_int_rle(codes, signed=False)
         len_bytes = encode_int_rle(
             np.array([len(r) for r in dict_raw], dtype=np.int64), signed=False
         )

@@ -51,7 +51,13 @@ import numpy as np
 
 from cov_tiles_spark.covt.bitset import pack_bitset, unpack_bitset
 from cov_tiles_spark.covt.decoder import GeometryColumn, LayerData, PropertyColumn
-from cov_tiles_spark.covt.encoder import LayerInput, PropertyInput, _varint, _write_string
+from cov_tiles_spark.covt.encoder import (
+    LayerInput,
+    PropertyInput,
+    _varint,
+    _write_string,
+    first_occurrence_codes,
+)
 from cov_tiles_spark.covt.metadata import (
     ColumnDataType,
     ColumnMetadata,
@@ -657,13 +663,11 @@ def _encode_tile_genb_locked(
                 data_parts.append(data)
                 fields[name] = "Number"
             else:  # STRING dictionary (`:1136-1166`)
-                import pandas as _pd
-
                 vals = np.asarray(prop.values, dtype=object)
                 sparse = vals if len(vals) == n_present else vals[present]
-                codes, uniques = _pd.factorize(_pd.Series(sparse), use_na_sentinel=False)
+                codes, uniques = first_occurrence_codes(sparse)
                 dict_raw = [s.encode("utf-8") for s in uniques]
-                data = encode_int_rle(codes.astype(np.int64), signed=False)
+                data = encode_int_rle(codes, signed=False)
                 len_bytes = encode_int_rle(
                     np.array([len(r) for r in dict_raw], np.int64), signed=False
                 )

@@ -26,6 +26,9 @@ from typing import Any
 
 import numpy as np
 
+from cov_tiles_spark.covt.encoder import first_occurrence_codes
+from cov_tiles_spark.covt.varint import varint_len, varint_len_vec
+
 
 @dataclass
 class MvtFeature:
@@ -372,15 +375,6 @@ def encode_mvt_layers(layers: list[MvtLayer]) -> bytes:
     )
 
 
-def _varint_len_vec(v: np.ndarray) -> np.ndarray:
-    """Byte length of the LEB128 varint for each (non-negative) value."""
-    u = v.astype(np.uint64)
-    ln = np.ones(u.shape, dtype=np.int64)
-    for shift in range(7, 64, 7):
-        ln += (u >= (np.uint64(1) << np.uint64(shift))).astype(np.int64)
-    return ln
-
-
 def mvt_point_layer_size(
     name: str,
     ids: np.ndarray | None,
@@ -400,17 +394,18 @@ def mvt_point_layer_size(
     ACROSS columns — e.g. w == h == 32 share one table entry, exactly as
     the byte-keyed ``value_idx`` dict does), per-feature zigzag deltas
     from (0, 0), and identical protobuf framing. Property columns are
-    int64 arrays or object arrays of str. Verified equal to the real
-    writer in tests/test_transcode.py.
+    int64 arrays or object arrays of str, each dictionary-coded once by
+    :func:`first_occurrence_codes`; varint lengths are one numpy call per
+    array (:func:`varint_len_vec`) or scalar int arithmetic. Verified
+    equal to the real writer in tests/test_transcode.py.
     """
-    import pandas as pd
-
     n = len(xs)
     cols = list(properties.items())
     ncols = len(cols)
 
-    # --- shared value table: per-column factorize, then global dedup in
-    # interleaved first-appearance order (sequence pos = first_row*C + j)
+    # --- shared value table: per-column first-occurrence codes, then a
+    # global dedup in interleaved first-appearance order (sequence pos =
+    # first_row*C + j)
     int_vals: list[np.ndarray] = []
     int_pos: list[np.ndarray] = []
     str_entries: list[tuple[str, int]] = []  # (value, pos)
@@ -418,22 +413,22 @@ def mvt_point_layer_size(
     col_kind: list[str] = []
     col_uniq: list[np.ndarray] = []
     for j, (_k, arr) in enumerate(cols):
-        if arr.dtype == object:
-            codes, uniques = pd.factorize(pd.Series(arr), use_na_sentinel=False)
-            first = np.unique(codes, return_index=True)[1]
-            for u_i, s in enumerate(uniques):
-                str_entries.append((s, int(first[u_i]) * ncols + j))
+        is_str = arr.dtype == object
+        codes, uniques = first_occurrence_codes(
+            arr if is_str else np.asarray(arr, dtype=np.int64)
+        )
+        # codes count up in first-appearance order, so a unique's first
+        # row is where the running max of the codes steps up
+        first = np.flatnonzero(np.diff(np.maximum.accumulate(codes), prepend=-1))
+        if is_str:
+            str_entries.extend(zip(uniques.tolist(), (first * ncols + j).tolist()))
             col_kind.append("str")
-            col_uniq.append(np.asarray(uniques, dtype=object))
         else:
-            vals = np.asarray(arr, dtype=np.int64)
-            codes, uniques = pd.factorize(vals)
-            first = np.unique(codes, return_index=True)[1]
-            int_vals.append(uniques.astype(np.int64))
-            int_pos.append(first.astype(np.int64) * ncols + j)
+            int_vals.append(uniques)
+            int_pos.append(first * ncols + j)
             col_kind.append("int")
-            col_uniq.append(uniques.astype(np.int64))
-        col_codes.append(np.asarray(codes, dtype=np.int64))
+        col_uniq.append(uniques)
+        col_codes.append(codes)
 
     # dedup int values across columns, keeping the earliest position
     if int_vals:
@@ -469,44 +464,44 @@ def mvt_point_layer_size(
             col_vi = vi_int[np.searchsorted(dedup_vals, col_uniq[j])]
         else:
             col_vi = np.array([vi_str[s] for s in col_uniq[j]], dtype=np.int64)
-        tags_len += _varint_len_vec(col_vi[col_codes[j]])
+        tags_len += varint_len_vec(col_vi)[col_codes[j]]
 
     # --- per-feature geometry and body framing
     zz_x = (xs.astype(np.int64) << 1) ^ (xs.astype(np.int64) >> 63)
     zz_y = (ys.astype(np.int64) << 1) ^ (ys.astype(np.int64) >> 63)
-    geom_len = 1 + _varint_len_vec(zz_x) + _varint_len_vec(zz_y)
+    geom_len = 1 + varint_len_vec(zz_x) + varint_len_vec(zz_y)
     tags_part = (
-        1 + _varint_len_vec(tags_len) + tags_len if ncols else np.int64(0)
+        1 + varint_len_vec(tags_len) + tags_len if ncols else np.int64(0)
     )
-    body = tags_part + 2 + (1 + _varint_len_vec(geom_len) + geom_len)
+    body = tags_part + 2 + (1 + varint_len_vec(geom_len) + geom_len)
     if ids is not None:
-        body = body + 1 + _varint_len_vec(np.asarray(ids, dtype=np.int64))
-    feats_total = int((1 + _varint_len_vec(body) + body).sum())
+        body = body + 1 + varint_len_vec(np.asarray(ids, dtype=np.int64))
+    feats_total = int((1 + varint_len_vec(body) + body).sum())
 
     # --- key/value table sections
-    keys_total = sum(
-        1 + int(_varint_len_vec(np.array([len(k.encode())]))[0]) + len(k.encode())
-        for k, _ in cols
-    )
+    keys_total = 0
+    for k, _ in cols:
+        kb = len(k.encode("utf-8"))
+        keys_total += 1 + varint_len(kb) + kb
     neg = dedup_vals < 0
     enc = np.where(
         neg, (dedup_vals << 1) ^ (dedup_vals >> 63), dedup_vals
     )
-    int_vb = 1 + _varint_len_vec(enc)
-    values_total = int((1 + _varint_len_vec(int_vb) + int_vb).sum())
+    int_vb = 1 + varint_len_vec(enc)
+    values_total = int((1 + varint_len_vec(int_vb) + int_vb).sum())
     for s, _ in s_list:
         sb = len(s.encode("utf-8"))
-        vb = 1 + int(_varint_len_vec(np.array([sb]))[0]) + sb
-        values_total += 1 + int(_varint_len_vec(np.array([vb]))[0]) + vb
+        vb = 1 + varint_len(sb) + sb
+        values_total += 1 + varint_len(vb) + vb
 
     name_b = len(name.encode("utf-8"))
     layer_len = (
         2
-        + (1 + int(_varint_len_vec(np.array([name_b]))[0]) + name_b)
+        + (1 + varint_len(name_b) + name_b)
         + feats_total
         + keys_total
         + values_total
         + 1
-        + int(_varint_len_vec(np.array([extent]))[0])
+        + varint_len(extent)
     )
-    return 1 + int(_varint_len_vec(np.array([layer_len]))[0]) + layer_len
+    return 1 + varint_len(layer_len) + layer_len

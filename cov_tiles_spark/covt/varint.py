@@ -15,6 +15,21 @@ import numpy as np
 
 _SHIFTS = np.arange(0, 70, 7, dtype=np.uint64)  # 10 seven-bit groups
 _MASK7 = np.uint64(0x7F)
+# smallest value needing k+2 bytes, k = 0..8 (2^7 .. 2^63)
+_LEN_BOUNDS = np.uint64(1) << np.arange(7, 64, 7, dtype=np.uint64)
+
+
+def varint_len(v: int) -> int:
+    """Byte length of the varint of one non-negative Python int."""
+    return (v.bit_length() + 6) // 7 or 1
+
+
+def varint_len_vec(values: np.ndarray) -> np.ndarray:
+    """Byte length (int64) of each value's varint, in one numpy call.
+    Values are taken as uint64, so a negative int64 counts 10 bytes, as
+    a protobuf ``int64`` field would encode it."""
+    u = np.asarray(values).astype(np.uint64, copy=False)
+    return np.searchsorted(_LEN_BOUNDS, u, side="right") + 1
 
 
 def encode_varints(values: np.ndarray) -> bytes:

@@ -465,13 +465,15 @@ def materialize_tiles(
     assigned = assign_tiles(images.select(*cols), zooms, extent)
 
     # One wide exchange, skew-mitigated and explicitly sized:
-    # - fine-grained hash partitioning (8x parallelism) keeps hot capped
-    #   tiles from colliding in one partition (hash at 3x parallelism
-    #   measured 38.8k-row stragglers vs 3k median, 27.9s vs 5.9s task
-    #   times; range partitioning would balance rows exactly but its
-    #   sampling pass recomputes the whole upstream — a net loss).
-    #   Identical keys stay in one partition, so every tile is encoded
-    #   whole; AQE skew-split cannot help a Python stage, granularity can.
+    # - hash partitioning: identical keys stay in one partition, so every
+    #   tile is encoded whole; AQE skew-split cannot help a Python stage.
+    #   Range partitioning would balance rows, but its sampling pass
+    #   recomputes the whole upstream.
+    # - the partition count trades per-task fixed cost against skew.
+    #   Every Python task pays a fixed CPU cost before its first row
+    #   (CLAUDE.md gotchas), so fewer tasks are cheaper; more tasks keep
+    #   hot tiles from colliding in one partition. encode_assigned sizes
+    #   by which path runs (see there).
     # - explicit partition count pins parallelism: the encode stage is
     #   Python-CPU-bound, not bytes-bound, so AQE's byte-based coalescing
     #   must not shrink it.
@@ -511,9 +513,21 @@ def encode_assigned(
     at O(input_partitions x cap) rows instead of its full pre-cap count.
     """
     sc = assigned.sparkSession.sparkContext
+    capped = max_features_per_tile < (1 << 40)
     if num_parts is None:
-        num_parts = max(sc.defaultParallelism * 8, 16)
-    if max_features_per_tile >= (1 << 40):
+        if capped and pre_cap:
+            # The pre-cap has already cut each tile to at most
+            # input_partitions x cap rows. At sf1 on local[4] (cap 20,000)
+            # 2x the slots matched 8x in wall time with ~10% less task
+            # time; not measured on more cores.
+            num_parts = 2 * sc.defaultParallelism
+        else:
+            # Nothing bounds a hot tile before the exchange. Before the
+            # pre-cap existed, 3x the slots measured 38.8k-row stragglers
+            # vs a 3k median (27.9 s vs 5.9 s tasks); at sf1 on local[4]
+            # 2x gained nothing over 8x here, so keep 8x.
+            num_parts = max(sc.defaultParallelism * 8, 16)
+    if not capped:
         # The cap can never bind (no real tile holds 2^40 features), so
         # the sample-key selection order is irrelevant to the output:
         # the encode kernel argsorts each tile by id before encoding,

@@ -32,6 +32,8 @@ from cov_tiles_spark.covt.varint import (
     encode_delta_zigzag_varints,
     encode_varints,
     encode_zigzag_varints,
+    varint_len,
+    varint_len_vec,
     zigzag_decode,
     zigzag_encode,
 )
@@ -94,6 +96,16 @@ class TestVarint:
         buf = np.frombuffer(encode_delta_zigzag_varints(vals), dtype=np.uint8)
         out, _ = decode_delta_zigzag_varints(buf, len(vals))
         np.testing.assert_array_equal(out, vals)
+
+    def test_varint_len_matches_encoder(self):
+        """Scalar and vector varint lengths equal the writer's byte count
+        at every 7-bit group boundary, up to 2^64-1."""
+        vals = [0] + [b for k in range(1, 10) for b in (2 ** (7 * k) - 1, 2 ** (7 * k))]
+        vals.append(2**64 - 1)
+        want = [len(encode_varints(np.array([v], dtype=np.uint64))) for v in vals]
+        assert [varint_len(v) for v in vals] == want
+        got = varint_len_vec(np.array(vals, dtype=np.uint64))
+        assert got.tolist() == want
 
     def test_zigzag_pure(self):
         v = np.array([0, -1, 1, -2, 2, -(2**62)], dtype=np.int64)

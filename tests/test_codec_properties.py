@@ -4,6 +4,7 @@ arbitrary inputs, not just the seeded fixtures."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -153,3 +154,117 @@ def test_pfor_roundtrip(vals, zigzag, delta):
     )
     out, _off = decode_pfor(buf, len(arr), zigzag=zigzag, delta=delta)
     np.testing.assert_array_equal(np.asarray(out, dtype=np.int64), arr)
+
+
+# values the tile pipeline's string columns carry, plus None
+_CODER_STRINGS = ["", "raw", "rle", "caption 7", "é", "東京", "naïve café", "🗺"]
+
+
+@_settings
+@pytest.mark.parametrize("min_n, max_n", [(0, 256), (257, 700)])
+@given(
+    pool=st.lists(
+        st.one_of(st.none(), st.sampled_from(_CODER_STRINGS), st.text(max_size=6)),
+        min_size=1, max_size=40,
+    ),
+    data=st.data(),
+)
+def test_first_occurrence_codes_matches_factorize_strings(min_n, max_n, pool, data):
+    """The shared dictionary coder equals pandas' first-appearance
+    factorize on both sides of its 256-value switch: identical codes,
+    and uniques equal up to None, which pandas returns as NaN."""
+    import pandas as pd
+
+    from cov_tiles_spark.covt.encoder import first_occurrence_codes
+
+    n = data.draw(st.integers(min_n, max_n))
+    picks = data.draw(st.lists(st.integers(0, len(pool) - 1), min_size=n, max_size=n))
+    x = np.empty(n, dtype=object)
+    x[:] = [pool[i] for i in picks]
+    codes, uniques = first_occurrence_codes(x)
+    want_codes, want_uniques = pd.factorize(pd.Series(x), use_na_sentinel=False)
+    np.testing.assert_array_equal(codes, want_codes)
+    assert codes.dtype == np.int64
+    assert [None if pd.isna(u) else u for u in uniques] == [
+        None if pd.isna(u) else u for u in want_uniques
+    ]
+
+
+@_settings
+@pytest.mark.parametrize("min_n, max_n", [(0, 256), (257, 700)])
+@given(
+    pool=st.lists(st.integers(-(2**63), 2**63 - 1), min_size=1, max_size=300),
+    data=st.data(),
+)
+def test_first_occurrence_codes_matches_factorize_ints(min_n, max_n, pool, data):
+    import pandas as pd
+
+    from cov_tiles_spark.covt.encoder import first_occurrence_codes
+
+    n = data.draw(st.integers(min_n, max_n))
+    picks = data.draw(st.lists(st.integers(0, len(pool) - 1), min_size=n, max_size=n))
+    x = np.array([pool[i] for i in picks], dtype=np.int64)
+    codes, uniques = first_occurrence_codes(x)
+    want_codes, want_uniques = pd.factorize(pd.Series(x), use_na_sentinel=False)
+    np.testing.assert_array_equal(codes, want_codes)
+    np.testing.assert_array_equal(uniques, np.asarray(want_uniques))
+    assert uniques.dtype == np.int64
+
+
+def _coder_layer():
+    """One fixed 300-feature point layer whose string columns take both
+    coder branches: ``caption`` has 300 present values (pandas branch),
+    ``note`` 100 (dict walk); both hold repeats, '' and non-ASCII, and
+    None at the absent positions."""
+    from cov_tiles_spark.covt.decoder import GeometryColumn
+    from cov_tiles_spark.covt.encoder import LayerInput, PropertyInput
+    from cov_tiles_spark.covt.metadata import ColumnDataType, GeometryType
+
+    n = 300
+    i = np.arange(n)
+    caption = np.array(
+        [_CODER_STRINGS[(k * 7) % len(_CODER_STRINGS)] + ("" if k % 3 else f" {k}")
+         for k in range(n)],
+        dtype=object,
+    )
+    note_present = i % 3 == 0
+    note = np.array(
+        [_CODER_STRINGS[k % len(_CODER_STRINGS)] if p else None
+         for k, p in zip(range(n), note_present)],
+        dtype=object,
+    )
+    vb = np.empty(2 * n, dtype=np.int32)
+    vb[0::2] = (i * 37) % 4096
+    vb[1::2] = (i * 101) % 4096
+    return LayerInput(
+        name="images",
+        geometry=GeometryColumn(
+            geometry_types=np.full(n, GeometryType.POINT, np.uint8), vertex_buffer=vb
+        ),
+        ids=(i * 3 + 1).astype(np.int64),
+        properties={
+            "caption": PropertyInput(ColumnDataType.STRING, caption),
+            "note": PropertyInput(ColumnDataType.STRING, note, note_present),
+            "w": PropertyInput(ColumnDataType.UINT_64, (i % 5 + 16).astype(np.int64)),
+        },
+        extent=4096,
+    )
+
+
+def test_string_dictionary_payloads_are_pinned():
+    """The gen-A and gen-B payload bytes of :func:`_coder_layer` equal
+    the digests taken before the dictionary coder replaced
+    ``pd.factorize`` in both encoders."""
+    import hashlib
+
+    from cov_tiles_spark.covt.encoder import encode_tile
+    from cov_tiles_spark.covt.genb import encode_tile_genb
+
+    gena = encode_tile([_coder_layer()])
+    genb, _ = encode_tile_genb([_coder_layer()], optimize_metadata=False)
+    assert hashlib.sha256(gena).hexdigest() == _GENA_SHA256
+    assert hashlib.sha256(genb).hexdigest() == _GENB_SHA256
+
+
+_GENA_SHA256 = "a939a5003d8802e835e0d31a3d65e73acd69fe4b2bd8bf8cc498b582d43671c4"
+_GENB_SHA256 = "ec4f19b5e7189be8b041e0bf35f97214fdec34e5d3cf9a4d90c01f06e918b7c8"

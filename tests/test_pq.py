@@ -187,3 +187,31 @@ def test_ann_recall_monotone_in_nprobe_and_shortlist(spark):
         rec = len(rr & exact[0]) / k
         assert rec >= prev - 1e-12, (shortlist, rec, prev)
         prev = rec
+
+
+def test_candidate_ids_match_topk_membership_per_order_round(spark):
+    """pq_candidate_ids(order_round=r) admits exactly pq_topk(order_round=r)'s
+    ids, on a corpus with exact score ties and k < |corpus|, where the
+    rounded and raw keys cut the top-k at different ids.
+
+    Scores are 0.04 * code for code 0..15 (one live subspace), and id i
+    has code i % 16, so every score is held by three ids. Rounded to one
+    decimal, adjacent codes tie (0.56 and 0.6 both round to 0.6) and the
+    id tiebreak then admits lower-scored ids than the raw key does."""
+    from cov_tiles_spark.operators.pq import pq_candidate_ids
+
+    cb = np.zeros((M, 1 << NBITS, SUB))
+    cb[0, :, 0] = 0.04 * np.arange(1 << NBITS)
+    q = [1.0] * DIM
+    enc = spark.createDataFrame(
+        [(i, [i % 16] + [0] * (M - 1)) for i in range(48)],
+        "vec_id long, pq_code array<int>",
+    )
+    k = 10
+    got = {}
+    for r in (None, 1):
+        topk = {x.id for x in pq_topk(enc, "vec_id", q, k, cb, order_round=r).collect()}
+        cand = [x.id for x in pq_candidate_ids(enc, "vec_id", q, k, cb, order_round=r).collect()]
+        assert len(cand) == k and set(cand) == topk, r
+        got[r] = topk
+    assert got[None] != got[1]  # the two keys really cut at different ids

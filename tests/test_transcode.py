@@ -61,61 +61,70 @@ def test_mvt_point_layer_size_matches_writer():
     the flagship pipeline reports this as the honest MVT-baseline size
     without materializing the bytes. Covers cross-column value-table
     collisions (w == h), negative ints (sint zigzag values), multi-byte
-    value indices (> 127 table entries), and the no-id/no-props edge."""
+    value indices (> 127 table entries), the no-id/no-props edge, and the
+    shapes the tile write path sends: 1-5 features, all-unique captions,
+    '' and non-ASCII captions, ids >= 2^56, and more than 256 features
+    with low- and high-cardinality strings (both dictionary-coder
+    branches)."""
     import numpy as np
 
     from cov_tiles_spark.covt.mvt import encode_mvt, mvt_point_layer_size
 
-    rng = np.random.default_rng(2)
-    for trial in range(25):
-        n = int(rng.integers(1, 500))
-        ids = np.sort(rng.integers(0, 10**9, n))
-        xs = rng.integers(-2048, 6144, n)
-        ys = rng.integers(-2048, 6144, n)
-        caption = np.array(
-            [f"c{int(v)}" for v in rng.integers(0, 200, n)], dtype=object
-        )
-        fmt = np.array(
-            ["raw" if v else "rle" for v in rng.integers(0, 2, n)], dtype=object
-        )
-        w = rng.integers(16, 64, n)
-        h = rng.integers(16, 64, n)
-        phash = rng.integers(-(2**40), 2**40, n)
-        props = {"caption": caption, "fmt": fmt, "w": w, "h": h, "phash": phash}
+    def check(ids, xs, ys, props, name="images", extent=4096):
         feats = [
             {
-                "id": int(ids[i]),
+                "id": None if ids is None else int(ids[i]),
                 "geom_type": 1,
                 "parts": [[(int(xs[i]), int(ys[i]))]],
                 "properties": {
-                    "caption": caption[i],
-                    "fmt": fmt[i],
-                    "w": int(w[i]),
-                    "h": int(h[i]),
-                    "phash": int(phash[i]),
+                    k: (v[i] if v.dtype == object else int(v[i]))
+                    for k, v in props.items()
                 },
             }
-            for i in range(n)
+            for i in range(len(xs))
         ]
-        real = len(encode_mvt([("images", feats, 4096)]))
-        fast = mvt_point_layer_size("images", ids, xs, ys, props, 4096)
-        assert real == fast, (trial, n, real, fast)
+        real = len(encode_mvt([(name, feats, extent)]))
+        fast = mvt_point_layer_size(name, ids, xs, ys, props, extent)
+        assert real == fast, (len(xs), real, fast)
+
+    rng = np.random.default_rng(2)
+
+    def tile_props(n, caption):
+        return {
+            "caption": caption,
+            "fmt": np.array(
+                ["raw" if v else "rle" for v in rng.integers(0, 2, n)], dtype=object
+            ),
+            "w": rng.integers(16, 64, n),
+            "h": rng.integers(16, 64, n),
+            "phash": rng.integers(-(2**40), 2**40, n),
+        }
+
+    def coords(n):
+        return rng.integers(-2048, 6144, n), rng.integers(-2048, 6144, n)
+
+    for trial in range(25):
+        n = int(rng.integers(1, 500))
+        ids = np.sort(rng.integers(0, 10**9, n))
+        xs, ys = coords(n)
+        caption = np.array(
+            [f"c{int(v)}" for v in rng.integers(0, 200, n)], dtype=object
+        )
+        check(ids, xs, ys, tile_props(n, caption))
+
+    odd = ["", "é", "東京", "naïve café", "🗺", "raw"]
+    for n in (1, 2, 3, 4, 5, 40, 300, 1000):
+        ids = np.sort(rng.integers(2**56, 2**63 - 1, n))
+        unique = np.array([f"{odd[i % 6]} {i}" for i in range(n)], dtype=object)
+        check(ids, *coords(n), tile_props(n, unique))
+        few = np.array([odd[v] for v in rng.integers(0, 6, n)], dtype=object)
+        check(ids, *coords(n), tile_props(n, few))
 
     for _ in range(5):
         n = int(rng.integers(1, 50))
         xs = rng.integers(0, 4096, n)
         ys = rng.integers(0, 4096, n)
-        feats = [
-            {
-                "id": None,
-                "geom_type": 1,
-                "parts": [[(int(xs[i]), int(ys[i]))]],
-                "properties": {},
-            }
-            for i in range(n)
-        ]
-        real = len(encode_mvt([("p", feats, 8192)]))
-        assert real == mvt_point_layer_size("p", None, xs, ys, {}, 8192)
+        check(None, xs, ys, {}, name="p", extent=8192)
 
 
 def test_covt_to_mvt_roundtrip_both_formats():
