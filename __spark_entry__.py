@@ -860,9 +860,8 @@ def q_tile_decode_pruned(spark, sf_dir):
 
 
 def q_raster_cells(spark, sf_dir):
-    """Raster-grid aggregation: per (tile, 16x16 cell) point counts at z4
-    — the SQL-checkable half of the raster↔vector materialization
-    (pipeline/raster.py)."""
+    """Raster-grid aggregation: per (tile, 16x16 cell) point counts at z4,
+    computed in plain DataFrame code."""
     pts = _events_points(spark, sf_dir)
     z = 4
     n = 1 << z

@@ -17,6 +17,20 @@ import os
 import sys
 import time
 
+# the timed queries, in run order; bench_extra.py and
+# scripts/capture_plans.py default to the same list
+HEADLINE = [
+    "q_tile_encode",
+    "q_tile_assignment",
+    "q_pip",
+    "q_knn",
+    "q_pricing_summary",
+    "q_local_supplier_volume",
+    "q_minhash_dedup",
+    "q_cosine_topk",
+    "q_hilbert_cells",
+]
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -29,17 +43,6 @@ def main() -> None:
     spark = get_spark(app_name="cov-tiles-bench", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
 
-    headline = [
-        "q_tile_encode",
-        "q_tile_assignment",
-        "q_pip",
-        "q_knn",
-        "q_pricing_summary",
-        "q_local_supplier_volume",
-        "q_minhash_dedup",
-        "q_cosine_topk",
-        "q_hilbert_cells",
-    ]
     qmap = entry.queries()
     timings: dict[str, float] = {}
     extras: dict[str, float] = {}
@@ -81,7 +84,7 @@ def main() -> None:
     # contended window (BENCH_r04 regressed 19% on tenant noise even at
     # best-of-2 — see BENCH/BASELINE.md pinned A/B attributing it)
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
-    for name in headline:
+    for name in HEADLINE:
         best_t, best_n = None, 0
         for _rep in range(reps):
             spark.catalog.clearCache()  # isolate queries: no cross-query

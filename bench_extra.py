@@ -19,6 +19,8 @@ import os
 import sys
 import time
 
+from bench import HEADLINE
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -32,18 +34,7 @@ def main() -> None:
     spark = get_spark(app_name="cov-tiles-bench-extra", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
 
-    headline = [
-        "q_tile_encode",
-        "q_tile_assignment",
-        "q_pip",
-        "q_knn",
-        "q_pricing_summary",
-        "q_local_supplier_volume",
-        "q_minhash_dedup",
-        "q_cosine_topk",
-        "q_hilbert_cells",
-    ]
-    names = sys.argv[1:] or headline
+    names = sys.argv[1:] or HEADLINE
     qmap = entry.queries()
 
     # same warmup as bench.py: python worker pool + JVM codegen/shuffle

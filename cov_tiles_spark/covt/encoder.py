@@ -486,25 +486,3 @@ def encode_tile(layers: list[LayerInput], allow_ice: bool = True) -> bytes:
     """Encode a full COVT gen-A tile (file header + layers)."""
     body = b"".join(encode_layer(l, allow_ice) for l in layers)
     return _varint(VERSION) + _varint(len(layers)) + body
-
-
-def merge_tile_payloads(payloads: list[bytes]) -> bytes:
-    """Concatenate the layers of several COVT tiles into one tile.
-
-    Layer blocks are self-contained in the gen-A format (file header is
-    just ``varint version ‖ varint numLayers``, covtDecoder.ts:97-101),
-    so merging is pure byte surgery — no decode/re-encode. Used to bundle
-    independently-materialized layers (e.g. images points + raster_grid
-    polygons) into complete multi-layer tiles.
-    """
-    from cov_tiles_spark.covt.varint import decode_varint
-
-    bodies = []
-    total_layers = 0
-    for p in payloads:
-        buf = np.frombuffer(p, dtype=np.uint8)
-        _version, off = decode_varint(buf, 0)
-        n_layers, off = decode_varint(buf, off)
-        total_layers += n_layers
-        bodies.append(p[off:])
-    return _varint(VERSION) + _varint(total_layers) + b"".join(bodies)

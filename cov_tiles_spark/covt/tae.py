@@ -6,8 +6,7 @@ Encoding (TAE)") but, like OptPFD/RLEv2 in its codec sweep, never ships
 it ("Because of the additional complexity and relatively smaller
 savings in size not all encodings are used in the current version",
 `README.md:222`). This module measures what TAE would buy on real
-tiles, the same way `eval_codecs.py` measures the bench-only integer
-codecs: a faithful TopoJSON-style decomposition with an exact
+tiles: a faithful TopoJSON-style decomposition with an exact
 reconstruction check, never emitted into tiles.
 
 Scheme (TopoJSON's public arc model):

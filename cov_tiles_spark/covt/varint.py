@@ -172,21 +172,3 @@ def decode_zigzag_varints(
 ) -> tuple[np.ndarray, int]:
     vals, offset = decode_varints(buf, n, offset)
     return zigzag_decode(vals), offset
-
-
-def encode_delta_zigzag_varints(values: np.ndarray) -> bytes:
-    """Delta (prev init 0, kernel K3) -> zigzag -> varint.
-
-    Matches `EncodingUtils.java:73-93` encode /
-    `decodingUtils.ts:168-185` decode (continuous chain).
-    """
-    v = np.asarray(values).astype(np.int64, copy=False)
-    deltas = np.diff(v, prepend=np.int64(0))
-    return encode_zigzag_varints(deltas)
-
-
-def decode_delta_zigzag_varints(
-    buf: np.ndarray, n: int, offset: int = 0
-) -> tuple[np.ndarray, int]:
-    deltas, offset = decode_zigzag_varints(buf, n, offset)
-    return np.cumsum(deltas, dtype=np.int64), offset

@@ -52,7 +52,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .sampling import sample_hash
+from cov_tiles_spark.operators.sampling import sample_hash
 
 _RING = 1 << 31
 

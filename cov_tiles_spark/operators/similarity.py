@@ -262,6 +262,31 @@ def ivf_topk(
     )
 
 
+def _superset_keep(
+    cos: np.ndarray, valid: np.ndarray, ids: np.ndarray, k: int, slack: float
+) -> np.ndarray:
+    """Keep mask over one decision-pass batch (rows x queries): a superset
+    of the pairs the final ``cosine desc, id`` window can rank <= k.
+
+    A finite cosine is kept when it is within ``slack`` of the batch's
+    k-th best finite cosine for that query. NaN cosines (zero-norm or
+    NaN-component vectors) sort FIRST under the JVM's desc order, ties
+    broken by id, so per query only the batch's k smallest-id NaN rows
+    can win; a zero-norm query would otherwise ship the whole batch.
+    NaNs must not poison the finite k-th threshold either (a NaN kth
+    would drop every finite candidate in the batch)."""
+    nb = len(ids)
+    nan_c = np.isnan(cos)
+    masked = np.where(valid & ~nan_c, cos, -np.inf)
+    kth = -np.partition(-masked, min(k, nb) - 1, axis=0)[min(k, nb) - 1]
+    keep = valid & ~nan_c & (masked >= kth[None, :] - slack)
+    nan_v = valid & nan_c
+    if nan_v.any():
+        by_id = np.argsort(ids, kind="stable")
+        nan_v[by_id] &= np.cumsum(nan_v[by_id], axis=0) <= k
+    return keep | nan_v
+
+
 def _self_retrieval_topk(
     df: DataFrame,
     vec_col: str,
@@ -338,6 +363,7 @@ def _self_retrieval_topk(
     #    superset of the rounded-key top-k: |x - round6(x)| <= 5e-7, so
     #    any row more than 1e-6 below the k-th raw value has a strictly
     #    smaller round6 key than k better rows and can never rank <= k;
+    #    NaN cosines are capped at the k smallest ids (`_superset_keep`);
     # 4. the JVM applies the ORIGINAL round(cosine, order_round) to the
     #    (exactly transported) raw doubles and ranks the small kept set
     #    with the original window — identical keys, identical ties,
@@ -427,18 +453,7 @@ def _self_retrieval_topk(
                 # pair the JVM path excludes.
                 row_c, q_c = codes[:nb, None], codes[nb:][None, :]
                 valid &= (row_c != q_c) & (row_c != -1) & (q_c != -1)
-            # NaN cosines (zero-norm or NaN-component vectors): the JVM
-            # window sorts NaN FIRST under desc, so such rows belong in
-            # the superset unconditionally — and they must not poison
-            # the finite k-th threshold (NaN kth would drop every finite
-            # candidate in the batch).
-            nan_c = np.isnan(cos)
-            masked = np.where(valid & ~nan_c, cos, -np.inf)
-            kth = -np.partition(-masked, min(kk, nb) - 1, axis=0)[
-                min(kk, nb) - 1
-            ]
-            keep = valid & (nan_c | (masked >= kth[None, :] - slack))
-            rows, qcols = np.nonzero(keep)
+            rows, qcols = np.nonzero(_superset_keep(cos, valid, ids, kk, slack))
             if rows.size == 0:
                 continue
             yield pd.DataFrame(

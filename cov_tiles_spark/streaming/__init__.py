@@ -1,1 +1,2 @@
-"""Structured Streaming surface: incremental tile materialization."""
+"""Structured Streaming surface: event-time windowed tile stats and a
+stateful sessionizer."""

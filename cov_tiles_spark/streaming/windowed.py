@@ -1,9 +1,8 @@
 """Event-time streaming operators: watermarked windowed tile stats and a
 custom stateful sessionizer.
 
-Complements ``streaming/incremental.py`` (micro-batch foreachBatch
-materialization) with the two Structured-Streaming-native shapes a
-continuously-arriving corpus needs:
+The two Structured-Streaming-native shapes a continuously-arriving
+corpus needs:
 
 - ``tile_counts_windowed``: per-(window, tile) feature counts over event
   time with a watermark bounding state — late records beyond the

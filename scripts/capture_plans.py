@@ -13,27 +13,17 @@ import io
 import os
 import sys
 
-HEADLINE = [
-    "q_tile_encode",
-    "q_tile_assignment",
-    "q_pip",
-    "q_knn",
-    "q_pricing_summary",
-    "q_local_supplier_volume",
-    "q_minhash_dedup",
-    "q_cosine_topk",
-    "q_hilbert_cells",
-]
-
 
 def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "r06"
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
-    names = sys.argv[4:] or HEADLINE
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
+    from bench import HEADLINE
+
+    names = sys.argv[4:] or HEADLINE
     import __spark_entry__ as entry
     from cov_tiles_spark.session import get_spark
 

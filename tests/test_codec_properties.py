@@ -120,23 +120,6 @@ def test_morton_bijective(points):
 
 @_settings
 @given(
-    st.lists(st.integers(min_value=-(2**45), max_value=2**45), min_size=1, max_size=500),
-    st.booleans(),
-    st.booleans(),
-)
-def test_bitpack_roundtrip(vals, signed, delta):
-    from cov_tiles_spark.covt.bitpack import decode_bitpack, encode_bitpack
-
-    if not (signed or delta):
-        vals = [abs(v) for v in vals]
-    arr = np.array(vals, dtype=np.int64)
-    buf = np.frombuffer(encode_bitpack(arr, signed=signed, delta=delta), dtype=np.uint8)
-    out = decode_bitpack(buf, len(arr), signed=signed, delta=delta)
-    np.testing.assert_array_equal(out, arr)
-
-
-@_settings
-@given(
     st.lists(st.integers(min_value=-(2**45), max_value=2**45), min_size=1, max_size=600),
     st.booleans(),
     st.booleans(),

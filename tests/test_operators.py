@@ -920,3 +920,88 @@ def test_hard_negatives_nan_and_null_label_semantics(spark):
         ]
         cand.sort(key=lambda t: (-cos[t[0]], t[0]))
         assert [(r.id, r.label) for r in entries[1:]] == cand[:3]
+
+
+def test_superset_keep_caps_nan_rows_at_k_smallest_ids():
+    """The decision pass keeps at most k NaN-cosine rows per (batch,
+    query): the k smallest ids, since the final window breaks NaN ties
+    on id. A zero-norm query (all-NaN column) must not ship the batch."""
+    from cov_tiles_spark.operators.similarity import _superset_keep
+
+    rng = np.random.default_rng(41)
+    nb, nq, k = 50, 6, 4
+    ids = rng.permutation(1000)[:nb].astype(np.int64)  # unsorted batch
+    cos = rng.uniform(-1, 1, (nb, nq))
+    cos[rng.random(nb) < 0.2, :] = np.nan  # zero-norm corpus rows
+    cos[:, 0] = np.nan  # zero-norm query
+    valid = rng.random((nb, nq)) < 0.9
+    keep = _superset_keep(cos, valid, ids, k, 1.01e-6)
+    for q in range(nq):
+        nan_rows = np.flatnonzero(valid[:, q] & np.isnan(cos[:, q]))
+        kept_nan = np.flatnonzero(keep[:, q] & np.isnan(cos[:, q]))
+        assert len(kept_nan) <= k
+        assert sorted(ids[kept_nan]) == sorted(ids[nan_rows])[:k]
+        fin = valid[:, q] & ~np.isnan(cos[:, q])
+        top = np.sort(cos[fin, q])[::-1][:k]
+        kth = top[-1] if top.size else -np.inf
+        want_fin = fin & (cos[:, q] >= kth - 1.01e-6)
+        assert (keep[:, q] & ~np.isnan(cos[:, q]) == want_fin).all()
+    assert not (keep & ~valid).any()
+
+
+def test_self_retrieval_topk_zero_norm_matches_window_oracle(spark):
+    """Zero-norm query and corpus vectors with k < |corpus|: the top-k
+    equals a pandas twin of the JVM window (cosine desc with NaN first,
+    then id), so capping the NaN rows loses nothing."""
+    import pandas as pd
+
+    from cov_tiles_spark.operators.similarity import _self_retrieval_topk
+
+    rng = np.random.default_rng(29)
+    zero = {5, 17, 26}
+    rows = [
+        (i, i % 3, [0.0] * 4 if i in zero else rng.normal(size=4).tolist())
+        for i in range(40)
+    ]
+    df = spark.createDataFrame(
+        rows, "vec_id long, label int, embedding array<double>"
+    )
+    k = 4
+    got = (
+        _self_retrieval_topk(
+            df, "embedding", "vec_id", "label", k, query_rate=1.0, seed=5,
+            order_round=6,
+        )
+        .toPandas()
+        .sort_values(["query_id", "rank"])
+    )
+
+    mat = np.array([v for _, _, v in rows])
+    acc = np.zeros((40, 40))
+    for j in range(mat.shape[1]):  # the decision pass's left fold
+        acc = acc + mat[:, j][:, None] * mat[:, j][None, :]
+    norms = np.sqrt(np.diag(acc))
+    with np.errstate(invalid="ignore"):
+        cos = np.round(acc / (norms[:, None] * norms[None, :]), 6)
+    pairs = pd.DataFrame(
+        [(q, i, cos[i, q]) for q in range(40) for i in range(40) if i != q],
+        columns=["query_id", "id", "cosine"],
+    )
+    pairs["is_nan"] = pairs["cosine"].isna()
+    want = (
+        pairs.sort_values(
+            ["query_id", "is_nan", "cosine", "id"],
+            ascending=[True, False, False, True],
+        )
+        .groupby("query_id")
+        .head(k)
+    )
+    want["rank"] = want.groupby("query_id").cumcount() + 1
+    assert got[["query_id", "rank", "id"]].values.tolist() == (
+        want[["query_id", "rank", "id"]].values.tolist()
+    )
+    np.testing.assert_array_equal(
+        got["cosine"].to_numpy(), want["cosine"].to_numpy()
+    )
+    # a zero-norm query's neighbours are all NaN: its k smallest other ids
+    assert got[got.query_id == 5]["id"].tolist() == [0, 1, 2, 3]

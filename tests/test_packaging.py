@@ -28,7 +28,7 @@ def test_pyfiles_zip_is_self_contained(tmp_path):
         "import sys; sys.path.insert(0, %r); "
         "import cov_tiles_spark.covt.encoder, cov_tiles_spark.covt.genb, "
         "cov_tiles_spark.operators.pq, cov_tiles_spark.pipeline.pyramid, "
-        "cov_tiles_spark.streaming.dedup; "
+        "cov_tiles_spark.streaming.windowed; "
         "from cov_tiles_spark.covt.varint import zigzag_encode; "
         "print(int(zigzag_encode(__import__('numpy').array([-1]))[0]))"
         % zip_path

@@ -1,54 +1,9 @@
-"""Structured Streaming incremental materialization + compaction."""
+"""Structured Streaming event-time operators: watermarked windowed tile
+counts and the stateful sessionizer."""
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import functions as F
-
-from cov_tiles_spark.io.synth import images_df
-from cov_tiles_spark.pipeline.lineage import IcebergLite
-from cov_tiles_spark.pipeline.materialize import decode_tiles, materialize_tiles
-from cov_tiles_spark.streaming.incremental import (
-    compact_tiles,
-    start_incremental_materialize,
-)
-
-ZOOMS = [2, 5]
-
-
-def test_incremental_stream_and_compaction(spark, tmp_path):
-    landing = str(tmp_path / "landing")
-    lake_root = str(tmp_path / "lake")
-    ckpt = str(tmp_path / "ckpt")
-
-    # two "arrivals" of the corpus, written as separate parquet drops
-    full = images_df(spark, 400, partitions=2).cache()
-    a = full.filter(F.col("image_id") < "img-000000000200")
-    b = full.filter(F.col("image_id") >= "img-000000000200")
-    a.write.parquet(f"{landing}/drop_a")
-    b.write.parquet(f"{landing}/drop_b")
-
-    q = start_incremental_materialize(
-        spark, f"{landing}/*", lake_root, ckpt, ZOOMS, trigger_once=True
-    )
-    q.awaitTermination(300)
-
-    lake = IcebergLite(spark, lake_root)
-    partials = lake.read_table("tiles_stream")
-    assert partials.agg(F.sum("num_features")).collect()[0][0] == 400 * len(ZOOMS)
-
-    # compaction merges per-batch partials into one payload per tile
-    compacted = compact_tiles(partials).cache()
-    per_tile = compacted.groupBy("z", "x", "y").count()
-    assert per_tile.agg(F.max("count")).collect()[0][0] == 1
-    assert compacted.agg(F.sum("num_features")).collect()[0][0] == 400 * len(ZOOMS)
-
-    # compacted decode == the batch pipeline's decode on the same input
-    batch = materialize_tiles(full, ZOOMS, with_mvt_baseline=False)
-    d_stream = decode_tiles(compacted).orderBy("z", "x", "y", "feature_id")
-    d_batch = decode_tiles(batch).orderBy("z", "x", "y", "feature_id")
-    assert d_stream.exceptAll(d_batch).count() == 0
-    assert d_batch.exceptAll(d_stream).count() == 0
 
 
 def _write_drop(spark, path: str, rows, schema: str, mtime: float) -> None:
@@ -186,64 +141,3 @@ def test_stateful_sessionize_stream(spark, tmp_path):
     assert s.user_id == 1
     assert s.n_events == 3
     assert s.session_start.minute == 0 and s.session_end.minute == 40
-
-
-def test_streaming_dedup_bounded_state(spark, tmp_path):
-    """dropDuplicatesWithinWatermark semantics: duplicates within the
-    horizon are dropped once; a duplicate arriving after its original's
-    state expired is re-emitted (horizon semantic, swept by batch)."""
-    from datetime import datetime, timezone
-
-    from cov_tiles_spark.streaming.dedup import dedup_stream_by_content
-
-    landing = str(tmp_path / "landing")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "ts timestamp, doc_id long, text string"
-
-    def t(minute):
-        return datetime(2024, 1, 1, 12, minute, tzinfo=timezone.utc)
-
-    # batch 1: A, B on time
-    _write_drop(
-        spark, f"{landing}/d1",
-        [(t(0), 1, "alpha"), (t(1), 2, "beta")],
-        schema, mtime=1_700_000_000,
-    )
-    # batch 2: duplicate of A (same content, different doc_id) within the
-    # 10-minute horizon -> dropped; new C emitted
-    _write_drop(
-        spark, f"{landing}/d2",
-        [(t(2), 3, "alpha"), (t(3), 4, "gamma")],
-        schema, mtime=1_700_000_100,
-    )
-    # batches 3+4: advance the watermark far past t(0) (two advancing
-    # batches; see the two-watermark note above)
-    _write_drop(spark, f"{landing}/d3", [(t(40), 5, "delta")],
-                schema, mtime=1_700_000_200)
-    _write_drop(spark, f"{landing}/d4", [(t(41), 6, "epsilon")],
-                schema, mtime=1_700_000_300)
-    # batch 5: duplicate of A AFTER state expiry -> re-emitted (horizon)
-    _write_drop(spark, f"{landing}/d5", [(t(42), 7, "alpha")],
-                schema, mtime=1_700_000_400)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{landing}/*")
-    )
-    q = (
-        dedup_stream_by_content(stream, "text", watermark="10 minutes")
-        .writeStream.format("memory").queryName("dedup_out")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = [
-        (r.doc_id, r.text)
-        for r in spark.sql("select * from dedup_out order by doc_id").collect()
-    ]
-    # doc 3 (in-horizon duplicate) dropped; doc 7 (post-expiry) re-emitted
-    assert got == [(1, "alpha"), (2, "beta"), (4, "gamma"), (5, "delta"),
-                   (6, "epsilon"), (7, "alpha")]
