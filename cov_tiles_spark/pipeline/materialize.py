@@ -517,15 +517,19 @@ def encode_assigned(
     if num_parts is None:
         if capped and pre_cap:
             # The pre-cap has already cut each tile to at most
-            # input_partitions x cap rows. At sf1 on local[4] (cap 20,000)
-            # 2x the slots matched 8x in wall time with ~10% less task
-            # time; not measured on more cores.
+            # input_partitions x cap rows. At sf1 on local[4] (cap 20,000,
+            # ~0.05 s per Python task) 2x and 8x the slots matched in wall
+            # time (17.6 vs 17.4 s, median of 5) and encode task time
+            # (28.3 vs 28.5 s); 2x keeps the slowest task nearer the
+            # median (1.23x vs 1.73x). Not measured on more cores.
             num_parts = 2 * sc.defaultParallelism
         else:
             # Nothing bounds a hot tile before the exchange. Before the
             # pre-cap existed, 3x the slots measured 38.8k-row stragglers
-            # vs a 3k median (27.9 s vs 5.9 s tasks); at sf1 on local[4]
-            # 2x gained nothing over 8x here, so keep 8x.
+            # vs a 3k median (27.9 s vs 5.9 s tasks). At sf1 on local[4]
+            # 2x matched 8x within noise (wall 8.4 vs 8.1 s, encode task
+            # time 24.2 vs 25.3 s), which does not show 2x safe on more
+            # cores, so keep 8x.
             num_parts = max(sc.defaultParallelism * 8, 16)
     if not capped:
         # The cap can never bind (no real tile holds 2^40 features), so

@@ -4,6 +4,12 @@ Tuned for the execution model in SURVEY.md §4.2: AQE for runtime re-plan +
 skew-join splitting, Arrow transfer for pandas UDFs, bounded shuffle
 partitions for local mode (override via spark.sql.shuffle.partitions for
 cluster deployments — on 1000 executors you want 2-4x total cores).
+
+Python workers run under ``guarded_pyspark.daemon``, which skips pyspark's
+per-task ``importlib.invalidate_caches()`` while ``sys.path`` and the
+SparkFiles directory are unchanged (~0.2 s of CPU per task otherwise). The
+package must therefore be importable from the driver's working directory or
+``PYTHONPATH``, as the UDFs already require.
 """
 
 from __future__ import annotations
@@ -11,6 +17,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from cov_tiles_spark.guarded_pyspark import daemon as guarded_daemon
 
 
 def get_spark(
@@ -23,7 +31,7 @@ def get_spark(
     shuffle_partitions = shuffle_partitions or int(os.environ.get(
         "SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(int(cpus) if cpus.isdigit() else 32, 8))
     ))
-    return (
+    spark = (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -48,3 +56,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+    # Set on the live SparkConf, which Python runners read per task, not
+    # through the builder: pyspark puts every builder config on the JVM's
+    # command line, and perfbench's worker-memory split, which matches
+    # "pyspark.daemon" there, would count the JVM as a Python worker.
+    spark.sparkContext._conf.set("spark.python.daemon.module", guarded_daemon.__name__)
+    return spark
