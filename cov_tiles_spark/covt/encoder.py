@@ -196,7 +196,7 @@ def _encode_vertices_ice(
 
 
 def encode_geometry_column(
-    geom: GeometryColumn, extent: int = 4096, allow_ice: bool = True
+    geom: GeometryColumn, extent: int = 4096
 ) -> tuple[bytes, bytes]:
     """Encode geometry column; returns (column metadata bytes, data bytes).
 
@@ -253,7 +253,7 @@ def encode_geometry_column(
         ).all()
     )
     ice = None
-    if allow_ice and ice_kinds and extent in (4096, 8192):
+    if ice_kinds and extent in (4096, 8192):
         best = None
         for use_morton in (False, True):
             cand = _encode_vertices_ice(geom, extent, use_morton)
@@ -441,7 +441,7 @@ def encode_localized_column(
     return meta, data
 
 
-def encode_layer(layer: LayerInput, allow_ice: bool = True) -> bytes:
+def encode_layer(layer: LayerInput) -> bytes:
     """Encode one layer: header + id + geometry + property columns."""
     n = len(layer.geometry.geometry_types)
     props = layer.properties or {}
@@ -459,7 +459,7 @@ def encode_layer(layer: LayerInput, allow_ice: bool = True) -> bytes:
         )
         col_datas.append(data)
 
-    g_meta, g_data = encode_geometry_column(layer.geometry, layer.extent, allow_ice)
+    g_meta, g_data = encode_geometry_column(layer.geometry, layer.extent)
     col_metas.append(g_meta)
     col_datas.append(g_data)
 
@@ -482,7 +482,7 @@ def encode_layer(layer: LayerInput, allow_ice: bool = True) -> bytes:
     return header + b"".join(col_datas)
 
 
-def encode_tile(layers: list[LayerInput], allow_ice: bool = True) -> bytes:
+def encode_tile(layers: list[LayerInput]) -> bytes:
     """Encode a full COVT gen-A tile (file header + layers)."""
-    body = b"".join(encode_layer(l, allow_ice) for l in layers)
+    body = b"".join(encode_layer(l) for l in layers)
     return _varint(VERSION) + _varint(len(layers)) + body

@@ -35,16 +35,13 @@ bytes implicitly. Property columns are grouped boolean → long → float →
 string-dictionary, column ids 2.. (`CovtConverter.java:346-356`).
 
 FAST_PFOR_DELTA_ZIG_ZAG streams use our from-scratch patched-FOR codec
-(`covt/pfor.py`) by default; pass ``pfor_wire="java"`` to
-encode/decode the streams in JavaFastPFOR's actual
-``Composition(FastPFOR, VariableByte)`` wire (`covt/pfor_java.py`) —
-the layout the reference's Java converter emits — for byte-level
-interop with library-produced tiles.
+(`covt/pfor.py`). Each stream that can take FAST_PFOR picks it or its
+varint/RLE alternative by encoded size, as the converter does
+(`CovtConverter.java:656-668, 807-855`).
 """
 
 from __future__ import annotations
 
-from contextvars import ContextVar
 from enum import IntEnum
 
 import numpy as np
@@ -66,11 +63,6 @@ from cov_tiles_spark.covt.metadata import (
 )
 from cov_tiles_spark.covt.metadata import ColumnEncoding as GenAEncoding
 from cov_tiles_spark.covt.pfor import decode_pfor, encode_pfor
-from cov_tiles_spark.covt.pfor_java import (
-    decode_fastpfor_java,
-    encode_fastpfor_java,
-)
-
 from cov_tiles_spark.covt.rle import (
     decode_byte_rle,
     decode_int_rle,
@@ -87,33 +79,6 @@ from cov_tiles_spark.covt.varint import (
 )
 
 VERSION = 1
-
-# FAST_PFOR wire format for this tile: "ours" = covt/pfor.py's container
-# (the repo's in-format default, pinned by the golden fixtures); "java" =
-# JavaFastPFOR's Composition(FastPFOR, VariableByte) word layout
-# (covt/pfor_java.py) as emitted by the reference's Java converter
-# (`EncodingUtils.java:149-188`) — pass pfor_wire="java" to
-# encode/decode tiles interoperable with library-produced streams. A
-# ContextVar (not a plain global) so concurrent encodes in one process
-# cannot leak each other's wire choice.
-_PFOR_WIRE: ContextVar[str] = ContextVar("genb_pfor_wire", default="ours")
-
-
-def _pfor_enc(vals: np.ndarray, zigzag: bool, delta: bool) -> bytes:
-    if _PFOR_WIRE.get() == "java":
-        return encode_fastpfor_java(vals, zigzag=zigzag, delta=delta)
-    return encode_pfor(vals, zigzag=zigzag, delta=delta)
-
-
-def _pfor_dec(
-    buf: np.ndarray, n: int, offset: int, byte_length: int,
-    zigzag: bool, delta: bool,
-) -> np.ndarray:
-    if _PFOR_WIRE.get() == "java":
-        return decode_fastpfor_java(
-            buf, n, byte_length, offset, zigzag=zigzag, delta=delta
-        )[0]
-    return decode_pfor(buf, n, offset, zigzag=zigzag, delta=delta)[0]
 
 
 class StreamType(IntEnum):
@@ -208,12 +173,10 @@ def _stream_meta(stype: StreamType, enc: StreamEncoding, num_values: int, data: 
     return bytes([(stype << 4) | enc]) + _varint(num_values) + _varint(len(data))
 
 
-def _best_offsets(vals: np.ndarray, allow_pfor: bool) -> tuple[StreamEncoding, bytes]:
+def _best_offsets(vals: np.ndarray) -> tuple[StreamEncoding, bytes]:
     """Topology offsets: RLE vs FastPFOR-delta-zigzag (`CovtConverter.java:899-919`)."""
     rle = encode_int_rle(vals, signed=False)
-    if not allow_pfor:
-        return StreamEncoding.RLE, rle
-    pfor = _pfor_enc(vals, zigzag=True, delta=True)
+    pfor = encode_pfor(vals, zigzag=True, delta=True)
     if len(pfor) <= len(rle):
         return StreamEncoding.FAST_PFOR_DELTA_ZIG_ZAG, pfor
     return StreamEncoding.RLE, rle
@@ -238,14 +201,12 @@ def _undo_interleaved_delta(deltas: np.ndarray) -> np.ndarray:
     return out
 
 
-def _best_vertex_buffer(vb: np.ndarray, allow_pfor: bool) -> tuple[StreamEncoding, bytes]:
+def _best_vertex_buffer(vb: np.ndarray) -> tuple[StreamEncoding, bytes]:
     """Plain vertex buffer: varint vs FastPFOR of the zigzag deltas
     (`CovtConverter.java:646-668`)."""
     zz = zigzag_encode(_interleaved_zigzag_delta(vb))
     var = encode_varints(zz)
-    if not allow_pfor:
-        return StreamEncoding.VARINT_DELTA_ZIG_ZAG, var
-    pfor = _pfor_enc(zz.astype(np.int64), zigzag=False, delta=False)
+    pfor = encode_pfor(zz.astype(np.int64), zigzag=False, delta=False)
     if len(pfor) <= len(var):
         return StreamEncoding.FAST_PFOR_DELTA_ZIG_ZAG, pfor
     return StreamEncoding.VARINT_DELTA_ZIG_ZAG, var
@@ -266,8 +227,6 @@ def _tae_kind(types: np.ndarray) -> str | None:
 
 def _encode_geometry_tae(
     geom: GeometryColumn,
-    allow_pfor_topology: bool,
-    allow_pfor_vertex: bool,
 ) -> tuple[GColumnType, list[tuple[StreamType, StreamEncoding, int, bytes]]] | None:
     """TAE geometry column (our extension, GColumnType.TAE): shared
     ring/part boundaries stored once as deduplicated arcs.
@@ -310,23 +269,21 @@ def _encode_geometry_tae(
          encode_byte_rle(types)),
     ]
     if geom.geometry_offsets is not None and len(geom.geometry_offsets):
-        enc, data = _best_offsets(
-            np.asarray(geom.geometry_offsets, np.int64), allow_pfor_topology
-        )
+        enc, data = _best_offsets(np.asarray(geom.geometry_offsets, np.int64))
         streams.append(
             (StreamType.GEOMETRY_OFFSETS, enc, len(geom.geometry_offsets), data)
         )
     refs_per_chain = np.array([len(r) for r in refs], np.int64)
     if kind == "poly":
         po = np.asarray(geom.part_offsets, np.int64)
-        enc, data = _best_offsets(po, allow_pfor_topology)
+        enc, data = _best_offsets(po)
         streams.append((StreamType.PART_OFFSETS, enc, len(po), data))
-        enc, data = _best_offsets(refs_per_chain, allow_pfor_topology)
+        enc, data = _best_offsets(refs_per_chain)
         streams.append(
             (StreamType.RING_OFFSETS, enc, len(refs_per_chain), data)
         )
     else:
-        enc, data = _best_offsets(refs_per_chain, allow_pfor_topology)
+        enc, data = _best_offsets(refs_per_chain)
         streams.append(
             (StreamType.PART_OFFSETS, enc, len(refs_per_chain), data)
         )
@@ -339,14 +296,14 @@ def _encode_geometry_tae(
          len(ref_stream), encode_varints(zigzag_encode(ref_stream)))
     )
     arc_lengths = np.array([len(a) for a in arcs], np.int64)
-    enc, data = _best_offsets(arc_lengths, allow_pfor_topology)
+    enc, data = _best_offsets(arc_lengths)
     streams.append((StreamType.LENGTH, enc, len(arc_lengths), data))
     arc_store = (
         np.concatenate([a.reshape(-1) for a in arcs])
         if arcs
         else np.empty(0, np.int64)
     )
-    enc, data = _best_vertex_buffer(arc_store, allow_pfor_vertex)
+    enc, data = _best_vertex_buffer(arc_store)
     streams.append(
         (StreamType.VERTEX_BUFFER, enc, len(arc_store) // 2, data)
     )
@@ -359,8 +316,6 @@ def _encode_geometry_tae(
 def _encode_geometry_best(
     geom: GeometryColumn,
     extent: int,
-    allow_pfor_topology: bool,
-    allow_pfor_vertex: bool,
     allow_tae: bool = False,
 ) -> tuple[GColumnType, list[tuple[StreamType, StreamEncoding, int, bytes]]]:
     """Per-layer best-of {plain, ICE, ICE-morton, TAE} by encoded size
@@ -379,14 +334,12 @@ def _encode_geometry_best(
         candidates += ["ice", "ice_morton"]
     best = None
     for mode in candidates:
-        ctype, streams = _encode_geometry(
-            geom, extent, mode, allow_pfor_topology, allow_pfor_vertex
-        )
+        ctype, streams = _encode_geometry(geom, extent, mode)
         size = sum(len(d) for _, _, _, d in streams)
         if best is None or size < best[0]:
             best = (size, ctype, streams)
     if allow_tae:
-        tae = _encode_geometry_tae(geom, allow_pfor_topology, allow_pfor_vertex)
+        tae = _encode_geometry_tae(geom)
         if tae is not None:
             size = sum(len(d) for _, _, _, d in tae[1])
             if size < best[0]:
@@ -398,8 +351,6 @@ def _encode_geometry(
     geom: GeometryColumn,
     extent: int,
     geometry_encoding: str,
-    allow_pfor_topology: bool,
-    allow_pfor_vertex: bool,
 ) -> tuple[GColumnType, list[tuple[StreamType, StreamEncoding, int, bytes]]]:
     """Geometry column streams in StreamType-ordinal order."""
     types = np.asarray(geom.geometry_types, dtype=np.uint8)
@@ -417,12 +368,12 @@ def _encode_geometry(
         (StreamType.RING_OFFSETS, geom.ring_offsets),
     ):
         if vals is not None and len(vals):
-            enc, data = _best_offsets(np.asarray(vals, np.int64), allow_pfor_topology)
+            enc, data = _best_offsets(np.asarray(vals, np.int64))
             streams.append((stype, enc, len(vals), data))
 
     vb = np.asarray(geom.vertex_buffer, dtype=np.int64)
     if geometry_encoding == "plain":
-        enc, data = _best_vertex_buffer(vb, allow_pfor_vertex)
+        enc, data = _best_vertex_buffer(vb)
         streams.append((StreamType.VERTEX_BUFFER, enc, len(vb) // 2, data))
         return GColumnType.PLAIN, streams
 
@@ -440,12 +391,9 @@ def _encode_geometry(
     uniq_sfc, first_idx, inverse = np.unique(sfc, return_index=True, return_inverse=True)
     offs = inverse.astype(np.int64)
     var_offs = encode_varints(zigzag_encode(np.diff(offs, prepend=np.int64(0))))
-    if allow_pfor_topology:
-        pfor_offs = _pfor_enc(offs, zigzag=True, delta=True)
-        if len(pfor_offs) < len(var_offs):
-            off_enc, off_bytes = StreamEncoding.FAST_PFOR_DELTA_ZIG_ZAG, pfor_offs
-        else:
-            off_enc, off_bytes = StreamEncoding.VARINT_DELTA_ZIG_ZAG, var_offs
+    pfor_offs = encode_pfor(offs, zigzag=True, delta=True)
+    if len(pfor_offs) < len(var_offs):
+        off_enc, off_bytes = StreamEncoding.FAST_PFOR_DELTA_ZIG_ZAG, pfor_offs
     else:
         off_enc, off_bytes = StreamEncoding.VARINT_DELTA_ZIG_ZAG, var_offs
     streams.append((StreamType.VERTEX_OFFSETS, off_enc, len(offs), off_bytes))
@@ -456,24 +404,18 @@ def _encode_geometry(
         codes = uniq_sfc.astype(np.int64)
         deltas = np.diff(codes, prepend=np.int64(0))
         var_dict = encode_varints(deltas.astype(np.uint64))
-        if allow_pfor_vertex:
-            pfor_dict = _pfor_enc(deltas, zigzag=False, delta=False)
-            if len(pfor_dict) < len(var_dict):
-                streams.append(
-                    (StreamType.VERTEX_BUFFER, StreamEncoding.FAST_PFOR_DELTA_ZIG_ZAG,
-                     len(codes), pfor_dict)
-                )
-                return GColumnType.ICE_MORTON_CODE, streams
-        streams.append(
-            (StreamType.VERTEX_BUFFER, StreamEncoding.VARINT_DELTA_ZIG_ZAG,
-             len(codes), var_dict)
-        )
+        pfor_dict = encode_pfor(deltas, zigzag=False, delta=False)
+        if len(pfor_dict) < len(var_dict):
+            dict_enc, dict_bytes = StreamEncoding.FAST_PFOR_DELTA_ZIG_ZAG, pfor_dict
+        else:
+            dict_enc, dict_bytes = StreamEncoding.VARINT_DELTA_ZIG_ZAG, var_dict
+        streams.append((StreamType.VERTEX_BUFFER, dict_enc, len(codes), dict_bytes))
         return GColumnType.ICE_MORTON_CODE, streams
 
     inter = np.empty(len(uniq_sfc) * 2, dtype=np.int64)
     inter[0::2] = x[first_idx]
     inter[1::2] = y[first_idx]
-    enc, data = _best_vertex_buffer(inter, allow_pfor_vertex)
+    enc, data = _best_vertex_buffer(inter)
     streams.append((StreamType.VERTEX_BUFFER, enc, len(uniq_sfc), data))
     return GColumnType.ICE, streams
 
@@ -498,18 +440,15 @@ def encode_tile_genb(
     layers: list[LayerInput],
     optimize_metadata: bool = True,
     geometry_encoding: str = "plain",
-    allow_pfor_topology: bool = True,
-    allow_pfor_vertex: bool = True,
     layer_table: dict | None = None,
     allow_tae: bool = False,
-    pfor_wire: str = "ours",
 ) -> tuple[bytes, dict]:
     """Encode a gen-B tile; returns (payload, TileJSON sidecar dict).
 
-    ``pfor_wire="java"`` emits FAST_PFOR streams in JavaFastPFOR's
-    ``Composition(FastPFOR, VariableByte)`` wire (covt/pfor_java.py) —
-    the layout the reference's Java converter produces — instead of our
-    in-format container; tile structure is otherwise identical.
+    ``geometry_encoding`` is "plain", "ice", "ice_morton" or "best" (the
+    smallest of those three). Within any of them, every topology, vertex
+    offset and vertex stream picks FAST_PFOR or its RLE/varint
+    alternative by encoded size, so the choice follows the data.
 
     ``allow_tae=True`` lets ``geometry_encoding="best"`` also consider
     the TAE arc column (GColumnType.TAE — OUR extension beyond the
@@ -527,25 +466,6 @@ def encode_tile_genb(
     tileset). Column ids are read per column on decode, so a tile that
     lacks some global fields stays valid.
     """
-    token = _PFOR_WIRE.set(pfor_wire)
-    try:
-        return _encode_tile_genb_locked(
-            layers, optimize_metadata, geometry_encoding,
-            allow_pfor_topology, allow_pfor_vertex, layer_table, allow_tae,
-        )
-    finally:
-        _PFOR_WIRE.reset(token)
-
-
-def _encode_tile_genb_locked(
-    layers: list[LayerInput],
-    optimize_metadata: bool,
-    geometry_encoding: str,
-    allow_pfor_topology: bool,
-    allow_pfor_vertex: bool,
-    layer_table: dict | None,
-    allow_tae: bool,
-) -> tuple[bytes, dict]:
     out: list[bytes] = []
     vector_layers: list[dict] = []
     for tile_layer_idx, layer in enumerate(layers):
@@ -602,13 +522,11 @@ def _encode_tile_genb_locked(
 
         if geometry_encoding == "best":
             ctype, gstreams = _encode_geometry_best(
-                layer.geometry, layer.extent, allow_pfor_topology,
-                allow_pfor_vertex, allow_tae=allow_tae,
+                layer.geometry, layer.extent, allow_tae=allow_tae
             )
         else:
             ctype, gstreams = _encode_geometry(
-                layer.geometry, layer.extent, geometry_encoding,
-                allow_pfor_topology, allow_pfor_vertex,
+                layer.geometry, layer.extent, geometry_encoding
             )
         meta_parts.append(col_header(1, GEOMETRY_COLUMN, GDataType.GEOMETRY, ctype, first))
         for stype, enc, nv, data in gstreams:
@@ -797,21 +715,19 @@ def _decode_stream_ints(
         vals, offset = decode_int_rle(buf, n, offset, signed=signed_rle)
         return vals.astype(np.int64), offset
     if enc == StreamEncoding.FAST_PFOR_DELTA_ZIG_ZAG:
-        vals = _pfor_dec(buf, n, offset, byte_length, zigzag=True, delta=True)
+        vals = decode_pfor(buf, n, offset, zigzag=True, delta=True)[0]
         return vals, offset + byte_length  # parser advances by byteLength (:345)
     raise ValueError(f"unsupported topology stream encoding {enc}")
 
 
 def decode_tile_genb(
-    buf: bytes, tilejson: dict | None = None, pfor_wire: str = "ours",
+    buf: bytes, tilejson: dict | None = None,
     layers: "set[str] | None" = None, columns: "set[str] | None" = None,
 ) -> dict[str, LayerData]:
     """Decode a gen-B tile (`CovtParser.java:53-133` flow).
 
-    ``pfor_wire="java"`` reads FAST_PFOR streams in JavaFastPFOR's wire
-    (what the reference's Java converter emits); default is our
-    in-format container. The stream metadata does not self-describe the
-    wire, so the caller states which producer wrote the tile.
+    FAST_PFOR streams are read as `covt/pfor.py`'s container, the one
+    wire :func:`encode_tile_genb` writes.
 
     ``layers`` / ``columns`` push projection INTO the payload: every
     stream's byte length is in the column metadata, so unselected
@@ -825,35 +741,9 @@ def decode_tile_genb(
     the shared dictionary exists, but only selected columns appear in
     the result. Column *metadata* stays complete either way — only
     data decoding is pruned."""
-    token = _PFOR_WIRE.set(pfor_wire)
-    try:
-        return _decode_tile_genb_locked(buf, tilejson, layers, columns)
-    finally:
-        _PFOR_WIRE.reset(token)
-
-
-def _skip_column_data(
-    b: np.ndarray, pos: int, role: str, dtype: "GDataType",
-    streams: list, n_bytes: int,
-) -> int:
-    """Cursor-jump one column's data section: the implicit present
-    byte-RLE first for non-boolean properties (`:295` — absent from the
-    stream metadata), then the declared streams' recorded byte lengths."""
-    from cov_tiles_spark.covt.rle import skip_byte_rle
-
-    if role == "property" and dtype != GDataType.BOOLEAN:
-        pos = skip_byte_rle(b, n_bytes, pos)
-    return pos + sum(s[3] for s in streams)
-
-
-def _decode_tile_genb_locked(
-    buf: bytes, tilejson: dict | None = None,
-    sel_layers: "set[str] | None" = None,
-    sel_columns: "set[str] | None" = None,
-) -> dict[str, LayerData]:
     b = np.frombuffer(buf, dtype=np.uint8)
     pos = 0
-    layers: dict[str, LayerData] = {}
+    out: dict[str, LayerData] = {}
     layer_list = (tilejson or {}).get("vector_layers", [])
     while pos < len(b):
         layer_header = int(b[pos])
@@ -883,7 +773,7 @@ def _decode_tile_genb_locked(
         # property legitimately named "id" (bing tiles have one) must not
         # shadow the id column (`CovtParser.java:71-84` dispatches by name
         # and would misparse such tiles — deliberate divergence)
-        columns: list[tuple[str, str, GDataType, GColumnType, list[tuple[StreamType, StreamEncoding, int, int]]]] = []
+        col_list: list[tuple[str, str, GDataType, GColumnType, list[tuple[StreamType, StreamEncoding, int, int]]]] = []
         for i in range(n_columns):
             role = "property"
             if optimized or i == 0:
@@ -929,17 +819,17 @@ def _decode_tile_genb_locked(
                     break
                 if stype == StreamType.DICTIONARY:
                     break
-            columns.append((name, role, dtype, ctype, streams))
+            col_list.append((name, role, dtype, ctype, streams))
 
         # ---- data section
         nb_present = (n_features + 7) // 8
-        if sel_layers is not None and layer_name not in sel_layers:
+        if layers is not None and layer_name not in layers:
             # unselected layer: jump the cursor over its whole data
             # section (declared stream byte lengths are exact by
             # construction; non-boolean properties additionally carry an
             # IMPLICIT present byte-RLE stream — `:295` — walked header
             # by header, never materialized; pinned by the pruning tests)
-            for _n, role, dtype, _c, streams in columns:
+            for _n, role, dtype, _c, streams in col_list:
                 pos = _skip_column_data(b, pos, role, dtype, streams, nb_present)
             continue
 
@@ -948,23 +838,23 @@ def _decode_tile_genb_locked(
         # selected follower has its dictionary (leader = the
         # LOCALIZED_DICTIONARY column carrying the DICTIONARY stream;
         # followers attach to the most recent leader)
-        if sel_columns is None:
-            decode_col = [True] * len(columns)
+        if columns is None:
+            decode_col = [True] * len(col_list)
             emit_col = decode_col
         else:
             emit_col = [
-                (name in sel_columns)
+                (name in columns)
                 if role == "property"
                 else (
-                    (ID_COLUMN in sel_columns)
+                    (ID_COLUMN in columns)
                     if role == "id"
-                    else (GEOMETRY_COLUMN in sel_columns)
+                    else (GEOMETRY_COLUMN in columns)
                 )
-                for name, role, *_r in columns
+                for name, role, *_r in col_list
             ]
             decode_col = list(emit_col)
             leader_i = -1
-            for i, (name, role, dtype, ctype, streams) in enumerate(columns):
+            for i, (name, role, dtype, ctype, streams) in enumerate(col_list):
                 if ctype != GColumnType.LOCALIZED_DICTIONARY:
                     continue
                 # leader = non-empty DICTIONARY stream; followers carry
@@ -982,7 +872,7 @@ def _decode_tile_genb_locked(
         properties: dict[str, PropertyColumn] = {}
         n_bytes = (n_features + 7) // 8
         col_metas: list[ColumnMetadata] = []
-        for ci, (name, role, dtype, ctype, streams) in enumerate(columns):
+        for ci, (name, role, dtype, ctype, streams) in enumerate(col_list):
             if not decode_col[ci]:
                 pos = _skip_column_data(b, pos, role, dtype, streams, nb_present)
             elif role == "id":
@@ -1021,13 +911,29 @@ def _decode_tile_genb_locked(
                 )
             )
 
-        layers[layer_name] = LayerData(
+        out[layer_name] = LayerData(
             metadata=LayerMetadata(name=layer_name, num_features=n_features, columns=col_metas),
             ids=ids,
             geometry=geometry,
             properties=properties,
         )
-    return layers
+    return out
+
+
+def _skip_column_data(
+    b: np.ndarray, pos: int, role: str, dtype: "GDataType",
+    streams: list, n_bytes: int,
+) -> int:
+    """Cursor-jump one column's data section: the implicit present
+    byte-RLE first for non-boolean properties (`:295` — absent from the
+    stream metadata), then the declared streams' recorded byte lengths."""
+    from cov_tiles_spark.covt.rle import skip_byte_rle
+
+    if role == "property" and dtype != GDataType.BOOLEAN:
+        pos = skip_byte_rle(b, n_bytes, pos)
+    return pos + sum(s[3] for s in streams)
+
+
 
 
 def _decode_geometry_tae(
@@ -1067,7 +973,7 @@ def _decode_geometry_tae(
             if senc == StreamEncoding.VARINT_DELTA_ZIG_ZAG:
                 deltas, pos = decode_zigzag_varints(b, nv * 2, pos)
             elif senc == StreamEncoding.FAST_PFOR_DELTA_ZIG_ZAG:
-                zz = _pfor_dec(b, nv * 2, pos, bl, zigzag=False, delta=False)
+                zz = decode_pfor(b, nv * 2, pos, zigzag=False, delta=False)[0]
                 deltas = zigzag_decode(zz.astype(np.uint64))
                 pos += bl
             else:
@@ -1135,7 +1041,7 @@ def _decode_geometry(
                 deltas, pos = decode_zigzag_varints(b, nv, pos)
                 vertex_offsets = np.cumsum(deltas, dtype=np.int64)
             elif senc == StreamEncoding.FAST_PFOR_DELTA_ZIG_ZAG:
-                vertex_offsets = _pfor_dec(b, nv, pos, bl, zigzag=True, delta=True)
+                vertex_offsets = decode_pfor(b, nv, pos, zigzag=True, delta=True)[0]
                 pos += bl
             else:
                 raise ValueError(f"unsupported vertex_offsets encoding {senc}")
@@ -1146,7 +1052,7 @@ def _decode_geometry(
                     deltas, pos = decode_varints(b, nv, pos)
                     codes = np.cumsum(deltas.astype(np.int64), dtype=np.int64)
                 elif senc == StreamEncoding.FAST_PFOR_DELTA_ZIG_ZAG:
-                    deltas = _pfor_dec(b, nv, pos, bl, zigzag=False, delta=False)
+                    deltas = decode_pfor(b, nv, pos, zigzag=False, delta=False)[0]
                     codes = np.cumsum(deltas, dtype=np.int64)
                     pos += bl
                 else:
@@ -1159,7 +1065,7 @@ def _decode_geometry(
                 if senc == StreamEncoding.VARINT_DELTA_ZIG_ZAG:
                     deltas, pos = decode_zigzag_varints(b, nv * 2, pos)
                 elif senc == StreamEncoding.FAST_PFOR_DELTA_ZIG_ZAG:
-                    zz = _pfor_dec(b, nv * 2, pos, bl, zigzag=False, delta=False)
+                    zz = decode_pfor(b, nv * 2, pos, zigzag=False, delta=False)[0]
                     from cov_tiles_spark.covt.varint import zigzag_decode
 
                     deltas = zigzag_decode(zz.astype(np.uint64))

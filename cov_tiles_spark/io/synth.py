@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cov_tiles_spark.operators.images import encode_image, generate_image, phash64
+from cov_tiles_spark.spatial.tiling import DEFAULT_EXTENT
 
 SCHEMA = (
     "image_id string, bytes binary, w int, h int, fmt string, "
@@ -211,11 +212,10 @@ def video_df(spark: SparkSession, n: int, partitions: int | None = None) -> Data
 
 # ---------- tile_boundaries (FIXTURES.md §2) ----------
 
-def tile_boundaries_df(
-    spark: SparkSession, assigned_tiles: DataFrame, extent: int = 4096
-) -> DataFrame:
+def tile_boundaries_df(spark: SparkSession, assigned_tiles: DataFrame) -> DataFrame:
     """One boundary polygon per distinct (z,x,y) in ``assigned_tiles``,
-    plus a ring of empty neighbor tiles as negative cases.
+    plus a ring of empty neighbor tiles as negative cases, on the
+    ``DEFAULT_EXTENT`` grid ``assign_tiles`` uses.
 
     Boundary = the full tile square (open ring, counts-not-offsets SoA,
     `covtDecoder.ts:176,187`); every 20th tile (deterministic by hash)
@@ -239,7 +239,7 @@ def tile_boundaries_df(
         .distinct()
     )
 
-    e = extent
+    e = DEFAULT_EXTENT
     hole_lo = e * 7 // 16
     hole_hi = e * 9 // 16
     with_hole = F2.pmod(F2.xxhash64("z", "x", "y"), F2.lit(20)) == 0

@@ -28,7 +28,6 @@ from cov_tiles_spark.pipeline.materialize import (
     assign_tiles,
     encode_assigned,
 )
-from cov_tiles_spark.spatial.tiling import DEFAULT_EXTENT
 
 def _tile_key() -> F.Column:
     # underscore join: "/" in hive partition values gets %-escaped in
@@ -62,7 +61,6 @@ def delta_materialize(
     images: DataFrame,
     zooms: list[int],
     table: str = "tiles",
-    extent: int = DEFAULT_EXTENT,
     max_features_per_tile: int = 20_000,
     wire_format: str = "gena",
     partition_buckets: int | None = None,
@@ -94,7 +92,7 @@ def delta_materialize(
     2.1k scattered changed tiles). Pick by edit locality; both modes
     are byte-identical to a full recompute."""
     cols = ["image_id", "caption", "fmt", "w", "h", "phash", "lon", "lat"]
-    assigned = assign_tiles(images.select(*cols), zooms, extent).persist()
+    assigned = assign_tiles(images.select(*cols), zooms).persist()
     cur = input_checksums(assigned).persist()
     total = cur.count()
 

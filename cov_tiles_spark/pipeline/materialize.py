@@ -57,10 +57,9 @@ PAYLOAD_SCHEMA = (
 )
 
 
-def assign_tiles(
-    images: DataFrame, zooms: list[int], extent: int = DEFAULT_EXTENT
-) -> DataFrame:
-    """Narrow map: one output row per (record, zoom) with tile + local coords.
+def assign_tiles(images: DataFrame, zooms: list[int]) -> DataFrame:
+    """Narrow map: one output row per (record, zoom) with tile + local coords
+    on the ``DEFAULT_EXTENT`` grid the tile encoder writes.
 
     Column-expression only — stays in whole-stage codegen; Catalyst prunes
     the heavy ``bytes`` column if the consumer doesn't select it.
@@ -71,8 +70,8 @@ def assign_tiles(
             F.lit(z).alias("z"),
             tile_x(lon, z).alias("x"),
             tile_y(lat, z).alias("y"),
-            tile_local_x(lon, z, tile_x(lon, z), extent).alias("local_x"),
-            tile_local_y(lat, z, tile_y(lat, z), extent).alias("local_y"),
+            tile_local_x(lon, z, tile_x(lon, z)).alias("local_x"),
+            tile_local_y(lat, z, tile_y(lat, z)).alias("local_y"),
         )
         for z in zooms
     ]
@@ -449,7 +448,6 @@ def _make_precap_stream(cap: int):
 def materialize_tiles(
     images: DataFrame,
     zooms: list[int],
-    extent: int = DEFAULT_EXTENT,
     max_features_per_tile: int = 20_000,
     with_mvt_baseline: bool = True,
     wire_format: str = "gena",
@@ -462,7 +460,7 @@ def materialize_tiles(
     if not zooms:  # full resume: nothing left to materialize
         return images.sparkSession.createDataFrame([], PAYLOAD_SCHEMA)
     cols = ["image_id", "caption", "fmt", "w", "h", "phash", "lon", "lat"]
-    assigned = assign_tiles(images.select(*cols), zooms, extent)
+    assigned = assign_tiles(images.select(*cols), zooms)
 
     # One wide exchange, skew-mitigated and explicitly sized:
     # - hash partitioning: identical keys stay in one partition, so every

@@ -56,12 +56,15 @@ def _slice_property(col, m: np.ndarray) -> PropertyInput:
 
 
 def overzoom_tile(
-    payload: bytes, z: int, x: int, y: int, extent: int = DEFAULT_EXTENT
+    payload: bytes, z: int, x: int, y: int
 ) -> list[tuple[int, int, int, int, bytes]]:
     """One parent payload -> up to 4 (z+1, x, y, n_features, payload).
 
     Point layers only (the corpus pipeline's shape); per-quadrant
-    vectorized split, empty quadrants emit nothing."""
+    vectorized split, empty quadrants emit nothing. Gen-A payloads record
+    no extent, so parent and children are on the pipeline's
+    ``DEFAULT_EXTENT`` grid (the ``LayerInput`` default)."""
+    extent = DEFAULT_EXTENT
     half = extent // 2
     layers = decode_covt(payload)
     out: dict[tuple[int, int], list[LayerInput]] = {}
@@ -112,7 +115,7 @@ def overzoom_tile(
     return results
 
 
-def overzoom_tiles(payloads: DataFrame, extent: int = DEFAULT_EXTENT) -> DataFrame:
+def overzoom_tiles(payloads: DataFrame) -> DataFrame:
     """Distributed overzoom: every payload row -> its child payload rows
     (map-only; no exchange)."""
 
@@ -122,7 +125,7 @@ def overzoom_tiles(payloads: DataFrame, extent: int = DEFAULT_EXTENT) -> DataFra
             for _, row in pdf.iterrows():
                 for zc, xc, yc, nf, data in overzoom_tile(
                     bytes(row["payload"]), int(row["z"]), int(row["x"]),
-                    int(row["y"]), extent,
+                    int(row["y"]),
                 ):
                     rows.append(
                         {"z": zc, "x": xc, "y": yc,

@@ -63,8 +63,9 @@ def _cap_rows(assigned: DataFrame, max_features: int) -> DataFrame:
     )
 
 
-def parent_rows(rows: DataFrame, extent: int = DEFAULT_EXTENT) -> DataFrame:
+def parent_rows(rows: DataFrame) -> DataFrame:
     """Derive the z-1 assignment from a z assignment (narrow map)."""
+    extent = DEFAULT_EXTENT
     gx = F.col("x") * extent + F.col("local_x")
     gy = F.col("y") * extent + F.col("local_y")
     px = F.shiftright(F.col("x"), 1)
@@ -83,7 +84,6 @@ def materialize_pyramid(
     images: DataFrame,
     zmin: int,
     zmax: int,
-    extent: int = DEFAULT_EXTENT,
     max_features_per_tile: int = 20_000,
     with_mvt_baseline: bool = True,
     wire_format: str = "gena",
@@ -118,7 +118,7 @@ def materialize_pyramid(
     # persist the one full-corpus assignment; coarser levels are narrow
     # projections of it (cheap to recompute from cache) until a window
     # cap materializes a shrunken row set
-    rows = assign_tiles(images.select(*cols), [zmax], extent).persist()
+    rows = assign_tiles(images.select(*cols), [zmax]).persist()
     out: list[DataFrame] = []
     for z in range(zmax, zmin - 1, -1):
         tile_bound = (1 << (2 * z)) * max_features_per_tile
@@ -143,5 +143,5 @@ def materialize_pyramid(
                 )
             )
         if z > zmin:
-            rows = parent_rows(rows, extent)
+            rows = parent_rows(rows)
     return reduce(DataFrame.unionAll, out)

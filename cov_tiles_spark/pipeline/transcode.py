@@ -164,36 +164,8 @@ def _properties_from_mvt(
     return props, localized
 
 
-def mvt_to_covt(mvt_bytes: bytes, allow_ice: bool = True) -> tuple[bytes, int, int]:
-    """One tile: MVT bytes -> (COVT bytes, n_layers, n_features)."""
-    layers = decode_mvt(mvt_bytes)
-    inputs = []
-    n_features = 0
-    for lay in layers:
-        if not lay.features:
-            continue
-        ids = (
-            np.asarray([f.id for f in lay.features], dtype=np.int64)
-            if all(f.id is not None for f in lay.features)
-            else None
-        )
-        props, localized = _properties_from_mvt(lay.features)
-        inputs.append(
-            LayerInput(
-                name=lay.name,
-                geometry=_geometry_from_mvt(lay.features),
-                ids=ids,
-                properties=props,
-                localized=localized or None,
-                extent=lay.extent,
-            )
-        )
-        n_features += len(lay.features)
-    return encode_tile(inputs, allow_ice=allow_ice), len(inputs), n_features
-
-
-def _genb_inputs(mvt_bytes: bytes) -> tuple[list[LayerInput], int]:
-    """MVT bytes -> (LayerInput list, n_features) for gen-B encoding."""
+def _layer_inputs(mvt_bytes: bytes) -> tuple[list[LayerInput], int]:
+    """MVT bytes -> (LayerInput list, n_features), empty layers dropped."""
     layers = decode_mvt(mvt_bytes)
     inputs = []
     n_features = 0
@@ -220,15 +192,21 @@ def _genb_inputs(mvt_bytes: bytes) -> tuple[list[LayerInput], int]:
     return inputs, n_features
 
 
+def mvt_to_covt(mvt_bytes: bytes) -> tuple[bytes, int, int]:
+    """One tile: MVT bytes -> (COVT bytes, n_layers, n_features)."""
+    inputs, n_features = _layer_inputs(mvt_bytes)
+    return encode_tile(inputs), len(inputs), n_features
+
+
 def mvt_to_genb(
     mvt_bytes: bytes, reorder: bool = False, allow_tae: bool = False,
-    pfor_wire: str = "ours",
 ) -> tuple[bytes, dict, int, int]:
     """One tile: MVT bytes -> (gen-B COVT bytes, TileJSON dict, n_layers,
     n_features). ``name:*`` groups use the format-reserved
     LOCALIZED_DICTIONARY column type (shared dictionary across locales —
     our documented extension; the reference converter throws on it,
-    CovtConverter.java:358-360).
+    CovtConverter.java:358-360). Each stream takes FAST_PFOR (in
+    `covt/pfor.py`'s container) or its RLE/varint alternative by size.
 
     ``reorder=True`` additionally argmins each layer's feature order
     over {source, SFC/greedy-chain, id-sort} by encoded size
@@ -243,7 +221,7 @@ def mvt_to_genb(
     vertex-for-vertex exact, so strict verification still applies."""
     from cov_tiles_spark.covt.genb import encode_tile_genb
 
-    inputs, n_features = _genb_inputs(mvt_bytes)
+    inputs, n_features = _layer_inputs(mvt_bytes)
     if reorder:
         from cov_tiles_spark.covt.order import candidate_perms, permute_layer
 
@@ -251,7 +229,7 @@ def mvt_to_genb(
             return len(
                 encode_tile_genb(
                     [lay], optimize_metadata=True, geometry_encoding="best",
-                    allow_tae=allow_tae, pfor_wire=pfor_wire,
+                    allow_tae=allow_tae,
                 )[0]
             )
 
@@ -264,7 +242,7 @@ def mvt_to_genb(
         ]
     payload, tilejson = encode_tile_genb(
         inputs, optimize_metadata=True, geometry_encoding="best",
-        allow_tae=allow_tae, pfor_wire=pfor_wire,
+        allow_tae=allow_tae,
     )
     return payload, tilejson, len(inputs), n_features
 
@@ -281,7 +259,7 @@ def mvts_to_genb_tileset(
     """
     from cov_tiles_spark.covt.genb import build_layer_table, encode_tile_genb
 
-    per_tile = [_genb_inputs(t)[0] for t in mvt_tiles]
+    per_tile = [_layer_inputs(t)[0] for t in mvt_tiles]
     table, tilejson = build_layer_table(per_tile)
     payloads = [
         encode_tile_genb(

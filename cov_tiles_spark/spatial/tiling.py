@@ -57,15 +57,19 @@ def tile_y(lat: Column, z: int) -> Column:
     ).cast("int")
 
 
-def tile_local_x(lon: Column, z: int, x: Column, extent: int = DEFAULT_EXTENT) -> Column:
-    """Integer coordinate within tile (z, x), on the extent grid."""
+def tile_local_x(lon: Column, z: int, x: Column) -> Column:
+    """Integer coordinate within tile (z, x), on the ``DEFAULT_EXTENT`` grid."""
     n = F.lit(float(1 << z))
-    return F.floor((mercator_x(lon) * n - x.cast("double")) * F.lit(float(extent))).cast("int")
+    return F.floor(
+        (mercator_x(lon) * n - x.cast("double")) * F.lit(float(DEFAULT_EXTENT))
+    ).cast("int")
 
 
-def tile_local_y(lat: Column, z: int, y: Column, extent: int = DEFAULT_EXTENT) -> Column:
+def tile_local_y(lat: Column, z: int, y: Column) -> Column:
     n = F.lit(float(1 << z))
-    return F.floor((mercator_y(lat) * n - y.cast("double")) * F.lit(float(extent))).cast("int")
+    return F.floor(
+        (mercator_y(lat) * n - y.cast("double")) * F.lit(float(DEFAULT_EXTENT))
+    ).cast("int")
 
 
 # ---------- numpy twin (UDF kernels + pytest oracle) ----------

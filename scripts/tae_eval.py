@@ -25,7 +25,7 @@ from cov_tiles_spark.covt.tae import (  # noqa: E402
     tae_roundtrip_ok,
     tae_size,
 )
-from cov_tiles_spark.pipeline.transcode import _genb_inputs  # noqa: E402
+from cov_tiles_spark.pipeline.transcode import _layer_inputs  # noqa: E402
 
 _HEADER = "## TAE (Topological Arc Encoding) evaluation — reference next-step, measured"
 
@@ -43,7 +43,7 @@ def main() -> None:
         raw = open(p, "rb").read()
         if raw[:2] == b"\x1f\x8b":
             raw = gzip.decompress(raw)
-        inputs = _genb_inputs(raw)[0]
+        inputs = _layer_inputs(raw)[0]
         tile_genb = len(
             encode_tile_genb(inputs, optimize_metadata=True,
                              geometry_encoding="best")[0]
@@ -62,9 +62,7 @@ def main() -> None:
                 continue
             cur = sum(
                 len(d)
-                for *_, d in _encode_geometry_best(
-                    lay.geometry, lay.extent, True, True
-                )[1]
+                for *_, d in _encode_geometry_best(lay.geometry, lay.extent)[1]
             )
             est = tae_size(rings, closed=closed)["tae_bytes"] + 2  # types
             if est < cur:

@@ -9,14 +9,28 @@ plus byte-level layout assertions.
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
+from cov_tiles_spark.covt import genb
 from cov_tiles_spark.covt.decoder import GeometryColumn
 from cov_tiles_spark.covt.encoder import LayerInput, PropertyInput
-from cov_tiles_spark.covt.genb import StreamEncoding, decode_tile_genb, encode_tile_genb
+from cov_tiles_spark.covt.genb import (
+    StreamEncoding,
+    _best_offsets,
+    _best_vertex_buffer,
+    _interleaved_zigzag_delta,
+    decode_tile_genb,
+    encode_tile_genb,
+)
 from cov_tiles_spark.covt.metadata import ColumnDataType, GeometryType
 from cov_tiles_spark.covt.pfor import decode_pfor, encode_pfor
+from cov_tiles_spark.covt.rle import encode_int_rle
+from cov_tiles_spark.covt.varint import encode_varints, zigzag_encode
 
 
 def _mixed_layer(n_points: int = 300) -> LayerInput:
@@ -173,17 +187,86 @@ def test_genb_roundtrip_polygons():
         _assert_layer_roundtrip(layer, decoded)
 
 
-def test_genb_multilayer_and_pfor_toggle():
+def test_genb_multilayer_roundtrip():
     layers = [_mixed_layer(200), _line_layer(), _poly_layer()]
-    with_pfor, tj = encode_tile_genb(layers, allow_pfor_topology=True, allow_pfor_vertex=True)
-    no_pfor, _ = encode_tile_genb(layers, allow_pfor_topology=False, allow_pfor_vertex=False)
-    # best-of selection can only ever shrink the payload
-    assert len(with_pfor) <= len(no_pfor)
-    for payload in (with_pfor, no_pfor):
-        decoded = decode_tile_genb(payload, tj)
-        assert set(decoded) == {"images", "roads", "boundaries"}
-        for layer in layers:
-            _assert_layer_roundtrip(layer, decoded)
+    payload, tj = encode_tile_genb(layers)
+    decoded = decode_tile_genb(payload, tj)
+    assert set(decoded) == {"images", "roads", "boundaries"}
+    for layer in layers:
+        _assert_layer_roundtrip(layer, decoded)
+
+
+# SHA-256 of the three-layer tile per geometry mode, pinned when the
+# FAST_PFOR stream choice was last changed; every mode picks FAST_PFOR
+# for some topology or vertex stream of these layers
+_PINNED_TILES = {
+    ("plain", False): "26af8889739ef700c25bf6b10a5ca3a28d2eccb505748117e7e203d91eecc8d6",
+    ("ice", False): "5595629290eb77f3a6c2dff065188f1cb5e572e3fffd522dfe9631ac2f9713ea",
+    ("ice_morton", False): "3d4be74d98dff5c9d054bf11ab2a130307667cb25a441bb69714103613e61d8a",
+    ("best", False): "f8c22c06acebf004498a7d341c9a2976dce3adb70a06f72a8545a335e5d188b0",
+    ("best", True): "f8c22c06acebf004498a7d341c9a2976dce3adb70a06f72a8545a335e5d188b0",
+}
+
+
+@pytest.mark.parametrize("genc,tae", sorted(_PINNED_TILES))
+def test_genb_fastpfor_tile_bytes_pinned(genc, tae, monkeypatch):
+    """Each geometry mode writes the pinned bytes, and its FAST_PFOR
+    streams decode back through ``decode_pfor``."""
+    layers = [_mixed_layer(300), _line_layer(), _poly_layer()]
+    payload, tj = encode_tile_genb(layers, geometry_encoding=genc, allow_tae=tae)
+    assert hashlib.sha256(payload).hexdigest() == _PINNED_TILES[(genc, tae)]
+    pfor_decodes = []
+
+    def counting_decode_pfor(*args, **kwargs):
+        pfor_decodes.append(args)
+        return decode_pfor(*args, **kwargs)
+
+    monkeypatch.setattr(genb, "decode_pfor", counting_decode_pfor)
+    decoded = decode_tile_genb(payload, tj)
+    assert pfor_decodes, "no FAST_PFOR stream in the tile"
+    for layer in layers:
+        _assert_layer_roundtrip(layer, decoded)
+
+
+def test_genb_fastpfor_topology_stream_decodes():
+    vals = np.sort(np.random.default_rng(11).integers(0, 5000, 4000))
+    enc, data = _best_offsets(vals.astype(np.int64))
+    assert enc == StreamEncoding.FAST_PFOR_DELTA_ZIG_ZAG
+    got, off = decode_pfor(
+        np.frombuffer(data, np.uint8), len(vals), zigzag=True, delta=True
+    )
+    assert off == len(data)
+    np.testing.assert_array_equal(got, vals)
+
+
+@settings(max_examples=80, deadline=None)
+@given(st.lists(st.integers(min_value=0, max_value=2**31 - 1), max_size=600))
+@example([])
+@example([7])
+def test_best_offsets_never_longer_than_rle(vals):
+    v = np.array(vals, dtype=np.int64)
+    _, data = _best_offsets(v)
+    assert len(data) <= len(encode_int_rle(v, signed=False))
+
+
+@settings(max_examples=80, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.integers(min_value=-(2**20), max_value=2**20),
+            st.integers(min_value=-(2**20), max_value=2**20),
+        ),
+        max_size=300,
+    )
+)
+@example([])
+@example([(-3, 4100)])
+def test_best_vertex_buffer_never_longer_than_varint(points):
+    vb = np.array(points, dtype=np.int64).reshape(-1)
+    _, data = _best_vertex_buffer(vb)
+    assert len(data) <= len(
+        encode_varints(zigzag_encode(_interleaved_zigzag_delta(vb)))
+    )
 
 
 def test_genb_localized_dictionary_extension():
@@ -276,55 +359,3 @@ def test_genb_tileset_shared_tilejson():
     for p, payload, mvt in zip(paths, payloads, tiles):
         decoded = decode_tile_genb(payload, tilejson)
         assert _features_match(decoded, decode_mvt(mvt)), p
-
-
-@pytest.mark.parametrize("genc", ["plain", "ice", "ice_morton"])
-def test_genb_java_pfor_wire_roundtrip(genc):
-    """pfor_wire="java" round-trips every geometry mode and actually
-    engages: with the size-gate bypassed by a line layer big enough to
-    pick FAST_PFOR, the java-wire payload differs byte-wise from the
-    default wire while decoding to the identical layers."""
-    layers = [_mixed_layer(300), _line_layer(), _poly_layer()]
-    ours, tj = encode_tile_genb(layers, geometry_encoding=genc)
-    java, tj2 = encode_tile_genb(layers, geometry_encoding=genc, pfor_wire="java")
-    assert tj == tj2
-    decoded = decode_tile_genb(java, tj, pfor_wire="java")
-    for layer in layers:
-        _assert_layer_roundtrip(layer, decoded)
-    # cross-wire decode of a FAST_PFOR-bearing tile must not silently
-    # succeed-with-garbage: when the wires produced different payloads,
-    # decoding the java tile as "ours" must either raise or mis-decode
-    if java != ours:
-        try:
-            wrong = decode_tile_genb(java, tj)
-            assert any(
-                not np.array_equal(
-                    wrong[k].geometry.vertex_buffer, decoded[k].geometry.vertex_buffer
-                )
-                for k in decoded
-            )
-        except (ValueError, IndexError):
-            pass
-
-
-def test_genb_java_wire_uses_fastpfor_streams():
-    """The java wire is live on the stream level: a topology stream
-    whose values make FAST_PFOR win must carry JavaFastPFOR words
-    (decode them directly with covt/pfor_java.py)."""
-    from cov_tiles_spark.covt.pfor_java import decode_fastpfor_java
-
-    rng = np.random.default_rng(11)
-    vals = np.sort(rng.integers(0, 5000, 4000))
-    from cov_tiles_spark.covt.genb import _PFOR_WIRE, _best_offsets
-
-    token = _PFOR_WIRE.set("java")
-    try:
-        enc, data = _best_offsets(vals.astype(np.int64), True)
-    finally:
-        _PFOR_WIRE.reset(token)
-    assert enc == StreamEncoding.FAST_PFOR_DELTA_ZIG_ZAG
-    got, _ = decode_fastpfor_java(
-        np.frombuffer(data, np.uint8), len(vals), len(data),
-        zigzag=True, delta=True,
-    )
-    np.testing.assert_array_equal(got, vals)

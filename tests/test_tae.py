@@ -84,12 +84,12 @@ def test_random_rings_roundtrip():
 def test_golden_polygon_layers_roundtrip():
     """Every polygon ring of a real golden tile reconstructs exactly."""
     from cov_tiles_spark.covt.tae import _rings_of_layer
-    from cov_tiles_spark.pipeline.transcode import _genb_inputs
+    from cov_tiles_spark.pipeline.transcode import _layer_inputs
 
     raw = open(OMT[-1], "rb").read()
     if raw[:2] == b"\x1f\x8b":
         raw = gzip.decompress(raw)
-    inputs, _ = _genb_inputs(raw)
+    inputs, _ = _layer_inputs(raw)
     checked = 0
     for lay in inputs:
         t = np.asarray(lay.geometry.geometry_types)
@@ -139,8 +139,7 @@ def test_tae_wire_roundtrip_exact():
     )
 
     lay = _poly_pair_layer()
-    ctype, _ = _encode_geometry_best(lay.geometry, 4096, True, True,
-                                     allow_tae=True)
+    ctype, _ = _encode_geometry_best(lay.geometry, 4096, allow_tae=True)
     assert ctype == GColumnType.TAE
     pay_tae, tj = encode_tile_genb([lay], optimize_metadata=True,
                                    geometry_encoding="best", allow_tae=True)
@@ -201,7 +200,7 @@ def test_tae_wire_random_linestrings_kernel():
             vertex_buffer=vb,
             part_offsets=np.array([len(p) for p in parts], np.int64),
         )
-        enc = _encode_geometry_tae(g, True, True)
+        enc = _encode_geometry_tae(g)
         assert enc is not None
         ctype, streams = enc
         buf = np.frombuffer(
@@ -257,7 +256,7 @@ try:
             vertex_buffer=vb,
             part_offsets=np.array([len(p) for p in parts], np.int64),
         )
-        enc = _encode_geometry_tae(g, True, True)
+        enc = _encode_geometry_tae(g)
         assert enc is not None
         _, streams = enc
         buf = np.frombuffer(b"".join(d for *_, d in streams), dtype=np.uint8)

@@ -229,38 +229,3 @@ def test_export_covt_directory(spark):
     assert len(rows) == 7
     assert all(r.verified for r in rows), [r.path for r in rows if not r.verified]
     assert all(r.mvt_bytes > 0 and r.n_features > 0 for r in rows)
-
-
-def test_genb_java_pfor_wire_on_golden_tiles():
-    """Encode real golden MVT tiles to gen-B with the JavaFastPFOR wire
-    and verify the decode is feature-identical to the default wire —
-    the interop path must hold on real stream shapes (big transportation
-    topology/vertex streams), not just synthetic layers."""
-    from cov_tiles_spark.covt.genb import decode_tile_genb
-    from cov_tiles_spark.pipeline.transcode import mvt_to_genb
-
-    for p in (
-        "/root/reference/parser/js/data/omt/4_3_9.mvt",
-        "/root/reference/parser/js/data/omt/5_16_20.mvt",
-    ):
-        mvt = open(p, "rb").read()
-        ours_b, tj, _, _ = mvt_to_genb(mvt)
-        java_b, tj2, _, _ = mvt_to_genb(mvt, pfor_wire="java")
-        assert tj == tj2
-        assert java_b != ours_b, p  # FAST_PFOR streams engaged
-        ours = decode_tile_genb(ours_b, tj)
-        java = decode_tile_genb(java_b, tj2, pfor_wire="java")
-        assert set(ours) == set(java), p
-        for name in ours:
-            a, b = ours[name], java[name]
-            ga, gb = a.geometry, b.geometry
-            assert np.array_equal(ga.vertex_buffer, gb.vertex_buffer), (p, name)
-            assert np.array_equal(ga.geometry_types, gb.geometry_types), (p, name)
-            for oa, ob in (
-                (ga.geometry_offsets, gb.geometry_offsets),
-                (ga.part_offsets, gb.part_offsets),
-                (ga.ring_offsets, gb.ring_offsets),
-            ):
-                assert (oa is None) == (ob is None), (p, name)
-                if oa is not None:
-                    assert np.array_equal(oa, ob), (p, name)
