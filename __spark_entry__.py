@@ -60,6 +60,15 @@ from cov_tiles_spark.operators.sketch import ALPHA_NUM as _HLL_ALPHA  # noqa: E4
 # F.lit(0) is folded away and the unpartitioned-window warning fires
 from cov_tiles_spark.operators import single_partition_key as _spk  # noqa: E402
 
+# planted gate-corpus literals, shared with the oracle twins
+from cov_tiles_spark.gate_corpus import (  # noqa: E402
+    BOILER_A,
+    BOILER_B,
+    LINE_PAT,
+    N_IMAGES,
+    PLANT_LINE,
+)
+
 
 def _hash_sql(key: str, seed: int) -> str:
     """SQL twin of operators/sampling.sample_hash — exact int64
@@ -1105,15 +1114,6 @@ def q_repetition(spark, sf_dir):
     return repetition_stats(d).orderBy("doc_id")
 
 
-# boilerplate passages planted for the span-dedup gate (>= k tokens each);
-# the same literals are replayed by the pure-python twin in
-# scripts/build_oracles.py, so both engines construct the same corpus
-_BOILER_A = (
-    "please accept all cookies to continue reading this page content now"
-)
-_BOILER_B = "subscribe to our newsletter for weekly updates delivered to you"
-
-
 def q_span_dedup(spark, sf_dir):
     """Exact duplicated-substring removal (ExactSubstr, Lee et al. 2022;
     operators/spandedup.py): every duplicated 8-token window is cut,
@@ -1129,8 +1129,8 @@ def q_span_dedup(spark, sf_dir):
         "doc_id",
         F.concat(
             F.col("text"),
-            F.when(F.col("doc_id") % 20 == 0, F.lit(" " + _BOILER_A)).otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 7 == 0, F.lit(" " + _BOILER_B)).otherwise(F.lit("")),
+            F.when(F.col("doc_id") % 20 == 0, F.lit(" " + BOILER_A)).otherwise(F.lit("")),
+            F.when(F.col("doc_id") % 7 == 0, F.lit(" " + BOILER_B)).otherwise(F.lit("")),
         ).alias("text"),
     )
     return exact_span_dedup(corpus, "text", "doc_id", k=8).orderBy("doc_id")
@@ -1204,14 +1204,6 @@ def q_pack_bins(spark, sf_dir):
     ).orderBy("doc_id")
 
 
-# planted corpus-wide duplicate line for the C4-clean gate (same literal
-# in the DuckDB twin)
-_PLANT_LINE = "the fast table scan runs on the big cluster tonight"
-# every 12-token run becomes a line (Java and RE2 regex semantics agree:
-# non-overlapping left-to-right global replace)
-_LINE_PAT = r"((?:\S+ ){11}\S+) "
-
-
 def q_c4_clean(spark, sf_dir):
     """C4-style line cleaning (operators/cleaning.py): min-4-words line
     filter + badword line drop + corpus-GLOBAL line dedup (keep the
@@ -1223,8 +1215,8 @@ def q_c4_clean(spark, sf_dir):
     corpus = d.select(
         "doc_id",
         F.concat(
-            F.regexp_replace(F.col("text"), _LINE_PAT, "$1\n"),
-            F.when(F.col("doc_id") % 5 == 0, F.lit("\n" + _PLANT_LINE)).otherwise(F.lit("")),
+            F.regexp_replace(F.col("text"), LINE_PAT, "$1\n"),
+            F.when(F.col("doc_id") % 5 == 0, F.lit("\n" + PLANT_LINE)).otherwise(F.lit("")),
         ).alias("text"),
     )
     return c4_clean(
@@ -1407,15 +1399,15 @@ def q_text_pipeline(spark, sf_dir):
         "doc_id",
         F.concat(
             F.col("text"),
-            F.when(F.col("doc_id") % 20 == 0, F.lit(" " + _BOILER_A)).otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 7 == 0, F.lit(" " + _BOILER_B)).otherwise(F.lit("")),
+            F.when(F.col("doc_id") % 20 == 0, F.lit(" " + BOILER_A)).otherwise(F.lit("")),
+            F.when(F.col("doc_id") % 7 == 0, F.lit(" " + BOILER_B)).otherwise(F.lit("")),
         ).alias("text"),
     )
     corpus = with_boiler.select(
         "doc_id",
         F.concat(
-            F.regexp_replace(F.col("text"), _LINE_PAT, "$1\n"),
-            F.when(F.col("doc_id") % 5 == 0, F.lit("\n" + _PLANT_LINE)).otherwise(F.lit("")),
+            F.regexp_replace(F.col("text"), LINE_PAT, "$1\n"),
+            F.when(F.col("doc_id") % 5 == 0, F.lit("\n" + PLANT_LINE)).otherwise(F.lit("")),
         ).alias("text"),
     )
     out = prepare_text_corpus(
@@ -1519,9 +1511,6 @@ def q_simhash_dedup(spark, sf_dir):
     )
 
 
-_N_PHASH_DEDUP = 600
-
-
 def q_phash_dedup(spark, sf_dir):
     """Perceptual-hash image near-dup pairs (image dedup; rows-only).
 
@@ -1539,7 +1528,7 @@ def q_phash_dedup(spark, sf_dir):
     from cov_tiles_spark.io.synth import images_df
     from cov_tiles_spark.operators.dedup import hamming_near_dups
 
-    imgs = images_df(spark, _N_PHASH_DEDUP, partitions=8)
+    imgs = images_df(spark, N_IMAGES, partitions=8)
     nid = F.substring("image_id", 5, 12).cast("long")
     orig = imgs.select(nid.alias("nid"), F.col("phash").alias("ph"))
     mask = F.lit(0).cast("long")
@@ -1779,9 +1768,6 @@ def q_doc_fingerprint(spark, sf_dir):
     return d.select("doc_id", fingerprint64(F.col("text")).alias("fp")).orderBy("doc_id")
 
 
-_N_IMG_INVARIANTS = 600
-
-
 def q_image_invariants(spark, sf_dir):
     """Per-row image+caption invariants over the deterministic binary
     corpus at the exact BASELINE.json input_hint schema
@@ -1852,7 +1838,7 @@ def q_image_invariants(spark, sf_dir):
                 }
             )
 
-    imgs = images_df(spark, _N_IMG_INVARIANTS, partitions=8)
+    imgs = images_df(spark, N_IMAGES, partitions=8)
     out_schema = (
         "image_id string, fmt string, w int, h int, caption string, "
         "phash long, phash_dist int, payload_md5 string, sq_err long, "
@@ -1877,7 +1863,7 @@ def q_webdataset_roundtrip(spark, sf_dir):
     from cov_tiles_spark.io.synth import images_df
     from cov_tiles_spark.sources.shards import read_webdataset, write_webdataset
 
-    imgs = images_df(spark, _N_IMG_INVARIANTS, partitions=8)
+    imgs = images_df(spark, N_IMAGES, partitions=8)
     tmp = tempfile.mkdtemp(prefix="wds_gate_")
     write_webdataset(imgs, tmp, target_shard_bytes=192 * 1024)
     back = read_webdataset(spark, tmp)
@@ -3538,7 +3524,7 @@ def oracle_sql() -> dict[str, str]:
                        regexp_replace(text, '((?:\\S+ ){{11}})(\\S+) ',
                                       '\\1\\2' || chr(10), 'g')
                        || CASE WHEN doc_id % 5 = 0
-                               THEN chr(10) || '{_PLANT_LINE}'
+                               THEN chr(10) || '{PLANT_LINE}'
                                ELSE '' END AS t
                 FROM documents
             ),

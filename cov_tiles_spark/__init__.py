@@ -12,10 +12,10 @@ A from-scratch re-expression of the capabilities of springmeyer/cov-tiles
 - ``operators``: large-scale training-data pipeline operators (dedup,
                  similarity search, text analysis, multimodal columns).
 - ``pipeline`` : tile materialization (hash(z,x,y) exchange + sorted-stream
-                 ``mapInArrow`` encode with a per-tile cap), salting for hot
-                 low-zoom tiles, lineage/checkpoint tables.
-- ``io``       : deterministic synthetic corpora (images+captions) and
-                 IcebergLite (partitioned parquet + manifest) sinks.
+                 ``mapInArrow`` encode with a per-tile cap), salted joins
+                 for hot keys, and IcebergLite lineage/checkpoint tables
+                 (partitioned parquet + manifest, ``pipeline/lineage.py``).
+- ``io``       : deterministic synthetic corpora (images+captions).
 
 All heavy kernels are vectorized numpy inside Arrow-batched Python UDFs
 (``mapInArrow`` on the tile path, pandas UDFs in the operators); the

@@ -440,7 +440,6 @@ def encode_tile_genb(
     layers: list[LayerInput],
     optimize_metadata: bool = True,
     geometry_encoding: str = "plain",
-    layer_table: dict | None = None,
     allow_tae: bool = False,
 ) -> tuple[bytes, dict]:
     """Encode a gen-B tile; returns (payload, TileJSON sidecar dict).
@@ -458,21 +457,12 @@ def encode_tile_genb(
     The TileJSON dict carries the externalized layer/column names required
     to decode optimized-metadata tiles (`CovtConverter.java:183-188`,
     `spec/METADATA.md` "names replaced by ids ... stored in a central
-    separate file (TileJSON)"). By default ids are per-tile (the returned
-    sidecar decodes exactly this tile); pass ``layer_table`` — built by
-    :func:`build_layer_table` over the whole tileset — to use GLOBAL
-    layer/column ids so one central TileJSON decodes every tile of the
-    set (the reference's actual deployment shape: one metadata file per
-    tileset). Column ids are read per column on decode, so a tile that
-    lacks some global fields stays valid.
+    separate file (TileJSON)"). Ids are per-tile: the returned sidecar
+    decodes exactly this tile.
     """
     out: list[bytes] = []
     vector_layers: list[dict] = []
-    for tile_layer_idx, layer in enumerate(layers):
-        layer_id = (
-            layer_table[layer.name]["id"] if layer_table else tile_layer_idx
-        )
-        ftab = layer_table[layer.name]["fields"] if layer_table else None
+    for layer_id, layer in enumerate(layers):
         n = len(layer.geometry.geometry_types)
         props = layer.properties or {}
         # group property columns boolean -> long -> float -> string
@@ -549,7 +539,7 @@ def encode_tile_genb(
                 vals = np.asarray(prop.values, dtype=bool)
                 dense[present] = vals if len(vals) == n_present else vals[present]
                 data = encode_byte_rle(pack_bitset(dense, n))
-                meta_parts.append(col_header((2 + ftab[name]) if ftab else column_id, name, GDataType.BOOLEAN, GColumnType.PLAIN, False))
+                meta_parts.append(col_header(column_id, name, GDataType.BOOLEAN, GColumnType.PLAIN, False))
                 meta_parts.append(_stream_meta(StreamType.DATA, StreamEncoding.BOOLEAN_RLE, n_present, data))
                 data_parts.append(data)  # no separate present stream (:280-290)
                 fields[name] = "Boolean"
@@ -566,7 +556,7 @@ def encode_tile_genb(
                     (len(var), StreamEncoding.VARINT_ZIG_ZAG, var),
                     key=lambda t: t[0],
                 )[1:]
-                meta_parts.append(col_header((2 + ftab[name]) if ftab else column_id, name, GDataType.INT_64, GColumnType.PLAIN, False))
+                meta_parts.append(col_header(column_id, name, GDataType.INT_64, GColumnType.PLAIN, False))
                 meta_parts.append(_stream_meta(StreamType.DATA, enc, n_present, data))
                 data_parts.append(present_bytes)
                 data_parts.append(data)
@@ -575,7 +565,7 @@ def encode_tile_genb(
                 vals = np.asarray(prop.values, dtype=np.float32)
                 sparse = vals if len(vals) == n_present else vals[present]
                 data = sparse.astype("<f4").tobytes()
-                meta_parts.append(col_header((2 + ftab[name]) if ftab else column_id, name, GDataType.FLOAT, GColumnType.PLAIN, False))
+                meta_parts.append(col_header(column_id, name, GDataType.FLOAT, GColumnType.PLAIN, False))
                 meta_parts.append(_stream_meta(StreamType.DATA, StreamEncoding.PLAIN, n_present, data))
                 data_parts.append(present_bytes)
                 data_parts.append(data)
@@ -590,7 +580,7 @@ def encode_tile_genb(
                     np.array([len(r) for r in dict_raw], np.int64), signed=False
                 )
                 dict_bytes = b"".join(dict_raw)
-                meta_parts.append(col_header((2 + ftab[name]) if ftab else column_id, name, GDataType.STRING, GColumnType.DICTIONARY, False))
+                meta_parts.append(col_header(column_id, name, GDataType.STRING, GColumnType.DICTIONARY, False))
                 meta_parts.append(_stream_meta(StreamType.DATA, StreamEncoding.RLE, n_present, data))
                 meta_parts.append(_stream_meta(StreamType.LENGTH, StreamEncoding.RLE, len(dict_raw), len_bytes))
                 meta_parts.append(_stream_meta(StreamType.DICTIONARY, StreamEncoding.PLAIN, len(dict_raw), dict_bytes))
@@ -639,7 +629,7 @@ def encode_tile_genb(
             dict_bytes = b"".join(dict_raw)
             for k, (prop_name, present_bytes, data, n_present) in enumerate(encoded_members):
                 meta_parts.append(
-                    col_header((2 + ftab[prop_name]) if ftab else column_id, prop_name, GDataType.STRING,
+                    col_header(column_id, prop_name, GDataType.STRING,
                                GColumnType.LOCALIZED_DICTIONARY, False)
                 )
                 meta_parts.append(_stream_meta(StreamType.DATA, StreamEncoding.RLE, n_present, data))
@@ -660,48 +650,6 @@ def encode_tile_genb(
         vector_layers.append({"id": layer.name, "fields": fields})
 
     return b"".join(out), {"vector_layers": vector_layers}
-
-
-_FIELD_LABEL = {
-    ColumnDataType.BOOLEAN: "Boolean",
-    ColumnDataType.INT_64: "Number",
-    ColumnDataType.UINT_64: "Number",
-    ColumnDataType.FLOAT: "Number",
-    ColumnDataType.STRING: "String",
-}
-
-
-def build_layer_table(
-    tiles_layers: "list[list[LayerInput]]",
-) -> tuple[dict, dict]:
-    """Merge every tile's layers/fields into one global id table and its
-    central TileJSON (first-appearance order for both layers and fields
-    — the dict insertion order IS the id order the decoder indexes by).
-    Returns (layer_table for :func:`encode_tile_genb`, tilejson dict).
-    At cluster scale this is a names-only aggregation (collect_set of
-    (layer, field, type) tuples), tiny regardless of tile count.
-    """
-    table: dict = {}
-    vector_layers: list[dict] = []
-    for layers in tiles_layers:
-        for lay in layers:
-            if lay.name not in table:
-                table[lay.name] = {"id": len(table), "fields": {}}
-                vector_layers.append({"id": lay.name, "fields": {}})
-            ent = table[lay.name]
-            vfields = vector_layers[ent["id"]]["fields"]
-
-            def _add(fname: str, label: str) -> None:
-                if fname not in ent["fields"]:
-                    ent["fields"][fname] = len(ent["fields"])
-                    vfields[fname] = label
-
-            for fname, prop in (lay.properties or {}).items():
-                _add(fname, _FIELD_LABEL[prop.data_type])
-            for _base, group in (lay.localized or {}).items():
-                for fname in group:
-                    _add(fname, "String")
-    return table, {"vector_layers": vector_layers}
 
 
 # ---------------------------------------------------------------- decoder

@@ -1,1 +1,1 @@
-"""Sources/sinks: deterministic synthetic corpora + IcebergLite tables."""
+"""Deterministic synthetic corpora (images+captions, audio, video)."""

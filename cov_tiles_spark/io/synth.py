@@ -12,8 +12,8 @@ agree byte-for-byte.
 
 Position distribution mixes uniform coverage with 5 dense hot-spot
 clusters to force the low-zoom tile skew the reference's own numbers show
-(README.md:23-27 — z2-z5 are its biggest tiles), exercising the salting
-path (SURVEY.md §4.2).
+(README.md:23-27 — z2-z5 are its biggest tiles), exercising the per-tile
+cap (`pipeline/materialize.py`).
 """
 
 from __future__ import annotations
@@ -25,7 +25,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cov_tiles_spark.operators.images import encode_image, generate_image, phash64
-from cov_tiles_spark.spatial.tiling import DEFAULT_EXTENT
 
 SCHEMA = (
     "image_id string, bytes binary, w int, h int, fmt string, "
@@ -208,92 +207,3 @@ def video_df(spark: SparkSession, n: int, partitions: int | None = None) -> Data
     return spark.range(0, n, numPartitions=partitions or 8).mapInPandas(
         _gen, schema=VIDEO_SCHEMA
     )
-
-
-# ---------- tile_boundaries (FIXTURES.md §2) ----------
-
-def tile_boundaries_df(spark: SparkSession, assigned_tiles: DataFrame) -> DataFrame:
-    """One boundary polygon per distinct (z,x,y) in ``assigned_tiles``,
-    plus a ring of empty neighbor tiles as negative cases, on the
-    ``DEFAULT_EXTENT`` grid ``assign_tiles`` uses.
-
-    Boundary = the full tile square (open ring, counts-not-offsets SoA,
-    `covtDecoder.ts:176,187`); every 20th tile (deterministic by hash)
-    gets an interior hole covering the center 1/8 of the tile to exercise
-    ring topology (`CovtConverter.java:958-981`).
-    """
-    from pyspark.sql import functions as F2
-
-    tiles = assigned_tiles.select("z", "x", "y").distinct()
-    # ring of neighbors (some will be empty of points -> negative cases)
-    offs = F2.array([F2.lit(-1), F2.lit(0), F2.lit(1)])
-    neighbors = (
-        tiles.withColumn("dx", F2.explode(offs))
-        .withColumn("dy", F2.explode(offs))
-        .select(
-            "z",
-            (F2.col("x") + F2.col("dx")).alias("x"),
-            (F2.col("y") + F2.col("dy")).alias("y"),
-        )
-        .filter((F2.col("x") >= 0) & (F2.col("y") >= 0))
-        .distinct()
-    )
-
-    e = DEFAULT_EXTENT
-    hole_lo = e * 7 // 16
-    hole_hi = e * 9 // 16
-    with_hole = F2.pmod(F2.xxhash64("z", "x", "y"), F2.lit(20)) == 0
-    shell = [0, 0, e, 0, e, e, 0, e]  # open CCW-in-screen square
-    hole = [hole_lo, hole_lo, hole_hi, hole_lo, hole_hi, hole_hi, hole_lo, hole_hi]
-    boundary = F2.when(
-        with_hole,
-        F2.struct(
-            F2.array(F2.lit(2)).alias("part_offsets"),
-            F2.array(F2.lit(4), F2.lit(4)).alias("ring_offsets"),
-            F2.array(*[F2.lit(v) for v in shell + hole]).alias("vertex_buffer"),
-        ),
-    ).otherwise(
-        F2.struct(
-            F2.array(F2.lit(1)).alias("part_offsets"),
-            F2.array(F2.lit(4)).alias("ring_offsets"),
-            F2.array(*[F2.lit(v) for v in shell]).alias("vertex_buffer"),
-        )
-    )
-    return neighbors.withColumn("extent", F2.lit(e)).withColumn(
-        "boundary", boundary
-    ).withColumn("is_hole_case", with_hole)
-
-
-# ---------- knn_queries (FIXTURES.md §3) ----------
-
-def knn_queries_df(spark: SparkSession, n: int = 1000) -> DataFrame:
-    """Deterministic query points: half near hot spots, half uniform."""
-    import pandas as pd2
-
-    ids = np.arange(n, dtype=np.int64)
-    u = _hash01(ids + 10_000_000, 7)
-    pick = (_hash01(ids + 10_000_000, 8) * len(_CLUSTERS)).astype(np.int64)
-    cl = np.array(_CLUSTERS)
-    u1 = np.clip(_hash01(ids + 10_000_000, 9), 1e-12, 1.0)
-    u2 = _hash01(ids + 10_000_000, 10)
-    g1 = np.sqrt(-2 * np.log(u1)) * np.cos(2 * np.pi * u2)
-    g2 = np.sqrt(-2 * np.log(u1)) * np.sin(2 * np.pi * u2)
-    lon = np.where(
-        u < 0.5,
-        cl[pick, 0] + cl[pick, 2] * g1,
-        _hash01(ids + 10_000_000, 11) * 360.0 - 180.0,
-    )
-    lat = np.where(
-        u < 0.5,
-        cl[pick, 1] + cl[pick, 2] * g2,
-        _hash01(ids + 10_000_000, 12) * 170.0 - 85.0,
-    )
-    pdf = pd2.DataFrame(
-        {
-            "query_id": [f"q-{j:06d}" for j in ids.tolist()],
-            "lon": np.clip(lon, -179.999, 179.999),
-            "lat": np.clip(lat, -85.0, 85.0),
-            "k": (ids % 3 * 4 + 1).astype(np.int32),  # cycles 1,5,9
-        }
-    )
-    return spark.createDataFrame(pdf)

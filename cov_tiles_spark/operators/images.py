@@ -92,14 +92,6 @@ def decode_image(data: bytes, w: int, h: int, fmt: str) -> np.ndarray:
     raise ValueError(f"unknown image format {fmt!r}")
 
 
-def psnr(a: np.ndarray, b: np.ndarray) -> float:
-    """Peak signal-to-noise ratio in dB between two uint8 images."""
-    mse = np.mean((a.astype(np.float64) - b.astype(np.float64)) ** 2)
-    if mse == 0:
-        return float("inf")
-    return float(10.0 * np.log10(255.0**2 / mse))
-
-
 _LUMA = np.array([0.299, 0.587, 0.114])
 
 

@@ -294,20 +294,3 @@ def aspect_buckets(
         (F.col("_rn") / batch_size).cast("long").alias("batch"),
         (F.col("_rn") % batch_size).cast("int").alias("batch_pos"),
     )
-
-
-def packing_stats(packed: DataFrame, max_len: int) -> DataFrame:
-    """Fill-ratio summary per shard for a ``pack_bins`` result: number
-    of sequences, docs, tokens, and mean fill (excluding each shard's
-    trailing open sequence would bias up; it is included)."""
-    per_seq = packed.groupBy("shard", "seq").agg(
-        F.sum("n_tokens").alias("toks"), F.count("*").alias("docs")
-    )
-    return per_seq.groupBy("shard").agg(
-        F.count("*").alias("n_seqs"),
-        F.sum("docs").alias("n_docs"),
-        F.sum("toks").alias("n_tokens"),
-        F.round(F.avg(F.least(F.col("toks"), F.lit(max_len))) / max_len, 6).alias(
-            "mean_fill"
-        ),
-    )

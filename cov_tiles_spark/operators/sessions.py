@@ -22,11 +22,7 @@ Scale shape (the 100 TB lens):
   DuckDB twin (epoch_us) reproduces it bit-exactly — no float rounding
   in the gate.
 
-Streaming twin: ``streaming/windowed.py sessionize_stream`` — the same
-gap rule as a custom stateful operator (``applyInPandasWithState``
-keyed by user). The batch form here closes every session; the streaming
-form additionally holds the open tail session in state
-(tests/test_bm25_sessions.py pins batch==stream on closed sessions).
+Every session is closed and emitted, each user's last one included.
 """
 
 from __future__ import annotations

@@ -3,12 +3,6 @@
 - ``cosine_topk``      : brute-force exact top-k against one query vector,
                          entirely JVM-side (``zip_with``/``aggregate``
                          higher-order functions — no Python in the scan).
-- ``cosine_topk_many`` : broadcast a small query-vector table, exact
-                         top-k per query via window (the kNN pattern).
-- ``ann_lsh_topk``     : random-hyperplane LSH buckets + multiprobe
-                         re-rank — a 100 TB path: the big side is
-                         scanned once, bucketed, and only candidate
-                         buckets are re-ranked exactly.
 - ``retrieval_eval``   : label-match recall@k / precision@k / MRR over a
                          deterministic query sample — the acceptance
                          gate for embedding-based curation.
@@ -19,13 +13,6 @@
                          quantizer trained on a bounded sample, corpus
                          assigned to inverted lists, queries probe only
                          the ``nprobe`` nearest lists.
-- ``ivf_build_index`` / ``ivf_probe_topk`` : the persisted form of the
-                         IVF path — corpus written partitioned by
-                         ``list_id`` with the quantizer as an in-dir
-                         sidecar; a probe reads only the ``nprobe``
-                         partitions (parquet partition PRUNING at the
-                         file listing, plan-asserted). The 100 TB
-                         serving shape when data is clusterable.
 """
 
 from __future__ import annotations
@@ -34,7 +21,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
 
 from cov_tiles_spark.operators import single_partition_key
 
@@ -97,25 +83,6 @@ def cosine_topk(
             Window.partitionBy(single_partition_key("id")).orderBy(F.col("_ord").desc(), F.col("id"))
         ))
         .select("rank", "id", "cosine")
-    )
-
-
-def cosine_topk_many(
-    df: DataFrame, vec_col: str, id_col: str, queries: DataFrame, k: int
-) -> DataFrame:
-    """Exact top-k per query row (queries: query_id, vec) — broadcast join."""
-    pairs = df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-    ).join(F.broadcast(queries.select("query_id", F.col("vec").alias("q_vec"))))
-    cos = _dot_expr(F.col("vec"), F.col("q_vec")) / (
-        _norm_expr(F.col("vec")) * _norm_expr(F.col("q_vec"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("id"))
-    return (
-        pairs.withColumn("cosine", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "id", "cosine")
     )
 
 
@@ -582,180 +549,3 @@ def hard_negatives(
         df, vec_col, id_col, label_col, k, query_rate, seed, order_round,
         different_label_only=True, max_queries=max_queries,
     ).withColumnRenamed("rank", "neg_rank")
-
-
-def ann_lsh_topk(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    query: list[float],
-    k: int,
-    dim: int,
-    n_planes: int = 12,
-    n_probes: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k: hyperplane-LSH bucket + multiprobe re-rank.
-
-    Probes the query's bucket and the ``n_probes`` nearest buckets (by
-    flipping the lowest-margin hyperplane bits), then re-ranks candidates
-    exactly. Recall is tunable via n_planes/n_probes; the scan never
-    computes full-corpus distances.
-    """
-    rng = np.random.default_rng(seed)
-    planes = rng.normal(size=(n_planes, dim)).astype(np.float64)
-
-    @F.pandas_udf(LongType())
-    def signature(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy())
-        bits = (m @ planes.T) > 0
-        out = np.zeros(len(vecs), dtype=np.int64)
-        for j in range(n_planes):
-            out |= bits[:, j].astype(np.int64) << j
-        return pd.Series(out)
-
-    qv = np.asarray(query, dtype=np.float64)
-    margins = planes @ qv
-    q_sig = 0
-    for j in range(n_planes):
-        if margins[j] > 0:
-            q_sig |= 1 << j
-    # multiprobe: flip the bits with the smallest |margin|
-    order = np.argsort(np.abs(margins))
-    probe_sigs = {q_sig}
-    for bit in order[: max(0, n_probes - 1)]:
-        probe_sigs.add(q_sig ^ (1 << int(bit)))
-
-    bucketed = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        signature(F.col(vec_col)).alias("sig"),
-    ).filter(F.col("sig").isin(list(probe_sigs)))
-
-    q = F.array(*[F.lit(float(v)) for v in query])
-    q_norm = float(np.linalg.norm(qv))
-    cos = _dot_expr(F.col("vec"), q) / (_norm_expr(F.col("vec")) * F.lit(q_norm))
-    return (
-        bucketed.withColumn("cosine", cos)
-        .orderBy(F.col("cosine").desc(), F.col("id"))
-        .limit(k)
-        .withColumn("rank", F.row_number().over(
-            Window.partitionBy(single_partition_key("id")).orderBy(F.col("cosine").desc(), F.col("id"))
-        ))
-        .select("rank", "id", "cosine")
-    )
-
-
-def ivf_build_index(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    centroids: np.ndarray,
-    path: str,
-) -> None:
-    """Materialize the IVF index: assign every vector to its inverted
-    list and write parquet **partitioned by list_id**, with the
-    quantizer stored alongside (``_centroids.parquet``).
-
-    This is the 100 TB serving shape the in-memory :func:`ivf_topk`
-    only simulates: once the corpus is laid out one directory per
-    inverted list, a probe reads ``nprobe`` directories and ignores the
-    rest — partition PRUNING at the file listing, not a filter over a
-    full scan (plan-asserted in tests: the scan's PartitionFilters
-    carries the list_id predicate and no vector row outside the probed
-    lists is read). Rebuild cost is one pass over the corpus; the
-    quantizer file makes the index self-contained.
-    """
-    c = np.asarray(centroids, dtype=np.float64)
-    assigned = ivf_assign(df, vec_col, c).select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vec"), "list_id"
-    )
-    assigned.write.partitionBy("list_id").mode("overwrite").parquet(path)
-    spark = df.sparkSession
-    cent_rows = [(i, c[i].tolist()) for i in range(len(c))]
-    spark.createDataFrame(
-        cent_rows, "centroid_id int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_centroids.parquet")
-
-
-def ivf_append(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    path: str,
-) -> None:
-    """Incrementally maintain a persisted IVF index: assign the NEW
-    vectors with the index's own stored quantizer and append them into
-    the ``list_id`` partition layout — no rebuild, no read of the
-    existing corpus.
-
-    This is the delta path index serving needs at 100 TB: ingest cost
-    is one pass over the *new* rows only (dynamic partition append
-    touches just the directories the new vectors land in), probes are
-    unchanged because the quantizer is unchanged, and probe-all remains
-    provably exact over the union (tested). Centroid drift under heavy
-    append is a quantizer-quality concern, not a correctness one —
-    recall degrades gracefully until the next rebuild, exactly like a
-    FAISS ``add`` without ``train``.
-    """
-    spark = df.sparkSession
-    cents = spark.read.parquet(f"{path}/_centroids.parquet").collect()
-    c = np.stack([
-        np.asarray(r.centroid, dtype=np.float64)
-        for r in sorted(cents, key=lambda r: r.centroid_id)
-    ])
-    assigned = ivf_assign(df, vec_col, c).select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vec"), "list_id"
-    )
-    assigned.write.partitionBy("list_id").mode("append").parquet(path)
-    # a probe earlier in this session may have cached the file listing
-    # for `path` — drop it or the appended rows are invisible (CLAUDE.md
-    # refreshByPath gotcha)
-    spark.catalog.refreshByPath(path)
-
-
-def ivf_probe_topk(
-    spark,
-    path: str,
-    query: list[float],
-    k: int,
-    nprobe: int = 4,
-    order_round: int | None = None,
-) -> DataFrame:
-    """Query a persisted IVF index (:func:`ivf_build_index`): pick the
-    ``nprobe`` lists nearest the query from the stored quantizer, read
-    ONLY those partitions (``list_id IN (...)`` resolves at the parquet
-    partition listing — pruning, not filtering), exact cosine re-rank
-    inside them via TakeOrderedAndProject.
-
-    ``nprobe >= n_centroids`` probes everything — provably exact, the
-    gate configuration."""
-    cents = spark.read.parquet(f"{path}/_centroids.parquet").collect()
-    c = np.stack([
-        np.asarray(r.centroid, dtype=np.float64)
-        for r in sorted(cents, key=lambda r: r.centroid_id)
-    ])
-    qv = np.asarray(query, dtype=np.float64)
-    qn = np.linalg.norm(qv)
-    probe = np.argsort(-(c @ (qv / qn)))[:nprobe].astype(int).tolist()
-
-    idx = spark.read.parquet(path).filter(F.col("list_id").isin(probe))
-    q = F.array(*[F.lit(float(v)) for v in query])
-    cos = _dot_expr(F.col("vec"), q) / (_norm_expr(F.col("vec")) * F.lit(float(qn)))
-    scored = idx.select(F.col("id"), cos.alias("cosine"))
-    order_key = (
-        F.round(F.col("cosine"), order_round) if order_round is not None
-        else F.col("cosine")
-    )
-    return (
-        scored.withColumn("_ord", order_key)
-        .orderBy(F.col("_ord").desc(), F.col("id"))
-        .limit(k)
-        .withColumn("rank", F.row_number().over(
-            # constant partition key == the single-partition execution a
-            # global limit already implies; avoids the unpartitioned-
-            # window warning (round-5 verdict item 3 discipline)
-            Window.partitionBy(single_partition_key("id")).orderBy(F.col("_ord").desc(), F.col("id"))
-        ))
-        .select("rank", "id", "cosine")
-    )

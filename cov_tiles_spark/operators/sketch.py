@@ -57,8 +57,8 @@ def hll_registers(
     Shuffles at most |groups| * 4096 rows regardless of input size —
     ``max`` is partially aggregated map-side, so the wire carries
     registers, not keys. Register tables from disjoint batches merge
-    with ``hll_merge`` (max per register), the property that makes the
-    sketch incremental."""
+    with a ``max`` per register, the property that makes the sketch
+    incremental."""
     group_cols = group_cols or []
     k = F.col(key_col)
     # register index from the TOP 12 bits: the final step of the portable
@@ -72,15 +72,6 @@ def hll_registers(
         .groupBy(*group_cols, "idx")
         .agg(F.max("rho").alias("max_rho"))
     )
-
-
-def hll_merge(*register_tables: DataFrame) -> DataFrame:
-    """Merge register tables (same grouping columns): max per register."""
-    merged = register_tables[0]
-    for t in register_tables[1:]:
-        merged = merged.unionByName(t)
-    keys = [c for c in merged.columns if c != "max_rho"]
-    return merged.groupBy(*keys).agg(F.max("max_rho").alias("max_rho"))
 
 
 def hll_estimate(

@@ -29,6 +29,7 @@ from cov_tiles_spark.pipeline.materialize import (
     encode_assigned,
 )
 
+
 def _tile_key() -> F.Column:
     # underscore join: "/" in hive partition values gets %-escaped in
     # directory names — legal but noisy; keep keys filesystem-clean.
@@ -63,13 +64,13 @@ def delta_materialize(
     table: str = "tiles",
     max_features_per_tile: int = 20_000,
     wire_format: str = "gena",
-    partition_buckets: int | None = None,
+    partition_buckets: int = 32,
 ) -> dict:
     """Encode new-or-changed tiles only; returns
     ``{"changed": n, "unchanged": n, "removed": n, "total": n}`` (tile
-    counts; with bucketing, ``changed`` counts every re-encoded tile;
-    ``removed`` counts tiles whose inputs vanished — tombstoned, or
-    dropped via their bucket's rewrite).
+    counts; ``changed`` counts every re-encoded tile; ``removed`` counts
+    tiles whose inputs vanished — dropped via their bucket's rewrite, or
+    tombstoned with it when the bucket empties).
 
     Change detection compares (input_checksum, n_rows) per tile — the
     row count guards the bit_xor checksum's even-duplicate blind spot —
@@ -80,17 +81,16 @@ def delta_materialize(
     table (committed alongside the payloads, latest-wins); the current
     assignment's checksums are joined against them to find work.
 
-    ``partition_buckets``: overwrite granularity. Per-tile partitions
-    (None) re-encode the minimum but create one hive directory per tile
-    — the small-files trap at pyramid scale (778k dirs at z12; measured
-    6x slower writes than the encode itself). With N buckets, file
-    counts stay bounded and no-change re-runs cost only the checksum
-    pass (measured 5% of a rebuild) — but a bucket rewrites WHOLE, so
-    the expected re-encode is total x (1-(1-1/B)^changed): fine when
-    changed tiles << B, a near-full rebuild for globally scattered
-    edits touching more tiles than buckets (measured 92% at B=256 with
-    2.1k scattered changed tiles). Pick by edit locality; both modes
-    are byte-identical to a full recompute."""
+    ``partition_buckets``: overwrite granularity. Tiles hash into that
+    many hive partitions, so file counts stay bounded (one directory
+    per tile is the small-files trap at pyramid scale: 778k dirs at
+    z12, measured 6x slower writes than the encode itself) and
+    no-change re-runs cost only the checksum pass (measured 5% of a
+    rebuild). A bucket rewrites WHOLE, so the expected re-encode is
+    total x (1-(1-1/B)^changed): fine when changed tiles << B, a
+    near-full rebuild for globally scattered edits touching more tiles
+    than buckets (measured 92% at B=256 with 2.1k scattered changed
+    tiles). The result is byte-identical to a full recompute."""
     cols = ["image_id", "caption", "fmt", "w", "h", "phash", "lon", "lat"]
     assigned = assign_tiles(images.select(*cols), zooms).persist()
     cur = input_checksums(assigned).persist()
@@ -122,58 +122,45 @@ def delta_materialize(
     )
     # tiles whose input rows ALL disappeared are absent from `cur`, so
     # the forward join above never sees them; find them with the reverse
-    # anti-join and tombstone them (or fold their buckets into the
-    # rewrite) so latest-wins reads drop the stale payload.
+    # anti-join and fold their buckets into the rewrite so latest-wins
+    # reads drop the stale payload.
     vanished_keys = prev_latest.join(
         cur, "tile_key", "left_anti"
     ).select("tile_key").persist()
     n_removed = vanished_keys.count()
-    if partition_buckets is None:
-        changed_keys = diff_keys.persist()
-        part_of_tile = F.col("tile_key")
-        if n_removed:
-            # per-tile partitions: a vanished tile gets a manifest-only
-            # tombstone snapshot in BOTH tables (payloads so readers stop
-            # seeing it, inputs so a later resurrection with identical
-            # rows reads as new-not-unchanged and re-encodes)
-            lake.commit_tombstones(table, "tombstone", vanished_keys, "tile_key")
-            lake.commit_tombstones(
-                f"{table}_inputs", "tombstone", vanished_keys, "tile_key"
-            )
-    else:
-        # widen to whole buckets: a bucket's overwrite snapshot must
-        # carry ALL its tiles or latest-wins reads would drop the
-        # unchanged ones. Vanished tiles fold their buckets in too — the
-        # rewritten bucket simply no longer contains them.
-        changed_buckets = diff_keys.union(vanished_keys).select(
-            _bucket_of(F.col("tile_key"), partition_buckets).alias("_b")
-        ).distinct()
-        changed_keys = (
-            cur.join(
-                changed_buckets,
-                _bucket_of(F.col("tile_key"), partition_buckets)
-                == changed_buckets["_b"],
-                "left_semi",
-            )
-            .select("tile_key")
-            .persist()
+    # widen to whole buckets: a bucket's overwrite snapshot must
+    # carry ALL its tiles or latest-wins reads would drop the
+    # unchanged ones. Vanished tiles fold their buckets in too — the
+    # rewritten bucket simply no longer contains them.
+    changed_buckets = diff_keys.union(vanished_keys).select(
+        _bucket_of(F.col("tile_key"), partition_buckets).alias("_b")
+    ).distinct()
+    changed_keys = (
+        cur.join(
+            changed_buckets,
+            _bucket_of(F.col("tile_key"), partition_buckets)
+            == changed_buckets["_b"],
+            "left_semi",
         )
-        part_of_tile = _bucket_of(F.col("tile_key"), partition_buckets)
-        if n_removed:
-            # a bucket whose CURRENT tile set is empty gets no overwrite
-            # snapshot from the rewrite below (nothing to write), so its
-            # stale rows would survive — tombstone those buckets directly
-            empty_buckets = changed_buckets.join(
-                cur.select(
-                    _bucket_of(F.col("tile_key"), partition_buckets).alias("_b")
-                ).distinct(),
-                "_b",
-                "left_anti",
-            )
-            lake.commit_tombstones(table, "tombstone", empty_buckets, "_b")
-            lake.commit_tombstones(
-                f"{table}_inputs", "tombstone", empty_buckets, "_b"
-            )
+        .select("tile_key")
+        .persist()
+    )
+    part_of_tile = _bucket_of(F.col("tile_key"), partition_buckets)
+    if n_removed:
+        # a bucket whose CURRENT tile set is empty gets no overwrite
+        # snapshot from the rewrite below (nothing to write), so its
+        # stale rows would survive — tombstone those buckets directly
+        empty_buckets = changed_buckets.join(
+            cur.select(
+                _bucket_of(F.col("tile_key"), partition_buckets).alias("_b")
+            ).distinct(),
+            "_b",
+            "left_anti",
+        )
+        lake.commit_tombstones(table, "tombstone", empty_buckets, "_b")
+        lake.commit_tombstones(
+            f"{table}_inputs", "tombstone", empty_buckets, "_b"
+        )
     n_changed = changed_keys.count()
 
     if n_changed:

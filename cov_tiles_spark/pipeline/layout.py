@@ -236,36 +236,3 @@ def bbox_scan(
         & (F.col(lat_col) <= lat_max)
     )
     return df.filter(prefix_pred).filter(key_pred).filter(exact)
-
-
-def row_groups_touched(
-    path: str,
-    runs: list[tuple[int, int]],
-    shift: int,
-    key_col: str = KEY_COL,
-) -> tuple[int, int]:
-    """(overlapping, total) parquet row groups for the fine-key runs —
-    the layout-quality metric ``scripts/layout_bench.py`` reports.
-    Pure-footer arithmetic (pyarrow), deterministic, noise-free."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    fine = [(lo << shift, ((hi + 1) << shift) - 1) for lo, hi in runs]
-    touched = total = 0
-    for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True):
-        md = pq.ParquetFile(f).metadata
-        try:
-            ci = md.schema.to_arrow_schema().names.index(key_col)
-        except ValueError:  # key lives in the directory name only
-            continue
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(ci).statistics
-            total += 1
-            if st is None:
-                touched += 1
-                continue
-            if any(st.min <= hi and st.max >= lo for lo, hi in fine):
-                touched += 1
-    return touched, total

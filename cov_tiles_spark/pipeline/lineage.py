@@ -12,13 +12,16 @@ Iceberg semantics we need on plain partitioned Parquet:
   manifest rows already exist (resume after failure re-does only missing
   partitions)
 - **snapshot isolation (lite)**: data lands under
-  ``table/partition_key=.../snapshot_id=.../part-*.parquet``; readers go
+  ``table/snapshot_id=.../<partition_col>=.../part-*.parquet``; readers go
   through the manifest, so half-written partitions are invisible
+- **deletes and time travel**: ``commit_tombstones`` writes a
+  manifest-only snapshot that hides a key from latest reads, and
+  ``read_table(as_of_ns=...)`` sees only snapshots committed by then
 
-Swap-in path for real Iceberg: the public API (``commit_partitions``,
-``committed_keys``, ``read_table``) maps 1:1 onto Iceberg's snapshot +
-manifest model via ``spark.jars.packages=org.apache.iceberg:...`` when a
-catalog is available; nothing else in the engine would change.
+The public API (``commit_partitions``, ``commit_tombstones``,
+``committed_keys_df``, ``read_table``, ``run_stage``) follows Iceberg's
+snapshot + manifest model, so a catalog-backed Iceberg table could stand
+behind the same calls; no such backend is wired in.
 """
 
 from __future__ import annotations
@@ -60,12 +63,6 @@ class IcebergLite:
             .distinct()
         )
 
-    def committed_keys(self, table: str, stage: str) -> set[str]:
-        """Driver-side set view — for tests/inspection only. Resume logic
-        uses ``committed_keys_df`` + anti-join (collecting 10^5-10^6 keys
-        and building an ``isin`` literal list both blow up at scale)."""
-        return {r.partition_key for r in self.committed_keys_df(table, stage).collect()}
-
     # ---------------- write path ----------------
 
     def commit_partitions(
@@ -96,8 +93,7 @@ class IcebergLite:
         ``read_table`` scan lists/opens proportionally fewer files —
         guide-§6 output sizing). The same shuffle co-locates the
         metrics groupBy, which then needs no exchange of its own. Leave
-        False when the caller already clusters (compact_partitions), in
-        per-record streaming commits (a blocking per-batch shuffle), or
+        False when the caller already clusters, in per-record streaming commits (a blocking per-batch shuffle), or
         when one partition key is planet-hot (identical keys land on ONE
         task — the repartitionByRange tiebreak gotcha applies)."""
         if mode not in ("skip-done", "overwrite"):
@@ -150,8 +146,6 @@ class IcebergLite:
                 # xor-fold: order-insensitive and immune to ANSI overflow;
                 # columns NAME-SORTED so the checksum is comparable across
                 # commits whose DataFrames arrange columns differently
-                # (compact_partitions verifies rewrites against the
-                # superseded winner's checksum)
                 F.expr(
                     f"bit_xor(xxhash64({', '.join(sorted(cols))}))"
                 ).alias("checksum"),
@@ -283,253 +277,6 @@ class IcebergLite:
             if c != "snapshot_id":
                 return c
         raise ValueError("no partition column recovered")
-
-    def snapshots(self, table: str) -> DataFrame:
-        """Snapshot log: (snapshot_id, stage, committed_at_ns,
-        n_partitions, n_rows, n_bytes), oldest first — the audit surface
-        Iceberg exposes as the snapshots metadata table."""
-        return (
-            self.manifests()
-            .filter(F.col("table") == table)
-            .groupBy("snapshot_id", "stage", "committed_at_ns")
-            .agg(
-                F.count("*").alias("n_partitions"),
-                F.sum("n_rows").alias("n_rows"),
-                F.sum("n_bytes").alias("n_bytes"),
-            )
-            .orderBy("committed_at_ns")
-        )
-
-    def rollback(self, table: str, as_of_ns: int) -> int:
-        """Drop every snapshot of ``table`` committed after ``as_of_ns``
-        from the manifest (data files stay; invisible without manifest
-        rows — Iceberg's rollback model). Returns snapshots dropped.
-
-        The manifest rewrite is copy-then-swap on a local/posix lake;
-        a real Iceberg catalog does this as an atomic metadata pointer
-        flip — swap-in path unchanged."""
-        m = self.manifests().cache()
-        doomed = (
-            m.filter((F.col("table") == table)
-                     & (F.col("committed_at_ns") > as_of_ns))
-            .select("snapshot_id").distinct().count()
-        )
-        if doomed == 0:
-            m.unpersist()
-            return 0
-        keep = m.filter(
-            (F.col("table") != table) | (F.col("committed_at_ns") <= as_of_ns)
-        )
-        tmp = f"{self._manifest_dir}.tmp-{uuid.uuid4().hex[:8]}"
-        keep.write.mode("overwrite").parquet(tmp)
-        m.unpersist()
-        old = f"{self._manifest_dir}.old-{uuid.uuid4().hex[:8]}"
-        os.rename(self._manifest_dir, old)
-        os.rename(tmp, self._manifest_dir)
-        import shutil
-
-        shutil.rmtree(old)
-        # drop Spark's cached file listing for the swapped path, or the
-        # next manifests() read resolves the pre-rollback file set
-        self.spark.catalog.refreshByPath(self._manifest_dir)
-        return doomed
-
-
-    # ---------------- maintenance ----------------
-
-    def expire_snapshots(self, table: str, older_than_ns: int) -> dict:
-        """Vacuum superseded partition versions beyond the time-travel
-        horizon (Iceberg's ``expireSnapshots`` + orphan cleanup, at the
-        granularity our layout allows).
-
-        A (snapshot, partition_key) version is expirable iff it was
-        committed at or before ``older_than_ns`` AND a newer snapshot
-        owns that key (so latest-wins reads cannot change — including
-        tombstone winners, which must stay so deleted keys don't
-        resurrect). Expired versions lose their manifest rows and their
-        ``snapshot_id=…/<pcol>=…`` data directory; time travel to
-        before the horizon correspondingly forgets them — that is the
-        storage-reclaim contract. Returns counts + reclaimed bytes.
-
-        File deletion is a driver-side posix walk on this lite lake; a
-        real Iceberg catalog does the same from its file manifests."""
-        import shutil
-
-        m = self.manifests().filter(F.col("table") == table).cache()
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("partition_key").orderBy(
-            F.col("committed_at_ns").desc(), F.col("snapshot_id").desc()
-        )
-        versions = m.withColumn("_rk", F.row_number().over(w))
-        doomed = versions.filter(
-            (F.col("_rk") > 1) & (F.col("committed_at_ns") <= older_than_ns)
-        ).select("snapshot_id", "partition_key", "n_bytes").collect()
-        m.unpersist()
-        if not doomed:
-            return {"versions_expired": 0, "bytes_reclaimed": 0, "dirs_removed": 0}
-
-        base = f"{self.root}/{table}"
-        pcol = None
-        dirs_removed = 0
-        for r in doomed:
-            snap_dir = f"{base}/snapshot_id={r.snapshot_id}"
-            if pcol is None and os.path.isdir(snap_dir):
-                for d in os.listdir(snap_dir):
-                    if "=" in d:
-                        pcol = d.split("=", 1)[0]
-                        break
-            part_dir = f"{snap_dir}/{pcol}={r.partition_key}" if pcol else None
-            if part_dir and os.path.isdir(part_dir):
-                shutil.rmtree(part_dir)
-                dirs_removed += 1
-            # drop now-empty snapshot dirs so read_table's listing stays clean
-            if os.path.isdir(snap_dir) and not any(
-                e for e in os.listdir(snap_dir) if not e.startswith(".")
-            ):
-                shutil.rmtree(snap_dir)
-
-        # manifest rewrite: copy-then-swap (same model as rollback)
-        doomed_keys = {(r.snapshot_id, r.partition_key) for r in doomed}
-        doomed_df = self.spark.createDataFrame(
-            [(s, k) for s, k in doomed_keys], "snapshot_id string, partition_key string"
-        ).withColumnRenamed("snapshot_id", "_d_snap").withColumnRenamed(
-            "partition_key", "_d_pk"
-        )
-        all_m = self.manifests()
-        keep = all_m.join(
-            F.broadcast(doomed_df),
-            (all_m["table"] == table)
-            & (all_m["snapshot_id"] == doomed_df["_d_snap"])
-            & (all_m["partition_key"] == doomed_df["_d_pk"]),
-            "left_anti",
-        )
-        tmp = f"{self._manifest_dir}.tmp-{uuid.uuid4().hex[:8]}"
-        keep.write.mode("overwrite").parquet(tmp)
-        old = f"{self._manifest_dir}.old-{uuid.uuid4().hex[:8]}"
-        os.rename(self._manifest_dir, old)
-        os.rename(tmp, self._manifest_dir)
-        shutil.rmtree(old)
-        self.spark.catalog.refreshByPath(self._manifest_dir)
-        return {
-            "versions_expired": len(doomed),
-            "bytes_reclaimed": int(sum(r.n_bytes for r in doomed)),
-            "dirs_removed": dirs_removed,
-        }
-
-    def compact_partitions(
-        self,
-        table: str,
-        stage: str,
-        max_files_per_partition: int = 1,
-        shuffle_partitions: int | None = None,
-    ) -> dict:
-        """Small-file compaction: rewrite fragmented partitions' latest
-        rows as ONE new overwrite snapshot with ``repartition(pcol)``
-        file placement (each key's rows land in one task → one file per
-        partition directory).
-
-        Safety invariant from the lineage model: before the rewrite, the
-        fragmented partitions' xor-fold checksums are recomputed from
-        the read-back frame with the manifest formula (one pure-JVM hash
-        aggregation over the rows being rewritten); the new commit's
-        manifest checksums must equal them exactly or the compaction
-        raises — a rewrite that corrupts even one value refuses to
-        stand. (The superseded winner's RECORDED checksum is not used
-        directly: parquet partition-type inference may read the
-        partition column back as a different type than it was hashed
-        with at commit time, e.g. string "0" → int.) Fragmentation
-        detection walks the winner version directories (metadata-scale;
-        an object-store deployment consults its file manifests instead).
-        Old versions stay time-travelable until
-        :meth:`expire_snapshots`."""
-        from pyspark.sql import Window
-
-        m = self.manifests().filter(F.col("table") == table)
-        w = Window.partitionBy("partition_key").orderBy(
-            F.col("committed_at_ns").desc(), F.col("snapshot_id").desc()
-        )
-        winners = (
-            m.withColumn("_rk", F.row_number().over(w))
-            .filter((F.col("_rk") == 1) & (F.col("n_rows") > 0))
-            .select("snapshot_id", "partition_key")
-            .collect()
-        )
-        base = f"{self.root}/{table}"
-        frag_keys: list[str] = []
-        pcol = None
-        for r in winners:
-            snap_dir = f"{base}/snapshot_id={r.snapshot_id}"
-            if pcol is None and os.path.isdir(snap_dir):
-                for d in os.listdir(snap_dir):
-                    if "=" in d:
-                        pcol = d.split("=", 1)[0]
-                        break
-            pdir = f"{snap_dir}/{pcol}={r.partition_key}" if pcol else None
-            if not pdir or not os.path.isdir(pdir):
-                continue
-            n_files = sum(
-                1 for f in os.listdir(pdir)
-                if f.startswith("part-") and f.endswith(".parquet")
-            )
-            if n_files > max_files_per_partition:
-                frag_keys.append(r.partition_key)
-        if not frag_keys:
-            return {"partitions_compacted": 0, "checksums_verified": 0}
-
-        keys_df = self.spark.createDataFrame(
-            [(k,) for k in frag_keys], "partition_key string"
-        ).withColumnRenamed("partition_key", "_c_pk")
-        cur = self.read_table(table, latest_only=True)
-        part_col = self._partition_col_of_name(base)
-        frag = cur.join(
-            F.broadcast(keys_df),
-            cur[part_col].cast("string") == keys_df["_c_pk"],
-            "left_semi",
-        ).cache()
-        old_sums = {
-            r.partition_key: r.checksum
-            for r in frag.groupBy(
-                F.col(part_col).cast("string").alias("partition_key")
-            )
-            .agg(
-                F.expr(
-                    f"bit_xor(xxhash64({', '.join(sorted(frag.columns))}))"
-                ).alias("checksum")
-            )
-            .collect()
-        }
-        n_shuffle = shuffle_partitions or max(1, min(len(frag_keys), 200))
-        compacted = frag.repartition(n_shuffle, F.col(part_col))
-        new_rows = self.commit_partitions(
-            table, stage, compacted, part_col, mode="overwrite"
-        ).select("partition_key", "checksum").collect()
-        frag.unpersist()
-        mismatches = [
-            r.partition_key
-            for r in new_rows
-            if old_sums.get(r.partition_key) != r.checksum
-        ]
-        if mismatches:
-            raise RuntimeError(
-                f"compaction checksum mismatch on partitions {mismatches[:5]}"
-                " — new snapshot left in place for inspection; latest reads"
-                " still win on commit order, investigate before expiring"
-            )
-        return {
-            "partitions_compacted": len(new_rows),
-            "checksums_verified": len(new_rows),
-        }
-
-    def _partition_col_of_name(self, base: str) -> str:
-        """The data partition column name, recovered from any snapshot
-        directory's hive layout."""
-        for d in sorted(os.listdir(base)):
-            if d.startswith("snapshot_id="):
-                for e in os.listdir(f"{base}/{d}"):
-                    if "=" in e:
-                        return e.split("=", 1)[0]
-        raise ValueError(f"no partitioned snapshots under {base}")
 
 
 def run_stage(

@@ -1,21 +1,17 @@
-"""Skew handling: salted repartitioning and salt-replicated joins.
+"""Skew handling: salt-replicated joins.
 
 The engine's primary skew defenses are structural — inline per-tile caps
 before the encode exchange (`pipeline/materialize.py`) and AQE skew-join
-splitting (on by default, `session.py`) — but two explicit tools cover
-the cases those don't: Python-UDF stages keyed by a hot key (AQE cannot
-split a running ``mapInPandas`` group) and shuffle joins whose hot keys
-exceed what AQE's byte-based splitter sees early enough.
+splitting (on by default, `session.py`) — but one explicit tool covers
+the case those don't: shuffle joins whose hot keys exceed what AQE's
+byte-based splitter sees early enough.
 
-- ``salted_repartition``: spread each key over ``factor`` partitions by
-  appending a deterministic salt derived from a per-row column (never a
-  random/monotonic id — retries must land rows in the same partition).
-  Downstream per-key work must be salt-agnostic (partial results merged
-  by a second, tiny aggregation).
-- ``salted_join``: the classic hot-key equi-join recipe — the big side
-  gets one salt per row, the small side is replicated ``factor`` times
-  (explode), and the join key becomes (keys..., salt). Row-identical to
-  the plain join, but a key's rows split across ``factor`` tasks.
+``salted_join`` is the classic hot-key equi-join recipe — the big side
+gets one salt per row, derived from a per-row column (never a
+random/monotonic id — retries must land rows in the same partition), the
+small side is replicated ``factor`` times (explode), and the join key
+becomes (keys..., salt). Row-identical to the plain join, but a key's
+rows split across ``factor`` tasks.
 """
 
 from __future__ import annotations
@@ -24,26 +20,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SALT_COL = "_salt"
-
-
-def salted_repartition(
-    df: DataFrame,
-    keys: list[str],
-    salt_from: str,
-    factor: int,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Repartition on (keys..., salt) with salt = xxhash64(salt_from) %
-    factor — a hot key's rows spread over ``factor`` partitions. The salt
-    column stays on the output (drop it after the per-partition work, or
-    group by it for partial aggregation)."""
-    salted = df.withColumn(
-        SALT_COL, F.pmod(F.xxhash64(F.col(salt_from)), F.lit(factor))
-    )
-    parts = [F.col(k) for k in keys] + [F.col(SALT_COL)]
-    if num_partitions:
-        return salted.repartition(num_partitions, *parts)
-    return salted.repartition(*parts)
 
 
 def salted_join(

@@ -22,9 +22,7 @@ lineage, and a single place where the 100 TB run wires its knobs.
 Scale notes: stages never collect the corpus; the only corpus-sized
 shuffles are the ones the underlying operators already own (line dedup,
 window dedup, minhash bands).  The decision columns ride along the
-corpus rows, so the final write is one pass; ``stage_counts`` is one
-extra aggregation over the flags (use it in tests/monitoring, skip it
-in the hot path).
+corpus rows, so the final write is one pass.
 """
 
 from __future__ import annotations
@@ -126,10 +124,3 @@ def prepare_text_corpus(
     if sample_rate < 1.0:
         out = hash_sample(out, sample_rate, id_col, seed=sample_seed)
     return out
-
-
-def stage_counts(
-    docs: DataFrame, prepared: DataFrame, id_col: str = "doc_id"
-) -> dict[str, int]:
-    """(input, survivors) counts — two actions, test/monitor use only."""
-    return {"input": docs.count(), "survivors": prepared.count()}

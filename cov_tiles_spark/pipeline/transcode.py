@@ -247,33 +247,6 @@ def mvt_to_genb(
     return payload, tilejson, len(inputs), n_features
 
 
-def mvts_to_genb_tileset(
-    mvt_tiles: list[bytes], allow_tae: bool = False
-) -> tuple[list[bytes], dict]:
-    """Tileset conversion: MVT tiles -> gen-B payloads sharing ONE
-    central TileJSON (global layer/column ids via
-    `covt/genb.build_layer_table` — the reference's deployment shape:
-    `CovtConverter.java:183-188` writes one metadata file per tileset,
-    not per tile). The returned sidecar decodes every payload, so a
-    single .mbtiles archive (metadata key ``json``) is self-sufficient.
-    """
-    from cov_tiles_spark.covt.genb import build_layer_table, encode_tile_genb
-
-    per_tile = [_layer_inputs(t)[0] for t in mvt_tiles]
-    table, tilejson = build_layer_table(per_tile)
-    payloads = [
-        encode_tile_genb(
-            inputs,
-            optimize_metadata=True,
-            geometry_encoding="best",
-            layer_table=table,
-            allow_tae=allow_tae,
-        )[0]
-        for inputs in per_tile
-    ]
-    return payloads, tilejson
-
-
 def verify_genb_roundtrip(
     payload: bytes, tilejson: dict, mvt_layers: list[MvtLayer],
     any_order: bool = False,
@@ -506,120 +479,3 @@ def transcode_mvt_directory(
         )
 
     return files.mapInPandas(_batches, schema=TRANSCODE_SCHEMA)
-
-
-EXPORT_SCHEMA = (
-    "path string, z int, x int, y int, covt_bytes long, mvt_bytes long, "
-    "n_layers int, n_features long, verified boolean, payload binary"
-)
-
-_ZXY_ANY_RE = re.compile(r"(\d+)[_\-/](\d+)[_\-/](\d+)\.covt$")
-
-
-def _export_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for _, row in pdf.iterrows():
-            raw = bytes(row["content"])
-            m = _ZXY_ANY_RE.search(row["path"])
-            z, x, y = (int(m.group(i)) for i in (1, 2, 3)) if m else (-1, -1, -1)
-            mvt = covt_to_mvt(raw)
-            # inline verification: decoded features of the exported MVT
-            # must reproduce the COVT decode geometry-for-geometry
-            src = decode_covt(raw)
-            back = {l.name: l for l in decode_mvt(mvt) if l.features}
-            ok = set(src) == set(back) and all(
-                [f["geometry"] for f in src[n].features()]
-                == [f.geometry for f in back[n].features]
-                for n in src
-            )
-            n_features = sum(len(l.features) for l in back.values())
-            rows.append(
-                {
-                    "path": os.path.basename(row["path"]),
-                    "z": z, "x": x, "y": y,
-                    "covt_bytes": len(raw),
-                    "mvt_bytes": len(mvt),
-                    "n_layers": len(back),
-                    "n_features": n_features,
-                    "verified": ok,
-                    "payload": mvt,
-                }
-            )
-        yield pd.DataFrame(rows) if rows else pd.DataFrame(
-            columns=[c.split()[0] for c in EXPORT_SCHEMA.split(", ")]
-        )
-
-
-def export_mbtiles_to_mvt(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed reverse transcode of a COVT .mbtiles archive -> MVT
-    payload rows. Gen-B archives are decoded with the TileJSON sidecar
-    the archive itself carries (metadata key ``json``, written by
-    ``sources/mbtiles.write_mbtiles``); gen-A archives need no sidecar.
-    The format is sniffed per tile (gen-B leads with the version
-    nibble-header byte; decode falls back to gen-A on parse failure), so
-    mixed archives also work. Same verified output schema as
-    :func:`export_covt_directory`."""
-    import json as _json
-
-    from cov_tiles_spark.sources.mbtiles import (
-        read_mbtiles,
-        read_mbtiles_metadata,
-    )
-
-    meta = read_mbtiles_metadata(path)
-    tilejson = _json.loads(meta["json"]) if "json" in meta else None
-    tiles = read_mbtiles(spark, path)
-
-    def _export(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from cov_tiles_spark.covt.genb import decode_tile_genb
-
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                raw = bytes(row["tile_data"])
-                try:
-                    decoded = decode_tile_genb(raw, tilejson)
-                    mvt = covt_to_mvt(genb=raw, tilejson=tilejson)
-                except Exception:
-                    decoded = decode_covt(raw)
-                    mvt = covt_to_mvt(raw)
-                back = {l.name: l for l in decode_mvt(mvt) if l.features}
-                ok = set(decoded) == set(back) and all(
-                    [f["geometry"] for f in decoded[n].features()]
-                    == [f.geometry for f in back[n].features]
-                    for n in decoded
-                )
-                rows.append(
-                    {
-                        "path": f"{row['z']}/{row['x']}/{row['y']}",
-                        "z": int(row["z"]), "x": int(row["x"]),
-                        "y": int(row["y"]),
-                        "covt_bytes": len(raw),
-                        "mvt_bytes": len(mvt),
-                        "n_layers": len(back),
-                        "n_features": sum(len(l.features) for l in back.values()),
-                        "verified": ok,
-                        "payload": mvt,
-                    }
-                )
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                columns=[c.split()[0] for c in EXPORT_SCHEMA.split(", ")]
-            )
-
-    return tiles.mapInPandas(_export, schema=EXPORT_SCHEMA)
-
-
-def export_covt_directory(spark: SparkSession, glob_path: str) -> DataFrame:
-    """Distributed reverse transcode: every gen-A .covt under
-    ``glob_path`` -> MVT payloads, each export verified inline
-    (one file per task row via the binaryFile source — same scan shape
-    as :func:`transcode_mvt_directory`, so partition pruning and file
-    listing scale identically)."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.covt")
-        .load(glob_path)
-        .select("path", "content")
-    )
-    return files.mapInPandas(_export_batches, schema=EXPORT_SCHEMA)

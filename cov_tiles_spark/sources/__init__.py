@@ -1,1 +1,1 @@
-"""Sources: MBTiles (SQLite), MVT file trees, gzip wrappers."""
+"""Sources/sinks: WebDataset-style tar shards."""

@@ -1,6 +1,6 @@
 """Geometry generalization for tile pipelines: line-fragment merging,
 Douglas-Peucker simplification, Sutherland-Hodgman ring/line clipping,
-and JVM-expression feature metrics with drop-smallest culling.
+and JVM-expression feature metrics for drop-smallest culling.
 
 Every production tiling pipeline generalizes geometry per zoom before
 encoding (the reference's tiles arrive pre-generalized from its
@@ -15,10 +15,10 @@ The per-zoom chain is merge -> simplify -> clip -> cull:
   shuffle, embarrassingly parallel per feature; at 100 TB they scale
   linearly with executors and add zero exchanges to the plan (plan
   pins in `tests/test_generalize.py`).
-- `ring_area2_col` / `bbox_cols` / `ring_centroid_cols` /
-  `drop_small_rings` — pure JVM `F.aggregate` expressions (whole-stage
-  codegen, no Python worker): the tippecanoe-style drop-smallest filter
-  is a free scan-time predicate.
+- `ring_area2_col` / `bbox_cols` / `ring_centroid_cols` — pure JVM
+  `F.aggregate` expressions (whole-stage codegen, no Python worker): a
+  tippecanoe-style drop-smallest filter on them is a free scan-time
+  predicate.
 - `simplify_mvt_layers` — the opt-in pre-encode pass, wired into
   `pipeline/transcode.py transcode_mvt_directory(simplify_tolerance=)`.
   `tests/test_generalize.py::test_generalization_chain_composes_one_exchange`
@@ -77,7 +77,6 @@ __all__ = [
     "clip_lines",
     "ring_area2_col",
     "bbox_cols",
-    "drop_small_rings",
     "merge_fragments",
     "merge_lines",
     "simplify_mvt_layers",
@@ -386,23 +385,6 @@ def bbox_cols(xs_col: str, ys_col: str):
     w = F.array_max(xs_col) - F.array_min(xs_col)
     h = F.array_max(ys_col) - F.array_min(ys_col)
     return w.cast("long"), h.cast("long")
-
-
-def drop_small_rings(
-    df: DataFrame,
-    min_area2: int,
-    xs_col: str = "xs",
-    ys_col: str = "ys",
-) -> DataFrame:
-    """Per-zoom small-feature culling (the tippecanoe `--drop-smallest`
-    step): keep rings with |shoelace area2| >= `min_area2`. Entirely a
-    JVM column expression — the filter participates in whole-stage
-    codegen and adds no exchange and no Python worker, so at 100 TB it
-    is a free scan-time predicate.
-    """
-    return df.where(
-        F.abs(ring_area2_col(xs_col, ys_col)) >= F.lit(int(min_area2))
-    )
 
 
 def merge_fragments(

@@ -1,10 +1,10 @@
 """Point-in-polygon spatial join.
 
 Strategy (SURVEY.md §2.3 "J-absent" row): candidates come from a cheap
-**cell-equi join** on (z, x, y) — pruned by Catalyst / broadcast when the
-boundary side is small — and the exact containment test is a **vectorized
-even-odd ray cast** over the candidate pairs, executed per boundary group
-so each polygon's edge table is built once per group, not once per row.
+**cell-equi join** on (z, x, y) with the small boundary side broadcast,
+and the exact containment test is a **vectorized even-odd ray cast** over
+the candidate pairs, run once per tile within each Arrow batch, not once
+per row.
 
 The boundary geometry uses the reference's struct-of-arrays model
 (`layerTable.ts:26-33`): part_offsets = rings per polygon, ring_offsets =
@@ -16,7 +16,6 @@ rings are holes — even-odd handles both in one pass.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -61,66 +60,23 @@ def point_in_rings_np(
 PIP_RESULT_EXTRA = "inside boolean"
 
 
-def pip_join(points: DataFrame, boundaries: DataFrame) -> DataFrame:
+def pip_join_broadcast(points: DataFrame, boundaries: DataFrame) -> DataFrame:
     """points(z,x,y,local_x,local_y,...) ⋈ boundaries(z,x,y,boundary).
 
-    Returns the point rows + ``inside`` flag. The equi join on (z,x,y) is
-    the candidate filter; Spark broadcasts the boundary side when small
-    (AQE decides). The refine step runs as a cogrouped applyInPandas: one
-    vectorized ray cast per (tile, partition) group.
+    Returns the point rows + ``inside`` flag. The boundary SoA arrays
+    join onto point rows (small dim side broadcast by AQE/hint), then a
+    batch-vectorized refine in ``mapInPandas`` groups rows by tile
+    *within each Arrow batch* — no cogroup shuffle, no per-tile protocol
+    overhead (a cogrouped applyInPandas pays ~6 ms per group; see
+    pipeline/materialize.py). Tile boundaries fit in a broadcast: one
+    small polygon per tile.
     """
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in points.schema.fields
-    ) + ", " + PIP_RESULT_EXTRA
-
-    def refine(key: tuple, pts: pd.DataFrame, bnds: pd.DataFrame) -> pd.DataFrame:
-        if len(pts) == 0:
-            return pd.DataFrame(columns=list(pts.columns) + ["inside"])
-        if len(bnds) == 0:
-            out = pts.copy()
-            out["inside"] = False
-            return out
-        b = bnds.iloc[0]
-        ring_lengths = np.asarray(b["ring_offsets"], dtype=np.int64)
-        vb = np.asarray(b["vertex_buffer"], dtype=np.int64)
-        inside = point_in_rings_np(
-            pts["local_x"].to_numpy(np.float64),
-            pts["local_y"].to_numpy(np.float64),
-            ring_lengths,
-            vb,
-        )
-        out = pts.copy()
-        out["inside"] = inside
-        return out
-
-    flat_bounds = boundaries.select(
-        "z", "x", "y",
-        F.col("boundary.ring_offsets").alias("ring_offsets"),
-        F.col("boundary.vertex_buffer").alias("vertex_buffer"),
-    )
-    return points.groupBy("z", "x", "y").cogroup(
-        flat_bounds.groupBy("z", "x", "y")
-    ).applyInPandas(refine, schema=out_schema)
-
-
-def pip_join_broadcast(points: DataFrame, boundaries: DataFrame) -> DataFrame:
-    """Broadcast variant: boundary SoA arrays join onto point rows (small
-    dim side broadcast by AQE/hint), then a batch-vectorized refine in
-    ``mapInPandas`` that groups rows by tile *within each Arrow batch* —
-    no cogroup shuffle, no per-tile protocol overhead (the cogrouped
-    applyInPandas path pays ~6 ms per group; see
-    pipeline/materialize.py). Use when the boundary table fits in a
-    broadcast (tile boundaries almost always do: one small polygon per
-    tile); fall back to ``pip_join`` otherwise.
-    """
-    import pyspark.sql.functions as F2
-
     flat = boundaries.select(
         "z", "x", "y",
-        F2.col("boundary.ring_offsets").alias("_ring_offsets"),
-        F2.col("boundary.vertex_buffer").alias("_vertex_buffer"),
+        F.col("boundary.ring_offsets").alias("_ring_offsets"),
+        F.col("boundary.vertex_buffer").alias("_vertex_buffer"),
     )
-    joined = points.join(F2.broadcast(flat), ["z", "x", "y"], "left")
+    joined = points.join(F.broadcast(flat), ["z", "x", "y"], "left")
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in points.schema.fields
     ) + ", " + PIP_RESULT_EXTRA

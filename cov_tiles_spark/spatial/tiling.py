@@ -72,7 +72,7 @@ def tile_local_y(lat: Column, z: int, y: Column) -> Column:
     ).cast("int")
 
 
-# ---------- numpy twin (UDF kernels + pytest oracle) ----------
+# ---------- numpy twin (UDF kernels) ----------
 
 def mercator_np(lon: np.ndarray, lat: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     lon = np.asarray(lon, dtype=np.float64)
@@ -81,16 +81,3 @@ def mercator_np(lon: np.ndarray, lat: np.ndarray) -> tuple[np.ndarray, np.ndarra
     rad = np.radians(lat)
     my = 0.5 - np.log(np.tan(math.pi / 4.0 + rad / 2.0)) / (2.0 * math.pi)
     return mx, my
-
-
-def tile_local_np(
-    lon: np.ndarray, lat: np.ndarray, z: int, extent: int = DEFAULT_EXTENT
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Returns (tx, ty, local_x, local_y)."""
-    mx, my = mercator_np(lon, lat)
-    n = 1 << z
-    tx = np.clip(np.floor(mx * n), 0, n - 1).astype(np.int32)
-    ty = np.clip(np.floor(my * n), 0, n - 1).astype(np.int32)
-    lx = np.floor((mx * n - tx) * extent).astype(np.int32)
-    ly = np.floor((my * n - ty) * extent).astype(np.int32)
-    return tx, ty, lx, ly

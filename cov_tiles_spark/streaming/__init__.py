@@ -1,2 +1,1 @@
-"""Structured Streaming surface: event-time windowed tile stats and a
-stateful sessionizer."""
+"""Structured Streaming surface: event-time windowed tile stats."""

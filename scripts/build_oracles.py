@@ -4,7 +4,10 @@ For queries whose kernels are pandas-UDF-backed (Hilbert cells, rolling
 fingerprints, MinHash/SimHash/embedding LSH), ANSI SQL cannot express the
 kernel directly. Instead this script computes the *expected* output with
 an independent single-node implementation (pure python / plain numpy —
-no imports from cov_tiles_spark, no Spark) over the sf0.01 testdata, and
+no Spark, no kernel from cov_tiles_spark and never ``__spark_entry__``; the
+one package import is the constants-only ``cov_tiles_spark.gate_corpus``,
+the planted-corpus literals the entry's queries share) over the
+sf0.01 testdata, and
 writes it to ``oracles/sf0.01/<query>.parquet``. The DuckDB twin in
 ``__spark_entry__.oracle_sql()`` selects from that parquet, so the driver
 still performs a full rows+schema+values comparison against a second
@@ -25,6 +28,16 @@ import sys
 
 import numpy as np
 import pandas as pd
+
+# run as a script, the repo root is not on sys.path
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from cov_tiles_spark.gate_corpus import (  # noqa: E402
+    BOILER_A,
+    BOILER_B,
+    LINE_PAT,
+    N_IMAGES,
+    PLANT_LINE,
+)
 
 MERSENNE = (1 << 61) - 1
 FNV_BASE = 1099511628211
@@ -316,7 +329,6 @@ def q_embedding_near_dups(sf_dir: str, threshold: float = 0.999) -> pd.DataFrame
 # (byte-RLE codec, payload assembly, hash packing, Hamming distance,
 # PSNR inequality, md5) are independent scalar implementations.
 
-_IMG_N = 600
 _IMG_WIDTHS = [16, 32, 64]
 _IMG_HEIGHTS = [16, 32, 48]
 _IMG_FMTS = ["raw", "rle", "dct40"]
@@ -488,9 +500,9 @@ def _scalar_phash(px: np.ndarray) -> int:
 def q_image_invariants(sf_dir: str) -> pd.DataFrame:
     import hashlib
 
-    lon, lat = _img_lonlat(np.arange(_IMG_N, dtype=np.int64))
+    lon, lat = _img_lonlat(np.arange(N_IMAGES, dtype=np.int64))
     rows = []
-    for i in range(_IMG_N):
+    for i in range(N_IMAGES):
         w = _IMG_WIDTHS[i % 3]
         h = _IMG_HEIGHTS[(i // 3) % 3]
         fmt = _IMG_FMTS[i % 3]
@@ -554,7 +566,7 @@ def q_phash_dedup(sf_dir: str, max_hamming: int = 3) -> pd.DataFrame:
     independent scalar stack (_img_generate + _scalar_phash)."""
     ids = []
     ph = []
-    for i in range(_IMG_N):
+    for i in range(N_IMAGES):
         w = _IMG_WIDTHS[i % 3]
         h = _IMG_HEIGHTS[(i // 3) % 3]
         p = _scalar_phash(_img_generate(i, w, h))
@@ -892,7 +904,7 @@ def q_dup_clusters(sf_dir: str) -> pd.DataFrame:
 def _bpe_train_py(sf_dir: str):
     """Independent BPE trainer: plain dict/Counter loops over the
     distinct-word counts, 40 merges, ties (freq DESC, left ASC,
-    right ASC) — no Spark, no cov_tiles_spark imports. Returns
+    right ASC) — no Spark, no cov_tiles_spark kernel. Returns
     (merge rows, final per-word symbol state): the state after all
     merges IS the sequential-replay tokenization of every corpus word,
     which the encode oracle reuses directly."""
@@ -1024,14 +1036,6 @@ def q_semantic_dedup(
     ).astype({"vec_id": "int64", "list_id": "int32", "is_kept": "bool"})
 
 
-# same literals as __spark_entry__._BOILER_A/_B — both engines must build
-# the identical planted corpus
-_SPAN_BOILER_A = (
-    "please accept all cookies to continue reading this page content now"
-)
-_SPAN_BOILER_B = "subscribe to our newsletter for weekly updates delivered to you"
-
-
 def _exact_span_py(rows: list[tuple[int, str]], k: int) -> list[tuple]:
     """ExactSubstr span-dedup twin core, keyed on EXACT token k-tuples
     (no hashing at all) — stronger than the operator's 122-bit rolling
@@ -1075,19 +1079,14 @@ def q_span_dedup(sf_dir: str, k: int = 8) -> pd.DataFrame:
     for did, text in zip(d["doc_id"], d["text"]):
         t = text
         if did % 20 == 0:
-            t += " " + _SPAN_BOILER_A
+            t += " " + BOILER_A
         if did % 7 == 0:
-            t += " " + _SPAN_BOILER_B
+            t += " " + BOILER_B
         rows.append((int(did), t))
     out = _exact_span_py(rows, k)
     return pd.DataFrame(
         out, columns=["doc_id", "clean_text", "n_tokens", "n_removed"]
     ).astype({"doc_id": "int64", "n_tokens": "int64", "n_removed": "int64"})
-
-
-# same literals as __spark_entry__._PLANT_LINE / _LINE_PAT
-_PIPE_PLANT = "the fast table scan runs on the big cluster tonight"
-_PIPE_LINE_PAT = r"((?:\S+ ){11}\S+) "
 
 
 def q_text_pipeline(sf_dir: str) -> pd.DataFrame:
@@ -1110,17 +1109,17 @@ def q_text_pipeline(sf_dir: str) -> pd.DataFrame:
                 "qq" if i % 6 == 5 else t for i, t in enumerate(toks)
             )
             rows.append((int(did) + 1_000_000, pert))
-    line_re = re.compile(_PIPE_LINE_PAT)
+    line_re = re.compile(LINE_PAT)
     corpus = []
     for did, text in rows:
         t = text
         if did % 20 == 0:
-            t += " " + _SPAN_BOILER_A
+            t += " " + BOILER_A
         if did % 7 == 0:
-            t += " " + _SPAN_BOILER_B
+            t += " " + BOILER_B
         s = line_re.sub(lambda m: m.group(1) + "\n", t)
         if did % 5 == 0:
-            s += "\n" + _PIPE_PLANT
+            s += "\n" + PLANT_LINE
         corpus.append((did, s))
 
     # stage 1: C4 clean (min 4 words/line, badword 'slow', global dedup)
@@ -1247,7 +1246,7 @@ def q_quality_classifier(sf_dir: str) -> pd.DataFrame:
     """Independent twin of operators/classifier.py's logistic-regression
     quality filter: same counting-only features, same standardization,
     same 25 batch-GD iterations in plain numpy float64 (no Spark, no
-    cov_tiles_spark import). Hyperparameters are duplicated ON PURPOSE
+    cov_tiles_spark kernel). Hyperparameters are duplicated ON PURPOSE
     (gate-corpora convention, see CLAUDE.md): change both or the gate
     fails."""
     docs = load(sf_dir, "documents").sort_values("doc_id").reset_index(drop=True)

@@ -7,8 +7,6 @@ from __future__ import annotations
 import datetime
 import math
 
-from pyspark.sql import functions as F
-
 from cov_tiles_spark.operators.bm25 import bm25_index, bm25_topk
 from cov_tiles_spark.operators.sessions import session_stats, sessionize
 
@@ -135,64 +133,6 @@ def test_session_plan_single_user_exchange(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert plan.count("Exchange hashpartitioning") == 1, plan
-
-
-def test_sessionize_batch_matches_stream_on_closed_sessions(spark, tmp_path):
-    """The batch gap rule (operators/sessions.py) and the stateful
-    streaming sessionizer (streaming/windowed.py sessionize_stream) are
-    the SAME definition: every session the stream closes appears in the
-    batch output with identical bounds and counts (the batch run also
-    holds the tails the stream keeps open in state)."""
-    import glob
-    import os
-
-    from cov_tiles_spark.streaming.windowed import sessionize_stream
-
-    schema = "user_id long, ts timestamp"
-    rows1 = [(1, _ts(0)), (1, _ts(20)), (1, _ts(40)), (2, _ts(5))]
-    rows2 = [(1, _ts(300)), (2, _ts(50)), (1, _ts(310))]
-
-    landing = str(tmp_path / "landing")
-    for i, (rows, mtime) in enumerate(
-        [(rows1, 1_700_000_000), (rows2, 1_700_000_100)]
-    ):
-        path = f"{landing}/d{i}"
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(path)
-        for f in glob.glob(f"{path}/*.parquet"):
-            os.utime(f, (mtime, mtime))
-        os.utime(path, (mtime, mtime))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{landing}/*")
-    )
-    q = (
-        sessionize_stream(stream, gap_minutes=60)
-        .writeStream.format("memory").queryName("sess_eq")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    streamed = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in spark.sql("select * from sess_eq").collect()
-    }
-    assert streamed  # user 1's first session closed by the t=300 event
-
-    ev = spark.createDataFrame(
-        [(i, ts, u, 1.0) for i, (u, ts) in enumerate(rows1 + rows2)],
-        "event_id long, ts timestamp, user_id long, value double",
-    )
-    batch = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in session_stats(sessionize(ev, gap_sec=3600)).collect()
-    }
-    assert streamed <= batch
-    # batch additionally holds exactly the still-open tail sessions
-    assert len(batch) == len(streamed) + 2  # users 1 and 2 tails
 
 
 def test_bm25_scoring_plan_broadcasts_queries(spark):

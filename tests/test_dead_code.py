@@ -1,54 +1,108 @@
-"""Dead-code guards, both Spark-free and fast.
+"""Dead-code guards, all Spark-free and fast.
 
-- Every top-level ``def``/``class`` in the package must be referenced
-  somewhere else in the repo's Python — another ``.py`` file, or its own
-  file outside its ``def`` line. A reference is a whole-word match, so a
-  name cited in a docstring or comment counts. The repo is tokenized once
-  into word counts.
+- Every top-level ``def``/``class`` and every non-dunder method in the
+  package must be reachable from the gated core: named in the code (not
+  the docstrings or comments) of ``__spark_entry__.py``, the two bench
+  harnesses, the benchmark, ``scripts/``, package module-level code, or a
+  def those reach in turn. Code only tests call is not part of it.
 - Every package module must be reachable by imports from the driver
   entry, the two bench harnesses or the benchmark: a module only tests or
-  scripts import is not part of the gated core."""
+  scripts import is not part of the gated core.
+- Every ``from cov_tiles_spark... import name`` in those roots and in
+  ``scripts/`` resolves, so deleting a def cannot leave a script that
+  fails only when it runs."""
 
 from __future__ import annotations
 
 import ast
-import re
-from collections import Counter
+import io
+import tokenize
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
-_WORD = re.compile(r"\w+")
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
 
 
-def _repo_sources(root: Path) -> dict[Path, str]:
+def _gate_roots(root: Path) -> list[Path]:
+    """The entry, both bench harnesses and the benchmark's modules."""
+    roots = [root / n for n in ("__spark_entry__.py", "bench.py", "bench_extra.py")]
+    roots += sorted((root / "perfbench").glob("*.py"))
+    return [p for p in roots if p.exists()]
+
+
+def _code_names(src: str) -> set[str]:
+    """Identifiers in ``src``'s code: comments and string literals
+    (docstrings included) are dropped by the tokenizer."""
     return {
-        p: p.read_text(encoding="utf-8")
-        for p in root.rglob("*.py")
-        if not any(
-            part.startswith(".") or part == "dist"
-            for part in p.relative_to(root).parts[:-1]
-        )
+        tok.string
+        for tok in tokenize.generate_tokens(io.StringIO(src).readline)
+        if tok.type == tokenize.NAME
     }
 
 
-def unreferenced_defs(root: Path = ROOT) -> list[str]:
+def _span(node: ast.AST) -> range:
+    """1-based line numbers of a def, its decorators included."""
+    first = min([node.lineno] + [d.lineno for d in node.decorator_list])
+    return range(first, node.end_lineno + 1)
+
+
+def unreachable_defs(root: Path = ROOT) -> list[str]:
+    """Package defs no gate, bench, benchmark or script reaches.
+
+    Each top-level def/class and each method is one segment of code;
+    what is left of a module (imports, constants, module-level calls)
+    is a root, as are the gate roots and ``scripts/*.py``. A def becomes
+    live when a live segment names it, and its own code then counts,
+    until nothing changes. A class's body outside its methods goes with
+    the class, and its dunder methods are live with it.
+
+    The match is by name, not by binding: a dead def that shares its
+    name with anything a live segment names (another def, a method, a
+    keyword argument, an attribute) is kept."""
     pkg = root / "cov_tiles_spark"
-    sources = _repo_sources(root)
-    total = Counter(_WORD.findall("\n".join(sources.values())))
-    dead = []
-    for path, src in sources.items():
-        if pkg not in path.parents:
-            continue
-        lines = src.splitlines()
-        for node in ast.parse(src).body:
-            if not isinstance(
-                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ):
+    live: set[str] = set()
+    for p in _gate_roots(root) + sorted((root / "scripts").glob("*.py")):
+        live |= _code_names(p.read_text(encoding="utf-8"))
+    # (name that makes it live, (file, line, qualname) or None for a
+    # dunder, names in its code)
+    segments: list[tuple[str, tuple | None, set[str]]] = []
+    for path in sorted(pkg.rglob("*.py")):
+        lines = path.read_text(encoding="utf-8").splitlines(keepends=True)
+        rel = path.relative_to(root)
+
+        def code(span: range, skip: set[int] = frozenset()) -> set[str]:
+            return _code_names(
+                "".join(lines[i - 1] for i in span if i not in skip)
+            )
+
+        in_defs: set[int] = set()
+        for node in ast.parse("".join(lines)).body:
+            if not isinstance(node, (*_FUNCS, ast.ClassDef)):
                 continue
-            on_def_line = _WORD.findall(lines[node.lineno - 1]).count(node.name)
-            if total[node.name] - on_def_line == 0:
-                dead.append(f"{path.relative_to(root)}:{node.lineno} {node.name}")
-    return dead
+            span = _span(node)
+            in_defs.update(span)
+            in_methods: set[int] = set()
+            for m in node.body if isinstance(node, ast.ClassDef) else ():
+                if isinstance(m, _FUNCS):
+                    in_methods.update(_span(m))
+                    dunder = m.name.startswith("__") and m.name.endswith("__")
+                    segments.append((
+                        node.name if dunder else m.name,
+                        None if dunder else (str(rel), m.lineno, f"{node.name}.{m.name}"),
+                        code(_span(m)),
+                    ))
+            segments.append(
+                (node.name, (str(rel), node.lineno, node.name), code(span, in_methods))
+            )
+        live |= code(range(1, len(lines) + 1), in_defs)
+    while True:
+        reached = [seg for seg in segments if seg[0] in live]
+        if not reached:
+            break
+        segments = [seg for seg in segments if seg[0] not in live]
+        for seg in reached:
+            live |= seg[2]
+    return [f"{f}:{n} {q}" for f, n, q in sorted(w for _, w, _ in segments if w)]
 
 
 def _module_name(root: Path, path: Path) -> str:
@@ -76,9 +130,7 @@ def unreachable_modules(root: Path = ROOT) -> list[str]:
     modules = {
         _module_name(root, p): p for p in (root / "cov_tiles_spark").rglob("*.py")
     }
-    roots = [root / n for n in ("__spark_entry__.py", "bench.py", "bench_extra.py")]
-    roots += (root / "perfbench").glob("*.py")
-    todo = set().union(*(_imports(p.read_text()) for p in roots if p.exists()))
+    todo = set().union(*(_imports(p.read_text()) for p in _gate_roots(root)))
     seen: set[str] = set()
     while todo:
         parts = todo.pop().split(".")
@@ -96,18 +148,122 @@ def unreachable_modules(root: Path = ROOT) -> list[str]:
 
 
 def test_package_has_no_unreferenced_top_level_defs():
-    assert unreferenced_defs() == []
+    """Unreferenced from the gated core: only tests, docstrings or
+    comments name it (methods included)."""
+    assert unreachable_defs() == []
+
+
+def _tree(tmp_path: Path, files: dict[str, str]) -> Path:
+    for rel, src in files.items():
+        (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / rel).write_text(src)
+    return tmp_path
 
 
 def test_scan_flags_an_unreferenced_def(tmp_path):
-    """The scan is not vacuous: a def named nowhere else is reported."""
-    pkg = tmp_path / "cov_tiles_spark"
-    pkg.mkdir()
-    (pkg / "mod.py").write_text(
-        "def used():\n    return 1\n\n\ndef orphan():\n    return used()\n"
-    )
-    (tmp_path / "caller.py").write_text("from cov_tiles_spark.mod import used\n")
-    assert unreferenced_defs(tmp_path) == ["cov_tiles_spark/mod.py:5 orphan"]
+    """A def named only in a docstring or a comment is reported."""
+    root = _tree(tmp_path, {
+        "cov_tiles_spark/mod.py": (
+            '"""Module doc: see ``orphan``."""\n\n\n'
+            "def used():\n"
+            '    """Unlike ``orphan``, this one is called."""\n'
+            "    return 1  # orphan\n\n\n"
+            "def orphan():\n    return 2\n"
+        ),
+        "bench.py": "from cov_tiles_spark.mod import used\n\nused()\n",
+    })
+    assert unreachable_defs(root) == ["cov_tiles_spark/mod.py:9 orphan"]
+
+
+def test_def_scan_reports_test_only_and_keeps_script_defs(tmp_path):
+    """Tests are not roots; scripts are."""
+    root = _tree(tmp_path, {
+        "cov_tiles_spark/mod.py": (
+            "def for_tests():\n    return 1\n\n\n"
+            "def for_script():\n    return helper()\n\n\n"
+            "def helper():\n    return 2\n"
+        ),
+        "tests/test_mod.py": (
+            "from cov_tiles_spark.mod import for_tests\n\n\n"
+            "def test_it():\n    assert for_tests() == 1\n"
+        ),
+        "scripts/tool.py": (
+            "def main():\n"
+            "    from cov_tiles_spark.mod import for_script\n\n"
+            "    return for_script()\n"
+        ),
+    })
+    assert unreachable_defs(root) == ["cov_tiles_spark/mod.py:1 for_tests"]
+
+
+def test_def_scan_follows_attribute_calls_into_methods(tmp_path):
+    """A method called through an attribute in a live def is kept, its
+    callees with it; an uncalled method and a dead def's callee are
+    reported; dunders go with their class."""
+    root = _tree(tmp_path, {
+        "cov_tiles_spark/lake.py": (
+            "class Lake:\n"
+            "    def __init__(self):\n"
+            "        self.n = self._setup()\n\n"
+            "    def _setup(self):\n        return 0\n\n"
+            "    def commit(self):\n        return self._write()\n\n"
+            "    def _write(self):\n        return 1\n\n"
+            "    def rollback(self):\n        return self._undo()\n\n"
+            "    def _undo(self):\n        return 2\n\n\n"
+            "def run(lake):\n    return lake.commit()\n"
+        ),
+        "__spark_entry__.py": (
+            "from cov_tiles_spark.lake import Lake, run\n\nrun(Lake())\n"
+        ),
+    })
+    assert unreachable_defs(root) == [
+        "cov_tiles_spark/lake.py:14 Lake.rollback",
+        "cov_tiles_spark/lake.py:17 Lake._undo",
+    ]
+
+
+def _package_imports(src: str) -> list[tuple[str, str, int]]:
+    """(module, name, line) of every ``from cov_tiles_spark... import``
+    anywhere in ``src``, imports inside functions included."""
+    return [
+        (node.module, alias.name, node.lineno)
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.ImportFrom)
+        and node.level == 0
+        and (node.module or "").split(".")[0] == "cov_tiles_spark"
+        for alias in node.names
+    ]
+
+
+def test_root_and_script_package_imports_resolve():
+    """Checked against the package's source, without importing it: a
+    name is defined when a module's top level binds it, or when it is a
+    submodule."""
+    bound: dict[str, set[str]] = {}
+    for p in (ROOT / "cov_tiles_spark").rglob("*.py"):
+        names = set()
+        for node in ast.parse(p.read_text(encoding="utf-8")).body:
+            if isinstance(node, (*_FUNCS, ast.ClassDef)):
+                names.add(node.name)
+            elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                names.update(
+                    (a.asname or a.name).split(".")[0] for a in node.names
+                )
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                for t in node.targets if isinstance(node, ast.Assign) else [node.target]:
+                    names.update(
+                        n.id for n in ast.walk(t) if isinstance(n, ast.Name)
+                    )
+        bound[_module_name(ROOT, p)] = names
+    missing = []
+    checked = 0
+    for p in _gate_roots(ROOT) + sorted((ROOT / "scripts").glob("*.py")):
+        for module, name, line in _package_imports(p.read_text(encoding="utf-8")):
+            checked += 1
+            if name not in bound.get(module, ()) and f"{module}.{name}" not in bound:
+                missing.append(f"{p.relative_to(ROOT)}:{line} {module}.{name}")
+    assert checked > 100
+    assert missing == []
 
 
 def test_every_package_module_is_reachable_from_a_gate_or_bench():

@@ -333,29 +333,3 @@ def test_pfor_exceptions_and_tail():
     # exceptions must beat brute-force max-width packing
     wide = encode_pfor(np.full(1000, 1 << 24, dtype=np.int64))
     assert len(enc) < 1000 * 25 // 8
-
-
-def test_genb_tileset_shared_tilejson():
-    """Tileset mode: all 7 OMT tiles encoded against one global layer
-    table must decode feature-exact using the SINGLE shared TileJSON
-    (per-tile sidecars are positional and cannot be shared — this is
-    the reference's one-metadata-file-per-tileset deployment shape)."""
-    import glob
-
-    from cov_tiles_spark.covt.genb import decode_tile_genb
-    from cov_tiles_spark.covt.mvt import decode_mvt
-    from cov_tiles_spark.pipeline.transcode import (
-        _features_match,
-        mvts_to_genb_tileset,
-    )
-
-    paths = sorted(glob.glob("/root/reference/parser/js/data/omt/*.mvt"))
-    tiles = [open(p, "rb").read() for p in paths]
-    payloads, tilejson = mvts_to_genb_tileset(tiles)
-    assert len(payloads) == 7
-    # the merged table covers every layer exactly once
-    names = [v["id"] for v in tilejson["vector_layers"]]
-    assert len(names) == len(set(names))
-    for p, payload, mvt in zip(paths, payloads, tiles):
-        decoded = decode_tile_genb(payload, tilejson)
-        assert _features_match(decoded, decode_mvt(mvt)), p

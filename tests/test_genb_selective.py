@@ -31,16 +31,15 @@ def _props_equal(a, b) -> bool:
     return np.array_equal(np.asarray(a.data), np.asarray(b.data))
 
 
-def _encode_omt_tileset():
-    from cov_tiles_spark.pipeline.transcode import mvts_to_genb_tileset
+def _encode_omt_tiles() -> list[tuple[bytes, dict]]:
+    """(gen-B payload, its TileJSON sidecar) per reference OMT tile."""
+    from cov_tiles_spark.pipeline.transcode import mvt_to_genb
 
-    tiles = [open(p, "rb").read() for p in OMT]
-    return mvts_to_genb_tileset(tiles)
+    return [mvt_to_genb(open(p, "rb").read())[:2] for p in OMT]
 
 
 def test_layer_pruned_decode_matches_full_on_reference_tiles():
-    payloads, tj = _encode_omt_tileset()
-    for payload in payloads:
+    for payload, tj in _encode_omt_tiles():
         full = decode_tile_genb(payload, tj)
         for lname, flay in full.items():
             only = decode_tile_genb(payload, tj, layers={lname})
@@ -60,9 +59,8 @@ def test_layer_pruned_decode_matches_full_on_reference_tiles():
 
 
 def test_column_pruned_decode_matches_full_on_reference_tiles():
-    payloads, tj = _encode_omt_tileset()
     checked_props = 0
-    for payload in payloads:
+    for payload, tj in _encode_omt_tiles():
         full = decode_tile_genb(payload, tj)
         for lname, flay in full.items():
             # geometry-only read: no ids, no properties decoded
@@ -93,9 +91,8 @@ def test_column_pruned_decode_matches_full_on_reference_tiles():
 def test_localized_follower_forces_leader_dictionary():
     """Selecting only a shared-dictionary FOLLOWER must still decode its
     group leader's dictionary stream (and only emit the follower)."""
-    payloads, tj = _encode_omt_tileset()
     found = 0
-    for payload in payloads:
+    for payload, tj in _encode_omt_tiles():
         full = decode_tile_genb(payload, tj)
         for lname, flay in full.items():
             followers = [

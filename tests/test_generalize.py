@@ -703,22 +703,6 @@ class TestSparkOperators:
                       for i in range(n))
             assert got[rid] == (cxn, cyn)
 
-    def test_drop_small_rings_jvm_only(self, spark):
-        from cov_tiles_spark.spatial.generalize import (
-            drop_small_rings,
-            ring_area2,
-        )
-
-        rows = [(0, [0, 10, 10, 0], [0, 0, 10, 10]),      # area2 200
-                (1, [0, 100, 100, 0], [0, 0, 100, 100]),  # area2 20000
-                (2, [0, 100, 100, 0], [100, 100, 0, 0])]  # cw, -20000
-        df = spark.createDataFrame(rows, "rid long, xs array<long>, ys array<long>")
-        out = drop_small_rings(df, 1000)
-        assert sorted(r["rid"] for r in out.collect()) == [1, 2]
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
-        assert "Python" not in plan and "ArrowEval" not in plan
-
     def test_clip_rings_matches_kernel(self, spark):
         from cov_tiles_spark.spatial.generalize import clip_rings
 

@@ -15,7 +15,7 @@ from cov_tiles_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_near_dups,
 )
-from cov_tiles_spark.operators.similarity import ann_lsh_topk, cosine_topk
+from cov_tiles_spark.operators.similarity import cosine_topk
 from cov_tiles_spark.operators.text import STOPWORDS, fingerprint64, lang_id
 
 SF = "/root/testdata/sf0.001"
@@ -200,36 +200,6 @@ def test_cosine_topk_matches_numpy(spark, embs):
 
     got = cosine_topk(embs, "embedding", "vec_id", q.tolist(), 10).collect()
     assert [r.id for r in sorted(got, key=lambda r: r.rank)] == expected
-
-
-def test_ann_lsh_recall_on_clustered_data(spark):
-    """ANN recall on data with real neighbor structure (the testdata
-    embeddings are near-uniform random, where hyperplane LSH — like any
-    ANN index — cannot beat sampling; planted clusters are the honest
-    recall benchmark)."""
-    rng = np.random.default_rng(7)
-    centers = rng.normal(size=(20, 64))
-    vecs = []
-    for i in range(400):
-        c = centers[i % 20]
-        vecs.append((i, (c + rng.normal(0, 0.05, 64)).astype(float).tolist()))
-    df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-
-    q = vecs[0][1]
-    mat = np.array([v for _, v in vecs])
-    sims = mat @ np.array(q) / (
-        np.linalg.norm(mat, axis=1) * np.linalg.norm(q)
-    )
-    exact = {int(i) for i, _ in sorted(
-        zip([i for i, _ in vecs], -sims), key=lambda t: (t[1], t[0])
-    )[:10]}
-
-    got = ann_lsh_topk(
-        df, "embedding", "vec_id", q, 10, dim=64, n_planes=10, n_probes=12
-    ).collect()
-    recall = len({r.id for r in got} & exact) / 10
-    assert recall >= 0.8, f"ANN recall too low on clustered data: {recall}"
-    assert 0 in {r.id for r in got}  # the query vector itself is found
 
 
 def _np_self_topk(rows, qids, k, different_label_only=False):
@@ -436,89 +406,6 @@ def test_ivf_recall_on_clustered_data(spark):
     recall = len({r.id for r in got} & exact) / 10
     assert recall >= 0.8, f"IVF recall too low on clustered data: {recall}"
     assert 0 in {r.id for r in got}
-
-
-def test_ivf_persisted_index_prunes_partitions_and_stays_exact(
-    spark, tmp_path
-):
-    """ivf_build_index / ivf_probe_topk: probe-all equals brute force;
-    the probe read resolves list_id at the PARTITION level (the scan's
-    PartitionFilters carries the IN predicate — directory pruning, not a
-    data filter), and the quantizer rides inside the index directory
-    (underscore-prefixed, invisible to the data listing)."""
-    from cov_tiles_spark.operators.similarity import (
-        cosine_topk, ivf_build_index, ivf_probe_topk, ivf_train_centroids,
-    )
-
-    rng = np.random.default_rng(17)
-    centers = rng.normal(size=(8, 32))
-    vecs = [
-        (i, (centers[i % 8] + rng.normal(0, 0.05, 32)).tolist())
-        for i in range(400)
-    ]
-    df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    cents = ivf_train_centroids(df, "embedding", "vec_id", dim=32, n_centroids=8)
-    path = str(tmp_path / "ivf_index")
-    ivf_build_index(df, "embedding", "vec_id", cents, path)
-
-    q = vecs[0][1]
-    exact = [
-        (r.rank, r.id)
-        for r in cosine_topk(df, "embedding", "vec_id", q, 10).collect()
-    ]
-    got_all = ivf_probe_topk(spark, path, q, 10, nprobe=8)
-    assert [(r.rank, r.id) for r in got_all.collect()] == exact
-
-    got_pruned = ivf_probe_topk(spark, path, q, 10, nprobe=2)
-    plan = got_pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [list_id" in plan, plan[:1500]
-    recall = len({r.id for r in got_pruned.collect()} & {i for _, i in exact}) / 10
-    assert recall >= 0.8, recall
-    # the index data listing must not pick up the quantizer sidecar
-    assert spark.read.parquet(path).count() == 400
-
-
-def test_ivf_append_stays_exact_without_rebuild(spark, tmp_path):
-    """ivf_append: new vectors assigned with the STORED quantizer land
-    in the partition layout via dynamic append; probe-all over the
-    union equals brute force over the union, and a pre-append probe's
-    cached listing doesn't hide the appended rows."""
-    from cov_tiles_spark.operators.similarity import (
-        cosine_topk, ivf_append, ivf_build_index, ivf_probe_topk,
-        ivf_train_centroids,
-    )
-
-    rng = np.random.default_rng(23)
-    centers = rng.normal(size=(8, 16))
-    base = [
-        (i, (centers[i % 8] + rng.normal(0, 0.05, 16)).tolist())
-        for i in range(300)
-    ]
-    extra = [
-        (1000 + i, (centers[i % 8] + rng.normal(0, 0.05, 16)).tolist())
-        for i in range(120)
-    ]
-    df = spark.createDataFrame(base, "vec_id long, embedding array<double>")
-    cents = ivf_train_centroids(df, "embedding", "vec_id", dim=16, n_centroids=8)
-    path = str(tmp_path / "ivf_index")
-    ivf_build_index(df, "embedding", "vec_id", cents, path)
-
-    q = base[3][1]
-    # warm the session's file-listing cache for `path` BEFORE the append
-    ivf_probe_topk(spark, path, q, 5, nprobe=8).collect()
-
-    extra_df = spark.createDataFrame(extra, "vec_id long, embedding array<double>")
-    ivf_append(extra_df, "embedding", "vec_id", path)
-
-    union = df.unionByName(extra_df)
-    exact = [
-        (r.rank, r.id)
-        for r in cosine_topk(union, "embedding", "vec_id", q, 10).collect()
-    ]
-    got = ivf_probe_topk(spark, path, q, 10, nprobe=8)
-    assert [(r.rank, r.id) for r in got.collect()] == exact
-    # appended rows visible; quantizer sidecar still excluded
-    assert spark.read.parquet(path).count() == 420
 
 
 def test_lang_id_on_planted_sentences(spark):

@@ -183,18 +183,6 @@ def test_pack_concat_is_jvm_only(docs):
     assert "MapInPandas" not in plan and "ArrowEval" not in plan
 
 
-def test_packing_stats(docs):
-    from cov_tiles_spark.operators.packing import pack_bins, packing_stats
-
-    st = packing_stats(
-        pack_bins(docs, "doc_id", "n_tokens", max_len=64, num_shards=4), 64
-    ).collect()
-    assert len(st) == 4
-    for r in st:
-        assert 0.5 <= r.mean_fill <= 1.0
-        assert r.n_docs >= r.n_seqs  # no split => at least one doc per seq
-
-
 def _aspect_py(rows, buckets, batch_size, num_shards, seed=0):
     """Independent replay of aspect_buckets: argmin |w/h - bw/bh|,
     tie to lowest index; hash-ordered batches inside (bucket, shard)."""

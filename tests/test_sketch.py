@@ -1,5 +1,4 @@
-"""HyperLogLog sketch: scalar-oracle register equality, mergeability,
-and accuracy."""
+"""HyperLogLog sketch: scalar-oracle register equality and accuracy."""
 
 from __future__ import annotations
 
@@ -10,7 +9,6 @@ from cov_tiles_spark.operators.sketch import (
     ALPHA_NUM,
     hll_distinct,
     hll_estimate,
-    hll_merge,
     hll_registers,
 )
 
@@ -60,17 +58,6 @@ def test_estimate_matches_scalar_and_is_accurate(spark):
     assert row["hll_est"] == _py_estimate(_py_registers([k * 7 + 1 for k in range(n)]))
     # p=12 standard error is ~1.04/sqrt(4096) = 1.6%; allow 3 sigma
     assert abs(row["hll_est"] - n) / n < 0.05
-
-
-def test_merge_equals_whole(spark):
-    a = spark.createDataFrame([(k,) for k in range(0, 5000)], "k long")
-    b = spark.createDataFrame([(k,) for k in range(3000, 9000)], "k long")
-    whole = spark.createDataFrame([(k,) for k in range(0, 9000)], "k long")
-    merged = hll_merge(hll_registers(a, "k"), hll_registers(b, "k"))
-    est_merged = hll_estimate(merged).collect()[0]
-    est_whole = hll_estimate(hll_registers(whole, "k")).collect()[0]
-    assert est_merged["hll_s"] == est_whole["hll_s"]
-    assert est_merged["hll_est"] == est_whole["hll_est"]
 
 
 def test_grouped(spark):

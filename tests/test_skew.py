@@ -1,11 +1,11 @@
-"""Salted repartitioning / salted join (pipeline/skew.py) on a corpus
-where 90% of rows share one hot key."""
+"""Salted join (pipeline/skew.py) on a corpus where 90% of rows share
+one hot key."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from cov_tiles_spark.pipeline.skew import salted_join, salted_repartition
+from cov_tiles_spark.pipeline.skew import salted_join
 
 
 def _hot_corpus(spark, n=20_000):
@@ -16,32 +16,6 @@ def _hot_corpus(spark, n=20_000):
         .alias("k"),
         F.col("id").alias("row_id"),
     )
-
-
-def test_salted_repartition_bounds_hot_partition(spark):
-    df = _hot_corpus(spark)
-    factor = 8
-    out = salted_repartition(df, ["k"], salt_from="row_id", factor=factor,
-                             num_partitions=16)
-    sizes = (
-        out.withColumn("pid", F.spark_partition_id())
-        .groupBy("pid").count().collect()
-    )
-    total = sum(r["count"] for r in sizes)
-    assert total == 20_000
-    # without salting the hot key puts 18k rows (90%) in ONE partition;
-    # salted, no partition should hold more than ~1/factor of the hot key
-    # plus stragglers
-    assert max(r["count"] for r in sizes) < 18_000 * 2 / factor + 2_000
-    # the hot key's rows carry all `factor` distinct salts and land on
-    # several partitions (exact partition count varies with hash
-    # collisions of (k, salt) into 16 buckets)
-    hot = out.filter(F.col("k") == 0)
-    assert hot.select("_salt").distinct().count() == factor
-    hot_parts = (
-        hot.select(F.spark_partition_id().alias("pid")).distinct().count()
-    )
-    assert hot_parts >= factor // 2
 
 
 def test_salted_join_matches_plain_join(spark):

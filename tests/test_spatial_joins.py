@@ -3,15 +3,95 @@
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from cov_tiles_spark.io.synth import images_df, knn_queries_df, tile_boundaries_df
+from cov_tiles_spark.io.synth import _CLUSTERS, _hash01, images_df
 from cov_tiles_spark.pipeline.materialize import assign_tiles
 from cov_tiles_spark.spatial.knn import knn_broadcast, knn_cell_pruned
-from cov_tiles_spark.spatial.pip import pip_join, point_in_rings_np
+from cov_tiles_spark.spatial.pip import pip_join_broadcast, point_in_rings_np
+from cov_tiles_spark.spatial.tiling import DEFAULT_EXTENT
 
 N = 800
+
+
+def _tile_boundaries_df(assigned_tiles):
+    """One boundary polygon per distinct (z,x,y) in ``assigned_tiles``,
+    plus a ring of empty neighbor tiles as negative cases, on the
+    ``DEFAULT_EXTENT`` grid ``assign_tiles`` uses.
+
+    Boundary = the full tile square (open ring, counts-not-offsets SoA);
+    every 20th tile (deterministic by hash) gets an interior hole
+    covering the center 1/8 of the tile to exercise ring topology.
+    """
+    tiles = assigned_tiles.select("z", "x", "y").distinct()
+    offs = F.array([F.lit(-1), F.lit(0), F.lit(1)])
+    neighbors = (
+        tiles.withColumn("dx", F.explode(offs))
+        .withColumn("dy", F.explode(offs))
+        .select(
+            "z",
+            (F.col("x") + F.col("dx")).alias("x"),
+            (F.col("y") + F.col("dy")).alias("y"),
+        )
+        .filter((F.col("x") >= 0) & (F.col("y") >= 0))
+        .distinct()
+    )
+    e = DEFAULT_EXTENT
+    lo, hi = e * 7 // 16, e * 9 // 16
+    with_hole = F.pmod(F.xxhash64("z", "x", "y"), F.lit(20)) == 0
+    shell = [0, 0, e, 0, e, e, 0, e]  # open CCW-in-screen square
+    hole = [lo, lo, hi, lo, hi, hi, lo, hi]
+    boundary = F.when(
+        with_hole,
+        F.struct(
+            F.array(F.lit(2)).alias("part_offsets"),
+            F.array(F.lit(4), F.lit(4)).alias("ring_offsets"),
+            F.array(*[F.lit(v) for v in shell + hole]).alias("vertex_buffer"),
+        ),
+    ).otherwise(
+        F.struct(
+            F.array(F.lit(1)).alias("part_offsets"),
+            F.array(F.lit(4)).alias("ring_offsets"),
+            F.array(*[F.lit(v) for v in shell]).alias("vertex_buffer"),
+        )
+    )
+    return neighbors.withColumn("extent", F.lit(e)).withColumn(
+        "boundary", boundary
+    ).withColumn("is_hole_case", with_hole)
+
+
+def _knn_queries_df(spark, n: int):
+    """Deterministic query points: half near the corpus hot spots, half
+    uniform; ``k`` cycles 1, 5, 9."""
+    ids = np.arange(n, dtype=np.int64)
+    u = _hash01(ids + 10_000_000, 7)
+    pick = (_hash01(ids + 10_000_000, 8) * len(_CLUSTERS)).astype(np.int64)
+    cl = np.array(_CLUSTERS)
+    u1 = np.clip(_hash01(ids + 10_000_000, 9), 1e-12, 1.0)
+    u2 = _hash01(ids + 10_000_000, 10)
+    g1 = np.sqrt(-2 * np.log(u1)) * np.cos(2 * np.pi * u2)
+    g2 = np.sqrt(-2 * np.log(u1)) * np.sin(2 * np.pi * u2)
+    lon = np.where(
+        u < 0.5,
+        cl[pick, 0] + cl[pick, 2] * g1,
+        _hash01(ids + 10_000_000, 11) * 360.0 - 180.0,
+    )
+    lat = np.where(
+        u < 0.5,
+        cl[pick, 1] + cl[pick, 2] * g2,
+        _hash01(ids + 10_000_000, 12) * 170.0 - 85.0,
+    )
+    pdf = pd.DataFrame(
+        {
+            "query_id": [f"q-{j:06d}" for j in ids.tolist()],
+            "lon": np.clip(lon, -179.999, 179.999),
+            "lat": np.clip(lat, -85.0, 85.0),
+            "k": (ids % 3 * 4 + 1).astype(np.int32),
+        }
+    )
+    return spark.createDataFrame(pdf)
 
 
 @pytest.fixture(scope="module")
@@ -32,9 +112,9 @@ def test_point_in_rings_kernel():
 
 def test_pip_join(spark, corpus):
     assigned = assign_tiles(corpus.select("image_id", "lon", "lat"), [5]).cache()
-    bounds = tile_boundaries_df(spark, assigned).cache()
+    bounds = _tile_boundaries_df(assigned).cache()
 
-    result = pip_join(
+    result = pip_join_broadcast(
         assigned.select("image_id", "z", "x", "y", "local_x", "local_y"), bounds
     ).collect()
     assert len(result) == N
@@ -76,7 +156,7 @@ def _knn_oracle(p_lon, p_lat, p_ids, q_lon, q_lat, k):
 
 
 def test_knn_broadcast_matches_oracle(spark, corpus):
-    queries = knn_queries_df(spark, 40).cache()
+    queries = _knn_queries_df(spark, 40).cache()
     res = knn_broadcast(corpus, queries, k=None).collect()
 
     pts = corpus.select("image_id", "lon", "lat").collect()
@@ -102,7 +182,7 @@ def test_knn_broadcast_matches_oracle(spark, corpus):
 
 
 def test_knn_cell_pruned_exact_or_flagged(spark, corpus):
-    queries = knn_queries_df(spark, 40).select("query_id", "lon", "lat").cache()
+    queries = _knn_queries_df(spark, 40).select("query_id", "lon", "lat").cache()
     k = 5
     good, bad = knn_cell_pruned(corpus, queries, k=k, bits=5)
     good_rows = good.collect()
@@ -144,13 +224,57 @@ def test_knn_exact_wraps_antimeridian(spark):
     assert got == [1, 2, 4], got
 
 
-def test_pip_join_broadcast_matches_cogroup(spark, corpus):
-    from cov_tiles_spark.spatial.pip import pip_join_broadcast
+def _inside_scalar(px: float, py: float, ring_lengths, vertex_buffer) -> bool:
+    """Scalar even-odd ray cast, one edge at a time: the point is inside
+    when a ray to +x crosses the rings' edges an odd number of times."""
+    inside = False
+    start = 0
+    for n in ring_lengths:
+        ring = [
+            (vertex_buffer[2 * i], vertex_buffer[2 * i + 1])
+            for i in range(start, start + n)
+        ]
+        start += n
+        for (x1, y1), (x2, y2) in zip(ring, ring[1:] + ring[:1]):
+            if (y1 > py) != (y2 > py):
+                x_cross = x1 + (py - y1) / (y2 - y1) * (x2 - x1)
+                if px < x_cross:
+                    inside = not inside
+    return inside
 
+
+def test_pip_join_broadcast_matches_scalar_oracle(spark, corpus):
+    """Concave shells with holes, and tiles without a boundary, against
+    a scalar ray cast written independently of ``point_in_rings_np``."""
     assigned = assign_tiles(corpus.select("image_id", "lon", "lat"), [5])
-    bounds = tile_boundaries_df(spark, assigned)
     pts = assigned.select("image_id", "z", "x", "y", "local_x", "local_y")
+    e = DEFAULT_EXTENT
+    # a U-shaped shell (notch from the top down to mid-tile) with a
+    # square hole in its left arm
+    shell = [0, 0, e, 0, e, e, 3 * e // 4, e, 3 * e // 4, e // 2,
+             e // 4, e // 2, e // 4, e, 0, e]
+    hole = [e // 16, e // 8, e // 8, e // 8, e // 8, e // 4, e // 16, e // 4]
+    tiles = sorted({(r.z, r.x, r.y) for r in pts.select("z", "x", "y").collect()})
+    rows = [
+        (z, x, y, ([8, 4], shell + hole) if i % 2 else ([8], shell))
+        for i, (z, x, y) in enumerate(tiles)
+        if i % 3  # every third tile has no boundary: all its points are out
+    ]
+    bounds = spark.createDataFrame(
+        rows,
+        "z int, x int, y int, "
+        "boundary struct<ring_offsets: array<int>, vertex_buffer: array<int>>",
+    )
+    bmap = {(z, x, y): b for z, x, y, b in rows}
 
-    a = {(r.image_id, r.z): r.inside for r in pip_join(pts, bounds).collect()}
-    b = {(r.image_id, r.z): r.inside for r in pip_join_broadcast(pts, bounds).collect()}
-    assert a == b and len(a) == N
+    got = pip_join_broadcast(pts, bounds).collect()
+    assert len(got) == N
+    n_in = 0
+    for r in got:
+        b = bmap.get((r.z, r.x, r.y))
+        want = b is not None and _inside_scalar(
+            float(r.local_x), float(r.local_y), *b
+        )
+        assert r.inside == want, (r.image_id, r.z, r.x, r.y)
+        n_in += want
+    assert 0 < n_in < N  # both outcomes occur

@@ -1,5 +1,5 @@
-"""Structured Streaming event-time operators: watermarked windowed tile
-counts and the stateful sessionizer."""
+"""Structured Streaming event-time operator: watermarked windowed tile
+counts."""
 
 from __future__ import annotations
 
@@ -91,53 +91,3 @@ def test_windowed_tile_counts_with_watermark(spark, tmp_path):
          (t(59), 10.0, 10.0), (t(59), 10.0, 10.0), (t(3), 10.0, 10.0)], schema)
     back = tile_counts_windowed(batch, zoom=4, window_duration="10 minutes")
     assert back.agg(F.sum("n_points")).collect()[0][0] == 6
-
-
-def test_stateful_sessionize_stream(spark, tmp_path):
-    """applyInPandasWithState sessionizer: a later-batch event past the
-    gap closes and emits the prior session; the open tail stays in state."""
-    from datetime import datetime, timezone
-
-    from cov_tiles_spark.streaming.windowed import sessionize_stream
-
-    landing = str(tmp_path / "landing")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "user_id long, ts timestamp"
-
-    def t(hour, minute=0):
-        return datetime(2024, 1, 1, hour, minute, tzinfo=timezone.utc)
-
-    # batch 1: user 1 has a 3-event session; user 2 one event
-    _write_drop(
-        spark, f"{landing}/d1",
-        [(1, t(9, 0)), (1, t(9, 20)), (1, t(9, 40)), (2, t(9, 5))],
-        schema, mtime=1_700_000_000,
-    )
-    # batch 2: user 1 returns hours later -> closes session 1 (3 events);
-    # user 2 stays within the gap -> still open, nothing emitted
-    _write_drop(
-        spark, f"{landing}/d2",
-        [(1, t(14, 0)), (2, t(9, 50))],
-        schema, mtime=1_700_000_100,
-    )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{landing}/*")
-    )
-    q = (
-        sessionize_stream(stream, gap_minutes=60)
-        .writeStream.format("memory").queryName("sessions")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    rows = spark.sql("select * from sessions").collect()
-    assert len(rows) == 1
-    s = rows[0]
-    assert s.user_id == 1
-    assert s.n_events == 3
-    assert s.session_start.minute == 0 and s.session_end.minute == 40

@@ -218,14 +218,3 @@ def test_covt_to_mvt_exports_reference_tiles():
                         assert abs(float(pb[key]) - v) <= 1e-6 * max(1.0, abs(v))
                     else:
                         assert pb[key] == v, (p, n, k)
-
-
-def test_export_covt_directory(spark):
-    from cov_tiles_spark.pipeline.transcode import export_covt_directory
-
-    rows = export_covt_directory(
-        spark, "/root/reference/parser/js/data/omt"
-    ).collect()
-    assert len(rows) == 7
-    assert all(r.verified for r in rows), [r.path for r in rows if not r.verified]
-    assert all(r.mvt_bytes > 0 and r.n_features > 0 for r in rows)
