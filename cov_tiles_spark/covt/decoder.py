@@ -16,9 +16,13 @@ Wire layout per `/root/reference/parser/js/src/decoder/covtDecoder.ts`:
     property    : byte-RLE present bitset (ceil(n/8) bytes); typed data
                   (:366-490)
 
-Decoding is segment-vectorized: every varint stream is decoded in one
-vectorized pass and per-part delta restarts are applied as a grouped
-cumulative sum with per-segment base subtraction — no per-vertex Python.
+Headers and string dictionaries are parsed from the tile's ``bytes``;
+numpy pays a fixed setup per call, so a scalar read from a numpy array
+costs several times a read from ``bytes``. Value streams go through the
+`varint`/`rle` kernels, which walk a short stream in pure Python and
+decode a long one in one vectorized pass. Per-part delta restarts are
+applied as a grouped cumulative sum with per-segment base subtraction —
+no per-vertex Python.
 """
 
 from __future__ import annotations
@@ -52,7 +56,11 @@ from cov_tiles_spark.covt.varint import (
     decode_varint,
     decode_varints,
     decode_zigzag_varints,
+    walk_varints,
 )
+
+_DATA_TYPES = {int(t): t for t in ColumnDataType}
+_ENCODINGS = {int(e): e for e in ColumnEncoding}
 
 
 @dataclass
@@ -102,28 +110,31 @@ class LayerData:
         return _materialize_features(self)
 
 
-def _read_string(buf: np.ndarray, offset: int) -> tuple[str, int]:
-    length, offset = decode_varint(buf, offset)
-    raw = buf[offset : offset + length].tobytes()
-    return raw.decode("utf-8"), offset + length
+def _read_string(data: bytes, offset: int) -> tuple[str, int]:
+    (length,), offset = walk_varints(data, 1, offset)
+    end = offset + length
+    if end > len(data):
+        raise ValueError("buffer exhausted: string runs past the tile")
+    return data[offset:end].decode("utf-8"), end
 
 
-def _decode_layer_header(buf: np.ndarray, offset: int) -> tuple[LayerMetadata, int]:
-    name, offset = _read_string(buf, offset)
-    num_features, offset = decode_varint(buf, offset)
-    num_columns, offset = decode_varint(buf, offset)
+def _decode_layer_header(data: bytes, offset: int) -> tuple[LayerMetadata, int]:
+    name, offset = _read_string(data, offset)
+    (num_features, num_columns), offset = walk_varints(data, 2, offset)
     columns: list[ColumnMetadata] = []
     for _ in range(num_columns):
-        col_name, offset = _read_string(buf, offset)
-        data_type = ColumnDataType(int(buf[offset]))
-        encoding = ColumnEncoding(int(buf[offset + 1]))
-        offset += 2
-        num_streams, offset = decode_varint(buf, offset)
+        col_name, offset = _read_string(data, offset)
+        data_type = _DATA_TYPES.get(data[offset])
+        if data_type is None:  # zero-valued members are falsy: test None
+            data_type = ColumnDataType(data[offset])  # raises ValueError
+        encoding = _ENCODINGS.get(data[offset + 1])
+        if encoding is None:
+            encoding = ColumnEncoding(data[offset + 1])
+        num_streams, offset = decode_varint(data, offset + 2)
         streams: dict[str, StreamMetadata] = {}
         for _ in range(num_streams):
-            s_name, offset = _read_string(buf, offset)
-            n_vals, offset = decode_varint(buf, offset)
-            b_len, offset = decode_varint(buf, offset)
+            s_name, offset = _read_string(data, offset)
+            (n_vals, b_len), offset = walk_varints(data, 2, offset)
             streams[s_name] = StreamMetadata(n_vals, b_len)
         columns.append(ColumnMetadata(col_name, data_type, encoding, streams))
     return LayerMetadata(name, num_features, columns), offset
@@ -288,6 +299,19 @@ def _decode_geometry_column(
             buf, sm[RING_OFFSETS_STREAM].num_values, offset, signed=False
         )
 
+    if (
+        geometry_offsets is None
+        and part_offsets is None
+        and ring_offsets is None
+        and (geometry_types == GeometryType.POINT).all()
+    ):
+        # pure point layer: every point is absolute (its own 1-vertex
+        # delta chain), so the zigzag values ARE the interleaved x,y
+        coords, offset = decode_zigzag_varints(buf, n_features * 2, offset)
+        return (
+            GeometryColumn(geometry_types, coords.astype(np.int32)),
+            offset,
+        )
     seg_lengths = vertex_segment_lengths(
         geometry_types, geometry_offsets, part_offsets, ring_offsets
     )
@@ -316,7 +340,7 @@ def _decode_geometry_column(
 
 
 def _decode_property_column(
-    buf: np.ndarray, offset: int, col: ColumnMetadata, n_features: int
+    buf: np.ndarray, tile: bytes, offset: int, col: ColumnMetadata, n_features: int
 ) -> tuple[PropertyColumn, int]:
     n_present_bytes = (n_features + 7) // 8
 
@@ -334,7 +358,7 @@ def _decode_property_column(
         lengths, dict_offset = decode_int_rle(
             buf, col.streams[LENGTH_STREAM].num_values, tail, signed=False
         )
-        dictionary, end_offset = _decode_string_dictionary(buf, dict_offset, lengths)
+        dictionary, end_offset = _decode_string_dictionary(tile, dict_offset, lengths)
 
         localized: dict[str, tuple[np.ndarray, np.ndarray]] = {}
         present = None
@@ -380,9 +404,9 @@ def _decode_property_column(
 
     if col.data_type == ColumnDataType.FLOAT:
         n_vals = col.streams[DATA_STREAM].num_values
-        data = np.frombuffer(
-            buf[offset : offset + 4 * n_vals].tobytes(), dtype="<f4"
-        ).copy()
+        if offset + 4 * n_vals > len(tile):
+            raise ValueError("buffer exhausted: float stream runs past the tile")
+        data = np.frombuffer(tile, dtype="<f4", count=n_vals, offset=offset).copy()
         return PropertyColumn(col.data_type, present, data), offset + 4 * n_vals
 
     if col.data_type == ColumnDataType.STRING:
@@ -390,7 +414,7 @@ def _decode_property_column(
         n_len = col.streams[LENGTH_STREAM].num_values
         data, offset = decode_int_rle(buf, n_data, offset, signed=False)
         lengths, offset = decode_int_rle(buf, n_len, offset, signed=False)
-        dictionary, offset = _decode_string_dictionary(buf, offset, lengths)
+        dictionary, offset = _decode_string_dictionary(tile, offset, lengths)
         return (
             PropertyColumn(col.data_type, present, data.astype(np.int64), dictionary),
             offset,
@@ -400,24 +424,28 @@ def _decode_property_column(
 
 
 def _decode_string_dictionary(
-    buf: np.ndarray, offset: int, lengths: np.ndarray
+    tile: bytes, offset: int, lengths: np.ndarray
 ) -> tuple[list[str], int]:
     values: list[str] = []
-    for ln in lengths.astype(np.int64).tolist():
-        values.append(buf[offset : offset + ln].tobytes().decode("utf-8"))
-        offset += ln
+    for ln in lengths.tolist():
+        end = offset + ln
+        values.append(tile[offset:end].decode("utf-8"))
+        offset = end
+    if offset > len(tile):
+        raise ValueError("buffer exhausted: dictionary runs past the tile")
     return values, offset
 
 
 def decode_covt(tile: bytes | np.ndarray) -> dict[str, LayerData]:
     """Decode a full COVT gen-A tile into per-layer columnar data."""
-    buf = np.frombuffer(tile, dtype=np.uint8) if isinstance(tile, (bytes, bytearray)) else tile
-    _version, offset = decode_varint(buf, 0)
-    num_layers, offset = decode_varint(buf, offset)
+    if not isinstance(tile, bytes):
+        tile = bytes(tile)
+    buf = np.frombuffer(tile, dtype=np.uint8)
+    (_version, num_layers), offset = walk_varints(tile, 2, 0)
 
     layers: dict[str, LayerData] = {}
     for _ in range(num_layers):
-        meta, offset = _decode_layer_header(buf, offset)
+        meta, offset = _decode_layer_header(tile, offset)
         columns = list(meta.columns)
 
         ids = None
@@ -432,7 +460,9 @@ def decode_covt(tile: bytes | np.ndarray) -> dict[str, LayerData]:
 
         properties: dict[str, PropertyColumn] = {}
         for col in columns:
-            prop, offset = _decode_property_column(buf, offset, col, meta.num_features)
+            prop, offset = _decode_property_column(
+                buf, tile, offset, col, meta.num_features
+            )
             properties[col.name] = prop
 
         layers[meta.name] = LayerData(meta, ids, geometry, properties)

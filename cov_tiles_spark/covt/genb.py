@@ -75,6 +75,7 @@ from cov_tiles_spark.covt.varint import (
     decode_varints,
     decode_zigzag_varints,
     encode_varints,
+    walk_varints,
     zigzag_encode,
 )
 
@@ -689,32 +690,34 @@ def decode_tile_genb(
     the shared dictionary exists, but only selected columns appear in
     the result. Column *metadata* stays complete either way — only
     data decoding is pruned."""
+    if not isinstance(buf, bytes):
+        buf = bytes(buf)
+    # headers are walked on the bytes (a scalar read from a numpy array
+    # costs several times more); value streams decode from the array view
     b = np.frombuffer(buf, dtype=np.uint8)
     pos = 0
     out: dict[str, LayerData] = {}
     layer_list = (tilejson or {}).get("vector_layers", [])
-    while pos < len(b):
-        layer_header = int(b[pos])
+    while pos < len(buf):
+        layer_header = buf[pos]
         pos += 1
         version = layer_header >> 1
         optimized = bool(layer_header & 1)
         if version != VERSION:
             raise ValueError(f"unsupported gen-B version {version}")
         if optimized:
-            layer_id, pos = decode_varint(b, pos)
+            layer_id, pos = decode_varint(buf, pos)
             if layer_id >= len(layer_list):
                 raise ValueError("optimized metadata requires the TileJSON sidecar")
             vlayer = layer_list[layer_id]
             layer_name = vlayer["id"]
             fields = list(vlayer["fields"].keys())
         else:
-            ln, pos = decode_varint(b, pos)
-            layer_name = b[pos : pos + ln].tobytes().decode("utf-8")
+            ln, pos = decode_varint(buf, pos)
+            layer_name = buf[pos : pos + ln].decode("utf-8")
             pos += ln
             fields = None
-        extent, pos = decode_varint(b, pos)
-        n_features, pos = decode_varint(b, pos)
-        n_columns, pos = decode_varint(b, pos)
+        (extent, n_features, n_columns), pos = walk_varints(buf, 3, pos)
 
         # ---- column metadata (`:600-649`)
         # role is decided by column id / position, never by name: a feature
@@ -725,7 +728,7 @@ def decode_tile_genb(
         for i in range(n_columns):
             role = "property"
             if optimized or i == 0:
-                column_id, pos = decode_varint(b, pos)
+                column_id, pos = decode_varint(buf, pos)
                 if column_id == 0:
                     name, role = ID_COLUMN, "id"
                 elif column_id == 1:
@@ -733,10 +736,10 @@ def decode_tile_genb(
                 else:
                     name = fields[column_id - 2]
             else:
-                ln, pos = decode_varint(b, pos)
-                name = b[pos : pos + ln].tobytes().decode("utf-8")
+                ln, pos = decode_varint(buf, pos)
+                name = buf[pos : pos + ln].decode("utf-8")
                 pos += ln
-            desc = int(b[pos])
+            desc = buf[pos]
             pos += 1
             dc, cc = (desc >> 3) & 0xF, desc & 0x7
             dtype = _GDTYPE_BY_CODE.get(dc)
@@ -749,7 +752,7 @@ def decode_tile_genb(
                 role = "geometry"  # non-optimized mode names it by string
             streams: list[tuple[StreamType, StreamEncoding, int, int]] = []
             while True:
-                sdesc = int(b[pos])
+                sdesc = buf[pos]
                 pos += 1
                 sc, ec = sdesc >> 4, sdesc & 0xF
                 stype = _STYPE_BY_CODE.get(sc)
@@ -758,8 +761,7 @@ def decode_tile_genb(
                 senc = _SENC_BY_CODE.get(ec)
                 if senc is None:
                     senc = StreamEncoding(ec)
-                nv, pos = decode_varint(b, pos)
-                bl, pos = decode_varint(b, pos)
+                (nv, bl), pos = walk_varints(buf, 2, pos)
                 streams.append((stype, senc, nv, bl))
                 if dtype == GDataType.GEOMETRY and stype == StreamType.VERTEX_BUFFER:
                     break
@@ -778,7 +780,7 @@ def decode_tile_genb(
             # IMPLICIT present byte-RLE stream — `:295` — walked header
             # by header, never materialized; pinned by the pruning tests)
             for _n, role, dtype, _c, streams in col_list:
-                pos = _skip_column_data(b, pos, role, dtype, streams, nb_present)
+                pos = _skip_column_data(buf, pos, role, dtype, streams, nb_present)
             continue
 
         # column selection: which columns decode, and which additional
@@ -822,7 +824,7 @@ def decode_tile_genb(
         col_metas: list[ColumnMetadata] = []
         for ci, (name, role, dtype, ctype, streams) in enumerate(col_list):
             if not decode_col[ci]:
-                pos = _skip_column_data(b, pos, role, dtype, streams, nb_present)
+                pos = _skip_column_data(buf, pos, role, dtype, streams, nb_present)
             elif role == "id":
                 stype, senc, nv, bl = streams[0]
                 if senc == StreamEncoding.RLE:
@@ -869,7 +871,7 @@ def decode_tile_genb(
 
 
 def _skip_column_data(
-    b: np.ndarray, pos: int, role: str, dtype: "GDataType",
+    buf: bytes, pos: int, role: str, dtype: "GDataType",
     streams: list, n_bytes: int,
 ) -> int:
     """Cursor-jump one column's data section: the implicit present
@@ -878,7 +880,7 @@ def _skip_column_data(
     from cov_tiles_spark.covt.rle import skip_byte_rle
 
     if role == "property" and dtype != GDataType.BOOLEAN:
-        pos = skip_byte_rle(b, n_bytes, pos)
+        pos = skip_byte_rle(buf, n_bytes, pos)
     return pos + sum(s[3] for s in streams)
 
 
@@ -1087,6 +1089,8 @@ def _decode_property(
         )
     if dtype == GDataType.FLOAT:
         _, nv, bl = meta[StreamType.DATA]
+        if pos + nv * 4 > b.shape[0]:
+            raise ValueError("buffer exhausted: float stream runs past the tile")
         data = b[pos : pos + nv * 4].view("<f4").copy()
         return (
             PropertyColumn(data_type=ColumnDataType.FLOAT, present=present, data=data),
@@ -1117,6 +1121,8 @@ def _decode_property(
         # (the CLAUDE.md per-small-item rule; measured on omt/5_16_20)
         ends = np.cumsum(lengths.astype(np.int64)).tolist()
         total = ends[-1] if ends else 0
+        if pos + total > b.shape[0]:
+            raise ValueError("buffer exhausted: dictionary runs past the tile")
         blob = b[pos : pos + total].tobytes()
         pos += total
         words: list[str] = []

@@ -22,15 +22,20 @@ from __future__ import annotations
 import numpy as np
 
 from cov_tiles_spark.covt.varint import (
-    decode_varints,
-    encode_varints,
     encode_varints_with_ends,
+    walk_varints,
     zigzag_decode,
     zigzag_encode,
 )
 
 _MAX_RUN = 127 + 3  # header 0x7f
 _MAX_LITERALS = 128  # header 0x80
+# int-RLE streams of at most this many values take the scalar walk. The
+# vectorized path's block walk and scatter cost ~35-90 µs per call, about
+# three times the bare varint scan's, so its crossover sits higher than
+# `varint.SMALL_STREAM` (measured: ~128 values of 2-byte literals and
+# beyond 256 of 1-byte ones)
+SMALL_STREAM = 256
 
 
 def decode_int_rle(
@@ -47,57 +52,43 @@ def decode_int_rle(
     if not buf.flags.c_contiguous:
         buf = np.ascontiguousarray(buf)
     hdr = memoryview(buf)  # scalar reads ~3x faster than numpy indexing
-    if n <= 256:
+    if n <= SMALL_STREAM:
         # small-stream fast path: a pure-Python walk beats the vectorized
-        # machinery's fixed numpy setup below ~256 values (dictionary
-        # length/index streams are mostly tiny — measured 173 RLE streams
-        # per omt gen-B tile, median n < 40)
+        # machinery's fixed numpy setup (dictionary length/index streams
+        # are mostly tiny — measured 173 RLE streams per omt gen-B tile,
+        # median n < 40)
         vals: list[int] = []
-        while len(vals) < n:
-            h = hdr[offset]
-            offset += 1
-            if h <= 0x7F:
-                d = hdr[offset]
-                if d >= 128:
-                    d -= 256
-                offset += 1
-                b = hdr[offset]
-                offset += 1
-                first = b & 0x7F
-                shift = 7
-                while b >= 0x80:
-                    b = hdr[offset]
-                    offset += 1
-                    first |= (b & 0x7F) << shift
-                    shift += 7
-                if signed:
-                    first = (first >> 1) ^ -(first & 1)
-                if d == 0:  # constant run: skip the generator protocol
-                    vals.extend([first] * (h + 3))
-                elif signed:
-                    vals.extend(first + i * d for i in range(h + 3))
+        try:
+            while len(vals) < n:
+                h = hdr[offset]
+                if h <= 0x7F:
+                    d = hdr[offset + 1]
+                    if d >= 128:
+                        d -= 256
+                    (first,), offset = walk_varints(hdr, 1, offset + 2)
+                    if signed:
+                        first = (first >> 1) ^ -(first & 1)
+                    if d == 0:  # constant run: skip the generator protocol
+                        vals.extend([first] * (h + 3))
+                    elif signed:
+                        vals.extend(first + i * d for i in range(h + 3))
+                    else:
+                        # negative deltas can take an unsigned run below 0;
+                        # the stream semantics are mod-2^64 (the vectorized
+                        # path masks at r_first) — mask HERE too, or numpy's
+                        # out-of-bound int conversion (deprecated, future
+                        # hard error) is what silently did the wrap
+                        vals.extend(
+                            (first + i * d) & 0xFFFFFFFFFFFFFFFF
+                            for i in range(h + 3)
+                        )
                 else:
-                    # negative deltas can take an unsigned run below 0;
-                    # the stream semantics are mod-2^64 (the vectorized
-                    # path masks at r_first) — mask HERE too, or numpy's
-                    # out-of-bound int conversion (deprecated, future
-                    # hard error) is what silently did the wrap
-                    vals.extend(
-                        (first + i * d) & 0xFFFFFFFFFFFFFFFF
-                        for i in range(h + 3)
-                    )
-            else:
-                for _ in range(256 - h):
-                    b = hdr[offset]
-                    offset += 1
-                    v = b & 0x7F
-                    shift = 7
-                    while b >= 0x80:
-                        b = hdr[offset]
-                        offset += 1
-                        v |= (b & 0x7F) << shift
-                        shift += 7
-                    vals.append(((v >> 1) ^ -(v & 1)) if signed else v)
+                    lit, offset = walk_varints(hdr, 256 - h, offset + 1)
+                    if signed:
+                        lit = [(v >> 1) ^ -(v & 1) for v in lit]
+                    vals += lit
+        except IndexError:
+            raise ValueError(f"buffer exhausted: wanted {n} values") from None
         out[:] = vals
         return out, offset
     # absolute positions of varint terminator bytes (headers/deltas may
@@ -118,16 +109,7 @@ def decode_int_rle(
         offset += 1
         if header <= 0x7F:
             d = hdr[offset]
-            offset += 1
-            b = hdr[offset]
-            offset += 1
-            val = b & 0x7F
-            shift = 7
-            while b >= 0x80:
-                b = hdr[offset]
-                offset += 1
-                val |= (b & 0x7F) << shift
-                shift += 7
+            (val,), offset = walk_varints(hdr, 1, offset + 1)
             r_out.append(count)
             r_len.append(header + 3)
             r_delta.append(d - 256 if d >= 128 else d)
@@ -171,6 +153,8 @@ def decode_int_rle(
         ends = np.concatenate(lit_ends)
         vals = np.zeros(starts.shape[0], dtype=np.uint64)
         max_len = int((ends - starts).max()) + 1
+        if max_len > 10:
+            raise ValueError("varint longer than 10 bytes")
         for j in range(max_len):  # <= 10 iterations, vectorized
             pos = starts + j
             m = pos <= ends
@@ -273,15 +257,18 @@ def encode_int_rle(values: np.ndarray, signed: bool = False) -> bytes:
 def decode_byte_rle(
     buf: np.ndarray, n_bytes: int, offset: int = 0
 ) -> tuple[np.ndarray, int]:
-    """Decode ``n_bytes`` bytes; returns (uint8 array, new offset)."""
+    """Decode ``n_bytes`` bytes; returns (uint8 array, new offset).
+    Block headers are read through a memoryview (scalar numpy indexing
+    costs ~3x more per read)."""
     out = np.empty(n_bytes, dtype=np.uint8)
+    hdr = memoryview(buf)
     count = 0
     while count < n_bytes:
-        header = int(buf[offset])
+        header = hdr[offset]
         offset += 1
         if header <= 0x7F:
             run = header + 3
-            out[count : count + run] = buf[offset]
+            out[count : count + run] = hdr[offset]
             offset += 1
             count += run
         else:
@@ -292,13 +279,14 @@ def decode_byte_rle(
     return out, offset
 
 
-def skip_byte_rle(buf: np.ndarray, n_bytes: int, offset: int = 0) -> int:
+def skip_byte_rle(buf, n_bytes: int, offset: int = 0) -> int:
     """Advance past an encoded byte-RLE stream of ``n_bytes`` logical
-    bytes without materializing it (header walk only — used by the
-    selective gen-B decode to jump implicit present streams)."""
+    bytes of a bytes-like ``buf`` without materializing it (header walk
+    only — used by the selective gen-B decode to jump implicit present
+    streams)."""
     count = 0
     while count < n_bytes:
-        header = int(buf[offset])
+        header = buf[offset]
         offset += 1
         if header <= 0x7F:
             offset += 1

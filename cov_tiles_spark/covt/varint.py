@@ -6,7 +6,13 @@ Wire semantics match the reference decoder
 7-bit groups, continuation bit 0x80, max 10 bytes; zigzag
 ``(v<<1)^(v>>63)`` / ``(u>>1)^-(u&1)``.
 
-All functions are numpy-vectorized — no per-value Python in the hot path.
+Encoders are numpy-vectorized. Decoders dispatch on stream length:
+numpy pays a fixed setup per call, so a stream of at most
+``SMALL_STREAM`` values is decoded by :func:`walk_varints`, one
+pure-Python walk over the bytes, and a longer one by a vectorized
+terminator scan. Both paths return the same values and end offset, and
+both reject a varint longer than 10 bytes and a truncated stream with
+``ValueError``.
 """
 
 from __future__ import annotations
@@ -17,6 +23,12 @@ _SHIFTS = np.arange(0, 70, 7, dtype=np.uint64)  # 10 seven-bit groups
 _MASK7 = np.uint64(0x7F)
 # smallest value needing k+2 bytes, k = 0..8 (2^7 .. 2^63)
 _LEN_BOUNDS = np.uint64(1) << np.arange(7, 64, 7, dtype=np.uint64)
+# streams of at most this many values take the scalar walk. The walk
+# costs per byte, the vectorized scan ~25-30 µs per call plus a little
+# per value: the measured crossover is ~220 values of 1-byte varints but
+# 70-90 values of 2- to 9-byte ones, so the bound sits below the latter
+SMALL_STREAM = 64
+_MID_SHIFTS = range(7, 63, 7)  # shifts of a varint's bytes 2..9
 
 
 def varint_len(v: int) -> int:
@@ -97,6 +109,42 @@ def encode_varints_with_ends(values: np.ndarray) -> tuple[bytes, np.ndarray]:
     return out[keep].tobytes(), np.cumsum(nbytes)
 
 
+def walk_varints(buf, n: int, offset: int = 0) -> tuple[list[int], int]:
+    """Decode ``n`` varints from a bytes-like ``buf`` (``bytes``,
+    ``bytearray`` or ``memoryview``) in pure Python; returns (values as
+    Python ints, new offset).
+
+    The 10th byte contributes only its low bit, as the vectorized path's
+    uint64 shift does, so both paths agree on every input they accept.
+    """
+    out: list[int] = []
+    append = out.append
+    try:
+        for _ in range(n):
+            b = buf[offset]
+            offset += 1
+            if b < 0x80:
+                append(b)
+                continue
+            v = b & 0x7F
+            for shift in _MID_SHIFTS:
+                b = buf[offset]
+                offset += 1
+                v |= (b & 0x7F) << shift
+                if b < 0x80:
+                    break
+            else:
+                b = buf[offset]
+                offset += 1
+                v |= (b & 1) << 63
+                if b >= 0x80:
+                    raise ValueError("varint longer than 10 bytes")
+            append(v)
+    except IndexError:
+        raise ValueError(f"buffer exhausted: wanted {n} varints") from None
+    return out, offset
+
+
 def decode_varints(
     buf: np.ndarray, n: int, offset: int = 0
 ) -> tuple[np.ndarray, int]:
@@ -105,8 +153,9 @@ def decode_varints(
     Returns (values uint64 array, new offset). Scans only until the n-th
     terminator, so callers should pass a tight slice for long buffers.
     """
-    if n == 0:
-        return np.empty(0, dtype=np.uint64), offset
+    if n <= SMALL_STREAM:
+        vals, offset = walk_varints(memoryview(buf), n, offset)
+        return np.array(vals, dtype=np.uint64), offset
     # incremental terminator scan: start near the expected byte extent and
     # grow — scanning the whole remaining buffer per call is O(blocks x
     # tile size) when RLE decoders call this per literal block
@@ -126,6 +175,8 @@ def decode_varints(
     starts[1:] = ends[:-1] + 1
     vals = np.zeros(n, dtype=np.uint64)
     max_len = int((ends - starts).max()) + 1
+    if max_len > 10:
+        raise ValueError("varint longer than 10 bytes")
     for j in range(max_len):  # <= 10 iterations, each fully vectorized
         pos = starts + j
         m = pos <= ends
@@ -133,19 +184,11 @@ def decode_varints(
     return vals, offset + int(ends[-1]) + 1
 
 
-def decode_varint(buf: np.ndarray, offset: int = 0) -> tuple[int, int]:
-    """Decode a single varint; returns (value, new offset)."""
-    value = 0
-    shift = 0
-    while True:
-        b = int(buf[offset])
-        offset += 1
-        value |= (b & 0x7F) << shift
-        if b < 0x80:
-            return value, offset
-        shift += 7
-        if shift > 70:
-            raise ValueError("varint longer than 10 bytes")
+def decode_varint(buf, offset: int = 0) -> tuple[int, int]:
+    """Decode a single varint from a bytes-like ``buf``; returns (value,
+    new offset)."""
+    (value,), offset = walk_varints(buf, 1, offset)
+    return value, offset
 
 
 def zigzag_encode(values: np.ndarray) -> np.ndarray:
@@ -170,5 +213,8 @@ def encode_zigzag_varints(values: np.ndarray) -> bytes:
 def decode_zigzag_varints(
     buf: np.ndarray, n: int, offset: int = 0
 ) -> tuple[np.ndarray, int]:
+    if n <= SMALL_STREAM:
+        vals, offset = walk_varints(memoryview(buf), n, offset)
+        return np.array([(v >> 1) ^ -(v & 1) for v in vals], dtype=np.int64), offset
     vals, offset = decode_varints(buf, n, offset)
     return zigzag_decode(vals), offset

@@ -604,10 +604,12 @@ def decode_tiles(
     col_names = [p.split()[0] for p in schema_parts]
 
     def _decode(batches):
-        # Arrow-native output (guide §4.1): string columns are built by a
-        # C-level take over each tile's decoded DICTIONARY (the payload
-        # already stores them dictionary-encoded) instead of 3M per-row
-        # Python strings through the pandas conversion.
+        # Arrow-native output (guide §4.1), assembled once per batch: the
+        # tiles' decoded arrays are collected, then each column is built
+        # by ONE numpy/Arrow call. String columns come from one take over
+        # the batch's concatenated tile DICTIONARIES (the payload already
+        # stores them dictionary-encoded), with each tile's codes shifted
+        # by its dictionary's start, instead of per-row Python strings.
         import pyarrow as pa
         import pyarrow.compute as pac
 
@@ -621,43 +623,50 @@ def decode_tiles(
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            zs = rb.column("z").to_numpy(zero_copy_only=False)
-            xs = rb.column("x").to_numpy(zero_copy_only=False)
-            ys = rb.column("y").to_numpy(zero_copy_only=False)
-            payloads_col = rb.column("payload")
-            per_col: dict[str, list] = {c: [] for c in col_names}
-            for ti in range(rb.num_rows):
-                layers = decode(payloads_col[ti].as_py())
-                lay = layers["images"]
-                n = lay.metadata.num_features
-                per_col["z"].append(np.full(n, zs[ti], np.int32))
-                per_col["x"].append(np.full(n, xs[ti], np.int32))
-                per_col["y"].append(np.full(n, ys[ti], np.int32))
-                per_col["feature_id"].append(lay.ids.astype(np.int64))
+            counts = np.empty(rb.num_rows, dtype=np.int64)
+            ids: list[np.ndarray] = []
+            vbs: list[np.ndarray] = []
+            ints: dict[str, list[np.ndarray]] = {c: [] for c in int_props}
+            codes: dict[str, list[np.ndarray]] = {c: [] for c in str_props}
+            dicts: dict[str, list[str]] = {c: [] for c in str_props}
+            for ti, payload in enumerate(rb.column("payload").to_pylist()):
+                lay = decode(payload)["images"]
+                counts[ti] = lay.metadata.num_features
+                ids.append(lay.ids)
                 if with_geom:
-                    vb = lay.geometry.vertex_buffer
-                    per_col["local_x"].append(vb[0::2].astype(np.int32))
-                    per_col["local_y"].append(vb[1::2].astype(np.int32))
+                    vbs.append(lay.geometry.vertex_buffer)
                 for name in str_props:
                     pc = lay.properties[name]
-                    per_col[name].append(
-                        pac.take(
-                            pa.array(list(pc.dictionary), type=pa.string()),
-                            pa.array(pc.data.astype(np.int64)),
-                        )
-                    )
+                    codes[name].append(pc.data + len(dicts[name]))
+                    dicts[name] += pc.dictionary
                 for name in int_props:
-                    per_col[name].append(
-                        lay.properties[name].data.astype(np.int64)
-                    )
-            arrays = []
-            for c in col_names:
-                parts = per_col[c]
-                if c in str_props:
-                    arrays.append(pa.concat_arrays(parts))
-                else:
-                    arrays.append(pa.array(np.concatenate(parts)))
-            yield pa.RecordBatch.from_arrays(arrays, names=col_names)
+                    ints[name].append(lay.properties[name].data)
+            cols = {
+                c: pa.array(
+                    np.repeat(rb.column(c).to_numpy(zero_copy_only=False), counts)
+                    .astype(np.int32, copy=False)
+                )
+                for c in ("z", "x", "y")
+            }
+            cols["feature_id"] = pa.array(
+                np.concatenate(ids).astype(np.int64, copy=False)
+            )
+            if with_geom:
+                vb = np.concatenate(vbs).astype(np.int32, copy=False)
+                cols["local_x"] = pa.array(vb[0::2])
+                cols["local_y"] = pa.array(vb[1::2])
+            for name in str_props:
+                cols[name] = pac.take(
+                    pa.array(dicts[name], type=pa.string()),
+                    pa.array(np.concatenate(codes[name]).astype(np.int64, copy=False)),
+                )
+            for name in int_props:
+                cols[name] = pa.array(
+                    np.concatenate(ints[name]).astype(np.int64, copy=False)
+                )
+            yield pa.RecordBatch.from_arrays(
+                [cols[c] for c in col_names], names=col_names
+            )
 
     return payloads.mapInArrow(_decode, schema=schema)
 

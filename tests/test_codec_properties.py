@@ -16,11 +16,14 @@ from cov_tiles_spark.covt.rle import (
     encode_int_rle,
 )
 from cov_tiles_spark.covt.sfc import hilbert_d2xy, hilbert_xy2d, morton_decode, morton_encode
+from cov_tiles_spark.covt import rle, varint
 from cov_tiles_spark.covt.varint import (
+    decode_varint,
     decode_varints,
     decode_zigzag_varints,
     encode_varints,
     encode_zigzag_varints,
+    walk_varints,
 )
 
 _settings = settings(max_examples=60, deadline=None)
@@ -43,6 +46,133 @@ def test_zigzag_varint_roundtrip(vals):
     buf = np.frombuffer(encode_zigzag_varints(arr), dtype=np.uint8)
     out, _ = decode_zigzag_varints(buf, len(arr)) if len(arr) else (arr, 0)
     np.testing.assert_array_equal(out, arr)
+
+
+# ---- the dispatch boundary: streams of at most SMALL_STREAM values take
+# the scalar walk, longer ones the vectorized path; both must agree. Each
+# test forces both paths, at lengths on both sides of either module's
+# bound (64 values for varints, 256 for int RLE)
+
+
+def _spread_values(n: int, seed: int) -> np.ndarray:
+    """``n`` uint64 values whose varints take 1 to 10 bytes, with
+    2^64-1 among them."""
+    rng = np.random.default_rng(seed)
+    k = rng.integers(1, 11, n)  # byte length of each value's varint
+    lo = np.where(k == 1, 0, 1 << np.minimum(7 * (k - 1), 63).astype(np.uint64))
+    span = np.where(k == 10, np.uint64(2**63), (np.uint64(1) << (7 * k).astype(np.uint64)) - lo)
+    vals = lo + (rng.random(n) * span.astype(np.float64)).astype(np.uint64) % span
+    vals[rng.integers(0, n)] = 2**64 - 1
+    return vals.astype(np.uint64)
+
+
+def _embedded(stream: bytes, seed: int) -> tuple[np.ndarray, int]:
+    """``stream`` inside a larger buffer, after a prefix that holds
+    continuation bytes, and before a suffix of junk."""
+    rng = np.random.default_rng(seed)
+    pre = rng.integers(0, 256, 13).astype(np.uint8).tobytes()
+    post = rng.integers(0, 256, 9).astype(np.uint8).tobytes()
+    return np.frombuffer(pre + stream + post, dtype=np.uint8), len(pre)
+
+
+def _both_paths(decode, buf, n, offset, monkeypatch):
+    """(scalar result, vectorized result) of ``decode`` on one stream."""
+    with monkeypatch.context() as m:
+        m.setattr(varint, "SMALL_STREAM", 10**9)
+        scalar = decode(buf, n, offset)
+        m.setattr(varint, "SMALL_STREAM", 0)
+        vector = decode(buf, n, offset)
+    return scalar, vector
+
+
+@pytest.mark.parametrize("n", [1, 64, 65, 255, 256, 257, 1000])
+def test_scalar_and_vectorized_varints_agree(n, monkeypatch):
+    vals = _spread_values(n, seed=n)
+    enc = encode_varints(vals)
+    buf, start = _embedded(enc, seed=n)
+    (s_vals, s_end), (v_vals, v_end) = _both_paths(
+        decode_varints, buf, n, start, monkeypatch
+    )
+    assert s_vals.dtype == v_vals.dtype == np.uint64
+    np.testing.assert_array_equal(s_vals, vals)
+    np.testing.assert_array_equal(v_vals, vals)
+    assert s_end == v_end == start + len(enc)
+    walked, w_end = walk_varints(memoryview(buf), n, start)
+    assert walked == vals.tolist() and w_end == s_end
+    d_vals, d_end = decode_varints(buf, n, start)  # the default dispatch
+    np.testing.assert_array_equal(d_vals, vals)
+    assert d_end == s_end
+
+
+@pytest.mark.parametrize("n", [1, 64, 65, 255, 256, 257, 1000])
+def test_scalar_and_vectorized_zigzag_varints_agree(n, monkeypatch):
+    signed = _spread_values(n, seed=100 + n).view(np.int64)
+    enc = encode_zigzag_varints(signed)
+    buf, start = _embedded(enc, seed=100 + n)
+    (s_vals, s_end), (v_vals, v_end) = _both_paths(
+        decode_zigzag_varints, buf, n, start, monkeypatch
+    )
+    assert s_vals.dtype == v_vals.dtype == np.int64
+    np.testing.assert_array_equal(s_vals, signed)
+    np.testing.assert_array_equal(v_vals, signed)
+    assert s_end == v_end == start + len(enc)
+
+
+@pytest.mark.parametrize("n", [1, 65, 256, 1000])
+@pytest.mark.parametrize("decode", [decode_varints, decode_zigzag_varints])
+def test_overlong_and_truncated_varints_raise_in_both_paths(n, decode, monkeypatch):
+    enc = encode_varints(_spread_values(n, seed=200 + n))
+    # an 11-byte varint (ten continuation bytes) as the stream's last value
+    overlong = encode_varints(np.zeros(n - 1, np.uint64)) + bytes([0xFF] * 10 + [1])
+    for stream in (overlong, bytes([0x80] * 12 + [1]) * n):
+        buf, start = _embedded(stream, seed=n)
+        with monkeypatch.context() as m:
+            for small in (10**9, 0):
+                m.setattr(varint, "SMALL_STREAM", small)
+                with pytest.raises(ValueError, match="longer than 10 bytes"):
+                    decode(buf, n, start)
+    truncated = np.frombuffer(enc[:-1], dtype=np.uint8)
+    with monkeypatch.context() as m:
+        for small in (10**9, 0):
+            m.setattr(varint, "SMALL_STREAM", small)
+            with pytest.raises(ValueError, match="buffer exhausted"):
+                decode(truncated, n, 0)
+
+
+def test_single_varint_rejects_an_eleventh_byte():
+    assert decode_varint(encode_varints(np.array([2**64 - 1], np.uint64))) == (
+        2**64 - 1,
+        10,
+    )
+    with pytest.raises(ValueError, match="longer than 10 bytes"):
+        decode_varint(bytes([0xFF] * 10 + [1]))
+    with pytest.raises(ValueError, match="buffer exhausted"):
+        decode_varint(bytes([0x80, 0x80]))
+
+
+@pytest.mark.parametrize("n", [255, 256, 257])
+@pytest.mark.parametrize("signed", [False, True])
+def test_int_rle_small_and_vectorized_paths_agree(n, signed, monkeypatch):
+    vals = _spread_values(n, seed=300 + n)
+    vals[: n // 3] = np.arange(n // 3, dtype=np.uint64)  # a run block too
+    arr = vals.view(np.int64)
+    enc = encode_int_rle(arr, signed=signed)
+    buf, start = _embedded(enc, seed=n)
+    outs = []
+    with monkeypatch.context() as m:
+        for small in (10**9, 0):
+            m.setattr(rle, "SMALL_STREAM", small)
+            outs.append(decode_int_rle(buf, n, start, signed=signed))
+    for out, end in outs:
+        np.testing.assert_array_equal(out.view(np.int64), arr)
+        assert end == start + len(enc)
+    # an 11-byte literal is rejected by both paths as well
+    bad = np.frombuffer(bytes([256 - 1] + [0xFF] * 10 + [1]), dtype=np.uint8)
+    with monkeypatch.context() as m:
+        for small in (10**9, 0):
+            m.setattr(rle, "SMALL_STREAM", small)
+            with pytest.raises(ValueError, match="longer than 10 bytes"):
+                decode_int_rle(bad, 1, 0)
 
 
 @_settings

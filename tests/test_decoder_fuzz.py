@@ -95,3 +95,127 @@ def test_genb_bit_flips_fail_cleanly():
             decode_tile_genb(payload[: int(cut)], tilejson)
         except Exception:
             pass
+
+
+# ---- self-contained corpus: the same two checks on tiles built here, so
+# the decoders are fuzzed even where the reference snapshot is absent
+
+
+def _rows_tile(wire_format):
+    from cov_tiles_spark.pipeline.materialize import _encode_tile_rows
+
+    rng = np.random.default_rng(11)
+    n = 24
+    return _encode_tile_rows(
+        4, 3, 5,
+        ids=rng.permutation(10**6)[:n].astype(np.int64),
+        local_x=rng.integers(0, 4096, n), local_y=rng.integers(0, 4096, n),
+        caption=np.array([f"caption {i % 5}" for i in range(n)], dtype=object),
+        fmt=np.array([("jpeg", "png")[i % 2] for i in range(n)], dtype=object),
+        w=rng.integers(1, 5000, n), h=rng.integers(1, 5000, n),
+        phash=rng.integers(-(2**62), 2**62, n),
+        with_mvt_baseline=False, wire_format=wire_format,
+    )["payload"]
+
+
+def _geometry_tile(kind, shared):
+    """One ``encode_tile`` layer of 12 linestrings or 12 polygons with a
+    hole. ``shared`` draws every vertex from a 9-point pool, so ICE wins
+    the encoder's size contest; otherwise every vertex is distinct and
+    the plain vertex buffer wins."""
+    from cov_tiles_spark.covt.decoder import GeometryColumn
+    from cov_tiles_spark.covt.encoder import LayerInput, PropertyInput, encode_tile
+    from cov_tiles_spark.covt.metadata import ColumnDataType, GeometryType
+
+    rng = np.random.default_rng(12)
+    n = 12
+    pool = rng.integers(0, 3000, (9, 2))
+    part_offsets, ring_offsets, verts = [], [], []
+    for _ in range(n):
+        if kind == "line":
+            k = int(rng.integers(2, 7))
+            pts = pool[rng.integers(0, 9, k)] if shared else rng.integers(0, 4096, (k, 2))
+            part_offsets.append(k)
+            verts.append(pts)
+        else:  # polygon: outer square + inner square hole, open rings
+            if shared:
+                (x, y), s = pool[rng.integers(0, 3)].tolist(), 400
+            else:
+                x, y, s = int(rng.integers(0, 3000)), int(rng.integers(0, 3000)), int(rng.integers(200, 900))
+            outer = [(x, y), (x + s, y), (x + s, y + s), (x, y + s)]
+            q = s // 4
+            hole = [(x + q, y + q), (x + q, y + 3 * q), (x + 3 * q, y + 3 * q), (x + 3 * q, y + q)]
+            part_offsets.append(2)
+            ring_offsets += [4, 4]
+            verts += [np.array(outer), np.array(hole)]
+    gtype = GeometryType.LINESTRING if kind == "line" else GeometryType.POLYGON
+    geom = GeometryColumn(
+        geometry_types=np.full(n, gtype, np.uint8),
+        vertex_buffer=np.concatenate(verts).astype(np.int32).ravel(),
+        part_offsets=np.asarray(part_offsets, np.int64),
+        ring_offsets=np.asarray(ring_offsets, np.int64) if ring_offsets else None,
+    )
+    layer = LayerInput(
+        name=kind, geometry=geom, ids=np.arange(n, dtype=np.int64),
+        properties={"rank": PropertyInput(ColumnDataType.INT_64, rng.integers(0, 99, n))},
+    )
+    return encode_tile([layer])
+
+
+def _self_contained_tiles():
+    from cov_tiles_spark.covt.genb import decode_tile_genb
+    from cov_tiles_spark.covt.metadata import ColumnEncoding
+
+    ice = ColumnEncoding.INDEXED_COORDINATE_ENCODING
+    cases = [
+        ("points-gena", _rows_tile("gena"), decode_covt, None),
+        ("points-genb", _rows_tile("genb"), decode_tile_genb, None),
+    ]
+    for kind in ("line", "polygon"):
+        for shared in (False, True):
+            cases.append(
+                (f"{kind}-{'ice' if shared else 'plain'}", _geometry_tile(kind, shared),
+                 decode_covt, ice if shared else ColumnEncoding.PLAIN)
+            )
+    return cases
+
+
+_SELF_CONTAINED = _self_contained_tiles()
+
+
+def _n_features(layers) -> int:
+    return sum(lay.metadata.num_features for lay in layers.values())
+
+
+@pytest.mark.parametrize(
+    "data,decode,geom_encoding",
+    [c[1:] for c in _SELF_CONTAINED], ids=[c[0] for c in _SELF_CONTAINED],
+)
+def test_self_contained_truncation_never_silently_succeeds(data, decode, geom_encoding):
+    full = decode(data)
+    n_full = _n_features(full)
+    assert n_full in (12, 24)
+    if geom_encoding is not None:  # the tile exercises the intended path
+        (lay,) = full.values()
+        (geom,) = [c for c in lay.metadata.columns if c.name == "geometry"]
+        assert geom.encoding == geom_encoding
+    for cut in range(1, len(data)):
+        try:
+            layers = decode(data[:cut])
+        except Exception:
+            continue  # clean rejection: fine
+        assert _n_features(layers) < n_full, f"silent success at cut={cut}"
+
+
+@pytest.mark.parametrize(
+    "data,decode", [c[1:3] for c in _SELF_CONTAINED], ids=[c[0] for c in _SELF_CONTAINED]
+)
+def test_self_contained_bit_flips_fail_cleanly_or_decode(data, decode):
+    rng = np.random.default_rng(2)
+    for _ in range(25):
+        mutated = bytearray(data)
+        mutated[int(rng.integers(0, len(data)))] ^= 1 << int(rng.integers(0, 8))
+        try:
+            decode(bytes(mutated))
+        except Exception:
+            pass  # any ordinary exception is a clean rejection

@@ -262,3 +262,72 @@ def test_precap_reduces_exchange_rows_on_hot_tile(spark):
         np.concatenate([rb.column("_sk").to_numpy() for rb in batches])
     )[:100]
     assert np.isin(true_top, all_sk).all()
+
+
+def _decode_oracle(payload: bytes, wire_format: str, z: int, x: int, y: int, cols):
+    """Feature rows of ONE tile, decoded on its own by the format's
+    decoder: the per-tile reference for the batch assembly."""
+    from cov_tiles_spark.covt.decoder import decode_covt
+    from cov_tiles_spark.covt.genb import decode_tile_genb
+
+    lay = (decode_covt if wire_format == "gena" else decode_tile_genb)(payload)["images"]
+    p = lay.properties
+    vb = lay.geometry.vertex_buffer
+    rows = []
+    for i in range(lay.metadata.num_features):
+        full = {
+            "z": z, "x": x, "y": y, "feature_id": int(lay.ids[i]),
+            "local_x": int(vb[2 * i]), "local_y": int(vb[2 * i + 1]),
+            "caption": p["caption"].dictionary[int(p["caption"].data[i])],
+            "fmt": p["fmt"].dictionary[int(p["fmt"].data[i])],
+            "w": int(p["w"].data[i]), "h": int(p["h"].data[i]),
+            "phash": int(p["phash"].data[i]),
+        }
+        rows.append(tuple(full[c] for c in cols))
+    return rows
+
+
+@pytest.mark.parametrize("wire_format", ["gena", "genb"])
+def test_decode_tiles_batch_assembly_matches_per_tile_decode(spark, wire_format):
+    """Tiles whose caption dictionaries are disjoint and a 1-feature tile
+    share ONE Arrow batch; every projection must give, row for row, what
+    decoding each tile on its own gives."""
+    import pandas as pd
+
+    from cov_tiles_spark.pipeline.materialize import _encode_tile_rows
+
+    rng = np.random.default_rng(21)
+    tiles = []
+    for k, (n, prefix) in enumerate([(9, "alpha"), (1, "solo"), (14, "beta"), (5, "gamma")]):
+        row = _encode_tile_rows(
+            6, 10 + k, 20 + k,
+            ids=rng.permutation(10**6)[:n].astype(np.int64),
+            local_x=rng.integers(0, 4096, n), local_y=rng.integers(0, 4096, n),
+            caption=np.array([f"{prefix} {i % 3}" for i in range(n)], dtype=object),
+            fmt=np.array([("jpeg", "png", "webp")[(i + k) % 3] for i in range(n)], dtype=object),
+            w=rng.integers(1, 5000, n), h=rng.integers(1, 5000, n),
+            phash=rng.integers(-(2**62), 2**62, n),
+            with_mvt_baseline=False, wire_format=wire_format,
+        )
+        tiles.append(row)
+    pdf = pd.DataFrame({c: [t[c] for t in tiles] for c in ("z", "x", "y", "payload")})
+    payloads = spark.createDataFrame(
+        pdf, "z int, x int, y int, payload binary"
+    ).coalesce(1)  # four rows, one partition: one Arrow batch
+    base = ["z", "x", "y", "feature_id"]
+    for columns, extra in [
+        (None, ["local_x", "local_y", "caption", "fmt", "w", "h", "phash"]),
+        (["geometry"], ["local_x", "local_y"]),
+        (["caption"], ["caption"]),
+        (["w", "h", "phash"], ["w", "h", "phash"]),
+    ]:
+        cols = base + extra
+        got = decode_tiles(payloads, wire_format=wire_format, columns=columns)
+        assert got.columns == cols
+        want = [
+            r
+            for t in tiles
+            for r in _decode_oracle(t["payload"], wire_format, t["z"], t["x"], t["y"], cols)
+        ]
+        assert len(want) == 29
+        assert [tuple(r) for r in got.collect()] == want, (wire_format, columns)
