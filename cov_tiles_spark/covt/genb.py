@@ -117,18 +117,14 @@ class StreamEncoding(IntEnum):
 class GColumnType(IntEnum):
     """`ColumnType.java` ordinals (low 3 bits of the column descriptor).
 
-    TAE (5) is OUR documented format extension — the reference lists
-    Topological Arc Encoding as a geometry-compression next step
-    (`README.md:210-221`) but defines no enum value for it; tiles using
-    it decode only with this library (the parity table reports gen-B
-    both with and without it for honest comparison)."""
+    Exactly the reference's five types; any other descriptor value fails
+    decode with ``ValueError``."""
 
     PLAIN = 0
     DICTIONARY = 1
     LOCALIZED_DICTIONARY = 2
     ICE = 3
     ICE_MORTON_CODE = 4
-    TAE = 5
 
 
 class GDataType(IntEnum):
@@ -213,115 +209,12 @@ def _best_vertex_buffer(vb: np.ndarray) -> tuple[StreamEncoding, bytes]:
     return StreamEncoding.VARINT_DELTA_ZIG_ZAG, var
 
 
-_TAE_LINE_KINDS = frozenset((1, 4))  # LINESTRING, MULTI_LINESTRING
-_TAE_POLY_KINDS = frozenset((2, 5))  # POLYGON, MULTI_POLYGON
-
-
-def _tae_kind(types: np.ndarray) -> str | None:
-    kinds = set(np.asarray(types, np.int64).tolist())
-    if kinds and kinds <= _TAE_POLY_KINDS:
-        return "poly"
-    if kinds and kinds <= _TAE_LINE_KINDS:
-        return "line"
-    return None
-
-
-def _encode_geometry_tae(
-    geom: GeometryColumn,
-) -> tuple[GColumnType, list[tuple[StreamType, StreamEncoding, int, bytes]]] | None:
-    """TAE geometry column (our extension, GColumnType.TAE): shared
-    ring/part boundaries stored once as deduplicated arcs.
-
-    Stream layout (all stream types in-enum):
-    - GEOMETRY_TYPES / GEOMETRY_OFFSETS: as usual;
-    - PART_OFFSETS: rings-per-polygon (poly kind, unchanged) or
-      arc-refs-per-part (line kind);
-    - RING_OFFSETS (poly kind only): arc-refs-per-ring;
-    - VERTEX_OFFSETS: per chain, [rotation, signed arc refs...]
-      flattened, zigzag varints (sign = reversed traversal; rotation
-      restores the junction-led ring rotation so decode is EXACT);
-    - LENGTH: vertices per arc;
-    - VERTEX_BUFFER: the arc store, continuous interleaved delta.
-    Returns None when the layer has no TAE-applicable kind.
-    """
-    from cov_tiles_spark.covt.decoder import vertex_segment_lengths
-    from cov_tiles_spark.covt.tae import decompose_arcs
-
-    types = np.asarray(geom.geometry_types, dtype=np.uint8)
-    kind = _tae_kind(types)
-    if kind is None:
-        return None
-    seg_lengths = vertex_segment_lengths(
-        types, geom.geometry_offsets, geom.part_offsets, geom.ring_offsets
-    )
-    vb = np.asarray(geom.vertex_buffer, dtype=np.int64).reshape(-1, 2)
-    chains, pos = [], 0
-    for n in seg_lengths.tolist():
-        chains.append(vb[pos : pos + n])
-        pos += n
-    if any(len(c) < 2 for c in chains):
-        # degenerate 0/1-vertex chains produce no edges, so the arc walk
-        # would silently drop them — not TAE-applicable
-        return None
-    arcs, refs, rots = decompose_arcs(chains, closed=(kind == "poly"))
-
-    streams: list[tuple[StreamType, StreamEncoding, int, bytes]] = [
-        (StreamType.GEOMETRY_TYPES, StreamEncoding.BYTE_RLE, len(types),
-         encode_byte_rle(types)),
-    ]
-    if geom.geometry_offsets is not None and len(geom.geometry_offsets):
-        enc, data = _best_offsets(np.asarray(geom.geometry_offsets, np.int64))
-        streams.append(
-            (StreamType.GEOMETRY_OFFSETS, enc, len(geom.geometry_offsets), data)
-        )
-    refs_per_chain = np.array([len(r) for r in refs], np.int64)
-    if kind == "poly":
-        po = np.asarray(geom.part_offsets, np.int64)
-        enc, data = _best_offsets(po)
-        streams.append((StreamType.PART_OFFSETS, enc, len(po), data))
-        enc, data = _best_offsets(refs_per_chain)
-        streams.append(
-            (StreamType.RING_OFFSETS, enc, len(refs_per_chain), data)
-        )
-    else:
-        enc, data = _best_offsets(refs_per_chain)
-        streams.append(
-            (StreamType.PART_OFFSETS, enc, len(refs_per_chain), data)
-        )
-    ref_stream = np.array(
-        [v for ring, rot in zip(refs, rots) for v in ([rot] + ring)],
-        np.int64,
-    )
-    streams.append(
-        (StreamType.VERTEX_OFFSETS, StreamEncoding.VARINT_ZIG_ZAG,
-         len(ref_stream), encode_varints(zigzag_encode(ref_stream)))
-    )
-    arc_lengths = np.array([len(a) for a in arcs], np.int64)
-    enc, data = _best_offsets(arc_lengths)
-    streams.append((StreamType.LENGTH, enc, len(arc_lengths), data))
-    arc_store = (
-        np.concatenate([a.reshape(-1) for a in arcs])
-        if arcs
-        else np.empty(0, np.int64)
-    )
-    enc, data = _best_vertex_buffer(arc_store)
-    streams.append(
-        (StreamType.VERTEX_BUFFER, enc, len(arc_store) // 2, data)
-    )
-    # StreamType-ordinal order like every other column (TreeMap
-    # semantics) — LENGTH(2) leads
-    streams.sort(key=lambda s: int(s[0]))
-    return GColumnType.TAE, streams
-
-
 def _encode_geometry_best(
     geom: GeometryColumn,
     extent: int,
-    allow_tae: bool = False,
 ) -> tuple[GColumnType, list[tuple[StreamType, StreamEncoding, int, bytes]]]:
-    """Per-layer best-of {plain, ICE, ICE-morton, TAE} by encoded size
-    (`CovtConverter.java:122-136` keeps the smaller of unordered vs ICE;
-    TAE is our extension and competes in the same argmin)."""
+    """Per-layer best-of {plain, ICE, ICE-morton} by encoded size
+    (`CovtConverter.java:122-136` keeps the smaller of unordered vs ICE)."""
     candidates = ["plain"]
     vb = np.asarray(geom.vertex_buffer, dtype=np.int64)
     half = extent // 2
@@ -339,12 +232,6 @@ def _encode_geometry_best(
         size = sum(len(d) for _, _, _, d in streams)
         if best is None or size < best[0]:
             best = (size, ctype, streams)
-    if allow_tae:
-        tae = _encode_geometry_tae(geom)
-        if tae is not None:
-            size = sum(len(d) for _, _, _, d in tae[1])
-            if size < best[0]:
-                best = (size, tae[0], tae[1])
     return best[1], best[2]
 
 
@@ -441,19 +328,14 @@ def encode_tile_genb(
     layers: list[LayerInput],
     optimize_metadata: bool = True,
     geometry_encoding: str = "plain",
-    allow_tae: bool = False,
 ) -> tuple[bytes, dict]:
     """Encode a gen-B tile; returns (payload, TileJSON sidecar dict).
 
     ``geometry_encoding`` is "plain", "ice", "ice_morton" or "best" (the
     smallest of those three). Within any of them, every topology, vertex
     offset and vertex stream picks FAST_PFOR or its RLE/varint
-    alternative by encoded size, so the choice follows the data.
-
-    ``allow_tae=True`` lets ``geometry_encoding="best"`` also consider
-    the TAE arc column (GColumnType.TAE — OUR extension beyond the
-    reference's ColumnType enum; such tiles decode only with this
-    library). Default off so plain gen-B stays in-format.
+    alternative by encoded size, so the choice follows the data. The
+    geometry column is always one of the reference's five column types.
 
     The TileJSON dict carries the externalized layer/column names required
     to decode optimized-metadata tiles (`CovtConverter.java:183-188`,
@@ -512,9 +394,7 @@ def encode_tile_genb(
             first = False
 
         if geometry_encoding == "best":
-            ctype, gstreams = _encode_geometry_best(
-                layer.geometry, layer.extent, allow_tae=allow_tae
-            )
+            ctype, gstreams = _encode_geometry_best(layer.geometry, layer.extent)
         else:
             ctype, gstreams = _encode_geometry(
                 layer.geometry, layer.extent, geometry_encoding
@@ -886,89 +766,11 @@ def _skip_column_data(
 
 
 
-def _decode_geometry_tae(
-    b: np.ndarray, pos: int,
-    streams: list[tuple[StreamType, StreamEncoding, int, int]],
-) -> tuple[GeometryColumn, int]:
-    """Decode a TAE geometry column (our extension; layout documented at
-    :func:`_encode_geometry_tae`) back to the standard SoA — including
-    undoing the per-ring junction rotation, so the result is
-    vertex-for-vertex identical to what was encoded."""
-    from cov_tiles_spark.covt.tae import assemble_vertex_buffer
-    from cov_tiles_spark.covt.varint import zigzag_decode
-
-    types = geometry_offsets = part_stream = ring_stream = None
-    ref_vals = arc_lengths = arc_store = None
-    for stype, senc, nv, bl in streams:
-        if stype == StreamType.GEOMETRY_TYPES:
-            raw, pos = decode_byte_rle(b, nv, pos)
-            types = raw.astype(np.uint8)
-        elif stype in (StreamType.GEOMETRY_OFFSETS, StreamType.PART_OFFSETS,
-                       StreamType.RING_OFFSETS, StreamType.LENGTH):
-            vals, pos = _decode_stream_ints(b, pos, senc, nv, bl)
-            arr = vals.astype(np.int64)
-            if stype == StreamType.GEOMETRY_OFFSETS:
-                geometry_offsets = arr
-            elif stype == StreamType.PART_OFFSETS:
-                part_stream = arr
-            elif stype == StreamType.RING_OFFSETS:
-                ring_stream = arr
-            else:
-                arc_lengths = arr
-        elif stype == StreamType.VERTEX_OFFSETS:
-            if senc != StreamEncoding.VARINT_ZIG_ZAG:
-                raise ValueError(f"unsupported TAE ref encoding {senc}")
-            ref_vals, pos = decode_zigzag_varints(b, nv, pos)
-        elif stype == StreamType.VERTEX_BUFFER:
-            if senc == StreamEncoding.VARINT_DELTA_ZIG_ZAG:
-                deltas, pos = decode_zigzag_varints(b, nv * 2, pos)
-            elif senc == StreamEncoding.FAST_PFOR_DELTA_ZIG_ZAG:
-                zz = decode_pfor(b, nv * 2, pos, zigzag=False, delta=False)[0]
-                deltas = zigzag_decode(zz.astype(np.uint64))
-                pos += bl
-            else:
-                raise ValueError(f"unsupported TAE arc-store encoding {senc}")
-            arc_store = _undo_interleaved_delta(deltas).astype(np.int64)
-        else:
-            raise ValueError(f"unexpected TAE stream {stype}")
-
-    poly = _tae_kind(types) == "poly"
-    refs_per_chain = (
-        ring_stream if poly else part_stream
-    )
-    if refs_per_chain is None:
-        refs_per_chain = np.zeros(0, np.int64)
-    if arc_lengths is None:
-        arc_lengths = np.zeros(0, np.int64)
-    # the flattened [rotation, refs...] stream splits by (1 + k):
-    # rotation sits at each chain's head slot
-    head = np.cumsum(refs_per_chain + 1) - (refs_per_chain + 1)
-    rots = ref_vals[head] if len(head) else np.zeros(0, np.int64)
-    refs_flat = np.delete(ref_vals, head) if len(head) else ref_vals
-    verts, chain_lengths = assemble_vertex_buffer(
-        arc_store if arc_store is not None else np.zeros(0, np.int64),
-        arc_lengths, refs_flat, refs_per_chain, rots, closed=poly,
-    )
-    vertex_buffer = verts.reshape(-1).astype(np.int32)
-    return (
-        GeometryColumn(
-            geometry_types=types,
-            vertex_buffer=vertex_buffer,
-            geometry_offsets=geometry_offsets,
-            part_offsets=part_stream if poly else chain_lengths,
-            ring_offsets=chain_lengths if poly else None,
-        ),
-        pos,
-    )
-
-
 def _decode_geometry(
     b: np.ndarray, pos: int, ctype: GColumnType,
     streams: list[tuple[StreamType, StreamEncoding, int, int]], extent: int,
 ) -> tuple[GeometryColumn, int]:
     """`CovtParser.java:392-511` — streams arrive in StreamType order."""
-    if ctype == GColumnType.TAE:
-        return _decode_geometry_tae(b, pos, streams)
     types = None
     geometry_offsets = part_offsets = ring_offsets = vertex_offsets = None
     vertex_buffer = None

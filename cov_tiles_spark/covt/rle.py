@@ -259,33 +259,49 @@ def decode_byte_rle(
 ) -> tuple[np.ndarray, int]:
     """Decode ``n_bytes`` bytes; returns (uint8 array, new offset).
     Block headers are read through a memoryview (scalar numpy indexing
-    costs ~3x more per read)."""
+    costs ~3x more per read). A block that passes ``n_bytes`` or the
+    buffer raises ``ValueError``."""
     out = np.empty(n_bytes, dtype=np.uint8)
     hdr = memoryview(buf)
+    end = len(hdr)
     count = 0
-    while count < n_bytes:
-        header = hdr[offset]
-        offset += 1
-        if header <= 0x7F:
-            run = header + 3
-            out[count : count + run] = hdr[offset]
+    try:
+        while count < n_bytes:
+            header = hdr[offset]
             offset += 1
-            count += run
-        else:
-            lit = 256 - header
-            out[count : count + lit] = buf[offset : offset + lit]
-            offset += lit
-            count += lit
+            if header <= 0x7F:
+                run = header + 3
+                if count + run > n_bytes:
+                    raise ValueError(_overrun(n_bytes))
+                out[count : count + run] = hdr[offset]
+                offset += 1
+                count += run
+            else:
+                lit = 256 - header
+                if count + lit > n_bytes or offset + lit > end:
+                    raise ValueError(_overrun(n_bytes))
+                out[count : count + lit] = buf[offset : offset + lit]
+                offset += lit
+                count += lit
+    except IndexError:  # a header or run byte past the buffer
+        raise ValueError(_overrun(n_bytes)) from None
     return out, offset
+
+
+def _overrun(n_bytes: int) -> str:
+    return f"byte-RLE block passes the end of {n_bytes} bytes or of the buffer"
 
 
 def skip_byte_rle(buf, n_bytes: int, offset: int = 0) -> int:
     """Advance past an encoded byte-RLE stream of ``n_bytes`` logical
     bytes of a bytes-like ``buf`` without materializing it (header walk
     only — used by the selective gen-B decode to jump implicit present
-    streams)."""
+    streams). Raises ``ValueError`` where :func:`decode_byte_rle` does."""
+    end = len(buf)
     count = 0
     while count < n_bytes:
+        if offset >= end:
+            raise ValueError(_overrun(n_bytes))
         header = buf[offset]
         offset += 1
         if header <= 0x7F:
@@ -295,6 +311,8 @@ def skip_byte_rle(buf, n_bytes: int, offset: int = 0) -> int:
             lit = 256 - header
             offset += lit
             count += lit
+        if count > n_bytes or offset > end:
+            raise ValueError(_overrun(n_bytes))
     return offset
 
 

@@ -48,10 +48,29 @@ class IcebergLite:
     # ---------------- manifest ----------------
 
     def manifests(self) -> DataFrame:
-        try:
-            return self.spark.read.parquet(self._manifest_dir)
-        except Exception:
+        """Every manifest row. Empty only while ``_manifests/`` holds no
+        data file: before the first commit, or after a first manifest
+        write that failed and left only ``_temporary/`` behind. Any read
+        error propagates, so a ``skip-done`` resume never mistakes it for
+        "nothing committed"."""
+        if not self._has_manifest_files():
             return self.spark.createDataFrame([], MANIFEST_SCHEMA)
+        return self.spark.read.parquet(self._manifest_dir)
+
+    def _has_manifest_files(self) -> bool:
+        """Whether ``_manifests/`` lists a visible data file (Spark's own
+        rule: names starting with ``_`` or ``.`` are hidden). Goes through
+        the Hadoop ``FileSystem`` API, so ``file://``, ``hdfs://`` and
+        ``s3a://`` roots resolve the same way as local paths."""
+        sc = self.spark.sparkContext
+        path = sc._jvm.org.apache.hadoop.fs.Path(self._manifest_dir)
+        fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
+        if not fs.exists(path):
+            return False
+        return any(
+            not s.getPath().getName().startswith(("_", "."))
+            for s in fs.listStatus(path)
+        )
 
     def committed_keys_df(self, table: str, stage: str) -> DataFrame:
         """Distinct committed partition keys as a DataFrame (the scale

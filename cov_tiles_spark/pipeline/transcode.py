@@ -199,7 +199,7 @@ def mvt_to_covt(mvt_bytes: bytes) -> tuple[bytes, int, int]:
 
 
 def mvt_to_genb(
-    mvt_bytes: bytes, reorder: bool = False, allow_tae: bool = False,
+    mvt_bytes: bytes, reorder: bool = False
 ) -> tuple[bytes, dict, int, int]:
     """One tile: MVT bytes -> (gen-B COVT bytes, TileJSON dict, n_layers,
     n_features). ``name:*`` groups use the format-reserved
@@ -213,12 +213,7 @@ def mvt_to_genb(
     (README.md:210-221 levers + the converter's id sort) — never worse
     than source order, ~3x encode cost, so it is the offline/parity
     option, not the hot default. Reordered tiles verify as feature
-    multisets (``_features_match(any_order=True)``).
-
-    ``allow_tae=True`` additionally lets the geometry argmin pick the
-    TAE arc column (our documented extension beyond the reference's
-    ColumnType enum — decode requires this library); TAE decode is
-    vertex-for-vertex exact, so strict verification still applies."""
+    multisets (``_features_match(any_order=True)``)."""
     from cov_tiles_spark.covt.genb import encode_tile_genb
 
     inputs, n_features = _layer_inputs(mvt_bytes)
@@ -228,8 +223,7 @@ def mvt_to_genb(
         def _sz(lay) -> int:
             return len(
                 encode_tile_genb(
-                    [lay], optimize_metadata=True, geometry_encoding="best",
-                    allow_tae=allow_tae,
+                    [lay], optimize_metadata=True, geometry_encoding="best"
                 )[0]
             )
 
@@ -241,8 +235,7 @@ def mvt_to_genb(
             for lay in inputs
         ]
     payload, tilejson = encode_tile_genb(
-        inputs, optimize_metadata=True, geometry_encoding="best",
-        allow_tae=allow_tae,
+        inputs, optimize_metadata=True, geometry_encoding="best"
     )
     return payload, tilejson, len(inputs), n_features
 
@@ -394,7 +387,7 @@ def _features_match(
 
 def _transcode_batches(
     batches: Iterator[pd.DataFrame], reorder_genb: bool = False,
-    allow_tae_genb: bool = False, simplify_tolerance: int = 0,
+    simplify_tolerance: int = 0,
 ) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         rows = []
@@ -421,9 +414,7 @@ def _transcode_batches(
             covt, n_layers, n_features = mvt_to_covt(enc_src)
             mvt_layers = decode_mvt(enc_src)
             ok = verify_roundtrip(covt, mvt_layers)
-            genb, tilejson, _, _ = mvt_to_genb(
-                enc_src, reorder=reorder_genb, allow_tae=allow_tae_genb
-            )
+            genb, tilejson, _, _ = mvt_to_genb(enc_src, reorder=reorder_genb)
             genb_ok = verify_genb_roundtrip(
                 genb, tilejson, mvt_layers, any_order=reorder_genb
             )
@@ -450,7 +441,7 @@ def _transcode_batches(
 
 def transcode_mvt_directory(
     spark: SparkSession, glob_path: str, reorder_genb: bool = False,
-    allow_tae_genb: bool = False, simplify_tolerance: int = 0,
+    simplify_tolerance: int = 0,
 ) -> DataFrame:
     """Transcode every .mvt/.pbf under ``glob_path`` to COVT, verified.
 
@@ -474,7 +465,7 @@ def transcode_mvt_directory(
 
     def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield from _transcode_batches(
-            batches, reorder_genb=reorder_genb, allow_tae_genb=allow_tae_genb,
+            batches, reorder_genb=reorder_genb,
             simplify_tolerance=simplify_tolerance,
         )
 

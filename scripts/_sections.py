@@ -1,8 +1,21 @@
-"""Shared BENCH/BASELINE.md section writer for the report scripts."""
+"""Shared BENCH/BASELINE.md section writer and reference-snapshot check
+for the report scripts."""
 
 from __future__ import annotations
 
 import os
+import sys
+
+# the reference implementation's checkout: golden MVT/COVT tiles
+REFERENCE_DATA = "/root/reference/parser/js/data"
+
+
+def require_dir(path: str) -> None:
+    """Exit with code 2 and one line on stderr when ``path`` is not a
+    directory, before any Spark session or decode starts."""
+    if not os.path.isdir(path):
+        print(f"missing directory: {path}", file=sys.stderr)
+        sys.exit(2)
 
 
 def replace_section(path: str, header: str, body: str) -> None:

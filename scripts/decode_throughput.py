@@ -21,7 +21,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from _sections import replace_section as _replace_section  # noqa: E402
+from _sections import (  # noqa: E402
+    REFERENCE_DATA, replace_section as _replace_section, require_dir,
+)
 
 from cov_tiles_spark.covt.decoder import decode_covt
 from cov_tiles_spark.covt.mvt import decode_mvt
@@ -69,6 +71,7 @@ def main() -> None:
     from cov_tiles_spark.covt.genb import decode_tile_genb
     from cov_tiles_spark.pipeline.transcode import mvt_to_genb
 
+    require_dir(REFERENCE_DATA)
     min_sec = float(sys.argv[1]) if len(sys.argv) > 1 else 3.0
     lines = [
         _HEADER + "\n",
@@ -78,7 +81,7 @@ def main() -> None:
     ]
     worst = (None, float("inf"))
     for rel, zlabel, mvt_ext in TILES:
-        base = f"/root/reference/parser/js/data/{rel}"
+        base = f"{REFERENCE_DATA}/{rel}"
         covt = open(base + ".covt", "rb").read()
         mvt = open(base + mvt_ext, "rb").read()
         genb_payload, tilejson, _, _ = mvt_to_genb(mvt)

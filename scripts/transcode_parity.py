@@ -11,11 +11,14 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from _sections import replace_section as _replace_section  # noqa: E402
+from _sections import (  # noqa: E402
+    REFERENCE_DATA, replace_section as _replace_section, require_dir,
+)
 
 REF_REDUCTION = {2: 36, 3: 29, 4: 71, 5: 74, 6: 69, 7: 68, 8: 68}
 
 _HEADER = "## MVT→COVT transcode parity (reference's own OMT golden tiles)"
+OMT = os.path.join(REFERENCE_DATA, "omt")
 
 
 
@@ -26,27 +29,19 @@ def main() -> None:
     from cov_tiles_spark.session import get_spark
     from cov_tiles_spark.pipeline.transcode import transcode_mvt_directory
 
+    require_dir(OMT)
     # the reference repo commits its converter's actual output next to each
     # golden MVT — the honest tile-for-tile target (the README's published
     # per-zoom numbers were measured on a different, larger corpus)
     ref_actual: dict[int, float] = {}
-    for p in glob.glob("/root/reference/parser/js/data/omt/*.covt"):
+    for p in glob.glob(os.path.join(OMT, "*.covt")):
         z = int(os.path.basename(p).split("_")[0])
         mvt = p[:-5] + ".mvt"
         ref_actual[z] = (1 - os.path.getsize(p) / os.path.getsize(mvt)) * 100
 
     spark = get_spark(master="local[8]")
     spark.sparkContext.setLogLevel("ERROR")
-    rows = transcode_mvt_directory(
-        spark, "/root/reference/parser/js/data/omt", reorder_genb=True
-    ).collect()
-    tae_rows = {
-        r.z: r
-        for r in transcode_mvt_directory(
-            spark, "/root/reference/parser/js/data/omt", reorder_genb=True,
-            allow_tae_genb=True,
-        ).collect()
-    }
+    rows = transcode_mvt_directory(spark, OMT, reorder_genb=True).collect()
 
     lines = [
         _HEADER + "\n",
@@ -59,9 +54,9 @@ def main() -> None:
         "(gen-A fixture-conformant; gen-B current format with "
         "nibble-packed metadata + TileJSON names + FastPFOR-style "
         "streams, covt/genb.py).\n",
-        "| zoom | gen-A | gen-B | gen-B+TAE (ext) | ref actual | "
-        "ref published | gen-A verified | gen-B verified | TAE verified |",
-        "|---|---|---|---|---|---|---|---|---|",
+        "| zoom | gen-A | gen-B | ref actual | "
+        "ref published | gen-A verified | gen-B verified |",
+        "|---|---|---|---|---|---|---|",
     ]
     for r in sorted(rows, key=lambda r: r.z):
         red_a = (1 - r.covt_bytes / r.mvt_bytes) * 100
@@ -69,13 +64,10 @@ def main() -> None:
         actual = ref_actual.get(r.z)
         beat = " **(beats)**" if actual is not None and red_b > actual else ""
         actual_s = f"{actual:.1f}%" if actual is not None else "—"
-        t = tae_rows[r.z]
-        red_t = (1 - t.genb_bytes / t.mvt_bytes) * 100
         lines.append(
             f"| z{r.z} | {red_a:.1f}% | {red_b:.1f}%{beat} | "
-            f"{red_t:.1f}% | "
             f"{actual_s} | {REF_REDUCTION.get(r.z, '—')}% | "
-            f"{r.verified} | {r.genb_verified} | {t.genb_verified} |"
+            f"{r.verified} | {r.genb_verified} |"
         )
     lines.append(
         "\nGen-B drops the per-tile string names (TileJSON sidecar, "
@@ -100,17 +92,7 @@ def main() -> None:
         "transportation vertex_offsets, 22.5->9.1 KB, but the gen-B "
         "StreamEncoding enum has no LZ mode and the published numbers "
         "are for UNCOMPRESSED tiles); the reference's own committed "
-        ".covt per tile ('ref actual') is beaten at every zoom.\n\n"
-        "gen-B+TAE: the reference's remaining roadmap item (Topological "
-        "Arc Encoding, README.md:210-221) implemented end-to-end in "
-        "covt/tae.py + genb.py as a DOCUMENTED FORMAT EXTENSION "
-        "(GColumnType 5 — outside the reference's ColumnType enum, so "
-        "it is reported as its own column, not as in-format gen-B): "
-        "shared ring/part boundaries stored once as deduplicated arcs, "
-        "per-ring junction rotations stored so decode is vertex-for-"
-        "vertex EXACT (strict positional verification, not multiset). "
-        "It competes in the same per-layer size argmin and brings "
-        "z6-z8 within 0.2-1.5pp of the published numbers.\n"
+        ".covt per tile ('ref actual') is beaten at every zoom.\n"
     )
     _replace_section("BENCH/BASELINE.md", _HEADER, "\n".join(lines))
     print("\n".join(lines))

@@ -16,6 +16,7 @@ from cov_tiles_spark.covt.rle import (
     decode_int_rle,
     encode_byte_rle,
     encode_int_rle,
+    skip_byte_rle,
 )
 from cov_tiles_spark.covt.sfc import (
     hilbert_d2xy,
@@ -162,6 +163,28 @@ class TestByteRle:
             out, off = decode_byte_rle(buf, len(vals))
             np.testing.assert_array_equal(out, vals)
             assert off == len(buf)
+
+    @pytest.mark.parametrize(
+        "enc,n",
+        [
+            ([5, 7], 2),  # a run of 8 where 2 bytes are wanted
+            ([0xFE, 1], 2),  # a 2-byte literal with 1 byte left
+            ([0], 3),  # a run whose value byte is missing
+            ([], 1),  # no header at all
+        ],
+        ids=["run_past_end", "literal_past_buffer", "run_byte_missing", "empty"],
+    )
+    def test_decode_and_skip_reject_block_past_end(self, enc, n):
+        with pytest.raises(ValueError):
+            decode_byte_rle(np.array(enc, dtype=np.uint8), n)
+        with pytest.raises(ValueError):
+            skip_byte_rle(bytes(enc), n)
+
+    def test_skip_rejects_literal_past_wanted_bytes(self):
+        with pytest.raises(ValueError):
+            skip_byte_rle(bytes([0xFE, 1, 2]), 1)
+        with pytest.raises(ValueError):
+            decode_byte_rle(np.array([0xFE, 1, 2], dtype=np.uint8), 1)
 
 
 class TestBitset:

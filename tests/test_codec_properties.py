@@ -14,6 +14,7 @@ from cov_tiles_spark.covt.rle import (
     decode_int_rle,
     encode_byte_rle,
     encode_int_rle,
+    skip_byte_rle,
 )
 from cov_tiles_spark.covt.sfc import hilbert_d2xy, hilbert_xy2d, morton_decode, morton_encode
 from cov_tiles_spark.covt import rle, varint
@@ -198,6 +199,7 @@ def test_byte_rle_roundtrip(raw):
     out, off = decode_byte_rle(buf, len(arr))
     np.testing.assert_array_equal(out, arr)
     assert off == len(buf)
+    assert skip_byte_rle(buf.tobytes(), len(arr)) == off
 
 
 @_settings

@@ -30,7 +30,7 @@ from cov_tiles_spark.covt.genb import (
 from cov_tiles_spark.covt.metadata import ColumnDataType, GeometryType
 from cov_tiles_spark.covt.pfor import decode_pfor, encode_pfor
 from cov_tiles_spark.covt.rle import encode_int_rle
-from cov_tiles_spark.covt.varint import encode_varints, zigzag_encode
+from cov_tiles_spark.covt.varint import encode_varints, walk_varints, zigzag_encode
 
 
 def _mixed_layer(n_points: int = 300) -> LayerInput:
@@ -171,6 +171,22 @@ def test_genb_optimized_requires_tilejson():
         decode_tile_genb(payload, None)
 
 
+def test_genb_rejects_column_type_outside_reference_enum():
+    """Column type 5 is not one of the reference's five, so the geometry
+    descriptor that carries it fails decode."""
+    layer = LayerInput(name="roads", geometry=_line_layer().geometry)
+    payload, tj = encode_tile_genb([layer])
+    # after the layer header byte: layer id, extent, feature count,
+    # column count, then the geometry column's id and its descriptor
+    _, pos = walk_varints(payload, 5, 1)
+    assert payload[pos] == (genb.GDataType.GEOMETRY << 3) | genb.GColumnType.PLAIN
+    decode_tile_genb(payload, tj)
+    bad = bytearray(payload)
+    bad[pos] = (bad[pos] & ~0x7) | 5
+    with pytest.raises(ValueError):
+        decode_tile_genb(bytes(bad), tj)
+
+
 @pytest.mark.parametrize("genc", ["plain", "ice", "ice_morton"])
 def test_genb_roundtrip_lines(genc):
     layer = _line_layer()
@@ -200,21 +216,20 @@ def test_genb_multilayer_roundtrip():
 # FAST_PFOR stream choice was last changed; every mode picks FAST_PFOR
 # for some topology or vertex stream of these layers
 _PINNED_TILES = {
-    ("plain", False): "26af8889739ef700c25bf6b10a5ca3a28d2eccb505748117e7e203d91eecc8d6",
-    ("ice", False): "5595629290eb77f3a6c2dff065188f1cb5e572e3fffd522dfe9631ac2f9713ea",
-    ("ice_morton", False): "3d4be74d98dff5c9d054bf11ab2a130307667cb25a441bb69714103613e61d8a",
-    ("best", False): "f8c22c06acebf004498a7d341c9a2976dce3adb70a06f72a8545a335e5d188b0",
-    ("best", True): "f8c22c06acebf004498a7d341c9a2976dce3adb70a06f72a8545a335e5d188b0",
+    "plain": "26af8889739ef700c25bf6b10a5ca3a28d2eccb505748117e7e203d91eecc8d6",
+    "ice": "5595629290eb77f3a6c2dff065188f1cb5e572e3fffd522dfe9631ac2f9713ea",
+    "ice_morton": "3d4be74d98dff5c9d054bf11ab2a130307667cb25a441bb69714103613e61d8a",
+    "best": "f8c22c06acebf004498a7d341c9a2976dce3adb70a06f72a8545a335e5d188b0",
 }
 
 
-@pytest.mark.parametrize("genc,tae", sorted(_PINNED_TILES))
-def test_genb_fastpfor_tile_bytes_pinned(genc, tae, monkeypatch):
+@pytest.mark.parametrize("genc", sorted(_PINNED_TILES))
+def test_genb_fastpfor_tile_bytes_pinned(genc, monkeypatch):
     """Each geometry mode writes the pinned bytes, and its FAST_PFOR
     streams decode back through ``decode_pfor``."""
     layers = [_mixed_layer(300), _line_layer(), _poly_layer()]
-    payload, tj = encode_tile_genb(layers, geometry_encoding=genc, allow_tae=tae)
-    assert hashlib.sha256(payload).hexdigest() == _PINNED_TILES[(genc, tae)]
+    payload, tj = encode_tile_genb(layers, geometry_encoding=genc)
+    assert hashlib.sha256(payload).hexdigest() == _PINNED_TILES[genc]
     pfor_decodes = []
 
     def counting_decode_pfor(*args, **kwargs):

@@ -14,7 +14,7 @@ import glob
 
 import numpy as np
 
-from cov_tiles_spark.covt.genb import decode_tile_genb
+from cov_tiles_spark.covt.genb import decode_tile_genb, encode_tile_genb
 
 OMT = sorted(glob.glob("/root/reference/parser/js/data/omt/*.mvt"))
 
@@ -38,8 +38,20 @@ def _encode_omt_tiles() -> list[tuple[bytes, dict]]:
     return [mvt_to_genb(open(p, "rb").read())[:2] for p in OMT]
 
 
+def _three_layer_tile() -> tuple[bytes, dict]:
+    """The points, lines and polygons tile of ``test_genb.py``."""
+    from test_genb import _line_layer, _mixed_layer, _poly_layer
+
+    return encode_tile_genb([_mixed_layer(), _line_layer(), _poly_layer()])
+
+
 def test_layer_pruned_decode_matches_full_on_reference_tiles():
-    for payload, tj in _encode_omt_tiles():
+    """Runs on every reference OMT tile when the snapshot is present, and
+    always on the self-built three-layer tile, so an absent snapshot
+    cannot leave it checking nothing."""
+    tiles = _encode_omt_tiles() + [_three_layer_tile()]
+    checked = 0
+    for payload, tj in tiles:
         full = decode_tile_genb(payload, tj)
         for lname, flay in full.items():
             only = decode_tile_genb(payload, tj, layers={lname})
@@ -56,6 +68,8 @@ def test_layer_pruned_decode_matches_full_on_reference_tiles():
             assert set(lay.properties) == set(flay.properties)
             for pname, pc in flay.properties.items():
                 assert _props_equal(lay.properties[pname], pc), (lname, pname)
+            checked += 1
+    assert checked >= len(OMT) + 3
 
 
 def test_column_pruned_decode_matches_full_on_reference_tiles():

@@ -2,7 +2,11 @@
 
 from __future__ import annotations
 
+import glob
+import os
+
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from cov_tiles_spark.pipeline.lineage import IcebergLite, run_stage
@@ -43,6 +47,56 @@ def test_idempotent_resume(spark, lake):
     # partial resume: pretend bucket 3 was never committed
     done = lake.committed_keys_df("t2", "s1").collect()
     assert {r.partition_key for r in done} == {"0", "1", "2", "3"}
+
+
+def test_unreadable_manifest_raises_instead_of_reading_empty(spark, lake):
+    """A manifest that cannot be read must fail loudly: read as empty, a
+    ``skip-done`` resume would redo every committed partition."""
+    df = spark.range(8).select(
+        F.col("id"), (F.col("id") % 2).cast("string").alias("bucket")
+    )
+    lake.commit_partitions("t_bad", "s1", df, "bucket").collect()
+    parts = glob.glob(f"{lake.root}/_manifests/*.parquet")
+    assert parts
+    for p in parts + [f"{lake.root}/_manifests/part-x.parquet"]:
+        with open(p, "wb") as f:
+            f.write(b"not a parquet file")
+    with pytest.raises(Py4JJavaError):
+        lake.manifests().collect()
+    with pytest.raises(Py4JJavaError):
+        lake.commit_partitions("t_bad", "s1", df, "bucket").collect()
+
+
+def test_resume_skips_committed_keys_on_uri_root(spark, tmp_path):
+    """A ``file://`` root goes through the Hadoop FileSystem like
+    ``hdfs://``/``s3a://`` ones: the manifest must read back, so a
+    resume commits nothing twice."""
+    uri_lake = IcebergLite(spark, (tmp_path / "lake").as_uri())
+    assert uri_lake.root.startswith("file:")
+    df = spark.range(12).select(
+        F.col("id"), (F.col("id") % 3).cast("string").alias("bucket")
+    )
+    assert uri_lake.commit_partitions("t_uri", "s1", df, "bucket").count() == 3
+    assert {
+        r.partition_key for r in uri_lake.committed_keys_df("t_uri", "s1").collect()
+    } == {"0", "1", "2"}
+    assert uri_lake.commit_partitions("t_uri", "s1", df, "bucket").count() == 0
+    assert run_stage(uri_lake, "t_uri", "s1", lambda done: df, "bucket").count() == 0
+
+
+@pytest.mark.parametrize("leftover", [None, "_temporary/0"])
+def test_manifest_dir_without_data_files_reads_empty(spark, lake, leftover):
+    """A first manifest write that failed leaves ``_manifests/`` with no
+    data file (at most the committer's ``_temporary/``); that is still
+    "nothing committed", and the next ``skip-done`` commit must go on."""
+    mdir = f"{lake.root}/_manifests"
+    os.makedirs(mdir if leftover is None else f"{mdir}/{leftover}")
+    assert lake.manifests().count() == 0
+    df = spark.range(8).select(
+        F.col("id"), (F.col("id") % 2).cast("string").alias("bucket")
+    )
+    assert lake.commit_partitions("t_left", "s1", df, "bucket").count() == 2
+    assert lake.read_table("t_left").count() == 8
 
 
 def test_run_stage_prunes_done_work(spark, lake):

@@ -168,17 +168,70 @@ def test_covt_to_mvt_roundtrip_both_formats():
                     assert pa == pb, (p, n)
 
 
+def _assert_gena_lines_and_polygons_export_to_source():
+    """``test_genb.py``'s line layer and polygon-with-hole layer, given
+    properties, encoded as gen-A and exported to MVT: the MVT decode
+    equals the source ids, geometry and properties."""
+    from test_genb import _line_layer, _poly_layer
+
+    from cov_tiles_spark.covt.encoder import PropertyInput, encode_tile
+    from cov_tiles_spark.covt.metadata import ColumnDataType
+    from cov_tiles_spark.covt.mvt import decode_mvt
+    from cov_tiles_spark.pipeline.transcode import covt_to_mvt
+
+    roads, boundaries = _line_layer(), _poly_layer()
+    classes = np.array(["minor", "primary"] * 20, dtype=object)
+    lanes = np.arange(40, dtype=np.int64) % 4 + 1
+    roads.properties = {
+        "class": PropertyInput(ColumnDataType.STRING, classes),
+        "lanes": PropertyInput(ColumnDataType.INT_64, lanes),
+    }
+    boundaries.properties = {
+        "kind": PropertyInput(
+            ColumnDataType.STRING, np.array(["park", "lake"], dtype=object)
+        )
+    }
+    lines = np.asarray(roads.geometry.vertex_buffer).reshape(40, 20, 2)
+    want = {
+        "roads": [
+            (2, i, [[tuple(v) for v in lines[i].tolist()]],
+             {"class": classes[i], "lanes": int(lanes[i])})
+            for i in range(40)
+        ],
+        "boundaries": [
+            (3, None,
+             [[(0, 0), (100, 0), (100, 100), (0, 100), (0, 0)],
+              [(40, 40), (60, 40), (60, 60), (40, 60), (40, 40)]],
+             {"kind": "park"}),
+            (3, None,
+             [[(200, 200), (300, 200), (250, 300), (200, 200)],
+              [(400, 400), (500, 400), (450, 500), (400, 400)]],
+             {"kind": "lake"}),
+        ],
+    }
+    got = {
+        lay.name: [
+            (f.geom_type, f.id, f.geometry, f.properties) for f in lay.features
+        ]
+        for lay in decode_mvt(covt_to_mvt(encode_tile([roads, boundaries])))
+    }
+    assert got == want
+
+
 def test_covt_to_mvt_exports_reference_tiles():
     """Export the reference's own committed gen-A tiles back to MVT:
     geometry must match the paired golden MVT exactly; properties match
     up to the reference encoder's documented fixture artifacts
     (`name:xx` renamed `name_xx`, some columns dropped — see
-    tests/test_fixture_conformance.py)."""
+    tests/test_fixture_conformance.py). A self-built gen-A line and
+    polygon tile is exported first, so the test checks real bytes even
+    when the reference snapshot is absent."""
     import glob
 
     from cov_tiles_spark.covt.mvt import decode_mvt
     from cov_tiles_spark.pipeline.transcode import covt_to_mvt
 
+    _assert_gena_lines_and_polygons_export_to_source()
     for p in sorted(glob.glob("/root/reference/parser/js/data/omt/*.covt")):
         mvt_map = {
             l.name: l
