@@ -42,6 +42,7 @@ from collections.abc import Iterator
 from zlib import crc32
 
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -134,22 +135,20 @@ def exact_span_dedup(
     text_col: str,
     id_col: str,
     k: int = 8,
-    persist_windows: bool = True,
     skew_safe: bool = False,
 ) -> DataFrame:
     """Remove every duplicated k-token window, keeping the occurrence
     with the smallest (id, pos).  Returns one row per input document:
     (id, clean_text, n_tokens, n_removed).
 
-    ``persist_windows`` stores the hashed-window table (~20 B/window,
-    MEMORY_AND_DISK) so the Python hashing pass runs once — it feeds
-    both the duplicate aggregation and the occurrence join, and exchange
-    reuse can't cover it (the groupBy side has a partial aggregate below
-    its exchange, so the two shuffle subtrees differ).  At corpus scale
-    this trades ~2-3% of corpus size in spill for halving the dominant
-    Python stage; callers that prefer recompute pass False.  The cache
-    entry lives until the session drops it (the returned plan is lazy,
-    so the operator cannot unpersist it itself).
+    The hashed-window table is persisted (~20 B/window, MEMORY_AND_DISK)
+    so the Python hashing pass runs once — it feeds both the duplicate
+    aggregation and the occurrence join, and exchange reuse can't cover
+    it (the groupBy side has a partial aggregate below its exchange, so
+    the two shuffle subtrees differ).  At corpus scale this trades ~2-3%
+    of corpus size in spill for halving the dominant Python stage.  The
+    cache entry lives until the session drops it (the returned plan is
+    lazy, so the operator cannot unpersist it itself).
 
     ``skew_safe`` guards the one skew exposure: a planet-hot window (a
     boilerplate passage in a large fraction of the corpus) puts every
@@ -180,11 +179,9 @@ def exact_span_dedup(
     counts +1 shuffle, and the proposed split is silently reverted —
     set ``spark.sql.adaptive.forceOptimizeSkewedJoin=true`` alongside
     ``skew_safe`` for hot corpora in that shape."""
-    w = window_hash_rows(df, text_col, id_col, k)
-    if persist_windows:
-        from pyspark import StorageLevel
-
-        w = w.persist(StorageLevel.MEMORY_AND_DISK)
+    w = window_hash_rows(df, text_col, id_col, k).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     dups = (
         w.groupBy("h1", "h2")
         .agg(

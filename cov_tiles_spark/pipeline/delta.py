@@ -7,7 +7,7 @@ compares each tile's INPUT checksum (order-insensitive bit_xor of
 xxhash64 over the assigned feature rows) against the checksum recorded
 in the IcebergLite manifest by the previous run, and re-encodes only
 new-or-changed tiles, committing them as overwrite snapshots — readers
-use ``lake.read_table(table, latest_only=True)`` and always see exactly
+use ``lake.read_table("tiles", latest_only=True)`` and always see exactly
 the full-recompute result (asserted in tests), while time travel keeps
 every previous version readable.
 
@@ -61,12 +61,11 @@ def delta_materialize(
     lake: IcebergLite,
     images: DataFrame,
     zooms: list[int],
-    table: str = "tiles",
     max_features_per_tile: int = 20_000,
-    wire_format: str = "gena",
     partition_buckets: int = 32,
 ) -> dict:
-    """Encode new-or-changed tiles only; returns
+    """Encode new-or-changed tiles only, as gen-A payloads committed to
+    the lake's ``tiles`` table; returns
     ``{"changed": n, "unchanged": n, "removed": n, "total": n}`` (tile
     counts; ``changed`` counts every re-encoded tile; ``removed`` counts
     tiles whose inputs vanished — dropped via their bucket's rewrite, or
@@ -77,7 +76,7 @@ def delta_materialize(
     and a reverse anti-join finds tiles with no surviving input rows so
     their stale payloads are removed from latest-wins reads.
 
-    The previous run's input checksums live in the ``<table>_inputs``
+    The previous run's input checksums live in the ``tiles_inputs``
     table (committed alongside the payloads, latest-wins); the current
     assignment's checksums are joined against them to find work.
 
@@ -98,7 +97,7 @@ def delta_materialize(
 
     try:
         prev_latest = lake.read_table(
-            f"{table}_inputs", latest_only=True
+            "tiles_inputs", latest_only=True
         ).select(
             "tile_key",
             F.col("input_checksum").alias("_prev_sum"),
@@ -157,9 +156,9 @@ def delta_materialize(
             "_b",
             "left_anti",
         )
-        lake.commit_tombstones(table, "tombstone", empty_buckets, "_b")
+        lake.commit_tombstones("tiles", "tombstone", empty_buckets, "_b")
         lake.commit_tombstones(
-            f"{table}_inputs", "tombstone", empty_buckets, "_b"
+            "tiles_inputs", "tombstone", empty_buckets, "_b"
         )
     n_changed = changed_keys.count()
 
@@ -174,7 +173,6 @@ def delta_materialize(
                 todo,
                 max_features_per_tile=max_features_per_tile,
                 with_mvt_baseline=False,
-                wire_format=wire_format,
             )
             .withColumn("tile_key", _tile_key())
             .withColumn("_part", part_of_tile)
@@ -183,7 +181,7 @@ def delta_materialize(
         # (encode task x bucket) — 812 -> 32 files at sf0.1, and the
         # latest-wins read scan shrinks accordingly (guide §6)
         lake.commit_partitions(
-            table, "encode", payloads, "_part", mode="overwrite",
+            "tiles", "encode", payloads, "_part", mode="overwrite",
             cluster=True,
         )
         # record the inputs that produced those payloads, same snapshot
@@ -194,7 +192,7 @@ def delta_materialize(
             .withColumn("_part", part_of_tile)
         )
         lake.commit_partitions(
-            f"{table}_inputs", "inputs", new_sums, "_part", mode="overwrite",
+            "tiles_inputs", "inputs", new_sums, "_part", mode="overwrite",
             cluster=True,
         )
     assigned.unpersist()

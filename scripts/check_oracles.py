@@ -1,8 +1,10 @@
 """Local mimic of the driver's correctness gate: run every queries() entry
 on Spark AND its oracle_sql() twin on DuckDB at sf0.01, compare row count,
-column names, and order-insensitive values.
+column names, and order-insensitive values. Each gate's Spark jobs carry
+its name as their job description.
 
 Usage: python scripts/check_oracles.py [sf_dir] [query ...]
+(an unknown query name exits 2 before Spark starts)
 
 Env: ``CHECK_ORACLES_JSON=path`` additionally writes a CORRECTNESS-style
 JSON with per-query wall times (used for the committed sf0.1 scale run);
@@ -56,6 +58,13 @@ def main() -> int:
         os.environ["COV_ORACLE_DIR"] = cand
     import __spark_entry__ as entrymod
 
+    queries = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    unknown = sorted(only - set(queries))
+    if unknown:
+        print(f"unknown queries: {' '.join(unknown)}", file=sys.stderr)
+        return 2
+
     from cov_tiles_spark.session import get_spark
 
     master = os.environ.get("SPARK_GATE_MASTER", "local[8]")
@@ -81,13 +90,12 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
 
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
     failures = []
     for name, fn in queries.items():
         if only and name not in only:
             continue
         t0 = time.time()
+        spark.sparkContext.setJobDescription(name)
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
@@ -96,16 +104,6 @@ def main() -> int:
             print(f"FAIL {name}: spark error: {str(e)[:300]}")
             continue
         spark_secs = round(time.time() - t0, 2)
-        if name not in oracles:
-            print(f"ok   {name}: rows-only ({len(sdf)} rows, {time.time()-t0:.1f}s)")
-            if len(sdf) == 0 and name not in ("q_minhash_dedup",):
-                failures.append((name, "0 rows"))
-                record(name, t0, spark_rows=0, err="0 rows",
-                       spark_secs=spark_secs)
-            else:
-                record(name, t0, rows_match=True, spark_rows=len(sdf),
-                       spark_secs=spark_secs)
-            continue
         t_o = time.time()
         try:
             odf = con.execute(oracles[name]).fetchdf()
@@ -137,8 +135,9 @@ def main() -> int:
             continue
         record(name, t0, spark_secs=spark_secs, oracle_secs=oracle_secs, rows_match=True, schema_match=True, hash_match=True, **nrows)
         print(f"ok   {name}: {len(a)} rows match ({time.time()-t0:.1f}s)")
+    spark.sparkContext.setJobDescription(None)
 
-    n_checked = len([q for q in queries if not only or q in only])
+    n_checked = len(only or queries)
     print(f"\n{n_checked - len(failures)}/{n_checked} pass")
     out_json = os.environ.get("CHECK_ORACLES_JSON")
     if out_json:

@@ -1,54 +1,90 @@
-"""Registry invariants for __spark_entry__ — the driver contract.
+"""Registry invariants for __spark_entry__.
 
-Python dict literals keep the LAST duplicate key and module-level
-re-definitions shadow silently, so a careless addition can drop a gate
-with no error anywhere (it happened: a round-5 q_sessionize shadowed
-the round-2 one until a board-vs-registry diff caught it). These tests
-make that class of bug a pytest failure instead.
+Every gate is declared once, by ``@gate(sql)`` on its ``def q_*``; these
+tests check the registry that builds, through the imported module only.
 """
 
 from __future__ import annotations
 
+import hashlib
+import os
 import re
-from collections import Counter
+import subprocess
+import sys
+import types
+
+import pytest
 
 import __spark_entry__ as entry
 
-_SRC = open(entry.__file__).read()
+# SHA-256 over f"{key}\t{sha256(norm(sql))}\n" in queries() order: pins
+# every gate name, the registry order and every oracle's SQL text
+REGISTRY_DIGEST = "78e45271e7113f4448a4b949104bba87e2e6eca5598eb1f6213b0c846fdc4a2c"
 
 
-def test_no_duplicate_query_defs():
-    defs = re.findall(r"^def (q_[a-z0-9_]+)\(", _SRC, re.M)
-    dup = [k for k, c in Counter(defs).items() if c > 1]
-    assert not dup, f"shadowed query defs: {dup}"
+def _norm(sql: str) -> str:
+    # the oracle dir is absolute (it moves with the checkout); whitespace
+    # runs follow the source indentation, which DuckDB ignores
+    sql = sql.replace(entry._ORACLE_DIR, "<ORACLE_DIR>")
+    return re.sub(r"\s+", " ", sql).strip()
 
 
 def test_no_duplicate_registry_keys():
-    m = re.search(r"def queries\(\).*?return \{(.*?)\n    \}", _SRC, re.S)
-    keys = re.findall(r'"(q_[a-z0-9_]+)":', m.group(1))
-    dup = [k for k, c in Counter(keys).items() if c > 1]
-    assert not dup, f"duplicate queries() keys (last-wins!): {dup}"
-    assert len(keys) == len(entry.queries())
+    # a second gate of a registered name raises, and neither queries()
+    # nor oracle_sql() changes
+    before_q, before_o = entry.queries(), entry.oracle_sql()
 
+    def q_knn(spark, sf_dir):
+        return None
 
-def test_no_duplicate_oracle_keys():
-    # every oracle entry is a `"q_*": ...` pair somewhere after the
-    # oracle_sql def (literal SQL or parquet-backed f-string)
-    seg = _SRC[_SRC.index("def oracle_sql") :]
-    keys = re.findall(r'"(q_[a-z0-9_]+)":', seg)
-    dup = [k for k, c in Counter(keys).items() if c > 1]
-    assert not dup, f"duplicate oracle keys (last-wins!): {dup}"
-
-
-def test_queries_and_oracles_align():
-    q, o = set(entry.queries()), set(entry.oracle_sql())
-    assert q == o, f"missing oracle: {sorted(q - o)}; orphan: {sorted(o - q)}"
+    with pytest.raises(ValueError, match="q_knn"):
+        entry.gate("SELECT 1")(q_knn)
+    assert entry.queries() == before_q
+    assert list(entry.queries()) == list(before_q)
+    assert entry.oracle_sql() == before_o
 
 
 def test_every_query_def_is_registered():
-    defs = set(re.findall(r"^def (q_[a-z0-9_]+)\(", _SRC, re.M))
-    reg = set(entry.queries())
-    assert defs == reg, (
-        f"unregistered defs: {sorted(defs - reg)}; "
-        f"registered non-defs: {sorted(reg - defs)}"
+    defs = {
+        k for k, v in vars(entry).items()
+        if k.startswith("q_") and isinstance(v, types.FunctionType)
+    }
+    assert defs == set(entry.queries())
+
+
+def test_no_duplicate_query_defs():
+    # a later same-named def rebinds the module attribute while the
+    # registry still holds the first function
+    for k, fn in entry.queries().items():
+        assert fn is getattr(entry, k), k
+
+
+def test_queries_and_oracles_align():
+    assert list(entry.queries()) == list(entry.oracle_sql())
+    assert len(entry.queries()) == 91
+
+
+def test_registry_digest_is_pinned():
+    oracles = entry.oracle_sql()
+    lines = "".join(
+        f"{k}\t{hashlib.sha256(_norm(oracles[k]).encode()).hexdigest()}\n"
+        for k in entry.queries()
     )
+    assert hashlib.sha256(lines.encode()).hexdigest() == REGISTRY_DIGEST
+
+
+def test_gate_tmpdir_is_removed_at_exit():
+    code = (
+        "import os, __spark_entry__ as e\n"
+        "p = e._gate_tmpdir('registry_test_')\n"
+        "open(os.path.join(p, 'f'), 'w').close()\n"
+        "print(p)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=os.path.dirname(os.path.abspath(entry.__file__)),
+        capture_output=True, text=True, check=True, timeout=120,
+    )
+    path = out.stdout.strip().splitlines()[-1]
+    assert os.path.basename(path).startswith("registry_test_")
+    assert not os.path.exists(path)

@@ -168,7 +168,7 @@ def test_covt_to_mvt_roundtrip_both_formats():
                     assert pa == pb, (p, n)
 
 
-def _assert_gena_lines_and_polygons_export_to_source():
+def test_covt_to_mvt_exports_self_built_lines_and_polygons():
     """``test_genb.py``'s line layer and polygon-with-hole layer, given
     properties, encoded as gen-A and exported to MVT: the MVT decode
     equals the source ids, geometry and properties."""
@@ -218,21 +218,21 @@ def _assert_gena_lines_and_polygons_export_to_source():
     assert got == want
 
 
-def test_covt_to_mvt_exports_reference_tiles():
+def test_covt_to_mvt_exports_reference_snapshot():
     """Export the reference's own committed gen-A tiles back to MVT:
     geometry must match the paired golden MVT exactly; properties match
     up to the reference encoder's documented fixture artifacts
     (`name:xx` renamed `name_xx`, some columns dropped — see
-    tests/test_fixture_conformance.py). A self-built gen-A line and
-    polygon tile is exported first, so the test checks real bytes even
-    when the reference snapshot is absent."""
+    tests/test_fixture_conformance.py)."""
     import glob
 
     from cov_tiles_spark.covt.mvt import decode_mvt
     from cov_tiles_spark.pipeline.transcode import covt_to_mvt
 
-    _assert_gena_lines_and_polygons_export_to_source()
-    for p in sorted(glob.glob("/root/reference/parser/js/data/omt/*.covt")):
+    paths = sorted(glob.glob("/root/reference/parser/js/data/omt/*.covt"))
+    if not paths:
+        pytest.skip("reference snapshot absent")
+    for p in paths:
         mvt_map = {
             l.name: l
             for l in decode_mvt(open(p[:-5] + ".mvt", "rb").read())
