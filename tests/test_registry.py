@@ -44,6 +44,21 @@ def test_no_duplicate_registry_keys():
     assert entry.oracle_sql() == before_o
 
 
+def test_no_duplicate_oracle_keys():
+    # a second twin for a gate that has one raises, and the registered
+    # oracle keeps its text: no later entry can replace an earlier one
+    before = entry.oracle_sql()
+    assert all(isinstance(sql, str) and sql.strip() for sql in before.values())
+
+    def q_sessionize(spark, sf_dir):
+        return None
+
+    with pytest.raises(ValueError, match="q_sessionize"):
+        entry.gate("SELECT 1 AS replaced")(q_sessionize)
+    assert entry.oracle_sql() == before
+    assert list(entry.oracle_sql()) == list(before)
+
+
 def test_every_query_def_is_registered():
     defs = {
         k for k, v in vars(entry).items()
