@@ -13,9 +13,9 @@ every previous version readable.
 
 Scale shape: the checksum pass is a pure JVM hash aggregation over the
 (already computed) assignment — no Python, map-side combined; the
-changed-set is resolved with a join against the manifest (never a
-driver-side key list); unchanged tiles cost one aggregation row each,
-not an encode."""
+change set is one per-bucket plan, at most ``partition_buckets`` rows,
+collected once (never a per-tile key list); unchanged tiles cost one
+aggregation row each, not an encode."""
 
 from __future__ import annotations
 
@@ -72,13 +72,14 @@ def delta_materialize(
     tombstoned with it when the bucket empties).
 
     Change detection compares (input_checksum, n_rows) per tile — the
-    row count guards the bit_xor checksum's even-duplicate blind spot —
-    and a reverse anti-join finds tiles with no surviving input rows so
-    their stale payloads are removed from latest-wins reads.
-
+    row count guards the bit_xor checksum's even-duplicate blind spot.
     The previous run's input checksums live in the ``tiles_inputs``
-    table (committed alongside the payloads, latest-wins); the current
-    assignment's checksums are joined against them to find work.
+    table (committed alongside the payloads, latest-wins); a full outer
+    join of the current checksums against them, grouped by bucket,
+    gives one plan row per bucket: current, vanished and new-or-changed
+    tile counts. That plan, at most ``partition_buckets`` rows, is
+    collected once; the buckets to rewrite, the buckets to tombstone
+    and every returned count come from it.
 
     ``partition_buckets``: overwrite granularity. Tiles hash into that
     many hive partitions, so file counts stay bounded (one directory
@@ -92,8 +93,9 @@ def delta_materialize(
     tiles). The result is byte-identical to a full recompute."""
     cols = ["image_id", "caption", "fmt", "w", "h", "phash", "lon", "lat"]
     assigned = assign_tiles(images.select(*cols), zooms).persist()
-    cur = input_checksums(assigned).persist()
-    total = cur.count()
+    cur = input_checksums(assigned).withColumn(
+        "_part", _bucket_of(F.col("tile_key"), partition_buckets)
+    )
 
     try:
         prev_latest = lake.read_table(
@@ -110,67 +112,40 @@ def delta_materialize(
     # n_rows is compared alongside the checksum: bit_xor cancels when an
     # EVEN number of identical rows is added (x^x=0), so "same checksum"
     # alone wrongly skips such edits; the row count breaks the tie.
-    diff_keys = (
-        cur.join(prev_latest, "tile_key", "left")
-        .filter(
-            F.col("_prev_sum").isNull()
-            | (F.col("_prev_sum") != F.col("input_checksum"))
-            | (F.col("_prev_n") != F.col("n_rows"))
-        )
-        .select("tile_key")
+    dirty = F.col("input_checksum").isNotNull() & (
+        F.col("_prev_sum").isNull()
+        | (F.col("_prev_sum") != F.col("input_checksum"))
+        | (F.col("_prev_n") != F.col("n_rows"))
     )
-    # tiles whose input rows ALL disappeared are absent from `cur`, so
-    # the forward join above never sees them; find them with the reverse
-    # anti-join and fold their buckets into the rewrite so latest-wins
-    # reads drop the stale payload.
-    vanished_keys = prev_latest.join(
-        cur, "tile_key", "left_anti"
-    ).select("tile_key").persist()
-    n_removed = vanished_keys.count()
-    # widen to whole buckets: a bucket's overwrite snapshot must
-    # carry ALL its tiles or latest-wins reads would drop the
-    # unchanged ones. Vanished tiles fold their buckets in too — the
-    # rewritten bucket simply no longer contains them.
-    changed_buckets = diff_keys.union(vanished_keys).select(
-        _bucket_of(F.col("tile_key"), partition_buckets).alias("_b")
-    ).distinct()
-    changed_keys = (
-        cur.join(
-            changed_buckets,
-            _bucket_of(F.col("tile_key"), partition_buckets)
-            == changed_buckets["_b"],
-            "left_semi",
+    # the whole change set as one row per bucket: the full outer join
+    # also sees previous tiles with no current input rows (n_gone)
+    plan = (
+        cur.join(prev_latest, "tile_key", "full_outer")
+        .groupBy(_bucket_of(F.col("tile_key"), partition_buckets).alias("_b"))
+        .agg(
+            F.count("input_checksum").alias("n_cur"),
+            F.count_if(F.col("input_checksum").isNull()).alias("n_gone"),
+            F.count_if(dirty).alias("n_dirty"),
         )
-        .select("tile_key")
-        .persist()
+        .collect()
     )
-    part_of_tile = _bucket_of(F.col("tile_key"), partition_buckets)
-    if n_removed:
-        # a bucket whose CURRENT tile set is empty gets no overwrite
-        # snapshot from the rewrite below (nothing to write), so its
-        # stale rows would survive — tombstone those buckets directly
-        empty_buckets = changed_buckets.join(
-            cur.select(
-                _bucket_of(F.col("tile_key"), partition_buckets).alias("_b")
-            ).distinct(),
-            "_b",
-            "left_anti",
-        )
-        lake.commit_tombstones("tiles", "tombstone", empty_buckets, "_b")
-        lake.commit_tombstones(
-            "tiles_inputs", "tombstone", empty_buckets, "_b"
-        )
-    n_changed = changed_keys.count()
+    # a bucket rewrites WHOLE: its overwrite snapshot must carry ALL its
+    # current tiles or latest-wins reads would drop the unchanged ones,
+    # and the rewritten bucket simply no longer holds its vanished tiles
+    rewrite = [r for r in plan if r.n_dirty or r.n_gone]
+    changed = [r._b for r in rewrite]
+    n_changed = sum(r.n_cur for r in rewrite)
+    # a bucket with no CURRENT tile gets no overwrite snapshot (nothing
+    # to write), so its stale rows would survive: tombstone it instead
+    emptied = [r._b for r in plan if r.n_gone and not r.n_cur]
+    lake.commit_tombstones("tiles", "tombstone", emptied)
+    lake.commit_tombstones("tiles_inputs", "tombstone", emptied)
 
     if n_changed:
-        todo = assigned.join(
-            changed_keys,
-            _tile_key() == changed_keys["tile_key"],
-            "left_semi",
-        )
+        part_of_tile = _bucket_of(_tile_key(), partition_buckets)
         payloads = (
             encode_assigned(
-                todo,
+                assigned.filter(part_of_tile.isin(changed)),
                 max_features_per_tile=max_features_per_tile,
                 with_mvt_baseline=False,
             )
@@ -186,22 +161,16 @@ def delta_materialize(
         )
         # record the inputs that produced those payloads, same snapshot
         # discipline: one row per re-encoded tile
-        new_sums = (
-            cur.join(changed_keys, "tile_key", "left_semi")
-            .select("tile_key", "input_checksum", "n_rows")
-            .withColumn("_part", part_of_tile)
-        )
         lake.commit_partitions(
-            "tiles_inputs", "inputs", new_sums, "_part", mode="overwrite",
-            cluster=True,
+            "tiles_inputs", "inputs",
+            cur.filter(F.col("_part").isin(changed)), "_part",
+            mode="overwrite", cluster=True,
         )
     assigned.unpersist()
-    cur.unpersist()
-    changed_keys.unpersist()
-    vanished_keys.unpersist()
+    total = sum(r.n_cur for r in plan)
     return {
-        "changed": int(n_changed),
-        "unchanged": int(total - n_changed),
-        "removed": int(n_removed),
-        "total": int(total),
+        "changed": n_changed,
+        "unchanged": total - n_changed,
+        "removed": sum(r.n_gone for r in plan),
+        "total": total,
     }

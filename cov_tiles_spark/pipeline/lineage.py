@@ -26,7 +26,6 @@ behind the same calls; no such backend is wired in.
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
 
@@ -52,25 +51,29 @@ class IcebergLite:
         data file: before the first commit, or after a first manifest
         write that failed and left only ``_temporary/`` behind. Any read
         error propagates, so a ``skip-done`` resume never mistakes it for
-        "nothing committed"."""
-        if not self._has_manifest_files():
+        "nothing committed". The listed files are read with the fixed
+        schema, so no read infers one and Spark never sees the hidden
+        ``_manifests`` root itself."""
+        files = self._visible_names(self._manifest_dir)
+        if not files:
             return self.spark.createDataFrame([], MANIFEST_SCHEMA)
-        return self.spark.read.parquet(self._manifest_dir)
+        return self.spark.read.schema(MANIFEST_SCHEMA).parquet(
+            *(f"{self._manifest_dir}/{f}" for f in files)
+        )
 
-    def _has_manifest_files(self) -> bool:
-        """Whether ``_manifests/`` lists a visible data file (Spark's own
-        rule: names starting with ``_`` or ``.`` are hidden). Goes through
-        the Hadoop ``FileSystem`` API, so ``file://``, ``hdfs://`` and
-        ``s3a://`` roots resolve the same way as local paths."""
+    def _visible_names(self, directory: str) -> list[str]:
+        """Names in ``directory`` that Spark would not hide (its rule:
+        names starting with ``_`` or ``.`` are hidden); empty if it does
+        not exist. Goes through the Hadoop ``FileSystem`` API, so
+        ``file://``, ``hdfs://`` and ``s3a://`` roots resolve the same
+        way as local paths."""
         sc = self.spark.sparkContext
-        path = sc._jvm.org.apache.hadoop.fs.Path(self._manifest_dir)
+        path = sc._jvm.org.apache.hadoop.fs.Path(directory)
         fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
         if not fs.exists(path):
-            return False
-        return any(
-            not s.getPath().getName().startswith(("_", "."))
-            for s in fs.listStatus(path)
-        )
+            return []
+        names = (s.getPath().getName() for s in fs.listStatus(path))
+        return [n for n in names if not n.startswith(("_", "."))]
 
     def committed_keys_df(self, table: str, stage: str) -> DataFrame:
         """Distinct committed partition keys as a DataFrame (the scale
@@ -193,32 +196,22 @@ class IcebergLite:
         # post-commit that join sees this very snapshot as done -> empty
         return self.manifests().filter(F.col("snapshot_id") == snapshot_id)
 
-    def commit_tombstones(
-        self, table: str, stage: str, keys: DataFrame,
-        partition_col: str = "partition_key",
-    ) -> DataFrame:
+    def commit_tombstones(self, table: str, stage: str, keys: list[str]) -> None:
         """Delete-by-partition: commit a manifest-only snapshot (no data
-        files) claiming each key in ``keys``. ``read_table(latest_only=
+        files) with one row per key in ``keys``. ``read_table(latest_only=
         True)`` resolves the tombstone snapshot as the newest winner for
         the key and finds zero data rows in it, so the partition
         vanishes from latest reads; time travel before the tombstone
         still sees the old rows (Iceberg's delete-manifest shape).
-        Returns the manifest rows written (empty if ``keys`` is)."""
-        if keys.isEmpty():
-            return self.spark.createDataFrame([], MANIFEST_SCHEMA)
+        Commits nothing if ``keys`` is empty."""
+        if not keys:
+            return
         snapshot_id = uuid.uuid4().hex[:16]
-        manifest = keys.select(
-            F.lit(table).alias("table"),
-            F.lit(snapshot_id).alias("snapshot_id"),
-            F.col(partition_col).cast("string").alias("partition_key"),
-            F.lit(0).cast("long").alias("n_rows"),
-            F.lit(0).cast("long").alias("n_bytes"),
-            F.lit(0).cast("long").alias("checksum"),
-            F.lit(time.time_ns()).alias("committed_at_ns"),
-            F.lit(stage).alias("stage"),
-        )
-        manifest.write.mode("append").parquet(self._manifest_dir)
-        return self.manifests().filter(F.col("snapshot_id") == snapshot_id)
+        now = time.time_ns()
+        self.spark.createDataFrame(
+            [(table, snapshot_id, k, 0, 0, 0, now, stage) for k in keys],
+            MANIFEST_SCHEMA,
+        ).write.mode("append").parquet(self._manifest_dir)
 
     # ---------------- read path ----------------
 
@@ -242,8 +235,8 @@ class IcebergLite:
         (snapshot_id, partition_key) pairs derived from the manifest."""
         base = f"{self.root}/{table}"
         snaps = [
-            d for d in os.listdir(base) if d.startswith("snapshot_id=")
-        ] if os.path.isdir(base) else []
+            d for d in self._visible_names(base) if d.startswith("snapshot_id=")
+        ]
         if not snaps:
             raise FileNotFoundError(f"no snapshots for table {table}")
         vis = self.manifests().filter(F.col("table") == table)

@@ -157,7 +157,13 @@ def write_webdataset(
     spark = images.sparkSession
     mpath = os.path.join(out_dir, "_manifest")
     manifest.write.mode("overwrite").parquet(mpath)
-    return spark.read.parquet(mpath)
+    # the data files, not the hidden ``_manifest`` root: Spark warns
+    # "All paths were ignored" when handed a ``_``-prefixed directory
+    parts = [
+        os.path.join(mpath, f)
+        for f in sorted(os.listdir(mpath)) if f.endswith(".parquet")
+    ]
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(*parts)
 
 
 READ_SCHEMA = (
@@ -169,8 +175,10 @@ READ_SCHEMA = (
 def read_webdataset(spark: SparkSession, shard_dir: str) -> DataFrame:
     """Distributed WebDataset scan: one task parses whole tar shards."""
 
-    files = spark.read.format("binaryFile").load(
-        os.path.join(shard_dir, "*.tar")
+    files = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.tar")
+        .load(shard_dir)
     )
 
     def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -3,10 +3,12 @@ latest-wins read always equals a full recompute."""
 
 from __future__ import annotations
 
+import glob
+
 import pytest
 from pyspark.sql import functions as F
 
-from cov_tiles_spark.pipeline.delta import delta_materialize
+from cov_tiles_spark.pipeline.delta import _bucket_of, delta_materialize
 from cov_tiles_spark.pipeline.lineage import IcebergLite
 from cov_tiles_spark.pipeline.materialize import assign_tiles, encode_assigned
 
@@ -62,15 +64,36 @@ def _latest(lake):
     }
 
 
+def _snapshot_dirs(lake) -> set[str]:
+    """Snapshot directories of the ``tiles`` and ``tiles_inputs`` tables."""
+    return set(glob.glob(f"{lake.root}/tiles*/snapshot_id=*"))
+
+
+def _buckets_of(spark, tiles, buckets: int) -> set[str]:
+    """Buckets of the given (z, x, y) tiles, recomputed from their keys."""
+    keys = spark.createDataFrame(
+        [(f"{z}_{x}_{y}",) for z, x, y in tiles], "tile_key string"
+    )
+    return {
+        r._b for r in keys.select(
+            _bucket_of(F.col("tile_key"), buckets).alias("_b")
+        ).collect()
+    }
+
+
 def test_delta_runs(spark, lake):
     v1 = _corpus(spark)
     s1 = delta_materialize(lake, v1, ZOOMS)
     assert s1["changed"] == s1["total"] > 0 and s1["unchanged"] == 0
     assert _latest(lake) == _full(spark, v1)
 
-    # identical input: nothing re-encodes
+    # identical input: nothing re-encodes, and nothing is committed
+    snaps = _snapshot_dirs(lake)
+    n_manifest = lake.manifests().count()
     s2 = delta_materialize(lake, v1, ZOOMS)
     assert s2["changed"] == 0 and s2["unchanged"] == s1["total"]
+    assert _snapshot_dirs(lake) == snaps
+    assert lake.manifests().count() == n_manifest
 
     # one record's caption edited + one new record in a fresh area:
     # only the buckets of the touched tiles re-encode
@@ -117,6 +140,17 @@ def test_delta_removes_vanished_tiles(spark, lake, buckets):
     s2 = delta_materialize(lake, v2, ZOOMS, partition_buckets=buckets)
     assert s2["removed"] > 0
     assert _latest(lake) == _full(spark, v2)
+    # one tombstone snapshot per table, over exactly the buckets left
+    # with no current tile
+    emptied = _buckets_of(spark, _full(spark, v1), buckets) - _buckets_of(
+        spark, _full(spark, v2), buckets
+    )
+    assert emptied
+    tombs = lake.manifests().filter(F.col("stage") == "tombstone").collect()
+    for table in ("tiles", "tiles_inputs"):
+        rows = [r for r in tombs if r.table == table]
+        assert len({r.snapshot_id for r in rows}) == 1
+        assert sorted(r.partition_key for r in rows) == sorted(emptied)
     # time travel before the deletion still shows v1
     old = {
         (r.z, r.x, r.y): bytes(r.payload)

@@ -9,6 +9,7 @@ import pytest
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
+from cov_tiles_spark.pipeline.delta import delta_materialize
 from cov_tiles_spark.pipeline.lineage import IcebergLite, run_stage
 
 
@@ -82,6 +83,34 @@ def test_resume_skips_committed_keys_on_uri_root(spark, tmp_path):
     } == {"0", "1", "2"}
     assert uri_lake.commit_partitions("t_uri", "s1", df, "bucket").count() == 0
     assert run_stage(uri_lake, "t_uri", "s1", lambda done: df, "bucket").count() == 0
+
+
+def test_read_table_and_delta_rerun_on_uri_root(spark, tmp_path):
+    """``read_table`` lists snapshots through the Hadoop FileSystem too:
+    on a ``file://`` root it returns the committed rows, so an identical
+    second delta run finds its previous checksums and re-encodes
+    nothing."""
+    uri_lake = IcebergLite(spark, (tmp_path / "lake").as_uri())
+    df = spark.range(12).select(
+        F.col("id"), (F.col("id") % 3).cast("string").alias("bucket")
+    )
+    uri_lake.commit_partitions("t_uri", "s1", df, "bucket")
+    assert sorted(r.id for r in uri_lake.read_table("t_uri").collect()) == list(
+        range(12)
+    )
+
+    images = spark.createDataFrame(
+        [
+            (f"img{i:05d}", f"cap{i}", "raw", 8, 8, i, -170.0 + 29 * i, -70.0 + 11 * i)
+            for i in range(12)
+        ],
+        "image_id string, caption string, fmt string, w int, h int, "
+        "phash long, lon double, lat double",
+    )
+    first = delta_materialize(uri_lake, images, [2, 3], partition_buckets=8)
+    assert first["changed"] == first["total"] > 0
+    second = delta_materialize(uri_lake, images, [2, 3], partition_buckets=8)
+    assert second["changed"] == 0 and second["unchanged"] == first["total"]
 
 
 @pytest.mark.parametrize("leftover", [None, "_temporary/0"])
