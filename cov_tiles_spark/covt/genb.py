@@ -537,11 +537,10 @@ def encode_tile_genb(
 
 
 def _decode_stream_ints(
-    buf: np.ndarray, offset: int, enc: StreamEncoding, n: int, byte_length: int,
-    signed_rle: bool = False,
+    buf: np.ndarray, offset: int, enc: StreamEncoding, n: int, byte_length: int
 ) -> tuple[np.ndarray, int]:
     if enc == StreamEncoding.RLE:
-        vals, offset = decode_int_rle(buf, n, offset, signed=signed_rle)
+        vals, offset = decode_int_rle(buf, n, offset)
         return vals.astype(np.int64), offset
     if enc == StreamEncoding.FAST_PFOR_DELTA_ZIG_ZAG:
         vals = decode_pfor(buf, n, offset, zigzag=True, delta=True)[0]

@@ -156,7 +156,7 @@ def video_params_for(i: int) -> tuple[int, int, int]:
     return 32, 24, 8 + (i % 5) * 2
 
 
-def audio_df(spark: SparkSession, n: int, partitions: int | None = None) -> DataFrame:
+def audio_df(spark: SparkSession, n: int) -> DataFrame:
     """Distributed deterministic pcm16 audio corpus (operators/av.py)."""
     from cov_tiles_spark.operators.av import encode_audio, synth_audio
 
@@ -177,12 +177,12 @@ def audio_df(spark: SparkSession, n: int, partitions: int | None = None) -> Data
                 }
             )
 
-    return spark.range(0, n, numPartitions=partitions or 8).mapInPandas(
+    return spark.range(0, n, numPartitions=8).mapInPandas(
         _gen, schema=AUDIO_SCHEMA
     )
 
 
-def video_df(spark: SparkSession, n: int, partitions: int | None = None) -> DataFrame:
+def video_df(spark: SparkSession, n: int) -> DataFrame:
     """Distributed deterministic raw-frame video corpus (operators/av.py)."""
     from cov_tiles_spark.operators.av import encode_video, synth_video
 
@@ -204,6 +204,6 @@ def video_df(spark: SparkSession, n: int, partitions: int | None = None) -> Data
                 rows["fmt"].append("rawv")
             yield pd.DataFrame(rows)
 
-    return spark.range(0, n, numPartitions=partitions or 8).mapInPandas(
+    return spark.range(0, n, numPartitions=8).mapInPandas(
         _gen, schema=VIDEO_SCHEMA
     )

@@ -56,9 +56,11 @@ def encode_audio(samples: np.ndarray, fmt: str) -> bytes:
     )
 
 
-def synth_audio(asset_id: int, n_samples: int, sr: int = 16_000) -> np.ndarray:
-    """Deterministic int16 test signal: two sines + seeded noise, with a
-    silent lead-in so zero-crossing counts exercise the `== 0` edge."""
+def synth_audio(asset_id: int, n_samples: int) -> np.ndarray:
+    """Deterministic 16 kHz int16 test signal: two sines + seeded noise,
+    with a silent lead-in so zero-crossing counts exercise the `== 0`
+    edge."""
+    sr = 16_000
     rng = np.random.default_rng(1000 + asset_id)
     t = np.arange(n_samples, dtype=np.float64) / sr
     f1 = 110.0 * (1 + (asset_id % 7))
@@ -70,13 +72,14 @@ def synth_audio(asset_id: int, n_samples: int, sr: int = 16_000) -> np.ndarray:
     return np.clip(np.round(sig * 20000.0), -32768, 32767).astype(np.int16)
 
 
-def audio_features(df: DataFrame, bytes_col: str = "bytes", fmt_col: str = "fmt") -> DataFrame:
-    """Per-asset integer-exact features: sample count, peak magnitude,
-    energy (sum of squared samples), zero-crossing count.
+def audio_features(df: DataFrame) -> DataFrame:
+    """Per-asset integer-exact features of the ``bytes`` payload in
+    format ``fmt``: sample count, peak magnitude, energy (sum of squared
+    samples), zero-crossing count.
 
     One vectorized ``mapInPandas`` pass; each payload is decoded once.
     """
-    keep = [c for c in df.columns if c not in (bytes_col,)]
+    keep = [c for c in df.columns if c != "bytes"]
 
     def _feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -86,7 +89,7 @@ def audio_features(df: DataFrame, bytes_col: str = "bytes", fmt_col: str = "fmt"
             energy = np.empty(n, dtype=np.int64)
             zcr = np.empty(n, dtype=np.int64)
             for j in range(n):
-                s = decode_audio(bytes(pdf.iloc[j][bytes_col]), pdf.iloc[j][fmt_col])
+                s = decode_audio(bytes(pdf.iloc[j]["bytes"]), pdf.iloc[j]["fmt"])
                 x = s.astype(np.int64)
                 ns[j] = len(x)
                 peak[j] = np.abs(x).max() if len(x) else 0
@@ -102,7 +105,7 @@ def audio_features(df: DataFrame, bytes_col: str = "bytes", fmt_col: str = "fmt"
             yield out
 
     schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema if f.name != bytes_col
+        f"{f.name} {f.dataType.simpleString()}" for f in df.schema if f.name != "bytes"
     ) + ", n_samples long, peak long, energy long, zero_crossings long"
     return df.mapInPandas(_feats, schema=schema)
 
@@ -145,19 +148,16 @@ def sample_frame_indices(n_frames: int, k: int) -> list[int]:
     return [(j * n_frames) // k for j in range(k)]
 
 
-def frame_sample_features(
-    df: DataFrame,
-    k: int,
-    bytes_col: str = "bytes",
-) -> DataFrame:
-    """Frame-sample each video and fingerprint the sampled frames.
+def frame_sample_features(df: DataFrame, k: int) -> DataFrame:
+    """Frame-sample each ``bytes`` video and fingerprint the sampled
+    frames.
 
     Emits ``frames_sampled`` and ``frame_phash_xor`` (xor of the sampled
     frames' 64-bit perceptual hashes — an exact order-independent video
     fingerprint). Decode + sampling happen once per payload inside one
     ``mapInPandas`` pass, before any shuffle.
     """
-    keep = [c for c in df.columns if c != bytes_col]
+    keep = [c for c in df.columns if c != "bytes"]
 
     def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -167,7 +167,7 @@ def frame_sample_features(
             for j in range(n):
                 row = pdf.iloc[j]
                 frames = decode_video(
-                    bytes(row[bytes_col]), int(row["w"]), int(row["h"]),
+                    bytes(row["bytes"]), int(row["w"]), int(row["h"]),
                     int(row["n_frames"]), row["fmt"],
                 )
                 idx = sample_frame_indices(int(row["n_frames"]), k)
@@ -182,7 +182,7 @@ def frame_sample_features(
             yield out
 
     schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema if f.name != bytes_col
+        f"{f.name} {f.dataType.simpleString()}" for f in df.schema if f.name != "bytes"
     ) + ", frames_sampled int, frame_phash_xor long"
     return df.mapInPandas(_sample, schema=schema)
 
@@ -208,16 +208,13 @@ def resize_image(px: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
     return (total // area[..., None]).astype(np.uint8)
 
 
-def resize_images(
-    df: DataFrame, out_w: int, out_h: int,
-    bytes_col: str = "bytes",
-) -> DataFrame:
-    """Resize every image to (out_w, out_h), re-encoding in its own
-    format — one vectorized ``mapInPandas`` pass (decode -> area-mean
-    resize -> encode, each payload touched once)."""
+def resize_images(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
+    """Resize every ``bytes`` image to (out_w, out_h), re-encoding in
+    its own format — one vectorized ``mapInPandas`` pass (decode ->
+    area-mean resize -> encode, each payload touched once)."""
     from cov_tiles_spark.operators.images import decode_image, encode_image
 
-    keep = [c for c in df.columns if c not in (bytes_col, "w", "h")]
+    keep = [c for c in df.columns if c not in ("bytes", "w", "h")]
 
     def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -225,17 +222,17 @@ def resize_images(
             for j in range(len(pdf)):
                 row = pdf.iloc[j]
                 px = decode_image(
-                    bytes(row[bytes_col]), int(row["w"]), int(row["h"]), row["fmt"]
+                    bytes(row["bytes"]), int(row["w"]), int(row["h"]), row["fmt"]
                 )
                 out_bytes.append(encode_image(resize_image(px, out_w, out_h), row["fmt"]))
             out = pdf[keep].copy()
             out["w"] = np.int32(out_w)
             out["h"] = np.int32(out_h)
-            out[bytes_col] = out_bytes
+            out["bytes"] = out_bytes
             yield out
 
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema if f.name not in (bytes_col, "w", "h")
-    ) + f", w int, h int, {bytes_col} binary"
+        for f in df.schema if f.name not in ("bytes", "w", "h")
+    ) + ", w int, h int, bytes binary"
     return df.mapInPandas(_resize, schema=schema)

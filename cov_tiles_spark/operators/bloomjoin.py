@@ -59,40 +59,11 @@ def _positions(key: F.Column, num_bits: int, num_hashes: int) -> list[F.Column]:
     ]
 
 
-_BLOCK_BITS = 512  # one 64-byte cache line
-
-
-def _positions_blocked(
-    key: F.Column, num_bits: int, num_hashes: int
-) -> list[F.Column]:
-    """Register-blocked variant (Putze/Sanders/Singler cache-efficient
-    Bloom filters, public design): one hash selects a 512-bit block,
-    the k probe bits all land inside it. A probe touches ONE cache line
-    instead of k random ones — the property that keeps billion-key
-    probes memory-bandwidth-cheap on the executor — at a documented
-    ~1.5-2x theoretical-fpp penalty from block-occupancy variance
-    (pinned by tests/test_bloomjoin.py). Positions derive from the TOP
-    hash bits, same as :func:`_positions` (low bits mis-distribute)."""
-    nblocks = num_bits // _BLOCK_BITS
-    block_shift = 31 - (int(nblocks).bit_length() - 1)  # nblocks = 2^b
-    base = (
-        F.shiftright(sample_hash(key, seed=999), block_shift)
-        * F.lit(_BLOCK_BITS)
-    )
-    inner_shift = 31 - 9  # 512 = 2^9 in-block positions
-    return [
-        base + F.shiftright(sample_hash(key, seed=1_000 + i), inner_shift)
-        for i in range(num_hashes)
-    ]
-
-
 def build_bloom(
     df: DataFrame,
     key_col: str,
     num_bits: int,
     num_hashes: int,
-    merge_parallelism: int = 64,
-    blocked: bool = False,
 ) -> bytes:
     """Packed little-endian bitmap with every key's k bits set.
 
@@ -100,20 +71,17 @@ def build_bloom(
     ``bloom_semi_join``). The OR-merge happens in the JVM: positions
     group into 64-bit words (``p >> 6``) and ``bit_or`` their lane
     masks; the driver only scatters the non-zero words into the final
-    bitmap. ``merge_parallelism`` bounds the word shuffle's partition
-    count (the aggregation is map-side combined either way)."""
+    bitmap. The word shuffle runs on 64 partitions (the aggregation is
+    map-side combined either way)."""
     if num_bits <= 0 or num_bits & (num_bits - 1):
         raise ValueError(f"num_bits must be a power of two, got {num_bits}")
-    if blocked and num_bits < _BLOCK_BITS:
-        raise ValueError(f"blocked filters need >= {_BLOCK_BITS} bits")
-    pos_fn = _positions_blocked if blocked else _positions
     pos = df.select(
         F.explode(
-            F.array(*pos_fn(F.col(key_col), num_bits, num_hashes))
+            F.array(*_positions(F.col(key_col), num_bits, num_hashes))
         ).alias("p")
     )
     words = (
-        pos.repartition(merge_parallelism, F.shiftright("p", 6))
+        pos.repartition(64, F.shiftright("p", 6))
         .groupBy(F.shiftright("p", 6).alias("w"))
         .agg(
             F.expr(
@@ -139,15 +107,13 @@ def bloom_filter_rows(
     bloom: bytes,
     num_bits: int,
     num_hashes: int,
-    blocked: bool = False,
 ) -> DataFrame:
     """Keep rows whose key *may* be in the filter (no false negatives)."""
     if num_bits <= 0 or num_bits & (num_bits - 1):
         raise ValueError(f"num_bits must be a power of two, got {num_bits}")
     spark = df.sparkSession
     bc = spark.sparkContext.broadcast(np.frombuffer(bloom, dtype=np.uint8))
-    pos_fn = _positions_blocked if blocked else _positions
-    pos_cols = pos_fn(F.col(key_col), num_bits, num_hashes)
+    pos_cols = _positions(F.col(key_col), num_bits, num_hashes)
     staged = df.withColumn("_bpos", F.array(*pos_cols))
 
     @F.pandas_udf("boolean")
@@ -165,27 +131,20 @@ def bloom_filter_rows(
     return staged.filter(member(F.col("_bpos"))).drop("_bpos")
 
 
-def bloom_semi_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    bits_per_key: int = 10,
-    num_hashes: int | None = None,
-    merge_parallelism: int = 64,
-    blocked: bool = False,
-) -> DataFrame:
+def bloom_semi_join(big: DataFrame, small: DataFrame, key: str) -> DataFrame:
     """Exact ``big SEMI JOIN small ON key`` with map-side Bloom pruning.
 
-    ``bits_per_key=10`` gives ~1% false positives with k=7 hashes — the
-    exchange then carries ~(selectivity + 1%) of the big side instead of
-    all of it; the trailing exact semi-join removes the false positives,
-    so the output is exactly the plain semi-join's.
+    The bitmap gets >= 10 bits per distinct ``small`` key and
+    k = round(ln 2 * bits/key) hashes (at most 8): ~1% false positives,
+    so the exchange carries ~(selectivity + 1%) of the big side instead
+    of all of it; the trailing exact semi-join removes the false
+    positives, so the output is exactly the plain semi-join's.
     """
+    bits_per_key = 10
     n = small.select(key).distinct().count()
     want_bits = 1 << max(14, math.ceil(math.log2(max(n, 1) * bits_per_key)))
     num_bits = min(want_bits, _MAX_BITS)
-    if num_hashes is None:
-        num_hashes = max(1, min(8, round(0.693 * num_bits / max(n, 1))))
+    num_hashes = max(1, min(8, round(0.693 * num_bits / max(n, 1))))
     if want_bits > num_bits:
         # the cap binds: the filter stays EXACT (the trailing semi-join
         # is unconditional) but pruning quietly degrades as fpp rises —
@@ -197,11 +156,6 @@ def bloom_semi_join(
             "~%.4f — pruning degrades toward a no-op as this nears 1",
             num_bits, want_bits, n, bits_per_key, eff_fpp,
         )
-    bloom = build_bloom(
-        small, key, num_bits, num_hashes,
-        merge_parallelism=merge_parallelism, blocked=blocked,
-    )
-    pruned = bloom_filter_rows(
-        big, key, bloom, num_bits, num_hashes, blocked=blocked
-    )
+    bloom = build_bloom(small, key, num_bits, num_hashes)
+    pruned = bloom_filter_rows(big, key, bloom, num_bits, num_hashes)
     return pruned.join(small.select(key).distinct(), key, "left_semi")

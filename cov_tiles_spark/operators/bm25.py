@@ -35,10 +35,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def bm25_index(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Build the distributed BM25 index over whitespace tokens.
+def bm25_index(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Build the distributed BM25 index over the whitespace tokens of
+    ``docs``' ``text``, keyed by its ``doc_id``.
 
     Returns ``(postings, df, doclen)``:
 
@@ -55,10 +54,10 @@ def bm25_index(
     # no doc_id join/exchange anywhere in the build. The ONLY shuffle is
     # the (term, doc_id) tf aggregate, map-side combined.
     toks = F.filter(
-        F.split(F.col(text_col), " "), lambda x: F.length(x) > 0
+        F.split(F.col("text"), " "), lambda x: F.length(x) > 0
     )
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         toks.alias("toks"),
         F.size(toks).alias("dl"),
     )
@@ -80,11 +79,8 @@ def bm25_topk(
     n_docs: int,
     avgdl: float,
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    order_round: int = 6,
 ) -> DataFrame:
-    """Top-k docs per query by BM25 (Lucene idf variant).
+    """Top-k docs per query by BM25 (Lucene idf variant, k1=1.2, b=0.75).
 
     ``queries``: (query_id, term) rows — small relative to the corpus;
     it and its idf-annotated join with ``df`` ride broadcasts, so the
@@ -92,7 +88,7 @@ def bm25_topk(
     ``avgdl`` are corpus constants (collect them once at index build).
 
     Output: (query_id, rank, doc_id, score) with rank 1..k ordered by
-    (round(score, order_round) DESC, doc_id) — keep ``score`` out of any
+    (round(score, 6) DESC, doc_id) — keep ``score`` out of any
     cross-engine hash.
     """
     qterms = queries.select("query_id", "term").distinct()
@@ -107,6 +103,7 @@ def bm25_topk(
             / (F.col("df") + F.lit(0.5))
         ).alias("idf"),
     )
+    k1, b = 1.2, 0.75
     tf, dl = F.col("tf").cast("double"), F.col("dl").cast("double")
     hits = postings.join(F.broadcast(qw), "term").select(
         "query_id",
@@ -120,7 +117,7 @@ def bm25_topk(
     )
     scored = hits.groupBy("query_id", "doc_id").agg(F.sum("s").alias("score"))
     w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("score"), order_round).desc(), F.col("doc_id")
+        F.round(F.col("score"), 6).desc(), F.col("doc_id")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))

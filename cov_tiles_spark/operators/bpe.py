@@ -175,12 +175,10 @@ def _bpe_word_greedy(word: str, ranks: dict) -> list[str]:
 
 
 def bpe_tokenize_words(
-    words: DataFrame,
-    merges: list[tuple[str, str]],
-    word_col: str = "word",
+    words: DataFrame, merges: list[tuple[str, str]]
 ) -> DataFrame:
     """VOCABULARY-sized tokenization: adds ``tokens array<string>`` to a
-    distinct-word table. The merge table rides in the UDF closure (a
+    distinct-``word`` table. The merge table rides in the UDF closure (a
     50k-merge table is ~1 MB — broadcast-scale); per-word work is the
     greedy lowest-rank loop, so the stage is embarrassingly parallel
     with no shuffle."""
@@ -190,14 +188,13 @@ def bpe_tokenize_words(
     def tok(col: pd.Series) -> pd.Series:
         return pd.Series([_bpe_word_greedy(w, ranks) for w in col])
 
-    return words.withColumn("tokens", tok(F.col(word_col)))
+    return words.withColumn("tokens", tok(F.col("word")))
 
 
 def bpe_encode(
     docs: DataFrame,
     merges: list[tuple[str, str]],
     text_col: str = "text",
-    doc_id_col: str = "doc_id",
 ) -> DataFrame:
     """Corpus tokenization with a learned merge table →
     (doc_id, n_tokens, n_distinct_tokens); docs with no words keep 0s.
@@ -208,7 +205,7 @@ def bpe_encode(
     exploded corpus — Catalyst/AQE broadcasts the vocab side when it
     fits, and the final per-doc rollup is one hash aggregation."""
     doc_words = docs.select(
-        F.col(doc_id_col).alias("doc_id"),
+        "doc_id",
         F.explode(
             F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
         ).alias("word"),
@@ -224,7 +221,7 @@ def bpe_encode(
         )
     )
     return (
-        docs.select(F.col(doc_id_col).alias("doc_id"))
+        docs.select("doc_id")
         .join(per_doc, "doc_id", "left")
         .select(
             "doc_id",
@@ -240,11 +237,10 @@ def bpe_merges_df(
     docs: DataFrame,
     text_col: str = "text",
     n_merges: int = 40,
-    min_freq: int = 2,
 ) -> DataFrame:
     """(rank, left, right, freq) DataFrame view of :func:`bpe_train` —
     the gate-friendly shape."""
-    merges = bpe_train(docs, text_col, n_merges, min_freq)
+    merges = bpe_train(docs, text_col, n_merges)
     return docs.sparkSession.createDataFrame(
         [(i + 1, l, r, f) for i, (l, r, f) in enumerate(merges)],
         "rank int, left string, right string, freq bigint",

@@ -75,11 +75,9 @@ def logreg_train(
     df: DataFrame,
     feature_cols: list[str],
     label_col: str,
-    iters: int = 25,
-    lr: float = 0.5,
-    l2: float = 1e-3,
 ) -> dict:
-    """Batch-GD logistic regression; returns the model as plain floats:
+    """Batch-GD logistic regression (25 steps, learning rate 0.5, L2
+    1e-3); returns the model as plain floats:
     ``{"bias": b, "weights": [...], "means": [...], "stds": [...]}``.
 
     Features are standardized from a single stats aggregation
@@ -105,8 +103,9 @@ def logreg_train(
         (F.col(c) - F.lit(means[i])) / F.lit(stds[i])
         for i, c in enumerate(feature_cols)
     ]
+    lr, l2 = 0.5, 1e-3
     bias, w = 0.0, [0.0] * k
-    for _ in range(iters):
+    for _ in range(25):
         z = F.lit(bias)
         for i in range(k):
             z = z + F.lit(w[i]) * std_feats[i]

@@ -85,14 +85,13 @@ def _edge_fingerprint(edges: DataFrame) -> tuple[int, int]:
 
 def connected_components(
     pairs: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
     max_iter: int = 25,
     checkpoint: str = "local",
 ) -> DataFrame:
     """Label every node in the pair graph with its component minimum.
 
-    Returns ``(node, label)`` for every node that appears in ``pairs``;
+    Returns ``(node, label)`` for every node that appears in the
+    ``(id_a, id_b)`` edges of ``pairs``;
     label = smallest node id in its component. Nodes absent from
     ``pairs`` are singletons — callers join with a ``coalesce`` default
     (see :func:`dedup_clusters`).
@@ -126,7 +125,7 @@ def connected_components(
         return df.localCheckpoint(eager=True)
 
     edges = _truncate(
-        _canon(pairs.select(F.col(src).alias("a"), F.col(dst).alias("b")))
+        _canon(pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b")))
     )
     fp = _edge_fingerprint(edges)
     for it in range(max_iter):
@@ -151,8 +150,6 @@ def dedup_clusters(
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    src: str = "id_a",
-    dst: str = "id_b",
 ) -> DataFrame:
     """Assign every document a duplicate-cluster id and a keep flag.
 
@@ -163,7 +160,7 @@ def dedup_clusters(
     docs (tiny vs the corpus), so the label join broadcasts when small;
     the corpus itself is never shuffled.
     """
-    labels = connected_components(pairs, src=src, dst=dst)
+    labels = connected_components(pairs)
     out = (
         docs.join(
             labels, docs[id_col] == labels["node"], "left"

@@ -85,18 +85,17 @@ def decontaminate(
     benchmark: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    bench_text_col: str = "text",
     n: int = 13,
 ) -> DataFrame:
     """Flag every training doc sharing >= 1 word n-gram with the
-    benchmark. Returns ``docs`` + ``is_contaminated``; keep the clean
-    set with ``.filter(~F.col("is_contaminated"))``.
+    ``text`` of the benchmark. Returns ``docs`` + ``is_contaminated``;
+    keep the clean set with ``.filter(~F.col("is_contaminated"))``.
 
     The benchmark hash table is distinct-ed and broadcast (eval sets are
     thousands of docs, not billions) — the corpus side stays map-side."""
     bench_hashes = (
         benchmark.select(
-            F.explode(_ngram_udf(n)(F.col(bench_text_col))).alias("ngram_hash")
+            F.explode(_ngram_udf(n)(F.col("text"))).alias("ngram_hash")
         )
         .distinct()
     )

@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
 _MERSENNE = (1 << 61) - 1
+_NUM_HASHES = 64  # MinHash permutations per signature
+_SHINGLE = 5  # bytes per shingle
 
 logger = logging.getLogger("cov_tiles_spark.dedup")
 
@@ -116,10 +118,10 @@ def _shingle_hashes(texts: pd.Series, shingle: int) -> tuple[np.ndarray, np.ndar
     return all_h, out_counts
 
 
-def _minhash_udf(num_hashes: int, shingle: int, seed: int = 42):
-    rng = np.random.default_rng(seed)
-    a = rng.integers(1, _MERSENNE, num_hashes, dtype=np.int64).astype(np.uint64)
-    b = rng.integers(0, _MERSENNE, num_hashes, dtype=np.int64).astype(np.uint64)
+def _minhash_udf():
+    rng = np.random.default_rng(42)
+    a = rng.integers(1, _MERSENNE, _NUM_HASHES, dtype=np.int64).astype(np.uint64)
+    b = rng.integers(0, _MERSENNE, _NUM_HASHES, dtype=np.int64).astype(np.uint64)
 
     @F.pandas_udf(ArrayType(LongType()))
     def minhash(texts: pd.Series) -> pd.Series:
@@ -128,11 +130,11 @@ def _minhash_udf(num_hashes: int, shingle: int, seed: int = 42):
         # via minimum.reduceat
         if len(texts) == 0:
             return pd.Series([], dtype=object)
-        all_h, lengths = _shingle_hashes(texts, shingle)
+        all_h, lengths = _shingle_hashes(texts, _SHINGLE)
         starts = np.cumsum(lengths) - lengths
-        sig = np.empty((len(lengths), num_hashes), dtype=np.int64)
+        sig = np.empty((len(lengths), _NUM_HASHES), dtype=np.int64)
         with np.errstate(over="ignore"):
-            for p in range(num_hashes):
+            for p in range(_NUM_HASHES):
                 vals = (a[p] * all_h + b[p]) % np.uint64(_MERSENNE)
                 sig[:, p] = np.minimum.reduceat(vals, starts).astype(np.int64)
         return pd.Series(list(sig))
@@ -140,7 +142,7 @@ def _minhash_udf(num_hashes: int, shingle: int, seed: int = 42):
     return minhash
 
 
-def _band_shape(num_hashes: int, threshold: float) -> tuple[int, int]:
+def _band_shape(threshold: float) -> tuple[int, int]:
     """Pick (bands, rows) so the LSH S-curve knee sits near ``threshold``:
     match probability = 1 - (1 - t^rows)^bands. Wider rows at high
     thresholds slash false candidates (t=0.4 noise passes a 4-row band
@@ -151,16 +153,13 @@ def _band_shape(num_hashes: int, threshold: float) -> tuple[int, int]:
         rows = 4
     else:
         rows = 2
-    return num_hashes // rows, rows
+    return _NUM_HASHES // rows, rows
 
 
 def minhash_near_dups(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    num_hashes: int = 64,
-    bands: int | None = None,
-    shingle: int = 5,
     threshold: float = 0.7,
     max_bucket_size: int | None = 1024,
 ) -> DataFrame:
@@ -174,11 +173,8 @@ def minhash_near_dups(
     dropped with a logged count (see ``_cap_buckets``) so one degenerate
     signature can't go quadratic.
     """
-    if bands is None:
-        bands, rows_per_band = _band_shape(num_hashes, threshold)
-    else:
-        rows_per_band = num_hashes // bands
-    mh = _minhash_udf(num_hashes, shingle)
+    bands, rows_per_band = _band_shape(threshold)
+    mh = _minhash_udf()
     # pin the signature stage's parallelism (CLAUDE.md): the input is
     # typically 1-2 scan partitions (single parquet row group), which
     # serializes the Python-CPU-bound MinHash UDF onto 1-2 workers
@@ -218,7 +214,7 @@ def minhash_near_dups(
         F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
         F.lit(0),
         lambda acc, v: acc + v,
-    ) / F.lit(float(num_hashes))
+    ) / F.lit(float(_NUM_HASHES))
     return (
         cand.withColumn("jaccard_est", est)
         .filter(F.col("jaccard_est") >= threshold)
@@ -271,7 +267,6 @@ def simhash_near_dups(
     id_col: str,
     max_hamming: int = 3,
     max_bucket_size: int | None = 1024,
-    identical_pairs: str = "all",
 ) -> DataFrame:
     """Pairs with SimHash Hamming distance <= max_hamming.
 
@@ -289,7 +284,6 @@ def simhash_near_dups(
         sigs, "_sig", "_id",
         max_hamming=max_hamming,
         max_bucket_size=max_bucket_size,
-        identical_pairs=identical_pairs,
         op="simhash",
     )
 
@@ -300,7 +294,6 @@ def hamming_near_dups(
     id_col: str,
     max_hamming: int = 3,
     max_bucket_size: int | None = 1024,
-    identical_pairs: str = "all",
     op: str = "hamming",
 ) -> DataFrame:
     """Pairs of ids whose 64-bit ``hash_col`` values are within
@@ -325,15 +318,9 @@ def hamming_near_dups(
     bucket is dropped with a logged count and costs only
     cross-signature recall in that band.
 
-    ``identical_pairs`` controls the hamming-0 expansion: ``"all"``
-    (default) lists every pair within an identical-signature group —
-    the brute-force-oracle contract, inherently quadratic in the group
-    size; ``"star"`` emits (min-id, other) pairs only — n-1 rows per
-    group, the scale-safe shape when the consumer is connectivity-based
-    (``dedup_clusters`` produces identical clusters from either).
+    Every pair within an identical-signature group is listed — the
+    brute-force-oracle contract, inherently quadratic in the group size.
     """
-    if identical_pairs not in ("all", "star"):
-        raise ValueError(f"identical_pairs must be 'all' or 'star': {identical_pairs!r}")
     n_bands = max_hamming + 1
     width = 64 // n_bands
     sh = df.select(
@@ -382,28 +369,16 @@ def hamming_near_dups(
     multi = sh.join(
         sig_tbl.filter(F.col("n_ids") >= 2).select("sh"), "sh", "left_semi"
     )
-    if identical_pairs == "star":
-        keep = multi.groupBy("sh").agg(F.min("id").alias("id_a"))
-        intra = (
-            multi.join(keep, "sh")
-            .filter(F.col("id") != F.col("id_a"))
-            .select(
-                "id_a",
-                F.col("id").alias("id_b"),
-                F.lit(0).cast("int").alias("hamming"),
-            )
+    x, y = multi.alias("x"), multi.alias("y")
+    intra = (
+        x.join(y, "sh")
+        .filter(F.col("x.id") < F.col("y.id"))
+        .select(
+            F.col("x.id").alias("id_a"),
+            F.col("y.id").alias("id_b"),
+            F.lit(0).cast("int").alias("hamming"),
         )
-    else:
-        x, y = multi.alias("x"), multi.alias("y")
-        intra = (
-            x.join(y, "sh")
-            .filter(F.col("x.id") < F.col("y.id"))
-            .select(
-                F.col("x.id").alias("id_a"),
-                F.col("y.id").alias("id_b"),
-                F.lit(0).cast("int").alias("hamming"),
-            )
-        )
+    )
     return cross.unionAll(intra)
 
 
@@ -412,9 +387,7 @@ def embedding_near_dups(
     vec_col: str,
     id_col: str,
     dim: int,
-    n_planes: int = 16,
     threshold: float = 0.95,
-    seed: int = 42,
     max_bucket_size: int | None = 1024,
 ) -> DataFrame:
     """Cosine near-duplicate pairs via random-hyperplane LSH + exact verify.
@@ -425,8 +398,8 @@ def embedding_near_dups(
     multiplies shuffle bytes by the bucket fan-out). Oversized buckets are
     dropped with a logged count.
     """
-    rng = np.random.default_rng(seed)
-    planes = rng.normal(size=(n_planes, dim)).astype(np.float64)
+    rng = np.random.default_rng(42)
+    planes = rng.normal(size=(16, dim)).astype(np.float64)
 
     @F.pandas_udf(LongType())
     def signature(vecs: pd.Series) -> pd.Series:

@@ -84,7 +84,6 @@ def lm_score(
     total_tokens: int,
     text_col: str,
     id_col: str,
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """Per-document stupid-backoff log10-prob and perplexity.
 
@@ -93,25 +92,20 @@ def lm_score(
     (id, n_scored, n_oov, logprob, ppl) with logprob = sum log10 p and
     ppl = 10^(-logprob / n_scored).
 
-    ``broadcast_model=True`` broadcasts both count tables (the CCNet
-    regime: a fixed trusted-domain model, MBs); False leaves Catalyst
-    to plan shuffle joins for corpus-scale models.
+    Both count tables are broadcast (the CCNet regime: a fixed
+    trusted-domain model, MBs), so the corpus is scored map-side.
     """
     big = bigrams.withColumnRenamed("c2", "_c2")
     uni_ctx = unigrams.select(
         F.col("tok").alias("ctx"), F.col("c1").alias("_cctx")
     )
     uni_tok = unigrams.select("tok", F.col("c1").alias("_ctok"))
-    if broadcast_model:
-        big, uni_ctx, uni_tok = (
-            F.broadcast(big), F.broadcast(uni_ctx), F.broadcast(uni_tok)
-        )
 
     pairs = _token_pairs(df, text_col, id_col)
     scored = (
-        pairs.join(big, ["ctx", "tok"], "left")
-        .join(uni_ctx, "ctx", "left")
-        .join(uni_tok, "tok", "left")
+        pairs.join(F.broadcast(big), ["ctx", "tok"], "left")
+        .join(F.broadcast(uni_ctx), "ctx", "left")
+        .join(F.broadcast(uni_tok), "tok", "left")
         .select(
             id_col,
             F.when(
@@ -156,7 +150,6 @@ def importance_weights(
     raw_model: tuple[DataFrame, DataFrame, int],
     text_col: str,
     id_col: str,
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """DSIR importance weights: per-doc log10 w = log p_target - log p_raw.
 
@@ -164,18 +157,16 @@ def importance_weights(
     log_w, log_w_norm) where log_w_norm = log_w / n_scored (0.0 for
     docs with no pairs) is the length-independent per-token ratio used
     for thresholding.  The corpus is scored twice (two join passes);
-    both passes are map-side when the models broadcast, so the whole
-    operator stays shuffle-free on the corpus in the DSIR regime (small
-    trusted target model, raw model from a sample).
+    ``lm_score`` broadcasts the models, so both passes are map-side and
+    the whole operator stays shuffle-free on the corpus in the DSIR
+    regime (small trusted target model, raw model from a sample).
     """
-    t = lm_score(
-        df, *target_model, text_col=text_col, id_col=id_col,
-        broadcast_model=broadcast_model,
-    ).select(id_col, "n_scored", F.col("logprob").alias("_lp_t"))
-    r = lm_score(
-        df, *raw_model, text_col=text_col, id_col=id_col,
-        broadcast_model=broadcast_model,
-    ).select(id_col, F.col("logprob").alias("_lp_r"))
+    t = lm_score(df, *target_model, text_col, id_col).select(
+        id_col, "n_scored", F.col("logprob").alias("_lp_t")
+    )
+    r = lm_score(df, *raw_model, text_col, id_col).select(
+        id_col, F.col("logprob").alias("_lp_r")
+    )
     return t.join(r, id_col).select(
         id_col,
         "n_scored",

@@ -58,10 +58,10 @@ _RING = 1 << 31
 
 
 def _sharded(
-    df: DataFrame, id_col: str, len_col: str, num_shards: int, seed: int
+    df: DataFrame, id_col: str, len_col: str, num_shards: int
 ) -> DataFrame:
     """(id, len, shard, _h) with the deterministic order key."""
-    h = sample_hash(F.col(id_col), seed)
+    h = sample_hash(F.col(id_col))
     return df.select(
         F.col(id_col),
         F.col(len_col).cast("long").alias("_len"),
@@ -76,7 +76,6 @@ def pack_concat(
     len_col: str,
     max_len: int,
     num_shards: int = 1024,
-    seed: int = 0,
 ) -> DataFrame:
     """Concat-and-chunk packing spans.
 
@@ -103,7 +102,7 @@ def pack_concat(
     """
     if max_len <= 0:
         raise ValueError(f"max_len must be positive, got {max_len}")
-    s = _sharded(df, id_col, len_col, num_shards, seed).filter(
+    s = _sharded(df, id_col, len_col, num_shards).filter(
         F.col("_len") > 0
     )
     w = (
@@ -136,7 +135,6 @@ def pack_bins(
     len_col: str,
     max_len: int,
     num_shards: int = 1024,
-    seed: int = 0,
     partitions: int | None = None,
 ) -> DataFrame:
     """Next-fit whole-document packing.
@@ -148,7 +146,7 @@ def pack_bins(
     (they sit alone in their sequence).  Zero-length documents are
     dropped.  Deterministic: the per-shard doc order is ``(hash(id),
     id)``, so the packing is a pure function of (corpus, max_len,
-    num_shards, seed).
+    num_shards).
 
     The next-fit recurrence (running fill with resets) has no closed
     form, so each shard is walked sequentially — but shards are
@@ -157,7 +155,7 @@ def pack_bins(
     """
     if max_len <= 0:
         raise ValueError(f"max_len must be positive, got {max_len}")
-    s = _sharded(df, id_col, len_col, num_shards, seed).filter(
+    s = _sharded(df, id_col, len_col, num_shards).filter(
         F.col("_len") > 0
     )
     p = partitions or min(num_shards, 256)
@@ -214,10 +212,9 @@ def pack_bins(
     )
 
 
-# SDXL-style resolution buckets (ratio ladder ~0.33 .. 3.0); callers
-# training at other base resolutions pass their own list — only the
+# SDXL-style resolution buckets (ratio ladder ~0.33 .. 3.0); only the
 # ratios matter for assignment.
-DEFAULT_ASPECT_BUCKETS = [
+ASPECT_BUCKETS = [
     (256, 256), (288, 224), (224, 288), (320, 192), (192, 320),
     (384, 128), (128, 384),
 ]
@@ -228,10 +225,8 @@ def aspect_buckets(
     id_col: str,
     w_col: str,
     h_col: str,
-    buckets: list[tuple[int, int]] | None = None,
     batch_size: int = 16,
     num_shards: int = 64,
-    seed: int = 0,
 ) -> DataFrame:
     """Aspect-ratio bucketing + batch packing for image training.
 
@@ -255,7 +250,6 @@ def aspect_buckets(
     ``num_shards`` and batch ids are (bucket, shard)-local, exactly the
     per-shard independence the packing operators above use.
     """
-    buckets = buckets or DEFAULT_ASPECT_BUCKETS
     aspect = F.col(w_col).cast("double") / F.col(h_col).cast("double")
     cands = F.array(
         *[
@@ -263,17 +257,17 @@ def aspect_buckets(
                 F.abs(aspect - F.lit(float(bw) / float(bh))).alias("d"),
                 F.lit(i).alias("i"),
             )
-            for i, (bw, bh) in enumerate(buckets)
+            for i, (bw, bh) in enumerate(ASPECT_BUCKETS)
         ]
     )
     best = F.array_min(cands)["i"]
     bw = F.element_at(
-        F.array(*[F.lit(bw) for bw, _ in buckets]), best + 1
+        F.array(*[F.lit(bw) for bw, _ in ASPECT_BUCKETS]), best + 1
     )
     bh = F.element_at(
-        F.array(*[F.lit(bh) for _, bh in buckets]), best + 1
+        F.array(*[F.lit(bh) for _, bh in ASPECT_BUCKETS]), best + 1
     )
-    h = sample_hash(F.col(id_col), seed)
+    h = sample_hash(F.col(id_col))
     s = df.select(
         F.col(id_col),
         best.alias("bucket"),

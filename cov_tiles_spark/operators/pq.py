@@ -31,8 +31,9 @@ from pyspark.sql import functions as F
 from cov_tiles_spark.operators import single_partition_key
 
 
-def _kmeans_1sub(m: np.ndarray, k: int, iters: int) -> np.ndarray:
-    """Deterministic k-means on one subspace sample (euclidean)."""
+def _kmeans_1sub(m: np.ndarray, k: int) -> np.ndarray:
+    """Deterministic k-means on one subspace sample (euclidean, 10 Lloyd
+    iterations)."""
     chosen = [0]
     d2 = ((m - m[0]) ** 2).sum(axis=1)
     for _ in range(1, k):
@@ -40,7 +41,7 @@ def _kmeans_1sub(m: np.ndarray, k: int, iters: int) -> np.ndarray:
         chosen.append(nxt)
         d2 = np.minimum(d2, ((m - m[nxt]) ** 2).sum(axis=1))
     cents = m[chosen].copy()
-    for _ in range(iters):
+    for _ in range(10):
         dist = ((m[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
         assign = np.argmin(dist, axis=1)
         for c in range(k):
@@ -57,10 +58,9 @@ def pq_train(
     dim: int,
     m: int = 8,
     nbits: int = 4,
-    iters: int = 10,
-    sample_n: int = 20_000,
 ) -> np.ndarray:
-    """Train per-subspace codebooks on a bounded deterministic sample.
+    """Train per-subspace codebooks on a bounded deterministic sample
+    (<= 20,000 rows).
 
     Returns ``(m, 2^nbits, dim//m)`` float64. Like the IVF quantizer,
     the codebooks are tiny and a representative sample suffices — the
@@ -68,13 +68,14 @@ def pq_train(
     ``similarity.train_sample_rows``, no full-corpus TakeOrdered)."""
     from cov_tiles_spark.operators.similarity import train_sample_rows
 
-    assert dim % m == 0, "dim must divide evenly into m subspaces"
+    if dim % m:
+        raise ValueError(f"dim={dim} must divide evenly into m={m} subspaces")
     sub = dim // m
-    rows = train_sample_rows(df, id_col, vec_col, sample_n)
+    rows = train_sample_rows(df, id_col, vec_col, 20_000)
     x = np.stack([np.asarray(r.vec, dtype=np.float64) for r in rows])
     k = 1 << nbits
     return np.stack(
-        [_kmeans_1sub(x[:, j * sub : (j + 1) * sub], k, iters) for j in range(m)]
+        [_kmeans_1sub(x[:, j * sub : (j + 1) * sub], k) for j in range(m)]
     )
 
 

@@ -73,7 +73,6 @@ def stratified_sample(
     rates: dict[str, float],
     key_col: str,
     default_rate: float = 0.0,
-    seed: int = 0,
 ) -> DataFrame:
     """Per-stratum Bernoulli rates (mixture weighting): keep a row of
     stratum ``s`` iff ``hash(key) < floor(rates[s] * 2^31)``. The rate
@@ -86,7 +85,7 @@ def stratified_sample(
         .withColumn(
             "_thresh", F.coalesce(F.col("_thresh"), F.lit(threshold(default_rate)))
         )
-        .filter(sample_hash(F.col(key_col), seed) < F.col("_thresh"))
+        .filter(sample_hash(F.col(key_col)) < F.col("_thresh"))
         .drop("_thresh")
     )
 
@@ -96,7 +95,6 @@ def sample_per_group(
     group_cols: list[str],
     k: int,
     key_col: str,
-    seed: int = 0,
     prefilter: bool = True,
 ) -> DataFrame:
     """Exactly ``min(k, |group|)`` rows per group, chosen uniformly
@@ -112,7 +110,7 @@ def sample_per_group(
     under-collected groups (astronomically rare; probability
     ~exp(-Theta(k)) by a Chernoff bound) fall back to the full window.
     """
-    h = sample_hash(F.col(key_col), seed).alias("_h")
+    h = sample_hash(F.col(key_col)).alias("_h")
     w = Window.partitionBy(*group_cols).orderBy(F.col("_h"), F.col(key_col))
 
     def ranked(rows: DataFrame) -> DataFrame:
@@ -158,7 +156,6 @@ def mixture_sample(
     weights: dict[str, float],
     key_col: str,
     default_weight: float = 0.0,
-    seed: int = 0,
 ) -> DataFrame:
     """Domain-mixture sampling **with replacement**: a row of stratum
     ``s`` with weight ``w = weights[s]`` is emitted
@@ -172,7 +169,7 @@ def mixture_sample(
     ``stratified_sample`` is the ``w <= 1`` special case (no copies, no
     epoch column). Determinism: the fractional coin is the same
     portable hash as every other sampler here
-    (``hash(key, seed) < floor(frac(w) * 2^31)``), so the decision
+    (``hash(key) < floor(frac(w) * 2^31)``), so the decision
     replays identically on every run, partitioning, and engine.
 
     Scale shape: weight table on a broadcast join, the copy fan-out is
@@ -195,7 +192,7 @@ def mixture_sample(
     d_whole = int(default_weight)
     d_fthresh = threshold(default_weight - d_whole)
     n = F.col("_whole") + F.when(
-        sample_hash(F.col(key_col), seed) < F.col("_fthresh"), F.lit(1)
+        sample_hash(F.col(key_col)) < F.col("_fthresh"), F.lit(1)
     ).otherwise(F.lit(0))
     return (
         df.join(F.broadcast(rdf), strata_col, "left")
@@ -219,7 +216,6 @@ def shuffle_assign(
     df: DataFrame,
     key_col: str,
     n_shards: int,
-    seed: int = 0,
 ) -> DataFrame:
     """Deterministic global shuffle for training export: order the
     corpus by a portable hash of the key and split it into ``n_shards``
@@ -244,7 +240,7 @@ def shuffle_assign(
     """
     if n_shards < 1:
         raise ValueError(f"n_shards must be >= 1: {n_shards}")
-    h = sample_hash(F.col(key_col), seed)
+    h = sample_hash(F.col(key_col))
     w = Window.partitionBy("shard").orderBy(F.col("_h"), F.col(key_col))
     return (
         df.withColumn("_h", h)

@@ -18,11 +18,9 @@ Comparing against all earlier ids (kept or not) keeps the rule
 order-independent and fully vectorizable; it is at most as aggressive as
 transitive-closure dedup and never drops a cluster's lowest-id member.
 
-Training is a driver-side fit on the first ``sample_n`` rows by id
-(tiny: k x dim floats out). That id-ordered sample is what makes the
-DuckDB/numpy oracle twin reproducible; for a 100 TB corpus swap in
-``similarity.train_sample_rows`` (map-only portable-hash sample) — the
-operator takes pre-trained ``centroids`` for exactly that.
+Training is a driver-side fit on the first 200,000 rows by id (tiny:
+k x dim floats out). That id-ordered sample is what makes the
+DuckDB/numpy oracle twin reproducible.
 """
 
 from __future__ import annotations
@@ -34,35 +32,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cov_tiles_spark.operators.similarity import ivf_assign
+from cov_tiles_spark.operators.similarity import ivf_assign, spherical_kmeans
 
 log = logging.getLogger(__name__)
-
-
-def spherical_kmeans(m: np.ndarray, k: int, iters: int = 10) -> np.ndarray:
-    """Deterministic spherical k-means (same recipe as
-    ``similarity.ivf_train_centroids``: farthest-point init from row 0,
-    Lloyd with empty clusters keeping their previous centroid), over an
-    already-materialized sample matrix. Returns unit-norm (k, dim)."""
-    norms = np.linalg.norm(m, axis=1)
-    m = m[norms > 0] / norms[norms > 0, None]
-    chosen = [0]
-    best_sim = m @ m[0]
-    for _ in range(1, k):
-        nxt = int(np.argmin(best_sim))
-        chosen.append(nxt)
-        best_sim = np.maximum(best_sim, m @ m[nxt])
-    centroids = m[chosen].copy()
-    for _ in range(iters):
-        assign = np.argmax(m @ centroids.T, axis=1)
-        for c in range(k):
-            members = m[assign == c]
-            if len(members):
-                v = members.sum(axis=0)
-                n = np.linalg.norm(v)
-                if n > 0:
-                    centroids[c] = v / n
-    return centroids
 
 
 def _prune_cluster(pdf: pd.DataFrame, threshold: float, block: int = 4096) -> pd.DataFrame:
@@ -95,27 +67,22 @@ def semantic_dedup(
     dim: int,
     n_centroids: int = 8,
     threshold: float = 0.95,
-    iters: int = 10,
-    sample_n: int = 200_000,
-    centroids: np.ndarray | None = None,
     max_cluster_size: int | None = 500_000,
 ) -> DataFrame:
     """Per-row semantic-dedup verdict: (id, list_id, is_kept).
 
-    Plan shape: one driver-side training collect (or none, with
-    ``centroids``), one map-only assign (broadcast centroid matrix,
-    vectorized pandas UDF), ONE shuffle on ``list_id`` into the
-    per-cluster prune. No pairwise fan-out crosses the exchange — each
-    vector ships once."""
-    if centroids is None:
-        rows = (
-            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-            .orderBy("id")
-            .limit(sample_n)
-            .collect()
-        )
-        m = np.stack([np.asarray(r.vec, dtype=np.float64) for r in rows])
-        centroids = spherical_kmeans(m, n_centroids, iters)
+    Plan shape: one driver-side training collect, one map-only assign
+    (broadcast centroid matrix, vectorized pandas UDF), ONE shuffle on
+    ``list_id`` into the per-cluster prune. No pairwise fan-out crosses
+    the exchange — each vector ships once."""
+    rows = (
+        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+        .orderBy("id")
+        .limit(200_000)
+        .collect()
+    )
+    m = np.stack([np.asarray(r.vec, dtype=np.float64) for r in rows])
+    centroids = spherical_kmeans(m, n_centroids)
     assigned = ivf_assign(
         df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
         "vec",

@@ -7,7 +7,7 @@ one hash exchange on the user key, no Python anywhere.
 
 Scale shape (the 100 TB lens):
 
-- ONE shuffle on ``user_col``; the lag/cumsum window and the session
+- ONE shuffle on ``user_id``; the lag/cumsum window and the session
   aggregate both reuse that partitioning (Catalyst collapses them onto
   the same exchange — no second shuffle for the stats).
 - per-user data is the unit of serialization: a window over a user's
@@ -31,25 +31,19 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def sessionize(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    order_tiebreak: str = "event_id",
-    gap_sec: int = 1800,
-) -> DataFrame:
-    """Assign a per-user ``session_id`` (1-based, in time order).
+def sessionize(events: DataFrame, gap_sec: int = 1800) -> DataFrame:
+    """Assign a per-``user_id`` ``session_id`` (1-based, in ``ts`` order).
 
     A new session starts at the first event and whenever the gap to the
-    previous event exceeds ``gap_sec``. ``order_tiebreak`` makes the
-    ordering total when timestamps collide (exactly-equal timestamps
-    are common in real logs).
+    previous event exceeds ``gap_sec``. ``event_id`` makes the ordering
+    total when timestamps collide (exactly-equal timestamps are common
+    in real logs).
     """
-    w = Window.partitionBy(user_col).orderBy(ts_col, order_tiebreak)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # parquet timestamps arrive as TIMESTAMP_NTZ; the cast makes
     # unix_micros accept them, and any session-timezone offset it
     # introduces is constant, so the gap differences are unaffected
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
     prev = F.lag(us).over(w)
     new_sess = F.when(
         prev.isNull() | (us - prev > gap_sec * 1_000_000), F.lit(1)
@@ -62,24 +56,17 @@ def sessionize(
     )
 
 
-def session_stats(
-    sessions: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str | None = "value",
-) -> DataFrame:
-    """Per-session aggregate: event count, span, bounds.
+def session_stats(sessions: DataFrame) -> DataFrame:
+    """Per-session aggregate: event count, span, bounds, ``value`` sum.
 
     Rides the same user-key partitioning ``sessionize`` created — no
     extra exchange. ``duration_us`` is exact integer microseconds.
     """
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    aggs = [
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    return sessions.groupBy("user_id", "session_id").agg(
         F.count("*").alias("n_events"),
-        F.min(ts_col).alias("session_start"),
-        F.max(ts_col).alias("session_end"),
+        F.min("ts").alias("session_start"),
+        F.max("ts").alias("session_end"),
         (F.max(us) - F.min(us)).alias("duration_us"),
-    ]
-    if value_col is not None:
-        aggs.append(F.round(F.sum(value_col), 4).alias("sum_value"))
-    return sessions.groupBy(user_col, "session_id").agg(*aggs)
+        F.round(F.sum("value"), 4).alias("sum_value"),
+    )

@@ -114,30 +114,11 @@ def train_sample_rows(
     return rows[:sample_n]
 
 
-def ivf_train_centroids(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    dim: int,
-    n_centroids: int = 16,
-    iters: int = 10,
-    sample_n: int = 20_000,
-) -> np.ndarray:
-    """Train the IVF coarse quantizer: spherical k-means on a bounded,
-    deterministic sample.
-
-    The quantizer is tiny (``n_centroids x dim`` floats) and training
-    needs only a representative sample, so the standard IVF recipe is a
-    driver-side fit on ``<= sample_n`` rows — the full corpus is never
-    collected (sample via the map-only hash filter of
-    :func:`train_sample_rows`; no full-corpus sort-compare).
-    Deterministic: hash-ordered sample, init = farthest-point greedy,
-    Lloyd iterations with empty clusters keeping their previous
-    centroid. Returns unit-norm centroids ``(n_centroids, dim)``
-    float64.
-    """
-    rows = train_sample_rows(df, id_col, vec_col, sample_n)
-    m = np.stack([np.asarray(r.vec, dtype=np.float64) for r in rows])
+def spherical_kmeans(m: np.ndarray, k: int) -> np.ndarray:
+    """Deterministic spherical k-means over an already-materialized
+    sample matrix: zero-norm rows dropped, the rest unit-normalized,
+    farthest-point init, 10 Lloyd iterations with empty clusters
+    keeping their previous centroid. Returns unit-norm (k, dim)."""
     norms = np.linalg.norm(m, axis=1)
     m = m[norms > 0] / norms[norms > 0, None]
     # deterministic farthest-point init (greedy k-means++ without the
@@ -145,14 +126,14 @@ def ivf_train_centroids(
     # the row least similar to its nearest already-chosen centroid
     chosen = [0]
     best_sim = m @ m[0]
-    for _ in range(1, n_centroids):
+    for _ in range(1, k):
         nxt = int(np.argmin(best_sim))
         chosen.append(nxt)
         best_sim = np.maximum(best_sim, m @ m[nxt])
     centroids = m[chosen].copy()
-    for _ in range(iters):
+    for _ in range(10):
         assign = np.argmax(m @ centroids.T, axis=1)
-        for c in range(n_centroids):
+        for c in range(k):
             members = m[assign == c]
             if len(members):
                 v = members.sum(axis=0)
@@ -160,6 +141,29 @@ def ivf_train_centroids(
                 if n > 0:
                     centroids[c] = v / n
     return centroids
+
+
+def ivf_train_centroids(
+    df: DataFrame,
+    vec_col: str,
+    id_col: str,
+    dim: int,
+    n_centroids: int = 16,
+) -> np.ndarray:
+    """Train the IVF coarse quantizer: :func:`spherical_kmeans` on a
+    bounded, deterministic sample.
+
+    The quantizer is tiny (``n_centroids x dim`` floats) and training
+    needs only a representative sample, so the standard IVF recipe is a
+    driver-side fit on <= 20,000 rows — the full corpus is never
+    collected (sample via the map-only hash filter of
+    :func:`train_sample_rows`; no full-corpus sort-compare).
+    Deterministic: the sample is hash-ordered. Returns unit-norm
+    centroids ``(n_centroids, dim)`` float64.
+    """
+    rows = train_sample_rows(df, id_col, vec_col, 20_000)
+    m = np.stack([np.asarray(r.vec, dtype=np.float64) for r in rows])
+    return spherical_kmeans(m, n_centroids)
 
 
 def ivf_assign(
@@ -262,7 +266,6 @@ def _self_retrieval_topk(
     k: int,
     query_rate: float,
     seed: int,
-    order_round: int,
     different_label_only: bool = False,
     max_queries: int | None = 65536,
 ) -> DataFrame:
@@ -286,7 +289,7 @@ def _self_retrieval_topk(
     ``spatial/knn.py _local_topk``, but in whole-stage codegen instead
     of the Arrow channel; plan-asserted in tests/test_plans.py).
 
-    Rank key is ``round(cosine, order_round)`` with id tiebreak — the
+    Rank key is ``round(cosine, 6)`` with id tiebreak — the
     same cross-engine rank-stability device as :func:`cosine_topk`.
     Returns (query_id, query_label, rank, id, label, cosine), rank <= k.
     """
@@ -331,7 +334,7 @@ def _self_retrieval_topk(
     #    any row more than 1e-6 below the k-th raw value has a strictly
     #    smaller round6 key than k better rows and can never rank <= k;
     #    NaN cosines are capped at the k smallest ids (`_superset_keep`);
-    # 4. the JVM applies the ORIGINAL round(cosine, order_round) to the
+    # 4. the JVM applies the ORIGINAL round(cosine, 6) to the
     #    (exactly transported) raw doubles and ranks the small kept set
     #    with the original window — identical keys, identical ties,
     #    identical output rows.
@@ -388,7 +391,6 @@ def _self_retrieval_topk(
     for j in range(n_dim):
         q_norm_acc = q_norm_acc + qm[:, j] * qm[:, j]
     q_norms = np.sqrt(q_norm_acc)
-    slack = 1.01e-6 if order_round == 6 else 1.01 * 10.0 ** (-order_round)
     diff_only = different_label_only
     kk = k
 
@@ -420,7 +422,7 @@ def _self_retrieval_topk(
                 # pair the JVM path excludes.
                 row_c, q_c = codes[:nb, None], codes[nb:][None, :]
                 valid &= (row_c != q_c) & (row_c != -1) & (q_c != -1)
-            rows, qcols = np.nonzero(_superset_keep(cos, valid, ids, kk, slack))
+            rows, qcols = np.nonzero(_superset_keep(cos, valid, ids, kk, 1.01e-6))
             if rows.size == 0:
                 continue
             yield pd.DataFrame(
@@ -455,7 +457,7 @@ def _self_retrieval_topk(
         kept.withColumn(
             "cosine",
             F.round(
-                F.coalesce(F.col("_raw"), F.lit(float("nan"))), order_round
+                F.coalesce(F.col("_raw"), F.lit(float("nan"))), 6
             ),
         )
         .select("query_id", "id", "cosine")
@@ -480,7 +482,6 @@ def retrieval_eval(
     k: int = 10,
     query_rate: float = 0.1,
     seed: int = 5,
-    order_round: int = 6,
     max_queries: int | None = 65536,
 ) -> DataFrame:
     """Embedding-retrieval quality evaluation: label-match recall@k,
@@ -500,7 +501,7 @@ def retrieval_eval(
     tiebreaks, fixed-dp output).
     """
     top = _self_retrieval_topk(
-        df, vec_col, id_col, label_col, k, query_rate, seed, order_round,
+        df, vec_col, id_col, label_col, k, query_rate, seed,
         max_queries=max_queries,
     )
     hit = (F.col("label") == F.col("query_label")).cast("int")
@@ -531,7 +532,6 @@ def hard_negatives(
     k: int = 5,
     query_rate: float = 0.1,
     seed: int = 5,
-    order_round: int = 6,
     max_queries: int | None = 65536,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: per sampled query,
@@ -546,6 +546,6 @@ def hard_negatives(
     id, label, cosine).
     """
     return _self_retrieval_topk(
-        df, vec_col, id_col, label_col, k, query_rate, seed, order_round,
+        df, vec_col, id_col, label_col, k, query_rate, seed,
         different_label_only=True, max_queries=max_queries,
     ).withColumnRenamed("rank", "neg_rank")

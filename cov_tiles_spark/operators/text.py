@@ -159,11 +159,10 @@ def _dup_frac(arr: Column) -> Column:
     )
 
 
-def repetition_stats(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Intra-document repetition signals (Gopher/C4-family quality
-    filters): duplicate word / 2-gram / 5-gram fractions per document.
+    filters): duplicate word / 2-gram / 5-gram fractions of each
+    ``doc_id``'s ``text``.
 
     Entirely map-side — ``split`` + array lambdas + ``array_distinct``
     per row, ZERO shuffles — so at 100 TB this is a pure scan the
@@ -177,14 +176,14 @@ def repetition_stats(
     # the split re-executed once per gram element (~350x per doc) —
     # measured 81s -> ~1s at sf0.1 for identical output. Still map-only:
     # chained narrow selects, no exchange (plan-pinned).
-    t = F.trim(F.col(text_col))
+    t = F.trim(F.col("text"))
     words_e = F.split(t, r"\s+")
-    staged = df.select(F.col(id_col), t.alias("_t"), words_e.alias("_w"))
+    staged = df.select("doc_id", t.alias("_t"), words_e.alias("_w"))
     n = F.when(F.length("_t") == 0, F.lit(0)).otherwise(F.size("_w"))
-    staged = staged.select(id_col, F.col("_w"), n.alias("_n"))
+    staged = staged.select("doc_id", F.col("_w"), n.alias("_n"))
     words, nn = F.col("_w"), F.col("_n")
     staged = staged.select(
-        id_col,
+        "doc_id",
         "_n",
         F.when(nn > 0, words).otherwise(
             F.array().cast("array<string>")
@@ -193,7 +192,7 @@ def repetition_stats(
         _word_ngrams(words, nn, 5).alias("_g5"),
     )
     return staged.select(
-        F.col(id_col),
+        "doc_id",
         F.col("_n").cast("long").alias("n_words"),
         _dup_frac(F.col("_wa")).alias("dup_word_frac"),
         _dup_frac(F.col("_g2")).alias("dup_2gram_frac"),

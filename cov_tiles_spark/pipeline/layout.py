@@ -76,16 +76,15 @@ def hilbert_key_udf(bits: int = DEFAULT_BITS):
 def cluster_write(
     df: DataFrame,
     path: str,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
     bits: int = DEFAULT_BITS,
     prefix_bits: int = DEFAULT_PREFIX_BITS,
     n_partitions: int = 32,
     row_group_bytes: int = 1 << 20,
     tiebreak_col: str | None = None,
 ) -> None:
-    """Write ``df`` Hilbert-clustered: ``hprefix`` directory partitions,
-    ``hkey``-sorted rows (tight row-group min/max stats) inside each.
+    """Write ``df`` Hilbert-clustered on its ``lon``/``lat`` columns:
+    ``hprefix`` directory partitions, ``hkey``-sorted rows (tight
+    row-group min/max stats) inside each.
 
     ``row_group_bytes`` is deliberately small by default so the skipping
     behavior is observable at test scale; production corpora should use
@@ -102,7 +101,7 @@ def cluster_write(
         raise ValueError(f"prefix_bits {prefix_bits} must be < bits {bits}")
     shift = 2 * (bits - prefix_bits)
     keyed = df.withColumn(
-        KEY_COL, hilbert_key_udf(bits)(F.col(lon_col), F.col(lat_col))
+        KEY_COL, hilbert_key_udf(bits)(F.col("lon"), F.col("lat"))
     ).withColumn(PREFIX_COL, F.shiftright(F.col(KEY_COL), shift))
     # One range exchange on the fine key: each output task owns a
     # contiguous curve interval, so it spans few prefix directories and
@@ -175,15 +174,14 @@ def bbox_scan(
     spark: SparkSession,
     path: str,
     bbox: tuple[float, float, float, float],
-    lon_col: str = "lon",
-    lat_col: str = "lat",
     bits: int = DEFAULT_BITS,
     prefix_bits: int = DEFAULT_PREFIX_BITS,
     direct_listing: bool = False,
 ) -> DataFrame:
     """Read only the bbox's footprint of a :func:`cluster_write` layout.
 
-    Returns the exact bbox rows (boundary-inclusive) with the two index
+    Returns the exact bbox rows (boundary-inclusive on ``lon``/``lat``)
+    with the two index
     columns still attached (callers project them away; keeping them lets
     tests assert the pruning plan).
 
@@ -230,9 +228,9 @@ def bbox_scan(
         key_pred = k if key_pred is None else (key_pred | k)
     lon_min, lat_min, lon_max, lat_max = bbox
     exact = (
-        (F.col(lon_col) >= lon_min)
-        & (F.col(lon_col) <= lon_max)
-        & (F.col(lat_col) >= lat_min)
-        & (F.col(lat_col) <= lat_max)
+        (F.col("lon") >= lon_min)
+        & (F.col("lon") <= lon_max)
+        & (F.col("lat") >= lat_min)
+        & (F.col("lat") <= lat_max)
     )
     return df.filter(prefix_pred).filter(key_pred).filter(exact)

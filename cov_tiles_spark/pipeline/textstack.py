@@ -53,7 +53,6 @@ def prepare_text_corpus(
     eval_set: DataFrame | None = None,
     lm_train: DataFrame | None = None,
     max_log_ppl: float = 4.0,
-    min_quality: float = 0.0,
     sample_rate: float = 1.0,
     sample_seed: int = 1,
 ) -> DataFrame:
@@ -69,7 +68,7 @@ def prepare_text_corpus(
        ``min_tokens_after_dedup`` tokens drop (C4 drops short docs);
     3. exact + near-dup doc dedup on the post-cut text (runs on the
        smallest possible corpus); non-canonical cluster members drop;
-    4. decontamination / quality / perplexity / sampling are pure
+    4. decontamination / perplexity / sampling are pure
        map-side prunes over the survivors (cheapest last: they don't
        reduce the pairwise stages' input, so they run after them only
        if contamination must not influence dedup keepers — the
@@ -105,8 +104,6 @@ def prepare_text_corpus(
         ).drop("is_contaminated")
 
     out = out.withColumn("quality", quality_score(F.col(text_col)))
-    if min_quality > 0.0:
-        out = out.filter(F.col("quality") >= min_quality)
 
     if lm_train is not None:
         big, uni, total = ngram_lm_counts(lm_train, text_col, id_col)

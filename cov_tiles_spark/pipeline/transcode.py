@@ -275,7 +275,6 @@ def covt_to_mvt(
     *,
     genb: bytes | None = None,
     tilejson: dict | None = None,
-    extent: int | dict[str, int] = 4096,
 ) -> bytes:
     """Reverse transcode: a COVT tile (gen-A bytes, or gen-B bytes +
     TileJSON sidecar) -> MVT bytes, completing the interop matrix (the
@@ -286,9 +285,8 @@ def covt_to_mvt(
     rings re-emit ClosePath; multipoints one MoveTo per point), so
     ``decode_mvt(covt_to_mvt(t)) == decode-features(t)`` exactly; MVT
     byte layout may differ from any original tile (command grouping is
-    not round-trip-preserved). ``extent`` is an int for all layers or a
-    per-layer dict (gen-A tiles do not store extent; gen-B callers can
-    pass the sidecar's value).
+    not round-trip-preserved). Every layer gets extent 4096 (gen-A
+    tiles do not store extent).
     """
     if (covt_bytes is None) == (genb is None):
         raise ValueError("pass exactly one of covt_bytes or genb")
@@ -315,8 +313,7 @@ def covt_to_mvt(
             }
             for f in lay.features()
         ]
-        ext = extent.get(name, 4096) if isinstance(extent, dict) else extent
-        layers.append((name, feats, ext))
+        layers.append((name, feats, 4096))
     return encode_mvt(layers)
 
 

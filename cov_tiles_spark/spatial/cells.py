@@ -33,23 +33,21 @@ HEX_EDGE_MERCATOR = 174.4 / 40_075_017.0
 _HEX_OFFSET = 1 << 24  # axial coords fit comfortably in 25 bits each
 
 
-def s2l13_cell_np(lon: np.ndarray, lat: np.ndarray, bits: int = S2_BITS) -> np.ndarray:
-    """Hilbert cell id on the mercator unit square, ``bits`` bits/dim."""
+def s2l13_cell_np(lon: np.ndarray, lat: np.ndarray) -> np.ndarray:
+    """Hilbert cell id on the mercator unit square, ``S2_BITS`` bits/dim."""
     mx, my = mercator_np(lon, lat)
-    n = 1 << bits
+    n = 1 << S2_BITS
     hx = np.clip((mx * n).astype(np.int64), 0, n - 1).astype(np.uint64)
     hy = np.clip((my * n).astype(np.int64), 0, n - 1).astype(np.uint64)
-    return hilbert_xy2d(bits, hx, hy).astype(np.int64)
+    return hilbert_xy2d(S2_BITS, hx, hy).astype(np.int64)
 
 
-def h3r9_cell_np(
-    lon: np.ndarray, lat: np.ndarray, edge: float = HEX_EDGE_MERCATOR
-) -> np.ndarray:
+def h3r9_cell_np(lon: np.ndarray, lat: np.ndarray) -> np.ndarray:
     """Hex cell id via axial coordinates + cube rounding (pointy-top)."""
     mx, my = mercator_np(lon, lat)
     # fractional axial coords
-    q = (np.sqrt(3.0) / 3.0 * mx - my / 3.0) / edge
-    r = (2.0 / 3.0 * my) / edge
+    q = (np.sqrt(3.0) / 3.0 * mx - my / 3.0) / HEX_EDGE_MERCATOR
+    r = (2.0 / 3.0 * my) / HEX_EDGE_MERCATOR
     # cube rounding
     x = q
     z = r
@@ -82,7 +80,6 @@ def cell_stats_rollup(
     cell_col: str,
     levels: list[int],
     value_col: str | None = None,
-    finest_bits: int = S2_BITS,
 ):
     """Hierarchical per-cell aggregates (hypertable-style continuous
     rollup): counts (+ optional value sums) at the finest level, coarser
@@ -94,23 +91,30 @@ def cell_stats_rollup(
     pre-aggregated rows (|cells| of the level below, not |records|),
     the same telescoping shape as the tile pyramid rollup. Returns
     ``(level, cell, n_points[, sum_value])`` for every requested level
-    (``levels`` descending, starting at ``finest_bits``).
+    (``levels`` strictly descending, starting at ``S2_BITS``).
     """
     from pyspark.sql import functions as F
 
-    assert sorted(levels, reverse=True) == levels and levels[0] == finest_bits
+    if (
+        not levels
+        or levels[0] != S2_BITS
+        or any(a <= b for a, b in zip(levels, levels[1:]))
+    ):
+        raise ValueError(
+            f"levels must descend strictly from {S2_BITS}: {levels!r}"
+        )
     aggs = [F.count("*").alias("n_points")]
     if value_col is not None:
         aggs.append(F.sum(value_col).alias("sum_value"))
     level = (
         df.groupBy(F.col(cell_col).alias("cell")).agg(*aggs)
-        .withColumn("level", F.lit(finest_bits))
+        .withColumn("level", F.lit(S2_BITS))
     )
     out_cols = ["level", "cell", "n_points"] + (
         ["sum_value"] if value_col is not None else []
     )
     out = [level.select(*out_cols)]
-    prev_bits = finest_bits
+    prev_bits = S2_BITS
     for bits in levels[1:]:
         re_aggs = [F.sum("n_points").alias("n_points")]
         if value_col is not None:

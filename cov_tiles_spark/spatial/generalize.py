@@ -447,8 +447,6 @@ def merge_lines(
     df: DataFrame,
     group_cols: "Sequence[str]",
     order_col: str,
-    xs_col: str = "xs",
-    ys_col: str = "ys",
 ) -> DataFrame:
     """Merge line fragments into chains per group (e.g. per tile+class).
 
@@ -466,8 +464,8 @@ def merge_lines(
         fields
         + [
             StructField("chain", IntegerType(), False),
-            StructField(xs_col, ArrayType(LongType()), True),
-            StructField(ys_col, ArrayType(LongType()), True),
+            StructField("xs", ArrayType(LongType()), True),
+            StructField("ys", ArrayType(LongType()), True),
             StructField("n_frags", IntegerType(), False),
             StructField("n_pts", IntegerType(), False),
         ]
@@ -491,7 +489,7 @@ def merge_lines(
 
         for pdf in batches:
             outs = []
-            for vals in zip(*(pdf[c] for c in gcols), pdf[xs_col], pdf[ys_col]):
+            for vals in zip(*(pdf[c] for c in gcols), pdf["xs"], pdf["ys"]):
                 key = tuple(vals[:-2])
                 if key != cur_key:
                     if cur_key is not None:
@@ -604,10 +602,10 @@ def simplify_mvt_layers(layers, tolerance: int, rings: bool = False):
 # ------------------------------------------------------- Spark operators
 
 
-def _out_schema(df: DataFrame, xs_col: str, ys_col: str) -> StructType:
+def _out_schema(df: DataFrame) -> StructType:
     fields = []
     for f in df.schema.fields:
-        if f.name in (xs_col, ys_col):
+        if f.name in ("xs", "ys"):
             fields.append(StructField(f.name, ArrayType(LongType()), True))
         else:
             fields.append(f)
@@ -619,32 +617,30 @@ def _out_schema(df: DataFrame, xs_col: str, ys_col: str) -> StructType:
 def simplify_lines(
     df: DataFrame,
     tolerance: int,
-    xs_col: str = "xs",
-    ys_col: str = "ys",
 ) -> DataFrame:
     """Simplify every polyline row with integer Douglas-Peucker.
 
     Map-only (no exchange): each Arrow batch is processed where it sits.
-    `xs_col`/`ys_col` are replaced with the surviving vertices; `n_in`
+    `xs`/`ys` are replaced with the surviving vertices; `n_in`
     and `n_out` count vertices before/after. Rows with < 3 vertices pass
     through unchanged.
     """
-    schema = _out_schema(df, xs_col, ys_col)
-    other = [f.name for f in df.schema.fields if f.name not in (xs_col, ys_col)]
+    schema = _out_schema(df)
+    other = [f.name for f in df.schema.fields if f.name not in ("xs", "ys")]
     tol = int(tolerance)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             new_xs, new_ys, n_in, n_out = [], [], [], []
-            for xs, ys in zip(pdf[xs_col], pdf[ys_col]):
+            for xs, ys in zip(pdf["xs"], pdf["ys"]):
                 sx, sy = simplify_polyline(list(xs), list(ys), tol)
                 new_xs.append(sx)
                 new_ys.append(sy)
                 n_in.append(len(xs))
                 n_out.append(len(sx))
             out = pdf[other].copy()
-            out[xs_col] = new_xs
-            out[ys_col] = new_ys
+            out["xs"] = new_xs
+            out["ys"] = new_ys
             out["n_in"] = pd.array(n_in, dtype="int32")
             out["n_out"] = pd.array(n_out, dtype="int32")
             yield out[[f.name for f in schema.fields]]
@@ -655,28 +651,26 @@ def simplify_lines(
 def simplify_rings(
     df: DataFrame,
     tolerance: int,
-    xs_col: str = "xs",
-    ys_col: str = "ys",
 ) -> DataFrame:
     """Ring (polygon) analogue of `simplify_lines` — map-only, replaces
     the vertex arrays with `simplify_ring` output (empty when the ring
     collapses), adds `n_in`/`n_out`."""
-    schema = _out_schema(df, xs_col, ys_col)
-    other = [f.name for f in df.schema.fields if f.name not in (xs_col, ys_col)]
+    schema = _out_schema(df)
+    other = [f.name for f in df.schema.fields if f.name not in ("xs", "ys")]
     tol = int(tolerance)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             new_xs, new_ys, n_in, n_out = [], [], [], []
-            for xs, ys in zip(pdf[xs_col], pdf[ys_col]):
+            for xs, ys in zip(pdf["xs"], pdf["ys"]):
                 sx, sy = simplify_ring(list(xs), list(ys), tol)
                 new_xs.append(sx)
                 new_ys.append(sy)
                 n_in.append(len(xs))
                 n_out.append(len(sx))
             out = pdf[other].copy()
-            out[xs_col] = new_xs
-            out[ys_col] = new_ys
+            out["xs"] = new_xs
+            out["ys"] = new_ys
             out["n_in"] = pd.array(n_in, dtype="int32")
             out["n_out"] = pd.array(n_out, dtype="int32")
             yield out[[f.name for f in schema.fields]]
@@ -687,8 +681,6 @@ def simplify_rings(
 def clip_lines(
     df: DataFrame,
     bounds: tuple[int, int, int, int],
-    xs_col: str = "xs",
-    ys_col: str = "ys",
 ) -> DataFrame:
     """Clip every polyline row to `bounds`, exploding into PARTS.
 
@@ -699,12 +691,12 @@ def clip_lines(
     Rows that clip away entirely emit no output rows.
     """
     x0, y0, x1, y1 = (int(v) for v in bounds)
-    other = [f for f in df.schema.fields if f.name not in (xs_col, ys_col)]
+    other = [f for f in df.schema.fields if f.name not in ("xs", "ys")]
     schema = StructType(
         [*other,
          StructField("part", IntegerType(), False),
-         StructField(xs_col, ArrayType(LongType()), True),
-         StructField(ys_col, ArrayType(LongType()), True),
+         StructField("xs", ArrayType(LongType()), True),
+         StructField("ys", ArrayType(LongType()), True),
          StructField("n_in", IntegerType(), False),
          StructField("n_pts", IntegerType(), False)]
     )
@@ -715,7 +707,7 @@ def clip_lines(
         for pdf in batches:
             rows: list[tuple] = []
             others = [pdf[c] for c in other_names]
-            for vals in zip(pdf[xs_col], pdf[ys_col], *others):
+            for vals in zip(pdf["xs"], pdf["ys"], *others):
                 xs, ys = list(vals[0]), list(vals[1])
                 for p, (px, py) in enumerate(
                     clip_polyline(xs, ys, x0, y0, x1, y1)
@@ -734,24 +726,22 @@ def clip_lines(
 def clip_rings(
     df: DataFrame,
     bounds: tuple[int, int, int, int],
-    xs_col: str = "xs",
-    ys_col: str = "ys",
 ) -> DataFrame:
     """Clip every ring row to `bounds` = (x0, y0, x1, y1).
 
-    Map-only. `xs_col`/`ys_col` are replaced with the clipped ring
+    Map-only. `xs`/`ys` are replaced with the clipped ring
     (empty arrays when fully outside); adds `n_in`, `n_out`, and
     `area2` (twice the signed shoelace area of the clipped ring).
     """
     x0, y0, x1, y1 = (int(v) for v in bounds)
-    base = _out_schema(df, xs_col, ys_col)
+    base = _out_schema(df)
     schema = StructType(base.fields + [StructField("area2", LongType(), False)])
-    other = [f.name for f in df.schema.fields if f.name not in (xs_col, ys_col)]
+    other = [f.name for f in df.schema.fields if f.name not in ("xs", "ys")]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             new_xs, new_ys, n_in, n_out, areas = [], [], [], [], []
-            for xs, ys in zip(pdf[xs_col], pdf[ys_col]):
+            for xs, ys in zip(pdf["xs"], pdf["ys"]):
                 cx, cy = clip_ring(list(xs), list(ys), x0, y0, x1, y1)
                 new_xs.append(cx)
                 new_ys.append(cy)
@@ -759,8 +749,8 @@ def clip_rings(
                 n_out.append(len(cx))
                 areas.append(ring_area2(cx, cy))
             out = pdf[other].copy()
-            out[xs_col] = new_xs
-            out[ys_col] = new_ys
+            out["xs"] = new_xs
+            out["ys"] = new_ys
             out["n_in"] = pd.array(n_in, dtype="int32")
             out["n_out"] = pd.array(n_out, dtype="int32")
             out["area2"] = pd.array(areas, dtype="int64")

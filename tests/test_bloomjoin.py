@@ -96,47 +96,3 @@ def test_bloom_cap_binding_logs_fpp_and_stays_exact(spark, caplog, monkeypatch):
     want = sorted(r["k"] for r in big.join(small, "k", "left_semi").collect())
     assert got == want
 
-
-def test_blocked_bloom_no_false_negatives_and_fpp(spark):
-    """Register-blocked variant at the SAME memory as the flat filter:
-    zero false negatives, measured fpp <= 2x the flat theoretical
-    (the documented block-occupancy-variance penalty; Putze et al.)."""
-    import math
-
-    n, m, k = 20_000, 1 << 18, 7
-    small = spark.createDataFrame([(int(i),) for i in range(n)], "k long")
-    bloom = build_bloom(small, "k", num_bits=m, num_hashes=k, blocked=True)
-    members = bloom_filter_rows(
-        small, "k", bloom, num_bits=m, num_hashes=k, blocked=True
-    ).count()
-    assert members == n  # no false negatives
-    probes = spark.createDataFrame(
-        [(int(i),) for i in range(n, n + 50_000)], "k long"
-    )
-    fp = bloom_filter_rows(
-        probes, "k", bloom, num_bits=m, num_hashes=k, blocked=True
-    ).count()
-    theo = (1.0 - math.exp(-k * n / m)) ** k
-    assert fp / 50_000 <= 2.0 * theo, (fp / 50_000, theo)
-
-
-def test_blocked_semi_join_exact_when_cap_binds(spark, monkeypatch):
-    """Cap-binding corpus through the blocked path: output must equal
-    the plain semi-join (the gate's flat path stays the default)."""
-    import cov_tiles_spark.operators.bloomjoin as bj
-
-    monkeypatch.setattr(bj, "_MAX_BITS", 1 << 14)
-    rng = np.random.default_rng(23)
-    big = spark.createDataFrame(
-        [(int(x),) for x in rng.integers(0, 100_000, 30_000)], "k long"
-    )
-    small = spark.createDataFrame(
-        [(int(x),) for x in rng.choice(100_000, 8_000, replace=False)],
-        "k long",
-    )
-    got = sorted(
-        r["k"]
-        for r in bj.bloom_semi_join(big, small, "k", blocked=True).collect()
-    )
-    want = sorted(r["k"] for r in big.join(small, "k", "left_semi").collect())
-    assert got == want

@@ -10,7 +10,9 @@
   scripts import is not part of the gated core.
 - Every ``from cov_tiles_spark... import name`` in those roots and in
   ``scripts/`` resolves, so deleting a def cannot leave a script that
-  fails only when it runs."""
+  fails only when it runs.
+- Every defaulted parameter of a package def is set by some call: a
+  default nothing overrides is a constant, not an option."""
 
 from __future__ import annotations
 
@@ -103,6 +105,83 @@ def unreachable_defs(root: Path = ROOT) -> list[str]:
         for seg in reached:
             live |= seg[2]
     return [f"{f}:{n} {q}" for f, n, q in sorted(w for _, w, _ in segments if w)]
+
+
+def _callee(call: ast.Call) -> str | None:
+    f = call.func
+    if isinstance(f, ast.Name):
+        return f.id
+    return f.attr if isinstance(f, ast.Attribute) else None
+
+
+def unset_params(root: Path = ROOT) -> list[str]:
+    """Defaulted parameters of package defs that no call sets.
+
+    Calls are read from the package, the entry, ``bench*.py``,
+    ``perfbench/``, ``scripts/`` and ``tests/``: a default that only a
+    test overrides is a test seam and stays. A call sets a parameter by
+    keyword, by passing more positional arguments than precede it, or
+    through ``*args``/``**kw``, which may set any of them. As in
+    :func:`unreachable_defs` the match is by name: a call to ``f`` or
+    ``x.f`` counts for every def named ``f``, a call to ``C`` for
+    ``C.__init__``, and a method's ``self``/``cls`` takes no position."""
+    srcs = [root / "__spark_entry__.py", *sorted(root.glob("bench*.py"))]
+    for d in ("cov_tiles_spark", "perfbench", "scripts", "tests"):
+        srcs += sorted((root / d).rglob("*.py"))
+    n_pos: dict[str, int] = {}
+    keywords: dict[str, set[str]] = {}
+    starred: set[str] = set()
+    for p in srcs:
+        if not p.exists():
+            continue
+        for call in ast.walk(ast.parse(p.read_text(encoding="utf-8"))):
+            if not isinstance(call, ast.Call) or (name := _callee(call)) is None:
+                continue
+            if any(isinstance(a, ast.Starred) for a in call.args) or any(
+                k.arg is None for k in call.keywords
+            ):
+                starred.add(name)
+            n_pos[name] = max(n_pos.get(name, 0), len(call.args))
+            keywords.setdefault(name, set()).update(
+                k.arg for k in call.keywords if k.arg
+            )
+    out = []
+    for path in sorted((root / "cov_tiles_spark").rglob("*.py")):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        owner = {
+            id(m): c.name
+            for c in ast.walk(tree) if isinstance(c, ast.ClassDef)
+            for m in c.body
+        }
+        for fn in ast.walk(tree):
+            if not isinstance(fn, _FUNCS):
+                continue
+            names = {fn.name}
+            args = fn.args
+            pos = args.posonlyargs + args.args
+            static = any(
+                isinstance(d, ast.Name) and d.id == "staticmethod"
+                for d in fn.decorator_list
+            )
+            if id(fn) in owner and not static:
+                pos = pos[1:]
+                if fn.name == "__init__":
+                    names.add(owner[id(fn)])
+            first = len(pos) - len(args.defaults)
+            params = [(a.arg, i) for i, a in enumerate(pos) if i >= first]
+            params += [
+                (a.arg, None)
+                for a, d in zip(args.kwonlyargs, args.kw_defaults) if d is not None
+            ]
+            for arg, i in params:
+                if not any(
+                    n in starred
+                    or arg in keywords.get(n, ())
+                    or (i is not None and n_pos.get(n, 0) > i)
+                    for n in names
+                ):
+                    out.append(f"{path.relative_to(root)}:{fn.lineno} {fn.name}({arg})")
+    return out
 
 
 def _module_name(root: Path, path: Path) -> str:
@@ -220,6 +299,49 @@ def test_def_scan_follows_attribute_calls_into_methods(tmp_path):
         "cov_tiles_spark/lake.py:14 Lake.rollback",
         "cov_tiles_spark/lake.py:17 Lake._undo",
     ]
+
+
+def test_every_defaulted_parameter_is_set_somewhere():
+    """A default no call overrides is a constant; inline it."""
+    assert unset_params() == []
+
+
+def test_param_scan_flags_an_unset_default(tmp_path):
+    """Setting a same-named parameter of another def, or naming the
+    parameter in a docstring, does not count."""
+    root = _tree(tmp_path, {
+        "cov_tiles_spark/mod.py": (
+            "def f(x, a=1, *, b=2):\n"
+            '    """Pass ``b`` to change nothing."""\n'
+            "    return x + a + b\n\n\n"
+            "def g(b=3):\n    return b\n"
+        ),
+        "bench.py": "from cov_tiles_spark.mod import f, g\n\nf(1, 2)\ng(b=4)\n",
+    })
+    assert unset_params(root) == ["cov_tiles_spark/mod.py:1 f(b)"]
+
+
+def test_param_scan_keeps_defaults_set_by_test_position_or_kw(tmp_path):
+    """A default set only by a test, only by position (a constructor's
+    ``self`` takes none) or only through ``**kw`` is kept."""
+    root = _tree(tmp_path, {
+        "cov_tiles_spark/mod.py": (
+            "def by_test(x, a=1):\n    return x + a\n\n\n"
+            "def by_position(x, a=1):\n    return x + a\n\n\n"
+            "def by_kw(x, a=1):\n    return x + a\n\n\n"
+            "class Box:\n"
+            "    def __init__(self, a=1):\n        self.a = a\n"
+        ),
+        "tests/test_mod.py": (
+            "from cov_tiles_spark.mod import by_test\n\n\n"
+            "def test_it():\n    assert by_test(1, a=2) == 3\n"
+        ),
+        "bench.py": (
+            "from cov_tiles_spark.mod import Box, by_kw, by_position\n\n"
+            "by_position(1, 2)\nby_kw(1, **{'a': 2})\nBox(2)\n"
+        ),
+    })
+    assert unset_params(root) == []
 
 
 def _package_imports(src: str) -> list[tuple[str, str, int]]:

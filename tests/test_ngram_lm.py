@@ -128,20 +128,3 @@ class TestLmScore:
               for r in lm_score(score, *rm, "text", "doc_id").collect()}
         for did in w:
             assert w[did] == pytest.approx(lt[did] - lr[did], abs=1e-12)
-
-    def test_shuffle_join_mode_same_result(self, spark):
-        train = spark.createDataFrame(TRAIN, "doc_id long, text string")
-        score = spark.createDataFrame(SCORE, "doc_id long, text string")
-        big, uni, total = ngram_lm_counts(train, "text", "doc_id")
-        a = sorted(
-            lm_score(score, big, uni, total, "text", "doc_id").collect()
-        )
-        b = sorted(
-            lm_score(
-                score, big, uni, total, "text", "doc_id",
-                broadcast_model=False,
-            ).collect()
-        )
-        assert [r["doc_id"] for r in a] == [r["doc_id"] for r in b]
-        for x, y in zip(a, b):
-            assert x["logprob"] == pytest.approx(y["logprob"], rel=1e-12)

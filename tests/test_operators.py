@@ -154,17 +154,18 @@ def test_lsh_bucket_cap_bounds_degenerate_corpus(spark, caplog):
 
     # simhash collapses identical texts to ONE distinct signature, so the
     # degenerate corpus never even forms a big bucket; identical pairs are
-    # emitted via the hamming-0 path — "star" keeps it linear (n-1 rows
-    # per identical group) instead of the oracle-exact quadratic listing
+    # emitted via the hamming-0 path, which lists every pair of an
+    # identical group (the oracle contract, quadratic in the group size:
+    # 1.25e9 pairs for all 50k copies, so this half keeps 200 of them)
+    n_ident = 200
     spairs = simhash_near_dups(
-        corpus, "text", "doc_id", max_hamming=0, max_bucket_size=100,
-        identical_pairs="star",
+        corpus.filter(F.col("doc_id") < 10_000_000 + n_ident),
+        "text", "doc_id", max_hamming=0, max_bucket_size=100,
     ).collect()
     sgot = {(r.id_a, r.id_b) for r in spairs}
     assert (1, 2) in sgot
     junk_pairs = {(a, b) for a, b in sgot if a >= 10_000_000}
-    assert len(junk_pairs) == n_degenerate - 1
-    assert all(a == 10_000_000 for a, _ in junk_pairs)  # star centre = min id
+    assert len(junk_pairs) == n_ident * (n_ident - 1) // 2
 
     # the dropped identical docs are exactly what exact_dedup catches
     exact = exact_dedup(corpus, "text", "doc_id").collect()
@@ -243,29 +244,46 @@ def test_retrieval_eval_matches_numpy_twin(spark):
         ).collect()
     }
 
-    # replicate the deterministic query sample
-    qids = [
-        r.vec_id
-        for r in df.select("vec_id")
-        .filter(sample_hash(F.col("vec_id"), 5) < F.lit(threshold(0.2)))
+    # replicate the deterministic query sample, in (hash, id) order
+    sample = sorted(
+        (r.h, r.vec_id)
+        for r in df.select("vec_id", sample_hash(F.col("vec_id"), 5).alias("h"))
+        .filter(F.col("h") < F.lit(threshold(0.2)))
         .collect()
-    ]
-    top = _np_self_topk(rows, qids, 10)
-    agg = {}
-    for qid in qids:
-        qlabel = qid % 5
-        ranks = [i + 1 for i, (_, lab, _) in enumerate(top[qid]) if lab == qlabel]
-        agg.setdefault(qlabel, []).append(
-            (1 if ranks else 0, len(ranks) / 10.0, 1.0 / ranks[0] if ranks else 0.0)
-        )
-    for lab, triples in agg.items():
-        n = len(triples)
-        assert got[lab].n_queries == n
-        assert got[lab].recall_at_k == round(sum(t[0] for t in triples) / n, 6)
-        assert got[lab].precision_at_k == round(sum(t[1] for t in triples) / n, 6)
-        assert got[lab].mrr == round(sum(t[2] for t in triples) / n, 6)
+    )
+
+    def check(got, qids):
+        top = _np_self_topk(rows, qids, 10)
+        agg = {}
+        for qid in qids:
+            qlabel = qid % 5
+            ranks = [i + 1 for i, (_, lab, _) in enumerate(top[qid]) if lab == qlabel]
+            agg.setdefault(qlabel, []).append(
+                (1 if ranks else 0, len(ranks) / 10.0, 1.0 / ranks[0] if ranks else 0.0)
+            )
+        assert set(got) == set(agg)
+        for lab, triples in agg.items():
+            n = len(triples)
+            assert got[lab].n_queries == n
+            assert got[lab].recall_at_k == round(sum(t[0] for t in triples) / n, 6)
+            assert got[lab].precision_at_k == round(sum(t[1] for t in triples) / n, 6)
+            assert got[lab].mrr == round(sum(t[2] for t in triples) / n, 6)
+
+    check(got, [i for _, i in sample])
     # tight clusters: same-label neighbors dominate
     assert all(r.recall_at_k == 1.0 and r.mrr == 1.0 for r in got.values())
+
+    # the max_queries memory bound keeps the sample's 7 smallest
+    # (hash, id) queries
+    assert len(sample) > 7
+    capped = {
+        r.label: r
+        for r in retrieval_eval(
+            df, "embedding", "vec_id", "label", k=10, query_rate=0.2, seed=5,
+            max_queries=7,
+        ).collect()
+    }
+    check(capped, [i for _, i in sample[:7]])
 
 
 def test_hard_negatives_exact_and_partitioning_independent(spark):
@@ -856,8 +874,7 @@ def test_self_retrieval_topk_zero_norm_matches_window_oracle(spark):
     k = 4
     got = (
         _self_retrieval_topk(
-            df, "embedding", "vec_id", "label", k, query_rate=1.0, seed=5,
-            order_round=6,
+            df, "embedding", "vec_id", "label", k, query_rate=1.0, seed=5
         )
         .toPandas()
         .sort_values(["query_id", "rank"])

@@ -206,7 +206,7 @@ def _aspect_py(rows, buckets, batch_size, num_shards, seed=0):
 
 def test_aspect_buckets_matches_python_twin(spark):
     from cov_tiles_spark.operators.packing import (
-        DEFAULT_ASPECT_BUCKETS,
+        ASPECT_BUCKETS,
         aspect_buckets,
     )
 
@@ -231,7 +231,7 @@ def test_aspect_buckets_matches_python_twin(spark):
         (i, (16, 32, 64)[i % 3], (16, 32, 48)[(i // 3) % 3])
         for i in range(2000)
     ]
-    assert got == _aspect_py(rows, DEFAULT_ASPECT_BUCKETS, 8, 4)
+    assert got == _aspect_py(rows, ASPECT_BUCKETS, 8, 4)
 
 
 def test_aspect_buckets_batches_well_formed(spark):

@@ -164,8 +164,8 @@ def test_span_dedup_windows_computed_once(spark):
 
 
 def test_lm_score_model_joins_broadcast(spark):
-    """lm_score(broadcast_model=True): all three count-table joins must
-    be broadcast (map-side scoring — the CCNet regime)."""
+    """lm_score: all three count-table joins must be broadcast (map-side
+    scoring — the CCNet regime)."""
     from cov_tiles_spark.operators.ngram_lm import lm_score, ngram_lm_counts
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")

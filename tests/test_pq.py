@@ -33,6 +33,13 @@ def corpus(spark):
     return x, df, cb
 
 
+def test_pq_train_rejects_dim_not_divisible_by_m(corpus):
+    """Raised, not asserted: ``python -O`` strips asserts."""
+    _, df, _ = corpus
+    with pytest.raises(ValueError, match="divide evenly"):
+        pq_train(df, "embedding", "vec_id", DIM, m=5, nbits=NBITS)
+
+
 def test_codebook_shape_and_code_width(corpus):
     x, df, cb = corpus
     assert cb.shape == (M, 1 << NBITS, SUB)

@@ -6,11 +6,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from cov_tiles_spark.operators.semdedup import (
-    _prune_cluster,
-    semantic_dedup,
-    spherical_kmeans,
-)
+from cov_tiles_spark.operators.semdedup import _prune_cluster, semantic_dedup
+from cov_tiles_spark.operators.similarity import spherical_kmeans
 
 
 def _clustered_corpus(n_clusters=4, per=40, dim=16, dups_per=5, seed=3):

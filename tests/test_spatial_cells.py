@@ -37,3 +37,16 @@ def test_cell_stats_rollup_equals_direct(spark):
     n9 = sum(1 for k in got if k[0] == 9)
     assert n9 < n13
     df.unpersist()
+
+
+def test_cell_stats_rollup_rejects_levels_not_descending_from_s2_bits(spark):
+    """Raised, not asserted (``python -O`` strips asserts); a repeated
+    level would emit that level twice."""
+    import pytest
+
+    from cov_tiles_spark.spatial.cells import cell_stats_rollup
+
+    df = spark.createDataFrame([(1,)], "cell long")
+    for levels in ([13, 13], [13, 9, 11], [11, 9], []):
+        with pytest.raises(ValueError, match="descend strictly"):
+            cell_stats_rollup(df, "cell", levels)
