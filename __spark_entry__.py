@@ -1056,7 +1056,7 @@ def q_semantic_dedup(spark, sf_dir):
     planted = emb.select((F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding")
     corpus = emb.select("vec_id", "embedding").unionAll(planted)
     return semantic_dedup(
-        corpus, "embedding", "vec_id", dim=64, n_centroids=8, threshold=0.95
+        corpus, "embedding", "vec_id", n_centroids=8, threshold=0.95
     ).select(
         F.col("id").alias("vec_id"), "list_id", "is_kept"
     ).orderBy("vec_id")
@@ -1261,25 +1261,12 @@ def q_resize(spark, sf_dir):
     sums), re-encoded in its own format — md5 of the resized payload
     compared against an independent scalar per-output-pixel loop
     implementation (scripts/build_oracles.py)."""
-    import hashlib
-
-    import pandas as pd
-
     from cov_tiles_spark.io.synth import images_df
     from cov_tiles_spark.operators.av import resize_images
 
-    def _digest(batches):
-        for pdf in batches:
-            out = pdf[["image_id", "fmt", "w", "h"]].copy()
-            out["resized_md5"] = [
-                hashlib.md5(bytes(b)).hexdigest() for b in pdf["bytes"]
-            ]
-            yield out
-
     small = resize_images(images_df(spark, 300, partitions=8), 12, 10)
-    return small.mapInPandas(
-        _digest,
-        schema="image_id string, fmt string, w int, h int, resized_md5 string",
+    return small.select(
+        "image_id", "fmt", "w", "h", F.md5("bytes").alias("resized_md5")
     ).orderBy("image_id")
 
 
@@ -2479,10 +2466,12 @@ def q_overzoom(spark, sf_dir):
     the twin computes z5 assignment directly from events; coordinates
     carry parent quantization and are excluded (pinned within 1 unit by
     pytest)."""
+    from cov_tiles_spark.covt.decoder import decode_covt
     from cov_tiles_spark.pipeline.materialize import (
         assign_tiles, encode_assigned,
     )
     from cov_tiles_spark.pipeline.overzoom import overzoom_tiles
+    from cov_tiles_spark.rows import map_rows
 
     imgs = _events_images_fast(spark, sf_dir)
     parents = encode_assigned(
@@ -2491,25 +2480,15 @@ def q_overzoom(spark, sf_dir):
     )
     kids = overzoom_tiles(parents)
 
-    def explode_ids(batches):
-        from cov_tiles_spark.covt.decoder import decode_covt as _dec
-        import pandas as pd
+    def explode_ids(payload):
+        return [
+            (int(fid),)
+            for lay in decode_covt(bytes(payload)).values() for fid in lay.ids
+        ]
 
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                for lay in _dec(bytes(row["payload"])).values():
-                    for fid in lay.ids:
-                        rows.append(
-                            {"z": row["z"], "x": row["x"], "y": row["y"],
-                             "feature_id": int(fid)}
-                        )
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                columns=["z", "x", "y", "feature_id"]
-            )
-
-    return kids.mapInPandas(
-        explode_ids, schema="z int, x int, y int, feature_id long"
+    return map_rows(
+        kids, "z int, x int, y int, feature_id long", ("payload",),
+        ("feature_id",), explode_ids,
     ).orderBy("z", "x", "y", "feature_id")
 
 
@@ -3508,7 +3487,7 @@ def q_ivf_topk(spark, sf_dir):
 
     emb = _t(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 1).select("embedding").collect()[0][0]
-    cents = ivf_train_centroids(emb, "embedding", "vec_id", dim=64, n_centroids=8)
+    cents = ivf_train_centroids(emb, "embedding", "vec_id", n_centroids=8)
     return (
         ivf_topk(
             emb, "embedding", "vec_id", list(qvec), 10, cents,
@@ -3639,66 +3618,39 @@ def q_image_invariants(spark, sf_dir):
       exact integer squared-error sum, so psnr>=40 is the precise integer
       inequality sq_err * 10^4 <= 255^2 * n_subpx on both engines.
 
-    Decode / re-encode / hash run vectorized inside one ``mapInPandas``
-    pass (no per-row Python at the Spark API surface; numpy kernels per
-    Arrow batch). Oracle: independent single-node scalar implementation
-    (scripts/build_oracles.py) -> committed parquet.
+    Decode / re-encode / hash run once per row inside one ``mapInPandas``
+    pass (numpy kernels per image). Oracle: independent single-node
+    scalar implementation (scripts/build_oracles.py) -> committed parquet.
     """
     import hashlib
 
     import numpy as np
-    import pandas as pd
 
     from cov_tiles_spark.io.synth import images_df
+    from cov_tiles_spark.operators.images import (
+        decode_image, encode_image, hamming64, phash64,
+    )
+    from cov_tiles_spark.rows import map_rows
 
-    def _check(batches):
-        from cov_tiles_spark.operators.images import (
-            decode_image, encode_image, hamming64, phash64,
-        )
+    def _check(data, w, h, fmt, phash):
+        data = bytes(data)
+        px = decode_image(data, int(w), int(h), fmt)
+        dist = int(hamming64(np.array([phash64(px)]), np.array([phash]))[0])
+        lossy = decode_image(encode_image(px, "dct40"), int(w), int(h), "dct40")
+        sq = int(((px.astype(np.int64) - lossy.astype(np.int64)) ** 2).sum())
+        md5 = hashlib.md5(data).hexdigest()
+        return [(dist, md5, sq, px.size, sq * 10_000 <= 255 * 255 * px.size)]
 
-        for pdf in batches:
-            n = len(pdf)
-            md5s = []
-            dists = np.empty(n, dtype=np.int32)
-            sq = np.empty(n, dtype=np.int64)
-            npx = np.empty(n, dtype=np.int64)
-            for j in range(n):
-                row = pdf.iloc[j]
-                data = bytes(row["bytes"])
-                md5s.append(hashlib.md5(data).hexdigest())
-                px = decode_image(data, int(row["w"]), int(row["h"]), row["fmt"])
-                re_ph = phash64(px)
-                dists[j] = int(hamming64(np.array([re_ph]), np.array([row["phash"]]))[0])
-                lossy = decode_image(
-                    encode_image(px, "dct40"), int(row["w"]), int(row["h"]), "dct40"
-                )
-                sq[j] = int(
-                    ((px.astype(np.int64) - lossy.astype(np.int64)) ** 2).sum()
-                )
-                npx[j] = px.size
-            yield pd.DataFrame(
-                {
-                    "image_id": pdf["image_id"],
-                    "fmt": pdf["fmt"],
-                    "w": pdf["w"],
-                    "h": pdf["h"],
-                    "caption": pdf["caption"],
-                    "phash": pdf["phash"],
-                    "phash_dist": dists,
-                    "payload_md5": md5s,
-                    "sq_err": sq,
-                    "n_subpx": npx,
-                    "psnr40_ok": sq * 10_000 <= 255 * 255 * npx,
-                }
-            )
-
-    imgs = images_df(spark, N_IMAGES, partitions=8)
     out_schema = (
         "image_id string, fmt string, w int, h int, caption string, "
         "phash long, phash_dist int, payload_md5 string, sq_err long, "
         "n_subpx long, psnr40_ok boolean"
     )
-    return imgs.mapInPandas(_check, schema=out_schema).orderBy("image_id")
+    return map_rows(
+        images_df(spark, N_IMAGES, partitions=8), out_schema,
+        ("bytes", "w", "h", "fmt", "phash"),
+        ("phash_dist", "payload_md5", "sq_err", "n_subpx", "psnr40_ok"), _check,
+    ).orderBy("image_id")
 
 
 @gate(f"""

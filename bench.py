@@ -38,7 +38,7 @@ def main() -> None:
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     import __spark_entry__ as entry
-    from cov_tiles_spark.session import get_spark
+    from cov_tiles_spark.session import get_spark, warm_workers
 
     spark = get_spark(app_name="cov-tiles-bench", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
@@ -47,35 +47,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     extras: dict[str, float] = {}
 
-    # Warm the Python worker pool once before timing: the first pandas-UDF
-    # stage in a fresh JVM pays ~10-14s of worker spawn + numpy/pandas
-    # import across local[32]; that is interpreter startup, not engine
-    # throughput (a long-lived cluster never pays it per-query). Without
-    # this, whichever UDF query happens to run first absorbs the cost and
-    # run-to-run comparisons are noise.
-    import pandas as _pd
-
-    def _warm(batches):
-        import numpy  # noqa: F401
-
-        for b in batches:
-            yield _pd.DataFrame({"x": b["id"]})
-
-    spark.range(0, int(cpus) * 4, numPartitions=int(cpus) * 4).mapInPandas(
-        _warm, schema="x long"
-    ).count()
-    # ... and the JVM side: one tiny shuffle + sort warms whole-stage
-    # codegen, the exchange machinery, and JIT for the hot paths, so the
-    # first timed query doesn't absorb JVM cold-start either
-    from pyspark.sql import functions as _F
-
-    (
-        spark.range(0, 100_000, numPartitions=int(cpus))
-        .groupBy((_F.col("id") % 97).alias("k"))
-        .agg(_F.count("*").alias("n"), _F.sum("id").alias("s"))
-        .orderBy("k")
-        .count()
-    )
+    warm_workers(spark)
 
     # best-of-N per query (default 3, SPARK_GRAFT_BENCH_REPS overrides):
     # the sandbox host is shared-tenant and individual timings fluctuate

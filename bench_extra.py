@@ -29,7 +29,7 @@ def main() -> None:
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     import __spark_entry__ as entry
-    from cov_tiles_spark.session import get_spark
+    from cov_tiles_spark.session import get_spark, warm_workers
 
     spark = get_spark(app_name="cov-tiles-bench-extra", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
@@ -37,27 +37,7 @@ def main() -> None:
     names = sys.argv[1:] or HEADLINE
     qmap = entry.queries()
 
-    # same warmup as bench.py: python worker pool + JVM codegen/shuffle
-    import pandas as _pd
-
-    def _warm(batches):
-        import numpy  # noqa: F401
-
-        for b in batches:
-            yield _pd.DataFrame({"x": b["id"]})
-
-    spark.range(0, int(cpus) * 4, numPartitions=int(cpus) * 4).mapInPandas(
-        _warm, schema="x long"
-    ).count()
-    from pyspark.sql import functions as _F
-
-    (
-        spark.range(0, 100_000, numPartitions=int(cpus))
-        .groupBy((_F.col("id") % 97).alias("k"))
-        .agg(_F.count("*").alias("n"), _F.sum("id").alias("s"))
-        .orderBy("k")
-        .count()
-    )
+    warm_workers(spark)
 
     out: dict[str, dict] = {}
     for name in names:

@@ -25,16 +25,23 @@ zero-crossings an exact count, video features exact per-frame hashes.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from cov_tiles_spark.operators.images import phash64
+from cov_tiles_spark.operators.images import decode_image, encode_image, phash64
+from cov_tiles_spark.rows import map_rows
 
 AUDIO_FORMATS = ("pcm16",)
 VIDEO_FORMATS = ("rawv",)
+
+
+def _schema(df: DataFrame, drop: tuple[str, ...], made: str) -> str:
+    """DDL of ``df``'s columns except ``drop``, then the ``made`` ones."""
+    kept = [
+        f"{f.name} {f.dataType.simpleString()}"
+        for f in df.schema if f.name not in drop
+    ]
+    return ", ".join([*kept, made])
 
 
 # ---------------------------------------------------------------- audio
@@ -77,37 +84,21 @@ def audio_features(df: DataFrame) -> DataFrame:
     format ``fmt``: sample count, peak magnitude, energy (sum of squared
     samples), zero-crossing count.
 
-    One vectorized ``mapInPandas`` pass; each payload is decoded once.
+    One ``mapInPandas`` pass; each payload is decoded once.
     """
-    keep = [c for c in df.columns if c != "bytes"]
 
-    def _feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            ns = np.empty(n, dtype=np.int64)
-            peak = np.empty(n, dtype=np.int64)
-            energy = np.empty(n, dtype=np.int64)
-            zcr = np.empty(n, dtype=np.int64)
-            for j in range(n):
-                s = decode_audio(bytes(pdf.iloc[j]["bytes"]), pdf.iloc[j]["fmt"])
-                x = s.astype(np.int64)
-                ns[j] = len(x)
-                peak[j] = np.abs(x).max() if len(x) else 0
-                energy[j] = (x * x).sum()
-                # sign changes between consecutive nonzero samples
-                nz = x[x != 0]
-                zcr[j] = int((np.signbit(nz[1:]) != np.signbit(nz[:-1])).sum()) if len(nz) > 1 else 0
-            out = pdf[keep].copy()
-            out["n_samples"] = ns
-            out["peak"] = peak
-            out["energy"] = energy
-            out["zero_crossings"] = zcr
-            yield out
+    def kernel(data, fmt):
+        x = decode_audio(bytes(data), fmt).astype(np.int64)
+        # sign changes between consecutive nonzero samples
+        nz = x[x != 0]
+        zcr = int((np.signbit(nz[1:]) != np.signbit(nz[:-1])).sum()) if len(nz) > 1 else 0
+        return [(len(x), np.abs(x).max() if len(x) else 0, (x * x).sum(), zcr)]
 
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema if f.name != "bytes"
-    ) + ", n_samples long, peak long, energy long, zero_crossings long"
-    return df.mapInPandas(_feats, schema=schema)
+    schema = _schema(
+        df, ("bytes",), "n_samples long, peak long, energy long, zero_crossings long"
+    )
+    made = ("n_samples", "peak", "energy", "zero_crossings")
+    return map_rows(df, schema, ("bytes", "fmt"), made, kernel)
 
 
 # ---------------------------------------------------------------- video
@@ -157,34 +148,20 @@ def frame_sample_features(df: DataFrame, k: int) -> DataFrame:
     fingerprint). Decode + sampling happen once per payload inside one
     ``mapInPandas`` pass, before any shuffle.
     """
-    keep = [c for c in df.columns if c != "bytes"]
 
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            cnt = np.empty(n, dtype=np.int32)
-            xor = np.empty(n, dtype=np.int64)
-            for j in range(n):
-                row = pdf.iloc[j]
-                frames = decode_video(
-                    bytes(row["bytes"]), int(row["w"]), int(row["h"]),
-                    int(row["n_frames"]), row["fmt"],
-                )
-                idx = sample_frame_indices(int(row["n_frames"]), k)
-                acc = np.uint64(0)
-                for i in idx:
-                    acc ^= np.uint64(np.int64(phash64(frames[i])).view(np.uint64))
-                cnt[j] = len(idx)
-                xor[j] = int(acc.view(np.int64))
-            out = pdf[keep].copy()
-            out["frames_sampled"] = cnt
-            out["frame_phash_xor"] = xor
-            yield out
+    def kernel(data, w, h, n_frames, fmt):
+        frames = decode_video(bytes(data), int(w), int(h), int(n_frames), fmt)
+        idx = sample_frame_indices(int(n_frames), k)
+        acc = np.uint64(0)
+        for i in idx:
+            acc ^= np.uint64(np.int64(phash64(frames[i])).view(np.uint64))
+        return [(len(idx), int(acc.view(np.int64)))]
 
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema if f.name != "bytes"
-    ) + ", frames_sampled int, frame_phash_xor long"
-    return df.mapInPandas(_sample, schema=schema)
+    schema = _schema(df, ("bytes",), "frames_sampled int, frame_phash_xor long")
+    return map_rows(
+        df, schema, ("bytes", "w", "h", "n_frames", "fmt"),
+        ("frames_sampled", "frame_phash_xor"), kernel,
+    )
 
 
 # ---------------------------------------------------------------- resize
@@ -210,29 +187,14 @@ def resize_image(px: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
 
 def resize_images(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Resize every ``bytes`` image to (out_w, out_h), re-encoding in
-    its own format — one vectorized ``mapInPandas`` pass (decode ->
-    area-mean resize -> encode, each payload touched once)."""
-    from cov_tiles_spark.operators.images import decode_image, encode_image
+    its own format — one ``mapInPandas`` pass (decode -> area-mean
+    resize -> encode, each payload touched once)."""
 
-    keep = [c for c in df.columns if c not in ("bytes", "w", "h")]
+    def kernel(data, w, h, fmt):
+        px = decode_image(bytes(data), int(w), int(h), fmt)
+        return [(out_w, out_h, encode_image(resize_image(px, out_w, out_h), fmt))]
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_bytes = []
-            for j in range(len(pdf)):
-                row = pdf.iloc[j]
-                px = decode_image(
-                    bytes(row["bytes"]), int(row["w"]), int(row["h"]), row["fmt"]
-                )
-                out_bytes.append(encode_image(resize_image(px, out_w, out_h), row["fmt"]))
-            out = pdf[keep].copy()
-            out["w"] = np.int32(out_w)
-            out["h"] = np.int32(out_h)
-            out["bytes"] = out_bytes
-            yield out
-
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema if f.name not in ("bytes", "w", "h")
-    ) + ", w int, h int, bytes binary"
-    return df.mapInPandas(_resize, schema=schema)
+    schema = _schema(df, ("bytes", "w", "h"), "w int, h int, bytes binary")
+    return map_rows(
+        df, schema, ("bytes", "w", "h", "fmt"), ("w", "h", "bytes"), kernel
+    )

@@ -27,7 +27,7 @@ import logging
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-logger = logging.getLogger("cov_tiles_spark.cluster")
+logger = logging.getLogger(__name__)
 
 
 def _canon(edges: DataFrame) -> DataFrame:

@@ -27,7 +27,7 @@ _MERSENNE = (1 << 61) - 1
 _NUM_HASHES = 64  # MinHash permutations per signature
 _SHINGLE = 5  # bytes per shingle
 
-logger = logging.getLogger("cov_tiles_spark.dedup")
+logger = logging.getLogger(__name__)
 
 
 def _cap_buckets(

@@ -64,7 +64,6 @@ def semantic_dedup(
     df: DataFrame,
     vec_col: str,
     id_col: str,
-    dim: int,
     n_centroids: int = 8,
     threshold: float = 0.95,
     max_cluster_size: int | None = 500_000,

@@ -147,7 +147,6 @@ def ivf_train_centroids(
     df: DataFrame,
     vec_col: str,
     id_col: str,
-    dim: int,
     n_centroids: int = 16,
 ) -> np.ndarray:
     """Train the IVF coarse quantizer: :func:`spherical_kmeans` on a

@@ -38,13 +38,13 @@ uniform.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from zlib import crc32
 
-import pandas as pd
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from cov_tiles_spark.rows import map_rows
 
 _M61 = (1 << 61) - 1
 _B1 = 1_000_003
@@ -87,30 +87,20 @@ def window_hash_rows(
 ) -> DataFrame:
     """One (id, pos, h1, h2) row per k-token window of the corpus."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, poss, h1s, h2s = [], [], [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                for pos, (h1, h2) in enumerate(
-                    _window_hashes(text.split(), k)
-                ):
-                    ids.append(did)
-                    poss.append(pos)
-                    h1s.append(h1)
-                    h2s.append(h2)
-            yield pd.DataFrame(
-                {id_col: pd.Series(ids, dtype="int64"),
-                 "pos": pd.Series(poss, dtype="int32"),
-                 "h1": pd.Series(h1s, dtype="int64"),
-                 "h2": pd.Series(h2s, dtype="int64")}
-            )
+    def windows(text):
+        return [
+            (pos, h1, h2)
+            for pos, (h1, h2) in enumerate(_window_hashes(text.split(), k))
+        ]
 
     # pin the hashing stage's parallelism (CLAUDE.md): a single-row-group
     # corpus parquet otherwise runs the Python window-hash pass on 1-2
     # scan tasks. Keyed repartition: deterministic under retry.
     par = df.sparkSession.sparkContext.defaultParallelism
-    return df.select(id_col, text_col).repartition(par, id_col).mapInPandas(
-        gen, schema=f"{id_col} long, pos int, h1 long, h2 long"
+    return map_rows(
+        df.select(id_col, text_col).repartition(par, id_col),
+        f"{id_col} long, pos int, h1 long, h2 long", (text_col,),
+        ("pos", "h1", "h2"), windows,
     )
 
 
@@ -206,27 +196,15 @@ def exact_span_dedup(
     )
     joined = df.select(id_col, text_col).join(removals, id_col, "left")
 
-    def cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            clean, n_tok, n_rm = [], [], []
-            for text, rm in zip(pdf[text_col], pdf["_rm"]):
-                tokens = text.split()
-                n_tok.append(len(tokens))
-                if rm is None or len(rm) == 0:
-                    clean.append(" ".join(tokens))
-                    n_rm.append(0)
-                else:
-                    c, r = _merge_cut(tokens, [int(p) for p in rm], k)
-                    clean.append(c)
-                    n_rm.append(r)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].astype("int64"),
-                 "clean_text": clean,
-                 "n_tokens": pd.Series(n_tok, dtype="int64"),
-                 "n_removed": pd.Series(n_rm, dtype="int64")}
-            )
+    def cut(text, rm):
+        tokens = text.split()
+        if rm is None or len(rm) == 0:
+            return [(" ".join(tokens), len(tokens), 0)]
+        clean, n_rm = _merge_cut(tokens, [int(p) for p in rm], k)
+        return [(clean, len(tokens), n_rm)]
 
-    return joined.mapInPandas(
-        cut,
-        schema=f"{id_col} long, clean_text string, n_tokens long, n_removed long",
+    return map_rows(
+        joined,
+        f"{id_col} long, clean_text string, n_tokens long, n_removed long",
+        (text_col, "_rm"), ("clean_text", "n_tokens", "n_removed"), cut,
     )

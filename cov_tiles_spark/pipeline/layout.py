@@ -119,7 +119,6 @@ def cluster_write(
 
 def bbox_cover(
     bbox: tuple[float, float, float, float],
-    bits: int = DEFAULT_BITS,
     prefix_bits: int = DEFAULT_PREFIX_BITS,
     max_cover_cells: int = 65536,
 ) -> list[tuple[int, int]]:
@@ -196,7 +195,7 @@ def bbox_scan(
     applied); the default keeps the pruning visible to Catalyst
     (``PartitionFilters``, plan-asserted in tests).
     """
-    runs = bbox_cover(bbox, bits=bits, prefix_bits=prefix_bits)
+    runs = bbox_cover(bbox, prefix_bits=prefix_bits)
     shift = 2 * (bits - prefix_bits)
     if direct_listing:
         jvm = spark.sparkContext._jvm

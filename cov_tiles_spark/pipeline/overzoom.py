@@ -20,15 +20,13 @@ archive is a map-only job.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from cov_tiles_spark.covt.decoder import GeometryColumn, decode_covt
 from cov_tiles_spark.covt.encoder import LayerInput, PropertyInput, encode_tile
 from cov_tiles_spark.covt.metadata import ColumnDataType, GeometryType
+from cov_tiles_spark.rows import map_rows
 from cov_tiles_spark.spatial.tiling import DEFAULT_EXTENT
 
 PAYLOAD_SCHEMA = "z int, x int, y int, num_features long, payload binary"
@@ -119,26 +117,10 @@ def overzoom_tiles(payloads: DataFrame) -> DataFrame:
     """Distributed overzoom: every payload row -> its child payload rows
     (map-only; no exchange)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                for zc, xc, yc, nf, data in overzoom_tile(
-                    bytes(row["payload"]), int(row["z"]), int(row["x"]),
-                    int(row["y"]),
-                ):
-                    rows.append(
-                        {"z": zc, "x": xc, "y": yc,
-                         "num_features": nf, "payload": data}
-                    )
-            yield (
-                pd.DataFrame(rows)
-                if rows
-                else pd.DataFrame(
-                    columns=["z", "x", "y", "num_features", "payload"]
-                )
-            )
+    def kernel(payload, z, x, y):
+        return overzoom_tile(bytes(payload), int(z), int(x), int(y))
 
-    return payloads.select("z", "x", "y", "payload").mapInPandas(
-        run, schema=PAYLOAD_SCHEMA
+    return map_rows(
+        payloads, PAYLOAD_SCHEMA, ("payload", "z", "x", "y"),
+        ("z", "x", "y", "num_features", "payload"), kernel,
     )

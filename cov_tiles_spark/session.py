@@ -62,3 +62,37 @@ def get_spark(
     # "pyspark.daemon" there, would count the JVM as a Python worker.
     spark.sparkContext._conf.set("spark.python.daemon.module", guarded_daemon.__name__)
     return spark
+
+
+def warm_workers(spark: SparkSession) -> None:
+    """Warm the Python worker pool and the JVM before timing anything.
+
+    The first pandas-UDF stage in a fresh JVM pays ~10-14s of worker
+    spawn + numpy/pandas import across local[32]; that is interpreter
+    startup, not engine throughput (a long-lived cluster never pays it
+    per-query). Without this, whichever UDF query happens to run first
+    absorbs the cost and run-to-run comparisons are noise."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    cpus = spark.sparkContext.defaultParallelism
+
+    def _warm(batches):
+        import numpy  # noqa: F401
+
+        for b in batches:
+            yield pd.DataFrame({"x": b["id"]})
+
+    spark.range(0, cpus * 4, numPartitions=cpus * 4).mapInPandas(
+        _warm, schema="x long"
+    ).count()
+    # ... and the JVM side: one tiny shuffle + sort warms whole-stage
+    # codegen, the exchange machinery, and JIT for the hot paths, so the
+    # first timed query doesn't absorb JVM cold-start either
+    (
+        spark.range(0, 100_000, numPartitions=cpus)
+        .groupBy((F.col("id") % 97).alias("k"))
+        .agg(F.count("*").alias("n"), F.sum("id").alias("s"))
+        .orderBy("k")
+        .count()
+    )

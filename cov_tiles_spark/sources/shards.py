@@ -41,11 +41,12 @@ import json
 import math
 import os
 import tarfile
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from cov_tiles_spark.rows import map_rows
 
 # per-member tar overhead: 512 B header + data padded to 512; three
 # members per record plus json/txt payloads ≈ this flat allowance
@@ -181,32 +182,17 @@ def read_webdataset(spark: SparkSession, shard_dir: str) -> DataFrame:
         .load(shard_dir)
     )
 
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                k: [] for k in (
-                    "image_id", "bytes", "w", "h", "fmt", "caption", "phash"
-                )
-            }
-            for _, row in pdf.iterrows():
-                tf = tarfile.open(
-                    fileobj=io.BytesIO(bytes(row["content"])), mode="r"
-                )
-                samples: dict[str, dict] = {}
-                for m in tf.getmembers():
-                    stem, ext = m.name.rsplit(".", 1)
-                    samples.setdefault(stem, {})[ext] = tf.extractfile(m).read()
-                for stem, members in samples.items():
-                    meta = json.loads(members.pop("json"))
-                    caption = members.pop("txt").decode("utf-8")
-                    (fmt, payload), = members.items()
-                    out["image_id"].append(stem)
-                    out["bytes"].append(payload)
-                    out["w"].append(meta["w"])
-                    out["h"].append(meta["h"])
-                    out["fmt"].append(fmt)
-                    out["caption"].append(caption)
-                    out["phash"].append(meta["phash"])
-            yield pd.DataFrame(out)
+    def parse(content):
+        tf = tarfile.open(fileobj=io.BytesIO(bytes(content)), mode="r")
+        samples: dict[str, dict] = {}
+        for m in tf.getmembers():
+            stem, ext = m.name.rsplit(".", 1)
+            samples.setdefault(stem, {})[ext] = tf.extractfile(m).read()
+        for stem, members in samples.items():
+            meta = json.loads(members.pop("json"))
+            caption = members.pop("txt").decode("utf-8")
+            (fmt, payload), = members.items()
+            yield stem, payload, meta["w"], meta["h"], fmt, caption, meta["phash"]
 
-    return files.select("content").mapInPandas(_parse, schema=READ_SCHEMA)
+    made = ("image_id", "bytes", "w", "h", "fmt", "caption", "phash")
+    return map_rows(files, READ_SCHEMA, ("content",), made, parse)

@@ -65,6 +65,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from cov_tiles_spark.rows import map_rows
+
 __all__ = [
     "dp_keep_mask",
     "simplify_polyline",
@@ -601,17 +603,20 @@ def simplify_mvt_layers(layers, tolerance: int, rings: bool = False):
 
 # ------------------------------------------------------- Spark operators
 
+_XY = ("xs", "ys")
+_XY_COUNTED = ("xs", "ys", "n_in", "n_out")
 
-def _out_schema(df: DataFrame) -> StructType:
+
+def _out_schema(df: DataFrame, *extra: StructField) -> StructType:
     fields = []
     for f in df.schema.fields:
-        if f.name in ("xs", "ys"):
+        if f.name in _XY:
             fields.append(StructField(f.name, ArrayType(LongType()), True))
         else:
             fields.append(f)
     fields.append(StructField("n_in", IntegerType(), False))
     fields.append(StructField("n_out", IntegerType(), False))
-    return StructType(fields)
+    return StructType(fields + list(extra))
 
 
 def simplify_lines(
@@ -625,27 +630,13 @@ def simplify_lines(
     and `n_out` count vertices before/after. Rows with < 3 vertices pass
     through unchanged.
     """
-    schema = _out_schema(df)
-    other = [f.name for f in df.schema.fields if f.name not in ("xs", "ys")]
     tol = int(tolerance)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            new_xs, new_ys, n_in, n_out = [], [], [], []
-            for xs, ys in zip(pdf["xs"], pdf["ys"]):
-                sx, sy = simplify_polyline(list(xs), list(ys), tol)
-                new_xs.append(sx)
-                new_ys.append(sy)
-                n_in.append(len(xs))
-                n_out.append(len(sx))
-            out = pdf[other].copy()
-            out["xs"] = new_xs
-            out["ys"] = new_ys
-            out["n_in"] = pd.array(n_in, dtype="int32")
-            out["n_out"] = pd.array(n_out, dtype="int32")
-            yield out[[f.name for f in schema.fields]]
+    def kernel(xs, ys):
+        sx, sy = simplify_polyline(list(xs), list(ys), tol)
+        return [(sx, sy, len(xs), len(sx))]
 
-    return df.mapInPandas(run, schema)
+    return map_rows(df, _out_schema(df), _XY, _XY_COUNTED, kernel)
 
 
 def simplify_rings(
@@ -655,27 +646,13 @@ def simplify_rings(
     """Ring (polygon) analogue of `simplify_lines` — map-only, replaces
     the vertex arrays with `simplify_ring` output (empty when the ring
     collapses), adds `n_in`/`n_out`."""
-    schema = _out_schema(df)
-    other = [f.name for f in df.schema.fields if f.name not in ("xs", "ys")]
     tol = int(tolerance)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            new_xs, new_ys, n_in, n_out = [], [], [], []
-            for xs, ys in zip(pdf["xs"], pdf["ys"]):
-                sx, sy = simplify_ring(list(xs), list(ys), tol)
-                new_xs.append(sx)
-                new_ys.append(sy)
-                n_in.append(len(xs))
-                n_out.append(len(sx))
-            out = pdf[other].copy()
-            out["xs"] = new_xs
-            out["ys"] = new_ys
-            out["n_in"] = pd.array(n_in, dtype="int32")
-            out["n_out"] = pd.array(n_out, dtype="int32")
-            yield out[[f.name for f in schema.fields]]
+    def kernel(xs, ys):
+        sx, sy = simplify_ring(list(xs), list(ys), tol)
+        return [(sx, sy, len(xs), len(sx))]
 
-    return df.mapInPandas(run, schema)
+    return map_rows(df, _out_schema(df), _XY, _XY_COUNTED, kernel)
 
 
 def clip_lines(
@@ -691,36 +668,25 @@ def clip_lines(
     Rows that clip away entirely emit no output rows.
     """
     x0, y0, x1, y1 = (int(v) for v in bounds)
-    other = [f for f in df.schema.fields if f.name not in ("xs", "ys")]
     schema = StructType(
-        [*other,
+        [*(f for f in df.schema.fields if f.name not in _XY),
          StructField("part", IntegerType(), False),
          StructField("xs", ArrayType(LongType()), True),
          StructField("ys", ArrayType(LongType()), True),
          StructField("n_in", IntegerType(), False),
          StructField("n_pts", IntegerType(), False)]
     )
-    other_names = [f.name for f in other]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in schema.fields]
-        for pdf in batches:
-            rows: list[tuple] = []
-            others = [pdf[c] for c in other_names]
-            for vals in zip(pdf["xs"], pdf["ys"], *others):
-                xs, ys = list(vals[0]), list(vals[1])
-                for p, (px, py) in enumerate(
-                    clip_polyline(xs, ys, x0, y0, x1, y1)
-                ):
-                    rows.append((*vals[2:], p, px, py, len(xs), len(px)))
-            if not rows:
-                continue
-            out = pd.DataFrame(rows, columns=cols)
-            for c in ("part", "n_in", "n_pts"):
-                out[c] = out[c].astype("int32")
-            yield out
+    def kernel(xs, ys):
+        xs, ys = list(xs), list(ys)
+        return [
+            (p, px, py, len(xs), len(px))
+            for p, (px, py) in enumerate(clip_polyline(xs, ys, x0, y0, x1, y1))
+        ]
 
-    return df.mapInPandas(run, schema)
+    return map_rows(
+        df, schema, _XY, ("part", "xs", "ys", "n_in", "n_pts"), kernel
+    )
 
 
 def clip_rings(
@@ -734,26 +700,10 @@ def clip_rings(
     `area2` (twice the signed shoelace area of the clipped ring).
     """
     x0, y0, x1, y1 = (int(v) for v in bounds)
-    base = _out_schema(df)
-    schema = StructType(base.fields + [StructField("area2", LongType(), False)])
-    other = [f.name for f in df.schema.fields if f.name not in ("xs", "ys")]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            new_xs, new_ys, n_in, n_out, areas = [], [], [], [], []
-            for xs, ys in zip(pdf["xs"], pdf["ys"]):
-                cx, cy = clip_ring(list(xs), list(ys), x0, y0, x1, y1)
-                new_xs.append(cx)
-                new_ys.append(cy)
-                n_in.append(len(xs))
-                n_out.append(len(cx))
-                areas.append(ring_area2(cx, cy))
-            out = pdf[other].copy()
-            out["xs"] = new_xs
-            out["ys"] = new_ys
-            out["n_in"] = pd.array(n_in, dtype="int32")
-            out["n_out"] = pd.array(n_out, dtype="int32")
-            out["area2"] = pd.array(areas, dtype="int64")
-            yield out[[f.name for f in schema.fields]]
+    def kernel(xs, ys):
+        cx, cy = clip_ring(list(xs), list(ys), x0, y0, x1, y1)
+        return [(cx, cy, len(xs), len(cx), ring_area2(cx, cy))]
 
-    return df.mapInPandas(run, schema)
+    schema = _out_schema(df, StructField("area2", LongType(), False))
+    return map_rows(df, schema, _XY, (*_XY_COUNTED, "area2"), kernel)

@@ -65,7 +65,7 @@ def main() -> None:
         )
 
     # ---- IVF sweep -----------------------------------------------------
-    cents = ivf_train_centroids(emb, "embedding", "vec_id", DIM, NLIST)
+    cents = ivf_train_centroids(emb, "embedding", "vec_id", NLIST)
     ivf_rows = []
     for nprobe in (1, 2, 4, 8, NLIST):
         tops = {}

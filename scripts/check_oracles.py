@@ -65,10 +65,12 @@ def main() -> int:
         print(f"unknown queries: {' '.join(unknown)}", file=sys.stderr)
         return 2
 
-    from cov_tiles_spark.session import get_spark
+    from cov_tiles_spark.session import get_spark, warm_workers
 
     master = os.environ.get("SPARK_GATE_MASTER", "local[8]")
     spark = get_spark(master=master, shuffle_partitions=8)
+    # so the first gate's time does not include worker spawn
+    warm_workers(spark)
     results: dict[str, dict] = {}
 
     def record(name, t0, *, rows_match=False, schema_match=False,

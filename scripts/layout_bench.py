@@ -125,7 +125,7 @@ def main():
           "| pruned wall | direct-listing wall | full-filter wall |")
     print("|---|---|---|---|---|---|---|---|")
     for name, bbox in BBOXES.items():
-        runs = bbox_cover(bbox, bits=BITS, prefix_bits=PREFIX_BITS)
+        runs = bbox_cover(bbox, prefix_bits=PREFIX_BITS)
         listed = _listed_files(clustered, runs)
         ct, cg, crows, call = _touched(clustered, runs, shift)
         nt, ng, nrows, nall = _touched(natural, runs, shift)

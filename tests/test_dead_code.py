@@ -12,7 +12,10 @@
   ``scripts/`` resolves, so deleting a def cannot leave a script that
   fails only when it runs.
 - Every defaulted parameter of a package def is set by some call: a
-  default nothing overrides is a constant, not an option."""
+  default nothing overrides is a constant, not an option.
+- Every parameter of a package def or lambda is read in its body: one
+  that is accepted and never read is a settable value that changes
+  nothing."""
 
 from __future__ import annotations
 
@@ -184,6 +187,31 @@ def unset_params(root: Path = ROOT) -> list[str]:
     return out
 
 
+def unread_params(root: Path = ROOT) -> list[str]:
+    """Parameters of package defs and lambdas that no ``Name`` in their
+    body loads (nested defs included), ``self`` and ``cls`` too."""
+    out = []
+    for path in sorted((root / "cov_tiles_spark").rglob("*.py")):
+        for fn in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if not isinstance(fn, (*_FUNCS, ast.Lambda)):
+                continue
+            a = fn.args
+            params = a.posonlyargs + a.args + a.kwonlyargs
+            params += [p for p in (a.vararg, a.kwarg) if p]
+            body = fn.body if isinstance(fn.body, list) else [fn.body]
+            loaded = {
+                n.id
+                for stmt in body for n in ast.walk(stmt)
+                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+            }
+            name = getattr(fn, "name", "<lambda>")
+            out += [
+                f"{path.relative_to(root)}:{fn.lineno} {name}({p.arg})"
+                for p in params if p.arg not in loaded
+            ]
+    return out
+
+
 def _module_name(root: Path, path: Path) -> str:
     parts = path.relative_to(root).with_suffix("").parts
     return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
@@ -342,6 +370,35 @@ def test_param_scan_keeps_defaults_set_by_test_position_or_kw(tmp_path):
         ),
     })
     assert unset_params(root) == []
+
+
+def test_every_parameter_is_read():
+    """A parameter no body reads is an option that changes nothing."""
+    assert unread_params() == []
+
+
+def test_param_scan_flags_an_unread_parameter(tmp_path):
+    """Storing to a parameter, naming it in a docstring or reading a
+    same-named attribute does not count; a read in a nested def's body
+    or default does."""
+    root = _tree(tmp_path, {
+        "cov_tiles_spark/mod.py": (
+            "def f(x, unused, stored, attr, nested, *rest, **kw):\n"
+            '    """``unused`` is documented."""\n'
+            "    stored = 1\n"
+            "    y = x.attr\n\n"
+            "    def inner(z=kw):\n"
+            "        return nested, rest, z\n\n"
+            "    return y, inner\n\n\n"
+            "g = lambda a, b: a\n"
+        ),
+    })
+    assert unread_params(root) == [
+        "cov_tiles_spark/mod.py:1 f(unused)",
+        "cov_tiles_spark/mod.py:1 f(stored)",
+        "cov_tiles_spark/mod.py:1 f(attr)",
+        "cov_tiles_spark/mod.py:12 <lambda>(b)",
+    ]
 
 
 def _package_imports(src: str) -> list[tuple[str, str, int]]:

@@ -50,7 +50,7 @@ def test_cover_is_superset_of_point_cells():
     hy = np.clip((my * n).astype(np.int64), 0, n - 1).astype(np.uint64)
     keys = hilbert_xy2d(BITS, hx, hy).astype(np.int64)
     prefixes = keys >> (2 * (BITS - PREFIX_BITS))
-    runs = bbox_cover(BBOX, bits=BITS, prefix_bits=PREFIX_BITS)
+    runs = bbox_cover(BBOX, prefix_bits=PREFIX_BITS)
     in_cover = np.zeros(len(prefixes), dtype=bool)
     for lo, hi in runs:
         in_cover |= (prefixes >= lo) & (prefixes <= hi)
@@ -58,8 +58,8 @@ def test_cover_is_superset_of_point_cells():
 
 
 def test_cover_coarsens_under_cell_cap():
-    fine = bbox_cover(BBOX, bits=BITS, prefix_bits=PREFIX_BITS)
-    coarse = bbox_cover(BBOX, bits=BITS, prefix_bits=PREFIX_BITS, max_cover_cells=16)
+    fine = bbox_cover(BBOX, prefix_bits=PREFIX_BITS)
+    coarse = bbox_cover(BBOX, prefix_bits=PREFIX_BITS, max_cover_cells=16)
     # coarser cover is a superset of the fine one
     def total(runs):
         return sum(hi - lo + 1 for lo, hi in runs)
@@ -173,7 +173,7 @@ def test_clustered_layout_skips_row_groups(spark, tmp_path):
         .write.option("parquet.block.size", 64 * 1024)
         .parquet(natural)
     )
-    runs = bbox_cover(small, bits=BITS, prefix_bits=PREFIX_BITS)
+    runs = bbox_cover(small, prefix_bits=PREFIX_BITS)
     shift = 2 * (BITS - PREFIX_BITS)
     c_touch, c_total = _row_groups_touched(clustered, runs, shift)
     n_touch, n_total = _row_groups_touched(natural, runs, shift)

@@ -87,7 +87,7 @@ def test_max_block_size_caps_hot_block_with_log(spark, caplog):
     rows = [(i, f"hot shared prefix text {i % 2}") for i in range(12)]
     rows += [(100, "cold pair text"), (101, "cold pair text")]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    with caplog.at_level(logging.WARNING, logger="cov_tiles_spark.dedup"):
+    with caplog.at_level(logging.WARNING, logger="cov_tiles_spark.operators.dedup"):
         capped = ngram_jaccard_pairs(
             df, "text", "doc_id", threshold=0.5, max_block_size=8
         ).collect()

@@ -142,7 +142,7 @@ def test_lsh_bucket_cap_bounds_degenerate_corpus(spark, caplog):
         "doc_id long, text string",
     )
     corpus = real.unionAll(junk)
-    with caplog.at_level(logging.WARNING, logger="cov_tiles_spark.dedup"):
+    with caplog.at_level(logging.WARNING, logger="cov_tiles_spark.operators.dedup"):
         pairs = minhash_near_dups(
             corpus, "text", "doc_id", threshold=0.9, max_bucket_size=100
         ).collect()
@@ -387,8 +387,8 @@ def test_ivf_topk_exact_when_all_lists_probed(spark, embs):
     order = sorted(range(len(ids)), key=lambda i: (-sims[i], ids[i]))[:10]
     expected = [int(ids[i]) for i in order]
 
-    cents = ivf_train_centroids(embs, "embedding", "vec_id", dim=64, n_centroids=8)
-    cents2 = ivf_train_centroids(embs, "embedding", "vec_id", dim=64, n_centroids=8)
+    cents = ivf_train_centroids(embs, "embedding", "vec_id", n_centroids=8)
+    cents2 = ivf_train_centroids(embs, "embedding", "vec_id", n_centroids=8)
     assert np.array_equal(cents, cents2)  # deterministic quantizer
 
     got = ivf_topk(embs, "embedding", "vec_id", q.tolist(), 10, cents, nprobe=8).collect()
@@ -419,7 +419,7 @@ def test_ivf_recall_on_clustered_data(spark):
         zip([i for i, _ in vecs], -sims), key=lambda t: (t[1], t[0])
     )[:10]}
 
-    cents = ivf_train_centroids(df, "embedding", "vec_id", dim=64, n_centroids=20)
+    cents = ivf_train_centroids(df, "embedding", "vec_id", n_centroids=20)
     got = ivf_topk(df, "embedding", "vec_id", q, 10, cents, nprobe=3).collect()
     recall = len({r.id for r in got} & exact) / 10
     assert recall >= 0.8, f"IVF recall too low on clustered data: {recall}"

@@ -118,7 +118,7 @@ def test_ivf_pq_composition(corpus, spark):
 
     x, df, cb = corpus
     q = x[100]
-    cents = ivf_train_centroids(df, "embedding", "vec_id", DIM, n_centroids=12)
+    cents = ivf_train_centroids(df, "embedding", "vec_id", n_centroids=12)
     qn = q / np.linalg.norm(q)
     probe = np.argsort(-(cents @ qn))[:3].astype(int).tolist()
     pruned = ivf_assign(df, "embedding", cents).filter(
@@ -160,7 +160,7 @@ def test_ann_recall_monotone_in_nprobe_and_shortlist(spark):
         {r.id for r in cosine_topk(emb, "embedding", "vec_id", q, k).collect()}
         for q in queries
     ]
-    cents = ivf_train_centroids(emb, "embedding", "vec_id", DIM, nlist)
+    cents = ivf_train_centroids(emb, "embedding", "vec_id", nlist)
     prev = -1.0
     for nprobe in (1, 2, 4, nlist):
         rec = 0.0

@@ -39,7 +39,7 @@ def test_semantic_dedup_drops_planted_keeps_lowest(spark):
     out = {
         r.id: r
         for r in semantic_dedup(
-            df, "embedding", "vec_id", dim=16, n_centroids=4, threshold=0.999
+            df, "embedding", "vec_id", n_centroids=4, threshold=0.999
         ).collect()
     }
     assert len(out) == len(rows)
@@ -58,7 +58,7 @@ def test_semantic_dedup_deterministic_across_partitioning(spark):
     rows, _ = _clustered_corpus(seed=9)
     df1 = spark.createDataFrame(rows, ["vec_id", "embedding"]).repartition(3)
     df2 = spark.createDataFrame(rows, ["vec_id", "embedding"]).repartition(13)
-    kw = dict(vec_col="embedding", id_col="vec_id", dim=16, n_centroids=4,
+    kw = dict(vec_col="embedding", id_col="vec_id", n_centroids=4,
               threshold=0.95)
     a = sorted(map(tuple, semantic_dedup(df1, **kw).collect()))
     b = sorted(map(tuple, semantic_dedup(df2, **kw).collect()))
@@ -68,7 +68,7 @@ def test_semantic_dedup_deterministic_across_partitioning(spark):
 def test_semantic_dedup_lower_threshold_drops_more(spark):
     rows, _ = _clustered_corpus()
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    kw = dict(vec_col="embedding", id_col="vec_id", dim=16, n_centroids=4)
+    kw = dict(vec_col="embedding", id_col="vec_id", n_centroids=4)
     strict = semantic_dedup(df, threshold=0.999, **kw)
     loose = semantic_dedup(df, threshold=0.9, **kw)
     n_strict = strict.filter(~F.col("is_kept")).count()
@@ -84,7 +84,7 @@ def test_cluster_cap_drops_with_log(spark, caplog):
 
     with caplog.at_level(logging.WARNING, "cov_tiles_spark.operators.semdedup"):
         out = semantic_dedup(
-            df, "embedding", "vec_id", dim=16, n_centroids=2,
+            df, "embedding", "vec_id", n_centroids=2,
             threshold=0.95, max_cluster_size=10,
         ).collect()
     assert out == []  # both clusters exceed the cap
