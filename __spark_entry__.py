@@ -362,7 +362,7 @@ def _gen_ck_col(xs: str, ys: str):
     FROM read_parquet('{_ORACLE_DIR}/q_simplify_lines.parquet')
     ORDER BY event_id
 """)
-def q_simplify_lines(spark, sf_dir, tol: int = 16):
+def q_simplify_lines(spark, sf_dir):
     """Integer-exact Douglas-Peucker line simplification
     (spatial/generalize.py simplify_lines — the per-zoom generalization
     step upstream of tile encode; map-only, no exchange). Input polylines
@@ -384,7 +384,7 @@ def q_simplify_lines(spark, sf_dir, tol: int = 16):
             lambda i: F.pmod(F.shiftright(_gen_hash(i), 7), F.lit(64)).cast("long"),
         ).alias("ys"),
     )
-    out = simplify_lines(pl, tolerance=tol)
+    out = simplify_lines(pl, tolerance=16)
     return out.select(
         "event_id",
         F.col("n_in").cast("long").alias("n_in"),
@@ -642,7 +642,7 @@ def q_merge_lines(spark, sf_dir):
     FROM read_parquet('{_ORACLE_DIR}/q_simplify_rings.parquet')
     ORDER BY event_id
 """)
-def q_simplify_rings(spark, sf_dir, tol: int = 12):
+def q_simplify_rings(spark, sf_dir):
     """Ring (polygon) Douglas-Peucker simplification
     (spatial/generalize.py simplify_rings — deterministic two-anchor
     split, map-only). Corpus: noisy 16-gons (radius 24 with hashed
@@ -675,7 +675,7 @@ def q_simplify_rings(spark, sf_dir, tol: int = 12):
             lambda i: (cy + F.element_at(d16y, i + 1) * radius(i)).cast("long"),
         ).alias("ys"),
     )
-    out = simplify_rings(rings, tolerance=tol)
+    out = simplify_rings(rings, tolerance=12)
     return out.select(
         "event_id",
         F.col("n_in").cast("long").alias("n_in"),
@@ -2685,14 +2685,13 @@ def q_sessionize(spark, sf_dir):
 """)
 def q_dedup_exact(spark, sf_dir):
     """Exact dedup by md5(text) over documents + shifted copies (dedup #1)."""
+    from cov_tiles_spark.operators.dedup import exact_dedup
+
     d = _t(spark, sf_dir, "documents")
     dupes = d.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
     corpus = d.select("doc_id", "text").unionAll(dupes)
-    return (
-        corpus.groupBy(F.md5("text").alias("text_hash"))
-        .agg(F.min("doc_id").alias("keeper_id"), F.count("*").alias("n_copies"))
-        .orderBy("keeper_id")
-    )
+    # every text has its shifted copy, so the n_copies > 1 filter keeps all
+    return exact_dedup(corpus, "text", "doc_id").orderBy("keeper_id")
 
 
 @gate("""

@@ -105,7 +105,9 @@ class LayerData:
 
         Geometry format matches the reference's ``Geometry.format()``
         (`geometry.ts`): a list of parts, each a list of (x, y) tuples;
-        polygon rings are re-closed by appending the first vertex.
+        polygon rings are re-closed by appending the first vertex, and a
+        multipoint gives one 1-point part per point, as MVT
+        ``loadGeometry`` does.
         """
         return _materialize_features(self)
 
@@ -564,9 +566,9 @@ def _materialize_features(layer: LayerData) -> list[dict[str, Any]]:
                         ring.append(ring[0])
                     parts.append(ring)
         elif gt == GeometryType.MULTI_POINT:
+            # one 1-point part per point, as MVT loadGeometry returns it
             n_pts = int(g.geometry_offsets[go_c]); go_c += 1
-            pts = [(int(vb[(vo + k) * 2]), int(vb[(vo + k) * 2 + 1])) for k in range(n_pts)]
-            parts = [pts]
+            parts = [[(int(vb[(vo + k) * 2]), int(vb[(vo + k) * 2 + 1]))] for k in range(n_pts)]
             vo += n_pts
         else:
             raise ValueError(f"unknown geometry type {gt}")

@@ -52,6 +52,7 @@ from cov_tiles_spark.covt.metadata import (
 from cov_tiles_spark.covt.rle import encode_byte_rle, encode_int_rle
 from cov_tiles_spark.covt.sfc import hilbert_encode, morton_encode
 from cov_tiles_spark.covt.varint import (
+    encode_varint,
     encode_varints,
     encode_zigzag_varints,
     zigzag_encode,
@@ -96,19 +97,6 @@ def first_occurrence_codes(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return np.array(codes, dtype=np.int64), np.array(list(seen), dtype=values.dtype)
 
 
-def _varint(v: int) -> bytes:
-    """Scalar varint — hot in metadata serialization, so no numpy detour."""
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
 _STRING_CACHE: dict[str, bytes] = {}
 
 
@@ -116,14 +104,14 @@ def _write_string(s: str) -> bytes:
     cached = _STRING_CACHE.get(s)
     if cached is None:
         raw = s.encode("utf-8")
-        cached = _varint(len(raw)) + raw
+        cached = encode_varint(len(raw)) + raw
         if len(_STRING_CACHE) < 4096:  # stream/column names recur per tile
             _STRING_CACHE[s] = cached
     return cached
 
 
 def _stream_meta(name: str, num_values: int, byte_length: int) -> bytes:
-    return _write_string(name) + _varint(num_values) + _varint(byte_length)
+    return _write_string(name) + encode_varint(num_values) + encode_varint(byte_length)
 
 
 def encode_id_column(ids: np.ndarray) -> tuple[ColumnEncoding, bytes]:
@@ -282,7 +270,7 @@ def encode_geometry_column(
     meta = (
         _write_string(GEOMETRY_COLUMN)
         + bytes([ColumnDataType.GEOMETRY, encoding])
-        + _varint(len(streams))
+        + encode_varint(len(streams))
         + b"".join(_stream_meta(nm, nv, len(b)) for nm, nv, b in streams)
     )
     data = b"".join(b for _, _, b in streams)
@@ -363,7 +351,7 @@ def encode_property_column(
     meta = (
         _write_string(name)
         + bytes([prop.data_type, encoding])
-        + _varint(len(streams))
+        + encode_varint(len(streams))
         + b"".join(_stream_meta(nm, nv, len(b)) for nm, nv, b in streams)
     )
     data = b"".join(b for _, _, b in streams)
@@ -434,7 +422,7 @@ def encode_localized_column(
     meta = (
         _write_string(base)
         + bytes([ColumnDataType.STRING, ColumnEncoding.LOCALIZED_DICTIONARY])
-        + _varint(len(streams))
+        + encode_varint(len(streams))
         + b"".join(_stream_meta(nm, nv, len(b)) for nm, nv, b in streams)
     )
     data = b"".join(b for _, _, b in streams)
@@ -454,7 +442,7 @@ def encode_layer(layer: LayerInput) -> bytes:
         col_metas.append(
             _write_string(ID_COLUMN)
             + bytes([ColumnDataType.UINT_64, enc])
-            + _varint(1)
+            + encode_varint(1)
             + _stream_meta(DATA_STREAM, n, len(data))
         )
         col_datas.append(data)
@@ -475,8 +463,8 @@ def encode_layer(layer: LayerInput) -> bytes:
 
     header = (
         _write_string(layer.name)
-        + _varint(n)
-        + _varint(len(col_metas))
+        + encode_varint(n)
+        + encode_varint(len(col_metas))
         + b"".join(col_metas)
     )
     return header + b"".join(col_datas)
@@ -485,4 +473,4 @@ def encode_layer(layer: LayerInput) -> bytes:
 def encode_tile(layers: list[LayerInput]) -> bytes:
     """Encode a full COVT gen-A tile (file header + layers)."""
     body = b"".join(encode_layer(l) for l in layers)
-    return _varint(VERSION) + _varint(len(layers)) + body
+    return encode_varint(VERSION) + encode_varint(len(layers)) + body

@@ -51,7 +51,6 @@ from cov_tiles_spark.covt.decoder import GeometryColumn, LayerData, PropertyColu
 from cov_tiles_spark.covt.encoder import (
     LayerInput,
     PropertyInput,
-    _varint,
     _write_string,
     first_occurrence_codes,
 )
@@ -74,6 +73,7 @@ from cov_tiles_spark.covt.varint import (
     decode_varint,
     decode_varints,
     decode_zigzag_varints,
+    encode_varint,
     encode_varints,
     walk_varints,
     zigzag_encode,
@@ -167,7 +167,7 @@ _TO_GENA = {
 
 
 def _stream_meta(stype: StreamType, enc: StreamEncoding, num_values: int, data: bytes) -> bytes:
-    return bytes([(stype << 4) | enc]) + _varint(num_values) + _varint(len(data))
+    return bytes([(stype << 4) | enc]) + encode_varint(num_values) + encode_varint(len(data))
 
 
 def _best_offsets(vals: np.ndarray) -> tuple[StreamEncoding, bytes]:
@@ -369,10 +369,10 @@ def encode_tile_genb(
         n_columns = 1 + (1 if layer.ids is not None else 0) + len(ordered) + n_localized
         header = bytes([(VERSION << 1) | (1 if optimize_metadata else 0)])
         if optimize_metadata:
-            header += _varint(layer_id)
+            header += encode_varint(layer_id)
         else:
             header += _write_string(layer.name)
-        header += _varint(layer.extent) + _varint(n) + _varint(n_columns)
+        header += encode_varint(layer.extent) + encode_varint(n) + encode_varint(n_columns)
 
         meta_parts: list[bytes] = [header]
         data_parts: list[bytes] = []
@@ -382,7 +382,7 @@ def encode_tile_genb(
             # first column and optimized mode use ids; otherwise strings
             # (`CovtParser.java:604-617`)
             if optimize_metadata or first:
-                return _varint(column_id) + bytes([(dtype << 3) | ctype])
+                return encode_varint(column_id) + bytes([(dtype << 3) | ctype])
             return _write_string(name) + bytes([(dtype << 3) | ctype])
 
         first = True

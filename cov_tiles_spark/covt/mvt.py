@@ -27,7 +27,7 @@ from typing import Any
 import numpy as np
 
 from cov_tiles_spark.covt.encoder import first_occurrence_codes
-from cov_tiles_spark.covt.varint import varint_len, varint_len_vec
+from cov_tiles_spark.covt.varint import encode_varint, varint_len, varint_len_vec
 
 
 @dataclass
@@ -47,16 +47,31 @@ class MvtLayer:
 
 
 def _read_varint(buf: bytes, offset: int) -> tuple[int, int]:
-    b = buf[offset]
-    offset += 1
-    val = b & 0x7F
-    shift = 7
-    while b >= 0x80:
+    """One varint at ``offset`` -> (value, new offset), bounded as
+    `varint.walk_varints` is: the 10th byte gives only its low bit, and
+    an 11th byte or a read past the end of ``buf`` raises ValueError."""
+    try:
         b = buf[offset]
+        if b < 0x80:
+            return b, offset + 1
+        val = b & 0x7F
+        shift = 7
+        while True:
+            offset += 1
+            b = buf[offset]
+            if b < 0x80:
+                return val | b << shift, offset + 1
+            val |= (b & 0x7F) << shift
+            shift += 7
+            if shift == 63:
+                break
         offset += 1
-        val |= (b & 0x7F) << shift
-        shift += 7
-    return val, offset
+        b = buf[offset]
+    except IndexError:
+        raise ValueError("buffer exhausted: truncated MVT varint") from None
+    if b >= 0x80:
+        raise ValueError("varint longer than 10 bytes")
+    return val | (b & 1) << 63, offset + 1
 
 
 def _read_key(buf: bytes, offset: int) -> tuple[int, int, int]:
@@ -176,6 +191,8 @@ def _decode_feature(
             offset += ln
         else:
             offset = _skip(buf, offset, wire)
+    if offset != end:
+        raise ValueError("malformed MVT: feature field overrun")
     return fid_val, gtype, geometry, tags
 
 
@@ -211,6 +228,8 @@ def _decode_layer(buf: bytes, start: int, end: int) -> MvtLayer:
             version, offset = _read_varint(buf, offset)
         else:
             offset = _skip(buf, offset, wire)
+    if offset != end:
+        raise ValueError("malformed MVT: layer field overrun")
 
     layer = MvtLayer(name=name, extent=extent, version=version)
     for f_start, f_end in feature_spans:
@@ -234,10 +253,14 @@ def decode_mvt(tile: bytes) -> list[MvtLayer]:
         fid, wire, offset = _read_key(buf, offset)
         if fid == 3 and wire == 2:
             ln, offset = _read_varint(buf, offset)
+            if offset + ln > n:
+                raise ValueError("buffer exhausted: truncated MVT layer")
             layers.append(_decode_layer(buf, offset, offset + ln))
             offset += ln
         else:
             offset = _skip(buf, offset, wire)
+    if offset != n:
+        raise ValueError("buffer exhausted: truncated MVT field")
     return layers
 
 
@@ -249,23 +272,11 @@ def decode_mvt(tile: bytes) -> list[MvtLayer]:
 # reduction = 1 - covt_size/mvt_size, CovtConverterTest.java:285).
 
 def _key(field_id: int, wire: int) -> bytes:
-    return _encode_varint_single((field_id << 3) | wire)
-
-
-def _encode_varint_single(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
+    return encode_varint((field_id << 3) | wire)
 
 
 def _ld(field_id: int, payload: bytes) -> bytes:
-    return _key(field_id, 2) + _encode_varint_single(len(payload)) + payload
+    return _key(field_id, 2) + encode_varint(len(payload)) + payload
 
 
 def _zz(v: int) -> int:
@@ -274,11 +285,11 @@ def _zz(v: int) -> int:
 
 def _encode_value(v: Any) -> bytes:
     if isinstance(v, bool):
-        return _key(7, 0) + _encode_varint_single(int(v))
+        return _key(7, 0) + encode_varint(int(v))
     if isinstance(v, (int, np.integer)):
         if v >= 0:
-            return _key(5, 0) + _encode_varint_single(int(v))
-        return _key(6, 0) + _encode_varint_single(_zz(int(v)))
+            return _key(5, 0) + encode_varint(int(v))
+        return _key(6, 0) + encode_varint(_zz(int(v)))
     if isinstance(v, (float, np.floating)):
         return _key(2, 5) + struct.pack("<f", float(v))
     return _ld(1, str(v).encode("utf-8"))
@@ -310,7 +321,7 @@ def encode_mvt_layer(
                 vi = len(values)
                 value_idx[vb] = vi
                 values.append(vb)
-            tags += _encode_varint_single(ki) + _encode_varint_single(vi)
+            tags += encode_varint(ki) + encode_varint(vi)
 
         geom = bytearray()
         cx = cy = 0
@@ -320,59 +331,44 @@ def encode_mvt_layer(
             closed = gtype == 3 and len(pts) > 1 and pts[0] == pts[-1]
             if closed:
                 pts = pts[:-1]
-            geom += _encode_varint_single((1 << 3) | 1)  # MoveTo count=1
-            geom += _encode_varint_single(_zz(pts[0][0] - cx))
-            geom += _encode_varint_single(_zz(pts[0][1] - cy))
+            geom += encode_varint((1 << 3) | 1)  # MoveTo count=1
+            geom += encode_varint(_zz(pts[0][0] - cx))
+            geom += encode_varint(_zz(pts[0][1] - cy))
             cx, cy = pts[0]
             rest = pts[1:]
             if rest:
-                geom += _encode_varint_single((len(rest) << 3) | 2)  # LineTo
+                geom += encode_varint((len(rest) << 3) | 2)  # LineTo
                 for px, py in rest:
-                    geom += _encode_varint_single(_zz(px - cx))
-                    geom += _encode_varint_single(_zz(py - cy))
+                    geom += encode_varint(_zz(px - cx))
+                    geom += encode_varint(_zz(py - cy))
                     cx, cy = px, py
             if gtype == 3:
-                geom += _encode_varint_single(7)  # ClosePath
+                geom += encode_varint(7)  # ClosePath
 
         body = bytearray()
         if f.get("id") is not None:
-            body += _key(1, 0) + _encode_varint_single(int(f["id"]))
+            body += _key(1, 0) + encode_varint(int(f["id"]))
         if tags:
             body += _ld(2, bytes(tags))
-        body += _key(3, 0) + _encode_varint_single(gtype)
+        body += _key(3, 0) + encode_varint(gtype)
         body += _ld(4, bytes(geom))
         feats += _ld(2, bytes(body))
 
     layer = bytearray()
-    layer += _key(15, 0) + _encode_varint_single(2)  # version
+    layer += _key(15, 0) + encode_varint(2)  # version
     layer += _ld(1, name.encode("utf-8"))
     layer += bytes(feats)
     for k in keys:
         layer += _ld(3, k.encode("utf-8"))
     for vb in values:
         layer += _ld(4, vb)
-    layer += _key(5, 0) + _encode_varint_single(extent)
+    layer += _key(5, 0) + encode_varint(extent)
     return _ld(3, bytes(layer))
 
 
 def encode_mvt(layers: list[tuple[str, list[dict], int]]) -> bytes:
     """Full tile: [(name, features, extent), ...] -> MVT bytes."""
     return b"".join(encode_mvt_layer(n, f, e) for n, f, e in layers)
-
-
-def encode_mvt_layers(layers: list[MvtLayer]) -> bytes:
-    """Re-encode decoded `MvtLayer` objects back to MVT bytes — the
-    inverse of `decode_mvt` for pipelines that edit geometry in between
-    (e.g. the opt-in generalization pass in pipeline/transcode.py)."""
-    return encode_mvt(
-        [(
-            l.name,
-            [{"id": f.id, "geom_type": f.geom_type,
-              "parts": f.geometry, "properties": f.properties}
-             for f in l.features],
-            l.extent,
-        ) for l in layers]
-    )
 
 
 def mvt_point_layer_size(

@@ -44,6 +44,21 @@ def varint_len_vec(values: np.ndarray) -> np.ndarray:
     return np.searchsorted(_LEN_BOUNDS, u, side="right") + 1
 
 
+def encode_varint(v: int) -> bytes:
+    """Varint of one non-negative Python int: the scalar writer for
+    headers, metadata and MVT fields, where a numpy call costs more than
+    the value."""
+    out = bytearray()
+    while True:
+        b = v & 0x7F
+        v >>= 7
+        if v:
+            out.append(b | 0x80)
+        else:
+            out.append(b)
+            return bytes(out)
+
+
 def encode_varints(values: np.ndarray) -> bytes:
     """Encode an array of unsigned 64-bit values as concatenated varints."""
     v = np.asarray(values).astype(np.uint64, copy=False)

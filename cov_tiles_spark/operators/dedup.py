@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+from cov_tiles_spark.operators.similarity import _dot_expr, _norm_expr
+
 _MERSENNE = (1 << 61) - 1
 _NUM_HASHES = 64  # MinHash permutations per signature
 _SHINGLE = 5  # bytes per shingle
@@ -426,19 +428,9 @@ def embedding_near_dups(
         cand.join(vecs.select(F.col("id").alias("id_a"), F.col("vec").alias("vec_a")), "id_a")
         .join(vecs.select(F.col("id").alias("id_b"), F.col("vec").alias("vec_b")), "id_b")
     )
-    dot = F.aggregate(
-        F.zip_with("vec_a", "vec_b", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+    cos = _dot_expr("vec_a", "vec_b") / (
+        _norm_expr(F.col("vec_a")) * _norm_expr(F.col("vec_b"))
     )
-    norm = lambda c: F.sqrt(
-        F.aggregate(
-            F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-    cos = dot / (norm(F.col("vec_a")) * norm(F.col("vec_b")))
     return (
         cand.withColumn("cosine", cos)
         .filter(F.col("cosine") >= threshold)

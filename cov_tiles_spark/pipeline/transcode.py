@@ -3,15 +3,18 @@
 re-expressed as a Spark job:
 
     spark.read.format("binaryFile").load("*.mvt")      # S2 scan
-      -> mapInPandas(decode MVT, shred, encode COVT)   # §3.1 steps 1-2
+      -> map_rows(decode MVT, shred, encode COVT)      # §3.1 steps 1-2
       -> (path, z, x, y, covt payload, sizes, verified)
 
-Each input tile is independent, so the job is embarrassingly parallel;
-``binaryFile`` gives Catalyst-managed file splitting and predicate
-pushdown on (path, length). Per-tile verification (decode our COVT and
-compare feature-for-feature with the MVT decode — the reference's
-round-trip oracle, `BingCovtDemo.java:194-222`) runs inline and is
-reported as a boolean column, so a 100 TB transcode is self-auditing.
+Each input tile is independent, so the job is embarrassingly parallel: one
+per-file kernel under `rows.map_rows`. ``binaryFile`` gives
+Catalyst-managed file splitting and predicate pushdown on (path, length).
+Every layer is encoded in its source feature order, as the reference's
+converter does. Per-tile verification (decode our COVT, gen-A and gen-B,
+and compare feature-for-feature, in order, with the MVT decode — the
+reference's round-trip oracle, `BingCovtDemo.java:194-222`) runs inline
+and is reported as two boolean columns, so a 100 TB transcode is
+self-auditing.
 """
 
 from __future__ import annotations
@@ -19,16 +22,15 @@ from __future__ import annotations
 import gzip as _gzip
 import os
 import re
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cov_tiles_spark.covt.decoder import GeometryColumn, decode_covt
 from cov_tiles_spark.covt.encoder import LayerInput, PropertyInput, encode_tile
 from cov_tiles_spark.covt.metadata import ColumnDataType, GeometryType
 from cov_tiles_spark.covt.mvt import MvtLayer, decode_mvt, encode_mvt
+from cov_tiles_spark.rows import map_rows
 
 TRANSCODE_SCHEMA = (
     "path string, z int, x int, y int, mvt_bytes long, covt_bytes long, "
@@ -37,6 +39,7 @@ TRANSCODE_SCHEMA = (
     "genb_verified boolean, payload binary"
 )
 
+_COLUMNS = [c.split()[0] for c in TRANSCODE_SCHEMA.split(", ")]
 _ZXY_RE = re.compile(r"(\d+)[_\-/](\d+)[_\-/](\d+)\.(mvt|pbf)$")
 
 
@@ -164,9 +167,9 @@ def _properties_from_mvt(
     return props, localized
 
 
-def _layer_inputs(mvt_bytes: bytes) -> tuple[list[LayerInput], int]:
-    """MVT bytes -> (LayerInput list, n_features), empty layers dropped."""
-    layers = decode_mvt(mvt_bytes)
+def _layer_inputs(layers: list[MvtLayer]) -> tuple[list[LayerInput], int]:
+    """Decoded MVT layers -> (LayerInput list, n_features), empty layers
+    dropped."""
     inputs = []
     n_features = 0
     for lay in layers:
@@ -192,71 +195,40 @@ def _layer_inputs(mvt_bytes: bytes) -> tuple[list[LayerInput], int]:
     return inputs, n_features
 
 
-def mvt_to_covt(mvt_bytes: bytes) -> tuple[bytes, int, int]:
-    """One tile: MVT bytes -> (COVT bytes, n_layers, n_features)."""
-    inputs, n_features = _layer_inputs(mvt_bytes)
-    return encode_tile(inputs), len(inputs), n_features
-
-
-def mvt_to_genb(
-    mvt_bytes: bytes, reorder: bool = False
-) -> tuple[bytes, dict, int, int]:
+def mvt_to_genb(mvt_bytes: bytes) -> tuple[bytes, dict, int, int]:
     """One tile: MVT bytes -> (gen-B COVT bytes, TileJSON dict, n_layers,
-    n_features). ``name:*`` groups use the format-reserved
-    LOCALIZED_DICTIONARY column type (shared dictionary across locales —
-    our documented extension; the reference converter throws on it,
-    CovtConverter.java:358-360). Each stream takes FAST_PFOR (in
-    `covt/pfor.py`'s container) or its RLE/varint alternative by size.
-
-    ``reorder=True`` additionally argmins each layer's feature order
-    over {source, SFC/greedy-chain, id-sort} by encoded size
-    (README.md:210-221 levers + the converter's id sort) — never worse
-    than source order, ~3x encode cost, so it is the offline/parity
-    option, not the hot default. Reordered tiles verify as feature
-    multisets (``_features_match(any_order=True)``)."""
-    from cov_tiles_spark.covt.genb import encode_tile_genb
-
-    inputs, n_features = _layer_inputs(mvt_bytes)
-    if reorder:
-        from cov_tiles_spark.covt.order import candidate_perms, permute_layer
-
-        def _sz(lay) -> int:
-            return len(
-                encode_tile_genb(
-                    [lay], optimize_metadata=True, geometry_encoding="best"
-                )[0]
-            )
-
-        inputs = [
-            min(
-                [lay] + [permute_layer(lay, p) for _, p in candidate_perms(lay)],
-                key=_sz,
-            )
-            for lay in inputs
-        ]
-    payload, tilejson = encode_tile_genb(
-        inputs, optimize_metadata=True, geometry_encoding="best"
-    )
+    n_features), each layer in its source feature order. ``name:*``
+    groups use the format-reserved LOCALIZED_DICTIONARY column type
+    (shared dictionary across locales — our documented extension; the
+    reference converter throws on it, CovtConverter.java:358-360). Each
+    stream takes FAST_PFOR (in `covt/pfor.py`'s container) or its
+    RLE/varint alternative by size."""
+    inputs, n_features = _layer_inputs(decode_mvt(mvt_bytes))
+    payload, tilejson = _encode_genb(inputs)
     return payload, tilejson, len(inputs), n_features
 
 
+def _encode_genb(inputs: list[LayerInput]) -> tuple[bytes, dict]:
+    from cov_tiles_spark.covt.genb import encode_tile_genb
+
+    return encode_tile_genb(
+        inputs, optimize_metadata=True, geometry_encoding="best"
+    )
+
+
 def verify_genb_roundtrip(
-    payload: bytes, tilejson: dict, mvt_layers: list[MvtLayer],
-    any_order: bool = False,
+    payload: bytes, tilejson: dict, mvt_layers: list[MvtLayer]
 ) -> bool:
     """Gen-B round-trip oracle: decode our gen-B tile and compare
     feature-for-feature with the MVT decode (same rule as
-    ``verify_roundtrip``). ``any_order=True`` compares feature
-    multisets — required when the encoder reordered features (the
-    reference's own spec re-sorts id-sorted layers the same way,
-    covtDecoder.spec.ts:105-108)."""
+    ``verify_roundtrip``)."""
     from cov_tiles_spark.covt.genb import decode_tile_genb
 
     try:
         decoded = decode_tile_genb(payload, tilejson)
     except Exception:
         return False
-    return _features_match(decoded, mvt_layers, any_order=any_order)
+    return _features_match(decoded, mvt_layers)
 
 
 def verify_roundtrip(covt_bytes: bytes, mvt_layers: list[MvtLayer]) -> bool:
@@ -317,36 +289,7 @@ def covt_to_mvt(
     return encode_mvt(layers)
 
 
-def _canon_key(geom, props, fid):
-    """Order-insensitive feature key: id + geometry + sorted properties.
-    Float values key through ``round(v, 2)`` — coarse enough to survive
-    float32 round-trip drift in the low digits, fine enough that two
-    features identical except for float properties align with their own
-    pair instead of being cross-paired by the stable sort (they are
-    still checked pairwise at full tolerance after alignment). Non-float
-    values normalize through str() so numpy scalars key identically to
-    Python ones."""
-    gk = tuple(
-        tuple((float(x), float(y)) for x, y in part) for part in geom
-    )
-    pk = tuple(
-        sorted(
-            (
-                k,
-                f"f:{round(float(v), 2):.2f}"
-                if isinstance(v, (float, np.floating))
-                else str(v),
-            )
-            for k, v in props.items()
-            if v is not None
-        )
-    )
-    return (fid is None, int(fid or 0), gk, pk)
-
-
-def _features_match(
-    decoded, mvt_layers: list[MvtLayer], any_order: bool = False
-) -> bool:
+def _features_match(decoded, mvt_layers: list[MvtLayer]) -> bool:
     mvt_map = {l.name: l for l in mvt_layers if l.features}
     if set(decoded) != set(mvt_map):
         return False
@@ -355,18 +298,6 @@ def _features_match(
         src = mvt_map[name].features
         if len(feats) != len(src):
             return False
-        if any_order:
-            # multiset compare under a canonical sort: the per-index
-            # checks below then run pairwise on aligned features
-            feats = sorted(
-                feats,
-                key=lambda a: _canon_key(
-                    a["geometry"], a["properties"], a.get("id")
-                ),
-            )
-            src = sorted(
-                src, key=lambda b: _canon_key(b.geometry, b.properties, b.id)
-            )
         for a, b in zip(feats, src):
             if a["geometry"] != b.geometry:
                 return False
@@ -382,88 +313,37 @@ def _features_match(
     return True
 
 
-def _transcode_batches(
-    batches: Iterator[pd.DataFrame], reorder_genb: bool = False,
-    simplify_tolerance: int = 0,
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for _, row in pdf.iterrows():
-            raw = bytes(row["content"])
-            if raw[:2] == b"\x1f\x8b":  # gzip source (S3)
-                raw = _gzip.decompress(raw)
-            m = _ZXY_RE.search(row["path"])
-            z, x, y = (int(m.group(i)) for i in (1, 2, 3)) if m else (-1, -1, -1)
-            if simplify_tolerance > 0:
-                from cov_tiles_spark.covt.mvt import encode_mvt_layers
-                from cov_tiles_spark.spatial.generalize import (
-                    simplify_mvt_layers,
-                )
-
-                slim, _ = simplify_mvt_layers(
-                    decode_mvt(raw), simplify_tolerance
-                )
-                # mvt_bytes below stays the SOURCE size, so the ratio
-                # columns then include the generalization gain (opt-in)
-                enc_src = encode_mvt_layers(slim)
-            else:
-                enc_src = raw
-            covt, n_layers, n_features = mvt_to_covt(enc_src)
-            mvt_layers = decode_mvt(enc_src)
-            ok = verify_roundtrip(covt, mvt_layers)
-            genb, tilejson, _, _ = mvt_to_genb(enc_src, reorder=reorder_genb)
-            genb_ok = verify_genb_roundtrip(
-                genb, tilejson, mvt_layers, any_order=reorder_genb
-            )
-            rows.append(
-                {
-                    "path": os.path.basename(row["path"]),
-                    "z": z, "x": x, "y": y,
-                    "mvt_bytes": len(raw),
-                    "covt_bytes": len(covt),
-                    "genb_bytes": len(genb),
-                    "gzip_mvt_bytes": len(_gzip.compress(raw, 6)),
-                    "gzip_covt_bytes": len(_gzip.compress(covt, 6)),
-                    "n_layers": n_layers,
-                    "n_features": n_features,
-                    "verified": ok,
-                    "genb_verified": genb_ok,
-                    "payload": covt,
-                }
-            )
-        yield pd.DataFrame(rows) if rows else pd.DataFrame(
-            columns=[c.split()[0] for c in TRANSCODE_SCHEMA.split(", ")]
-        )
+def _transcode_tile(path: str, content: bytes) -> list[tuple]:
+    """One source file -> its TRANSCODE_SCHEMA row (``map_rows`` kernel):
+    one MVT decode, gen-A and gen-B encoded from the same layer inputs,
+    each verified against that decode."""
+    raw = bytes(content)
+    if raw[:2] == b"\x1f\x8b":  # gzip source (S3)
+        raw = _gzip.decompress(raw)
+    m = _ZXY_RE.search(path)
+    z, x, y = (int(m.group(i)) for i in (1, 2, 3)) if m else (-1, -1, -1)
+    mvt_layers = decode_mvt(raw)
+    inputs, n_features = _layer_inputs(mvt_layers)
+    covt = encode_tile(inputs)
+    genb, tilejson = _encode_genb(inputs)
+    return [(
+        os.path.basename(path), z, x, y,
+        len(raw), len(covt), len(genb),
+        len(_gzip.compress(raw, 6)), len(_gzip.compress(covt, 6)),
+        len(inputs), n_features,
+        verify_roundtrip(covt, mvt_layers),
+        verify_genb_roundtrip(genb, tilejson, mvt_layers),
+        covt,
+    )]
 
 
-def transcode_mvt_directory(
-    spark: SparkSession, glob_path: str, reorder_genb: bool = False,
-    simplify_tolerance: int = 0,
-) -> DataFrame:
-    """Transcode every .mvt/.pbf under ``glob_path`` to COVT, verified.
-
-    ``reorder_genb=True`` turns on the per-layer feature-order argmin
-    for the gen-B encode (see :func:`mvt_to_genb`) — the offline/parity
-    setting (~3x encode cost, never larger output).
-
-    ``simplify_tolerance>0`` runs the opt-in generalization pass
-    (spatial/generalize.py `simplify_mvt_layers`: DP line
-    simplification, points/polygons untouched) before both encodes;
-    roundtrip verification then runs against the simplified geometry,
-    and the `mvt_bytes` column keeps the SOURCE size so the ratio
-    columns include the generalization gain. Default 0 = byte-identical
-    to the fixture-gated path."""
+def transcode_mvt_directory(spark: SparkSession, glob_path: str) -> DataFrame:
+    """Transcode every .mvt/.pbf under ``glob_path`` to COVT, verified."""
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.{mvt,pbf}")
         .load(glob_path)
-        .select("path", "content")
     )
-
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        yield from _transcode_batches(
-            batches, reorder_genb=reorder_genb,
-            simplify_tolerance=simplify_tolerance,
-        )
-
-    return files.mapInPandas(_batches, schema=TRANSCODE_SCHEMA)
+    return map_rows(
+        files, TRANSCODE_SCHEMA, ("path", "content"), _COLUMNS, _transcode_tile
+    )

@@ -11,18 +11,20 @@ The per-zoom chain is merge -> simplify -> clip -> cull:
 - `merge_lines` — greedy endpoint chaining of road fragments: ONE
   group-key exchange + sorted-stream `mapInPandas` (deterministic under
   any partitioning via the sorted (group, order) processing order).
-- `simplify_lines` / `clip_rings` / `clip_lines` — MAP-ONLY: no
-  shuffle, embarrassingly parallel per feature; at 100 TB they scale
-  linearly with executors and add zero exchanges to the plan (plan
-  pins in `tests/test_generalize.py`).
+- `simplify_lines` / `simplify_rings` / `clip_rings` / `clip_lines` —
+  MAP-ONLY: one per-row kernel each under `rows.map_rows`, no shuffle,
+  embarrassingly parallel per feature; at 100 TB they scale linearly
+  with executors and add zero exchanges to the plan (plan pins in
+  `tests/test_generalize.py`).
 - `ring_area2_col` / `bbox_cols` / `ring_centroid_cols` — pure JVM
   `F.aggregate` expressions (whole-stage codegen, no Python worker): a
   tippecanoe-style drop-smallest filter on them is a free scan-time
   predicate.
-- `simplify_mvt_layers` — the opt-in pre-encode pass, wired into
-  `pipeline/transcode.py transcode_mvt_directory(simplify_tolerance=)`.
-  `tests/test_generalize.py::test_generalization_chain_composes_one_exchange`
-  pins the whole chain to a single exchange.
+
+`tests/test_generalize.py::test_generalization_chain_composes_one_exchange`
+pins the whole chain to a single exchange. The chain runs on Spark rows
+of vertex arrays; the MVT→COVT transcode (`pipeline/transcode.py`) does
+not generalize, it encodes the geometry its source tiles carry.
 
 Exactness contract (what makes these gate-able cross-engine):
 
@@ -81,7 +83,6 @@ __all__ = [
     "bbox_cols",
     "merge_fragments",
     "merge_lines",
-    "simplify_mvt_layers",
 ]
 
 
@@ -513,92 +514,6 @@ def merge_lines(
         .sortWithinPartitions(*gcols, order_col)
         .mapInPandas(run, schema)
     )
-
-
-def simplify_mvt_layers(layers, tolerance: int, rings: bool = False):
-    """Per-zoom generalization pass over decoded MVT layers.
-
-    DP-simplifies every LINESTRING / MULTI_LINESTRING part of every
-    feature (`covt/mvt.py MvtFeature.geom_type == 2`) with integer
-    tolerance `tolerance`; points pass through untouched. Polygons are
-    untouched by DEFAULT — ring simplification can invalidate
-    shared-boundary topology — but ``rings=True`` opts polygon rings
-    into `simplify_ring` (MVT closed-ring convention preserved; rings
-    that collapse below 3 vertices are dropped, and a feature whose
-    FIRST ring — the MVT outer — collapses is dropped entirely).
-    `tolerance <= 0` returns the input list unchanged (NOT tol-0 DP,
-    which would still drop exactly collinear interior vertices).
-
-    Returns ``(new_layers, stats)`` where stats is a dict with
-    `vertices_in` / `vertices_out` counted over the simplified parts
-    only, plus `features_dropped`. The pass sits between `decode_mvt`
-    and `mvt_to_genb` / `mvt_to_covt` in a transcode pipeline; the
-    codec itself never changes bytes (the golden-fixture gates stay
-    byte-identical unless the caller opts in).
-    """
-    from cov_tiles_spark.covt.mvt import MvtFeature, MvtLayer
-
-    if tolerance <= 0:
-        return layers, {"vertices_in": 0, "vertices_out": 0,
-                        "features_dropped": 0}
-    v_in = v_out = dropped = 0
-    out_layers = []
-    for layer in layers:
-        feats = []
-        for f in layer.features:
-            if f.geom_type == 1 or (f.geom_type == 3 and not rings):
-                feats.append(f)
-                continue
-            parts = []
-            outer_collapsed = False
-            for pi, p in enumerate(f.geometry):
-                if f.geom_type == 3:
-                    # rings arrive closed (first vertex repeated): open,
-                    # simplify, re-close
-                    closed = len(p) > 1 and p[0] == p[-1]
-                    ring = p[:-1] if closed else p
-                    xs = [v[0] for v in ring]
-                    ys = [v[1] for v in ring]
-                    sx, sy = simplify_ring(xs, ys, tolerance)
-                    v_in += len(xs)
-                    v_out += len(sx)
-                    if not sx:
-                        if pi == 0:
-                            outer_collapsed = True
-                            break
-                        continue
-                    pts = list(zip(sx, sy))
-                    if closed:
-                        pts.append(pts[0])
-                    parts.append(pts)
-                else:
-                    xs = [v[0] for v in p]
-                    ys = [v[1] for v in p]
-                    sx, sy = simplify_polyline(xs, ys, tolerance)
-                    v_in += len(xs)
-                    v_out += len(sx)
-                    parts.append(list(zip(sx, sy)))
-            if outer_collapsed or not parts:
-                dropped += 1
-                continue
-            feats.append(
-                MvtFeature(
-                    id=f.id,
-                    geom_type=f.geom_type,
-                    geometry=parts,
-                    properties=f.properties,
-                )
-            )
-        out_layers.append(
-            MvtLayer(
-                name=layer.name,
-                extent=layer.extent,
-                version=layer.version,
-                features=feats,
-            )
-        )
-    return out_layers, {"vertices_in": v_in, "vertices_out": v_out,
-                        "features_dropped": dropped}
 
 
 # ------------------------------------------------------- Spark operators

@@ -41,7 +41,7 @@ def main() -> None:
 
     spark = get_spark(master="local[8]")
     spark.sparkContext.setLogLevel("ERROR")
-    rows = transcode_mvt_directory(spark, OMT, reorder_genb=True).collect()
+    rows = transcode_mvt_directory(spark, OMT).collect()
 
     lines = [
         _HEADER + "\n",
@@ -75,16 +75,8 @@ def main() -> None:
         "and adds FastPFOR-style streams; gen-A keeps localized "
         "dictionaries, which gen-B (like the reference's converter) "
         "lacks — hence gen-A can still win on name-heavy low zooms.\n\n"
-        "Feature-order levers (the reference's own README.md:210-221 "
-        "next-steps, implemented in covt/order.py and MEASURED on its "
-        "committed tiles): Hilbert point sort and greedy min-distance "
-        "LineString chaining each GROW these tiles when forced (+10-29% "
-        "on place/transportation layers — the source order already "
-        "id-sorts and groups properties, which the permutation "
-        "destroys); the id-sort candidate wins occasionally. Gen-B "
-        "numbers above therefore use the per-layer argmin over {source, "
-        "SFC/greedy, id-sort} (reorder_genb=True, never larger than "
-        "source order, verified as feature multisets). The remaining "
+        "Every layer is encoded in its source feature order, as the "
+        "reference's converter does. The "
         "z6-z8 gap vs the published README numbers is corpus content — "
         "these tiles carry 66-locale name dictionaries whose UTF-8 "
         "slabs (7.1 KB of the 102.6 KB z8 tile) and OSM ids no in-enum "

@@ -11,8 +11,9 @@
 - Every ``from cov_tiles_spark... import name`` in those roots and in
   ``scripts/`` resolves, so deleting a def cannot leave a script that
   fails only when it runs.
-- Every defaulted parameter of a package def is set by some call: a
-  default nothing overrides is a constant, not an option.
+- Every defaulted parameter of a package def or of a def in
+  ``__spark_entry__.py`` is set by some call: a default nothing
+  overrides is a constant, not an option.
 - Every parameter of a package def or lambda is read in its body: one
   that is accepted and never read is a settable value that changes
   nothing."""
@@ -118,7 +119,7 @@ def _callee(call: ast.Call) -> str | None:
 
 
 def unset_params(root: Path = ROOT) -> list[str]:
-    """Defaulted parameters of package defs that no call sets.
+    """Defaulted parameters of package and entry defs that no call sets.
 
     Calls are read from the package, the entry, ``bench*.py``,
     ``perfbench/``, ``scripts/`` and ``tests/``: a default that only a
@@ -149,7 +150,8 @@ def unset_params(root: Path = ROOT) -> list[str]:
                 k.arg for k in call.keywords if k.arg
             )
     out = []
-    for path in sorted((root / "cov_tiles_spark").rglob("*.py")):
+    entry = [p for p in [root / "__spark_entry__.py"] if p.exists()]
+    for path in sorted((root / "cov_tiles_spark").rglob("*.py")) + entry:
         tree = ast.parse(path.read_text(encoding="utf-8"))
         owner = {
             id(m): c.name
@@ -347,6 +349,20 @@ def test_param_scan_flags_an_unset_default(tmp_path):
         "bench.py": "from cov_tiles_spark.mod import f, g\n\nf(1, 2)\ng(b=4)\n",
     })
     assert unset_params(root) == ["cov_tiles_spark/mod.py:1 f(b)"]
+
+
+def test_param_scan_covers_entry_defs(tmp_path):
+    """A gate's default that no call sets is reported like a package
+    def's."""
+    root = _tree(tmp_path, {
+        "cov_tiles_spark/mod.py": "def f(x):\n    return x\n",
+        "__spark_entry__.py": (
+            "def q_a(spark, sf_dir, tol=16):\n    return tol\n\n\n"
+            "def q_b(spark, sf_dir, tol=8):\n    return tol\n\n\n"
+            "def run():\n    return q_b(None, '', tol=4)\n"
+        ),
+    })
+    assert unset_params(root) == ["__spark_entry__.py:1 q_a(tol)"]
 
 
 def test_param_scan_keeps_defaults_set_by_test_position_or_kw(tmp_path):

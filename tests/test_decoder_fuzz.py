@@ -219,3 +219,79 @@ def test_self_contained_bit_flips_fail_cleanly_or_decode(data, decode):
             decode(bytes(mutated))
         except Exception:
             pass  # any ordinary exception is a clean rejection
+
+
+# ---- MVT reader on self-built tiles (points, lines, a polygon with a hole)
+
+
+def _mvt_tiles():
+    from test_transcode import _self_built_tile
+
+    return [_self_built_tile(seed) for seed in (1, 2)]
+
+
+def _mvt_features(layers) -> int:
+    return sum(len(lay.features) for lay in layers)
+
+
+@pytest.mark.parametrize("data", _mvt_tiles(), ids=["mvt-1", "mvt-2"])
+def test_mvt_truncation_raises_value_error_or_drops_layers(data):
+    """Every cut raises ValueError, as the COVT decoders do, except a cut
+    on a layer boundary, which is a valid tile of fewer features."""
+    n_full = _mvt_features(decode_mvt(data))
+    assert n_full == 16
+    for cut in range(1, len(data)):
+        try:
+            layers = decode_mvt(data[:cut])
+        except ValueError:
+            continue
+        assert _mvt_features(layers) < n_full, f"silent success at cut={cut}"
+
+
+@pytest.mark.parametrize("data", _mvt_tiles(), ids=["mvt-1", "mvt-2"])
+def test_mvt_bit_flips_fail_cleanly_or_decode(data):
+    rng = np.random.default_rng(5)
+    for _ in range(50):
+        mutated = bytearray(data)
+        mutated[int(rng.integers(0, len(data)))] ^= 1 << int(rng.integers(0, 8))
+        try:
+            decode_mvt(bytes(mutated))
+        except Exception:
+            pass  # any ordinary exception is a clean rejection
+
+
+def test_mvt_varint_is_bounded_to_ten_bytes():
+    from cov_tiles_spark.covt.mvt import _read_varint
+
+    assert _read_varint(bytes([0xFF] * 9 + [1]), 0) == (2**64 - 1, 10)
+    with pytest.raises(ValueError, match="longer than 10 bytes"):
+        _read_varint(bytes([0xFF] * 10 + [1]), 0)
+    with pytest.raises(ValueError, match="buffer exhausted"):
+        _read_varint(bytes([0x80, 0x80]), 0)
+    # a tile whose first field key is overlong
+    with pytest.raises(ValueError, match="longer than 10 bytes"):
+        decode_mvt(bytes([0x9A] + [0xFF] * 9 + [1]))
+
+
+def test_mvt_varint_agrees_with_the_shared_walk_and_writer():
+    """The MVT reader's varint and `varint.decode_varint` return the same
+    value and offset, or both raise ValueError, on random bytes; the
+    scalar writer matches the vectorized one."""
+    from cov_tiles_spark.covt.mvt import _read_varint
+    from cov_tiles_spark.covt.varint import decode_varint, encode_varint, encode_varints
+
+    def outcome(read, buf):
+        try:
+            return read(buf, 0)
+        except ValueError:
+            return None
+
+    rng = np.random.default_rng(6)
+    for _ in range(2000):
+        buf = rng.integers(0, 256, int(rng.integers(1, 13)), dtype=np.uint8)
+        buf[: int(rng.integers(0, len(buf) + 1))] |= 0x80  # long varints too
+        buf = buf.tobytes()
+        assert outcome(_read_varint, buf) == outcome(decode_varint, buf), buf
+    for v in (0, 1, 127, 128, 300, 2**35 + 7, 2**63, 2**64 - 1):
+        assert encode_varint(v) == encode_varints(np.array([v], dtype=np.uint64))
+        assert _read_varint(encode_varint(v), 0) == (v, len(encode_varint(v)))

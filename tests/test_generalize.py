@@ -387,123 +387,6 @@ except ImportError:  # pragma: no cover - hypothesis is baked in
     pass
 
 
-class TestSimplifyMvtLayers:
-    GOLDEN = "/root/reference/parser/js/data/omt/5_16_20.mvt"
-
-    def _load(self):
-        from cov_tiles_spark.covt.mvt import decode_mvt
-
-        with open(self.GOLDEN, "rb") as fh:
-            return decode_mvt(fh.read())
-
-    def test_nonpositive_tolerance_is_identity(self):
-        from cov_tiles_spark.spatial.generalize import simplify_mvt_layers
-
-        layers = self._load()
-        out, stats = simplify_mvt_layers(layers, 0)
-        assert out is layers
-        assert stats == {"vertices_in": 0, "vertices_out": 0,
-                         "features_dropped": 0}
-
-    def test_golden_tile_simplify_reencode(self):
-        from cov_tiles_spark.covt.genb import decode_tile_genb
-        from cov_tiles_spark.covt.mvt import encode_mvt
-        from cov_tiles_spark.pipeline.transcode import mvt_to_genb
-        from cov_tiles_spark.spatial.generalize import (
-            simplify_mvt_layers,
-            simplify_polyline,
-        )
-
-        layers = self._load()
-        out, stats = simplify_mvt_layers(layers, 4)
-        # lines got shorter, per the kernel, feature-for-feature
-        assert 0 < stats["vertices_out"] < stats["vertices_in"]
-        for lin, lout in zip(layers, out):
-            assert len(lin.features) == len(lout.features)
-            for fin, fout in zip(lin.features, lout.features):
-                assert fin.properties == fout.properties
-                assert fin.id == fout.id
-                if fin.geom_type != 2:
-                    assert fout.geometry == fin.geometry
-                    continue
-                for pin, pout in zip(fin.geometry, fout.geometry):
-                    sx, sy = simplify_polyline(
-                        [v[0] for v in pin], [v[1] for v in pin], 4
-                    )
-                    assert pout == list(zip(sx, sy))
-
-        def rebytes(ls):
-            return encode_mvt(
-                [(
-                    l.name,
-                    [{"id": f.id, "geom_type": f.geom_type,
-                      "parts": f.geometry, "properties": f.properties}
-                     for f in l.features],
-                    l.extent,
-                ) for l in ls]
-            )
-
-        base = mvt_to_genb(rebytes(layers))[0]
-        slim, slim_tj, _, _ = mvt_to_genb(rebytes(out))
-        assert len(slim) < len(base)
-        decoded = decode_tile_genb(slim, tilejson=slim_tj)
-        assert set(decoded.keys()) == {l.name for l in layers}
-
-    def test_rings_opt_in_simplifies_polygons(self):
-        from cov_tiles_spark.covt.genb import decode_tile_genb
-        from cov_tiles_spark.covt.mvt import encode_mvt_layers
-        from cov_tiles_spark.pipeline.transcode import mvt_to_genb
-        from cov_tiles_spark.spatial.generalize import (
-            simplify_mvt_layers,
-            simplify_ring,
-        )
-
-        layers = self._load()
-        lines_only, s1 = simplify_mvt_layers(layers, 8)
-        both, s2 = simplify_mvt_layers(layers, 8, rings=True)
-        # polygons now participate: strictly more vertices examined
-        assert s2["vertices_in"] > s1["vertices_in"]
-
-        # replay the documented polygon rules per layer and compare
-        def expect_polygon(f):
-            parts = []
-            for pi, p in enumerate(f.geometry):
-                closed = len(p) > 1 and p[0] == p[-1]
-                ring = p[:-1] if closed else p
-                sx, sy = simplify_ring(
-                    [v[0] for v in ring], [v[1] for v in ring], 8
-                )
-                if not sx:
-                    if pi == 0:
-                        return None
-                    continue
-                pts = list(zip(sx, sy))
-                if closed:
-                    pts.append(pts[0])
-                parts.append(pts)
-            return parts or None
-
-        for lin, lout in zip(layers, both):
-            want = []
-            for f in lin.features:
-                if f.geom_type != 3:
-                    want.append(("passthrough-or-line", f.id))
-                    continue
-                exp = expect_polygon(f)
-                if exp is not None:
-                    want.append(("poly", f.id, exp))
-            got = [f for f in lout.features]
-            assert len(got) == len(want)
-            for w, g in zip(want, got):
-                if w[0] == "poly":
-                    assert g.geom_type == 3 and g.id == w[1]
-                    assert g.geometry == w[2]
-        tile, tj, _, _ = mvt_to_genb(encode_mvt_layers(both))
-        b_lines = len(mvt_to_genb(encode_mvt_layers(lines_only))[0])
-        assert len(tile) <= b_lines
-        decode_tile_genb(tile, tilejson=tj)
-
-
 # ------------------------------------------------------------- Spark
 
 

@@ -1,30 +1,103 @@
-"""Distributed MVT→COVT transcoding over the reference's own golden .mvt
-tiles — the reference's main program as a Spark job (SURVEY §3.1/§3.3)."""
+"""Distributed MVT→COVT transcoding — the reference's main program as a
+Spark job (SURVEY §3.1/§3.3) — over self-built tiles and the reference's
+own golden .mvt tiles."""
 
 from __future__ import annotations
+
+import gzip
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from cov_tiles_spark.covt.mvt import encode_mvt
 from cov_tiles_spark.pipeline.transcode import transcode_mvt_directory
 
 
-def test_transcode_with_generalization_pass(spark):
-    # Bing tiles are NOT pre-simplified (BENCH/BASELINE.md generalization
-    # table): the opt-in pass must shrink the gen-B total while every
-    # tile still verifies against its simplified geometry
-    base = transcode_mvt_directory(
-        spark, "/root/reference/parser/js/data/bing"
-    ).agg(F.sum("genb_bytes").alias("b")).collect()[0].b
-    slim = transcode_mvt_directory(
-        spark, "/root/reference/parser/js/data/bing", simplify_tolerance=8
-    ).cache()
-    rows = slim.collect()
-    assert len(rows) == 7
+def _self_built_tile(seed: int) -> bytes:
+    """Three layers: points and a multipoint, lines and a multiline, and
+    polygons (one with a hole) without ids; string and int properties,
+    some absent or negative."""
+    rng = np.random.default_rng(seed)
+
+    def pt():
+        return tuple(int(v) for v in rng.integers(0, 4096, 2))
+
+    pois = [
+        {"id": i, "geom_type": 1, "parts": [[pt()]],
+         "properties": {"class": ("cafe", "shop")[i % 2], "rank": i - 3}}
+        for i in range(7)
+    ] + [{"id": 7, "geom_type": 1, "parts": [[pt()], [pt()], [pt()]],
+          "properties": {"class": "kiosk"}}]
+    roads = [
+        {"id": 100 + i, "geom_type": 2,
+         "parts": [[pt() for _ in range(int(rng.integers(2, 6)))]],
+         "properties": {"class": ("minor", "primary")[i % 2], "lanes": i % 3 + 1}}
+        for i in range(5)
+    ] + [{"id": 105, "geom_type": 2, "parts": [[pt(), pt()], [pt(), pt(), pt()]],
+          "properties": {"lanes": 4}}]
+    water = [
+        {"id": None, "geom_type": 3,
+         "parts": [[(0, 0), (400, 0), (400, 400), (0, 400), (0, 0)],
+                   [(100, 100), (100, 300), (300, 300), (300, 100), (100, 100)]],
+         "properties": {"kind": "lake", "depth": int(rng.integers(1, 50))}},
+        {"id": None, "geom_type": 3,
+         "parts": [[(1000, 1000), (1600, 1000), (1300, 1500), (1000, 1000)]],
+         "properties": {"kind": "pond"}},
+    ]
+    return encode_mvt(
+        [("pois", pois, 4096), ("roads", roads, 4096), ("water", water, 4096)]
+    )
+
+
+def test_transcode_self_built_tiles_verify_in_both_formats(spark, tmp_path):
+    """One row per file, z/x/y parsed from the name (``_`` or ``-``,
+    ``.mvt`` or ``.pbf``), a gzip-wrapped source read through, and every
+    tile verified feature by feature in gen-A and in gen-B."""
+    tiles = {
+        "2_1_3.mvt": (2, 1, 3, _self_built_tile(1)),
+        "4-5-6.pbf": (4, 5, 6, _self_built_tile(2)),
+        "6_10_20.mvt": (6, 10, 20, _self_built_tile(3)),
+    }
+    for name, (_, _, _, mvt) in tiles.items():
+        data = gzip.compress(mvt) if name.startswith("6_") else mvt
+        (tmp_path / name).write_bytes(data)
+    (tmp_path / "notes.txt").write_text("not a tile")
+
+    from cov_tiles_spark.pipeline.transcode import mvt_to_genb
+
+    rows = transcode_mvt_directory(spark, str(tmp_path)).collect()
+    assert sorted(r.path for r in rows) == sorted(tiles)
     for r in rows:
+        z, x, y, mvt = tiles[r.path]
+        assert (r.z, r.x, r.y) == (z, x, y)
         assert r.verified and r.genb_verified, r.path
-    assert sum(r.genb_bytes for r in rows) < base
+        assert r.mvt_bytes == len(mvt)
+        assert r.n_layers == 3 and r.n_features == 16
+        assert r.covt_bytes == len(r.payload) > 0
+        # gen-B comes from the job's one decode, as from the tile bytes
+        assert r.genb_bytes == len(mvt_to_genb(mvt)[0])
+
+
+def test_verification_rejects_another_tiles_features():
+    """The ``verified`` columns are not vacuous: a payload checked
+    against another tile's MVT decode fails in both formats."""
+    from cov_tiles_spark.covt.mvt import decode_mvt
+    from cov_tiles_spark.pipeline.transcode import (
+        _transcode_tile,
+        mvt_to_genb,
+        verify_genb_roundtrip,
+        verify_roundtrip,
+    )
+
+    a, b = _self_built_tile(1), _self_built_tile(2)
+    (row,) = _transcode_tile("2_1_3.mvt", a)
+    covt = row[-1]
+    genb, tilejson, _, _ = mvt_to_genb(a)
+    assert verify_roundtrip(covt, decode_mvt(a))
+    assert verify_genb_roundtrip(genb, tilejson, decode_mvt(a))
+    assert not verify_roundtrip(covt, decode_mvt(b))
+    assert not verify_genb_roundtrip(genb, tilejson, decode_mvt(b))
 
 
 def test_transcode_reference_omt_tiles(spark):
@@ -136,8 +209,8 @@ def test_covt_to_mvt_roundtrip_both_formats():
 
     from cov_tiles_spark.covt.mvt import decode_mvt
     from cov_tiles_spark.pipeline.transcode import (
+        _transcode_tile,
         covt_to_mvt,
-        mvt_to_covt,
         mvt_to_genb,
     )
 
@@ -149,7 +222,7 @@ def test_covt_to_mvt_roundtrip_both_formats():
     for p in paths:
         mvt = open(p, "rb").read()
         orig = {l.name: l for l in decode_mvt(mvt) if l.features}
-        covt, _, _ = mvt_to_covt(mvt)
+        covt = _transcode_tile(p, mvt)[0][-1]
         genb, tilejson, _, _ = mvt_to_genb(mvt)
         for back_bytes in (
             covt_to_mvt(covt),
