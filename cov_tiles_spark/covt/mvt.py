@@ -101,8 +101,12 @@ def _decode_value(buf: bytes, start: int, end: int) -> Any:
             ln, offset = _read_varint(buf, offset)
             return buf[offset : offset + ln].decode("utf-8")
         if fid == 2:  # float32
+            if offset + 4 > end:
+                raise ValueError("malformed MVT: float value overrun")
             return struct.unpack_from("<f", buf, offset)[0]
         if fid == 3:  # double
+            if offset + 8 > end:
+                raise ValueError("malformed MVT: double value overrun")
             return struct.unpack_from("<d", buf, offset)[0]
         if fid == 4:  # int64
             v, offset = _read_varint(buf, offset)
@@ -145,6 +149,8 @@ def _load_geometry(
                 if line is not None:
                     lines.append(line)
                 line = [(x, y)]
+        elif line is None:  # LineTo or ClosePath with no current point
+            raise ValueError(f"malformed MVT: command {cmd} before any MoveTo")
         elif cmd == 2:  # LineTo
             for _ in range(count):
                 dx, offset = _read_varint(buf, offset)
@@ -235,10 +241,13 @@ def _decode_layer(buf: bytes, start: int, end: int) -> MvtLayer:
     for f_start, f_end in feature_spans:
         fid_val, gtype, geometry, tags = _decode_feature(buf, f_start, f_end)
         props = {}
-        for i in range(0, len(tags), 2):
-            v = values[tags[i + 1]]
-            if v is not None:
-                props[keys[tags[i]]] = v
+        try:
+            for i in range(0, len(tags), 2):
+                v = values[tags[i + 1]]
+                if v is not None:
+                    props[keys[tags[i]]] = v
+        except IndexError:  # odd tag count, or an index past the tables
+            raise ValueError("malformed MVT: feature tag out of range") from None
         layer.features.append(MvtFeature(fid_val, gtype, geometry, props))
     return layer
 

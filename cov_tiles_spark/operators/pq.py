@@ -25,10 +25,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cov_tiles_spark.operators import single_partition_key
+from cov_tiles_spark.operators.similarity import top_k, train_sample_rows
 
 
 def _kmeans_1sub(m: np.ndarray, k: int) -> np.ndarray:
@@ -66,8 +66,6 @@ def pq_train(
     the codebooks are tiny and a representative sample suffices — the
     corpus is never collected (map-only hash-filter sample via
     ``similarity.train_sample_rows``, no full-corpus TakeOrdered)."""
-    from cov_tiles_spark.operators.similarity import train_sample_rows
-
     if dim % m:
         raise ValueError(f"dim={dim} must divide evenly into m={m} subspaces")
     sub = dim // m
@@ -124,29 +122,8 @@ def pq_topk(
     and the driver gate pins exact score reproducibility against an
     independent scalar implementation."""
     scored = _pq_scored(encoded, id_col, query, codebooks)
-    order_key = (
-        F.round(F.col("score"), order_round) if order_round is not None
-        else F.col("score")
-    )
-    return (
-        scored.withColumn("_ord", order_key)
-        .orderBy(F.col("_ord").desc(), F.col("id"))
-        .limit(k)
-        .withColumn(
-            "rank",
-            # rank over the already-limited k rows. The constant
-            # partition key is semantically identical to an empty spec
-            # (one partition holds all k rows — inherent after a global
-            # limit) but keeps Spark from emitting its "No Partition
-            # Defined ... single partition" warning for what is the
-            # designed post-limit shape.
-            F.row_number().over(
-                Window.partitionBy(single_partition_key("id")).orderBy(
-                    F.col("_ord").desc(), F.col("id")
-                )
-            ),
-        )
-        .select("rank", "id", F.col("score").alias("adc_score"))
+    return top_k(scored, "score", k, order_round).select(
+        "rank", "id", F.col("score").alias("adc_score")
     )
 
 
@@ -194,13 +171,5 @@ def pq_candidate_ids(
     keys can admit different ids when ``k`` < corpus size. With ``k``
     >= the corpus size (the provably-exact gate setting) every id
     qualifies under either key."""
-    order_key = (
-        F.round(F.col("score"), order_round) if order_round is not None
-        else F.col("score")
-    )
-    return (
-        _pq_scored(encoded, id_col, query, codebooks)
-        .orderBy(order_key.desc(), F.col("id"))
-        .limit(k)
-        .select("id")
-    )
+    scored = _pq_scored(encoded, id_col, query, codebooks)
+    return top_k(scored, "score", k, order_round).select("id")

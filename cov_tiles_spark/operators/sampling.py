@@ -109,6 +109,7 @@ def sample_per_group(
     excluded row has a larger hash than every admitted one); only
     under-collected groups (astronomically rare; probability
     ~exp(-Theta(k)) by a Chernoff bound) fall back to the full window.
+    Either way the columns are ``df``'s, in order, then ``rank``.
     """
     h = sample_hash(F.col(key_col)).alias("_h")
     w = Window.partitionBy(*group_cols).orderBy(F.col("_h"), F.col(key_col))
@@ -120,9 +121,10 @@ def sample_per_group(
             .withColumnRenamed("_rank", "rank")
         )
 
+    out_cols = [*df.columns, "rank"]
     base = df.withColumn("_h", h)
     if not prefilter:
-        return ranked(base).drop("_h")
+        return ranked(base).select(*out_cols)
 
     counts = df.groupBy(*group_cols).agg(F.count("*").alias("_n"))
     cut = (
@@ -145,9 +147,9 @@ def sample_per_group(
         .filter((F.col("_got") >= k) | (F.col("_c") >= _RING))
         .select(*group_cols)
     )
-    good = cand.join(complete, group_cols, "left_semi").drop("_h", "_cut")
+    good = cand.join(complete, group_cols, "left_semi").select(*out_cols)
     rest = base.join(complete, group_cols, "left_anti")
-    return good.unionByName(ranked(rest).drop("_h"))
+    return good.unionByName(ranked(rest).select(*out_cols))
 
 
 def mixture_sample(

@@ -4,10 +4,11 @@ rows changed since the last run.
 A daily 100 TB ingest touches a sliver of the tile pyramid; recomputing
 every tile is the dominant waste in naive batch jobs. This operator
 compares each tile's INPUT checksum (order-insensitive bit_xor of
-xxhash64 over the assigned feature rows) against the checksum recorded
-in the IcebergLite manifest by the previous run, and re-encodes only
-new-or-changed tiles, committing them as overwrite snapshots — readers
-use ``lake.read_table("tiles", latest_only=True)`` and always see exactly
+xxhash64 over the assigned feature rows) against the checksum stored
+beside the tile's payload by the previous run, and re-encodes only
+new-or-changed tiles, committing them as one overwrite snapshot of the
+IcebergLite ``tiles`` table — readers use
+``lake.read_table("tiles", latest_only=True)`` and always see exactly
 the full-recompute result (asserted in tests), while time travel keeps
 every previous version readable.
 
@@ -39,7 +40,7 @@ def _tile_key() -> F.Column:
 
 
 def input_checksums(assigned: DataFrame) -> DataFrame:
-    """(tile_key, input_checksum, n_rows) per tile — order-insensitive
+    """(tile_key, input_checksum, input_rows) per tile — order-insensitive
     (bit_xor) and ANSI-overflow-safe."""
     cols = [c for c in _STREAM_COLS if c not in ("z", "x", "y")]
     return (
@@ -48,7 +49,7 @@ def input_checksums(assigned: DataFrame) -> DataFrame:
             F.expr(
                 f"bit_xor(xxhash64(z, x, y, {', '.join(cols)}))"
             ).alias("input_checksum"),
-            F.count("*").alias("n_rows"),
+            F.count("*").alias("input_rows"),
         )
     )
 
@@ -71,15 +72,15 @@ def delta_materialize(
     tiles whose inputs vanished — dropped via their bucket's rewrite, or
     tombstoned with it when the bucket empties).
 
-    Change detection compares (input_checksum, n_rows) per tile — the
-    row count guards the bit_xor checksum's even-duplicate blind spot.
-    The previous run's input checksums live in the ``tiles_inputs``
-    table (committed alongside the payloads, latest-wins); a full outer
-    join of the current checksums against them, grouped by bucket,
-    gives one plan row per bucket: current, vanished and new-or-changed
-    tile counts. That plan, at most ``partition_buckets`` rows, is
-    collected once; the buckets to rewrite, the buckets to tombstone
-    and every returned count come from it.
+    Change detection compares (input_checksum, input_rows) per tile —
+    the row count guards the bit_xor checksum's even-duplicate blind
+    spot. Each payload row carries the values of the inputs it was
+    encoded from, so the previous run's are a column-pruned latest-wins
+    read of ``tiles`` itself. Joined with the current ones and grouped
+    by bucket, they give a plan of at most ``partition_buckets`` rows
+    (current, vanished and new-or-changed tiles per bucket), collected
+    once. A run then tombstones ``tiles`` at most once and commits it
+    at most once, so a rerun redoes what a failed run did not commit.
 
     ``partition_buckets``: overwrite granularity. Tiles hash into that
     many hive partitions, so file counts stay bounded (one directory
@@ -93,29 +94,24 @@ def delta_materialize(
     tiles). The result is byte-identical to a full recompute."""
     cols = ["image_id", "caption", "fmt", "w", "h", "phash", "lon", "lat"]
     assigned = assign_tiles(images.select(*cols), zooms).persist()
-    cur = input_checksums(assigned).withColumn(
-        "_part", _bucket_of(F.col("tile_key"), partition_buckets)
-    )
+    cur = input_checksums(assigned)
 
     try:
-        prev_latest = lake.read_table(
-            "tiles_inputs", latest_only=True
-        ).select(
+        prev_latest = lake.read_table("tiles", latest_only=True).select(
             "tile_key",
             F.col("input_checksum").alias("_prev_sum"),
-            F.col("n_rows").alias("_prev_n"),
+            F.col("input_rows").alias("_prev_n"),
         )
     except FileNotFoundError:  # first run: everything is new
         prev_latest = lake.spark.createDataFrame(
             [], "tile_key string, _prev_sum long, _prev_n long"
         )
-    # n_rows is compared alongside the checksum: bit_xor cancels when an
-    # EVEN number of identical rows is added (x^x=0), so "same checksum"
-    # alone wrongly skips such edits; the row count breaks the tie.
+    # bit_xor cancels an EVEN number of identical added rows (x^x=0):
+    # the row count catches what the checksum alone would skip
     dirty = F.col("input_checksum").isNotNull() & (
         F.col("_prev_sum").isNull()
         | (F.col("_prev_sum") != F.col("input_checksum"))
-        | (F.col("_prev_n") != F.col("n_rows"))
+        | (F.col("_prev_n") != F.col("input_rows"))
     )
     # the whole change set as one row per bucket: the full outer join
     # also sees previous tiles with no current input rows (n_gone)
@@ -139,7 +135,6 @@ def delta_materialize(
     # to write), so its stale rows would survive: tombstone it instead
     emptied = [r._b for r in plan if r.n_gone and not r.n_cur]
     lake.commit_tombstones("tiles", "tombstone", emptied)
-    lake.commit_tombstones("tiles_inputs", "tombstone", emptied)
 
     if n_changed:
         part_of_tile = _bucket_of(_tile_key(), partition_buckets)
@@ -150,22 +145,10 @@ def delta_materialize(
                 with_mvt_baseline=False,
             )
             .withColumn("tile_key", _tile_key())
+            .join(cur, "tile_key")
             .withColumn("_part", part_of_tile)
         )
-        # cluster=True: one file per bucket dir instead of one per
-        # (encode task x bucket) — 812 -> 32 files at sf0.1, and the
-        # latest-wins read scan shrinks accordingly (guide §6)
-        lake.commit_partitions(
-            "tiles", "encode", payloads, "_part", mode="overwrite",
-            cluster=True,
-        )
-        # record the inputs that produced those payloads, same snapshot
-        # discipline: one row per re-encoded tile
-        lake.commit_partitions(
-            "tiles_inputs", "inputs",
-            cur.filter(F.col("_part").isin(changed)), "_part",
-            mode="overwrite", cluster=True,
-        )
+        lake.commit_partitions("tiles", "encode", payloads, "_part")
     assigned.unpersist()
     total = sum(r.n_cur for r in plan)
     return {

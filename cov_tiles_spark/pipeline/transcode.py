@@ -22,6 +22,7 @@ from __future__ import annotations
 import gzip as _gzip
 import os
 import re
+import zlib
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -316,13 +317,21 @@ def _features_match(decoded, mvt_layers: list[MvtLayer]) -> bool:
 def _transcode_tile(path: str, content: bytes) -> list[tuple]:
     """One source file -> its TRANSCODE_SCHEMA row (``map_rows`` kernel):
     one MVT decode, gen-A and gen-B encoded from the same layer inputs,
-    each verified against that decode."""
+    each verified against that decode. A file that does not decode
+    (corrupt MVT or gzip) yields its row unverified, with no payload or
+    encoded sizes, so one bad file never fails the job."""
     raw = bytes(content)
-    if raw[:2] == b"\x1f\x8b":  # gzip source (S3)
-        raw = _gzip.decompress(raw)
     m = _ZXY_RE.search(path)
     z, x, y = (int(m.group(i)) for i in (1, 2, 3)) if m else (-1, -1, -1)
-    mvt_layers = decode_mvt(raw)
+    try:
+        if raw[:2] == b"\x1f\x8b":  # gzip source (S3)
+            raw = _gzip.decompress(raw)
+        mvt_layers = decode_mvt(raw)
+    except (ValueError, EOFError, OSError, zlib.error):
+        return [(
+            os.path.basename(path), z, x, y, len(raw), None, None,
+            len(_gzip.compress(raw, 6)), None, None, None, False, False, None,
+        )]
     inputs, n_features = _layer_inputs(mvt_layers)
     covt = encode_tile(inputs)
     genb, tilejson = _encode_genb(inputs)

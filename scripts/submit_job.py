@@ -11,8 +11,11 @@ Packaging:
         --zooms 2,4,6,8,10,12,14
 
 Jobs:
-    tiles   — full materialization: input images parquet -> COVT payload
-              table committed through IcebergLite (checkpointed, resumable)
+    tiles   — incremental materialization: input images parquet -> COVT
+              payload table committed through IcebergLite
+              (pipeline/delta.py delta_materialize). A rerun re-encodes
+              only tiles that are missing from the lake or whose input
+              rows changed, and prints the tile counts.
     synth   — generate the deterministic corpus to parquet
     knn     — kNN join queries parquet x points parquet
 """
@@ -50,24 +53,13 @@ def main() -> None:
         return
 
     if args.job == "tiles":
-        from cov_tiles_spark.pipeline.lineage import IcebergLite, run_stage
-        from cov_tiles_spark.pipeline.materialize import materialize_tiles
+        from cov_tiles_spark.pipeline.delta import delta_materialize
+        from cov_tiles_spark.pipeline.lineage import IcebergLite
 
         zooms = [int(z) for z in args.zooms.split(",")]
         lake = IcebergLite(spark, args.output)
         images = spark.read.parquet(args.input)
-
-        def build(done):
-            # done is a DataFrame of committed partition keys; zoom levels
-            # are O(20) so a driver collect here is genuinely tiny (the
-            # per-partition resume filter itself is an anti-join inside
-            # commit_partitions — never collected)
-            done_z = {r.partition_key for r in done.collect()}
-            todo = [z for z in zooms if str(z) not in done_z]
-            return materialize_tiles(images, todo, with_mvt_baseline=False)
-
-        manifest = run_stage(lake, "tiles", "encode", build, "z")
-        manifest.show(truncate=False)
+        print(delta_materialize(lake, images, zooms))
         return
 
     if args.job == "knn":

@@ -256,8 +256,46 @@ def test_mvt_bit_flips_fail_cleanly_or_decode(data):
         mutated[int(rng.integers(0, len(data)))] ^= 1 << int(rng.integers(0, 8))
         try:
             decode_mvt(bytes(mutated))
-        except Exception:
-            pass  # any ordinary exception is a clean rejection
+        except ValueError:
+            pass  # the one clean rejection, as the COVT decoders give
+
+
+def _one_feature_tile(feature: bytes, value: bytes) -> bytes:
+    """An MVT tile of one layer holding one feature, one key and one
+    value, built field by field so each can be corrupted on its own."""
+    from cov_tiles_spark.covt.mvt import _ld
+
+    return _ld(3, _ld(1, b"l") + _ld(2, feature) + _ld(3, b"k") + _ld(4, value))
+
+
+@pytest.mark.parametrize(
+    "feature, value",
+    [
+        pytest.param(b"\x12\x02\x00\x01\x22\x03\x09\x02\x02",
+                     b"\x0a\x01v", id="tag-index-past-values"),
+        pytest.param(b"\x12\x01\x00\x22\x03\x09\x02\x02",
+                     b"\x0a\x01v", id="odd-tag-count"),
+        pytest.param(b"\x22\x03\x09\x02\x02", b"\x15\x00\x00",
+                     id="float-past-value"),
+        pytest.param(b"\x22\x03\x09\x02\x02", b"\x19\x00\x00\x00",
+                     id="double-past-value"),
+        pytest.param(b"\x22\x03\x0a\x02\x02", b"\x0a\x01v",
+                     id="lineto-before-moveto"),
+        pytest.param(b"\x22\x01\x0f", b"\x0a\x01v", id="closepath-before-moveto"),
+    ],
+)
+def test_mvt_corrupt_fields_raise_value_error(feature, value):
+    """Tag indices past the key/value tables, an odd tag count, a float or
+    double running past its value, and a LineTo or ClosePath with no
+    current point are corrupt input: ValueError, like a truncation."""
+    good = decode_mvt(_one_feature_tile(
+        b"\x12\x02\x00\x00\x22\x03\x09\x02\x02", b"\x0a\x01v"
+    ))
+    assert [(f.geometry, f.properties) for f in good[0].features] == [
+        ([[(1, 1)]], {"k": "v"})
+    ]
+    with pytest.raises(ValueError, match="malformed MVT"):
+        decode_mvt(_one_feature_tile(feature, value))
 
 
 def test_mvt_varint_is_bounded_to_ten_bytes():

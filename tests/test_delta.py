@@ -65,8 +65,8 @@ def _latest(lake):
 
 
 def _snapshot_dirs(lake) -> set[str]:
-    """Snapshot directories of the ``tiles`` and ``tiles_inputs`` tables."""
-    return set(glob.glob(f"{lake.root}/tiles*/snapshot_id=*"))
+    """Snapshot directories of the ``tiles`` table."""
+    return set(glob.glob(f"{lake.root}/tiles/snapshot_id=*"))
 
 
 def _buckets_of(spark, tiles, buckets: int) -> set[str]:
@@ -140,17 +140,16 @@ def test_delta_removes_vanished_tiles(spark, lake, buckets):
     s2 = delta_materialize(lake, v2, ZOOMS, partition_buckets=buckets)
     assert s2["removed"] > 0
     assert _latest(lake) == _full(spark, v2)
-    # one tombstone snapshot per table, over exactly the buckets left
-    # with no current tile
+    # one tombstone snapshot, on ``tiles``, over exactly the buckets
+    # left with no current tile
     emptied = _buckets_of(spark, _full(spark, v1), buckets) - _buckets_of(
         spark, _full(spark, v2), buckets
     )
     assert emptied
     tombs = lake.manifests().filter(F.col("stage") == "tombstone").collect()
-    for table in ("tiles", "tiles_inputs"):
-        rows = [r for r in tombs if r.table == table]
-        assert len({r.snapshot_id for r in rows}) == 1
-        assert sorted(r.partition_key for r in rows) == sorted(emptied)
+    assert {r.table for r in tombs} == {"tiles"}
+    assert len({r.snapshot_id for r in tombs}) == 1
+    assert sorted(r.partition_key for r in tombs) == sorted(emptied)
     # time travel before the deletion still shows v1
     old = {
         (r.z, r.x, r.y): bytes(r.payload)
@@ -160,8 +159,8 @@ def test_delta_removes_vanished_tiles(spark, lake, buckets):
     }
     assert old == _full(spark, v1)
 
-    # resurrection: the same corpus returns — inputs were tombstoned,
-    # so the tiles read as NEW and re-encode (not wrongly "unchanged")
+    # resurrection: the same corpus returns — the buckets were
+    # tombstoned, so the tiles read as NEW and re-encode (not wrongly "unchanged")
     s3 = delta_materialize(lake, v1, ZOOMS, partition_buckets=buckets)
     assert s3["removed"] == 0
     assert _latest(lake) == _full(spark, v1)
@@ -201,3 +200,21 @@ def test_delta_bucketed(spark, lake):
     # widened to whole buckets, but still far below a full rebuild
     assert 0 < s3["changed"] < s3["total"] // 2
     assert _latest(lake) == _full(spark, v2)
+
+
+def test_changed_input_run_job_budget(spark, lake):
+    """Control-plane growth stays visible without perfbench: a second,
+    changed-input run on this corpus runs at most the 15 Spark jobs
+    measured with one commit of one table per run (one metrics collect,
+    one data write, one manifest file) and a latest read of the previous
+    checksums by partition path."""
+    delta_materialize(lake, _corpus(spark), ZOOMS)
+    sc = spark.sparkContext
+    sc.setJobGroup("delta-job-budget", "changed-input delta run")
+    try:
+        stats = delta_materialize(lake, _corpus(spark, mutate=True, extra=True), ZOOMS)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("delta-job-budget")
+    assert 0 < stats["changed"] < stats["total"]
+    assert len(jobs) <= 15, len(jobs)

@@ -1,4 +1,5 @@
-"""IcebergLite checkpoint/resume semantics (SURVEY §4.2 / north_rule)."""
+"""IcebergLite commit, manifest and read semantics (SURVEY §4.2 /
+north_rule)."""
 
 from __future__ import annotations
 
@@ -10,7 +11,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from cov_tiles_spark.pipeline.delta import delta_materialize
-from cov_tiles_spark.pipeline.lineage import IcebergLite, run_stage
+from cov_tiles_spark.pipeline.lineage import IcebergLite
 
 
 @pytest.fixture()
@@ -22,8 +23,7 @@ def test_commit_and_read(spark, lake):
     df = spark.range(100).select(
         F.col("id"), (F.col("id") % 4).cast("string").alias("bucket")
     )
-    manifest = lake.commit_partitions("t1", "s1", df, "bucket")
-    rows = manifest.collect()
+    rows = lake.commit_partitions("t1", "s1", df, "bucket")
     assert len(rows) == 4
     assert sum(r.n_rows for r in rows) == 100
     assert all(r.checksum is not None for r in rows)
@@ -31,32 +31,19 @@ def test_commit_and_read(spark, lake):
     back = lake.read_table("t1")
     assert back.count() == 100
     assert set(back.columns) == {"id", "bucket"}
-
-
-def test_idempotent_resume(spark, lake):
-    df = spark.range(40).select(
-        F.col("id"), (F.col("id") % 4).cast("string").alias("bucket")
+    # the rows returned are the rows committed
+    assert sorted(rows) == sorted(
+        lake.manifests().filter(F.col("table") == "t1").collect()
     )
-    first = lake.commit_partitions("t2", "s1", df, "bucket")
-    assert first.count() == 4
-
-    # re-running commits nothing new (all partitions already in manifest)
-    second = lake.commit_partitions("t2", "s1", df, "bucket")
-    assert second.count() == 0
-    assert lake.read_table("t2").count() == 40  # no duplicates
-
-    # partial resume: pretend bucket 3 was never committed
-    done = lake.committed_keys_df("t2", "s1").collect()
-    assert {r.partition_key for r in done} == {"0", "1", "2", "3"}
 
 
 def test_unreadable_manifest_raises_instead_of_reading_empty(spark, lake):
     """A manifest that cannot be read must fail loudly: read as empty, a
-    ``skip-done`` resume would redo every committed partition."""
+    delta run would take every committed tile for new."""
     df = spark.range(8).select(
         F.col("id"), (F.col("id") % 2).cast("string").alias("bucket")
     )
-    lake.commit_partitions("t_bad", "s1", df, "bucket").collect()
+    lake.commit_partitions("t_bad", "s1", df, "bucket")
     parts = glob.glob(f"{lake.root}/_manifests/*.parquet")
     assert parts
     for p in parts + [f"{lake.root}/_manifests/part-x.parquet"]:
@@ -65,24 +52,7 @@ def test_unreadable_manifest_raises_instead_of_reading_empty(spark, lake):
     with pytest.raises(Py4JJavaError):
         lake.manifests().collect()
     with pytest.raises(Py4JJavaError):
-        lake.commit_partitions("t_bad", "s1", df, "bucket").collect()
-
-
-def test_resume_skips_committed_keys_on_uri_root(spark, tmp_path):
-    """A ``file://`` root goes through the Hadoop FileSystem like
-    ``hdfs://``/``s3a://`` ones: the manifest must read back, so a
-    resume commits nothing twice."""
-    uri_lake = IcebergLite(spark, (tmp_path / "lake").as_uri())
-    assert uri_lake.root.startswith("file:")
-    df = spark.range(12).select(
-        F.col("id"), (F.col("id") % 3).cast("string").alias("bucket")
-    )
-    assert uri_lake.commit_partitions("t_uri", "s1", df, "bucket").count() == 3
-    assert {
-        r.partition_key for r in uri_lake.committed_keys_df("t_uri", "s1").collect()
-    } == {"0", "1", "2"}
-    assert uri_lake.commit_partitions("t_uri", "s1", df, "bucket").count() == 0
-    assert run_stage(uri_lake, "t_uri", "s1", lambda done: df, "bucket").count() == 0
+        lake.read_table("t_bad", latest_only=True)
 
 
 def test_read_table_and_delta_rerun_on_uri_root(spark, tmp_path):
@@ -117,56 +87,15 @@ def test_read_table_and_delta_rerun_on_uri_root(spark, tmp_path):
 def test_manifest_dir_without_data_files_reads_empty(spark, lake, leftover):
     """A first manifest write that failed leaves ``_manifests/`` with no
     data file (at most the committer's ``_temporary/``); that is still
-    "nothing committed", and the next ``skip-done`` commit must go on."""
+    "nothing committed", and the next commit must go on."""
     mdir = f"{lake.root}/_manifests"
     os.makedirs(mdir if leftover is None else f"{mdir}/{leftover}")
     assert lake.manifests().count() == 0
     df = spark.range(8).select(
         F.col("id"), (F.col("id") % 2).cast("string").alias("bucket")
     )
-    assert lake.commit_partitions("t_left", "s1", df, "bucket").count() == 2
+    assert len(lake.commit_partitions("t_left", "s1", df, "bucket")) == 2
     assert lake.read_table("t_left").count() == 8
-
-
-def test_run_stage_prunes_done_work(spark, lake):
-    calls = []
-
-    def build(done):  # done: DataFrame of committed partition_key
-        calls.append({r.partition_key for r in done.collect()})
-        return spark.range(20).select(
-            F.col("id"), (F.col("id") % 2).cast("string").alias("bucket")
-        )
-
-    m1 = run_stage(lake, "t3", "encode", build, "bucket")
-    assert m1.count() == 2 and calls[0] == set()
-    m2 = run_stage(lake, "t3", "encode", build, "bucket")
-    assert m2.count() == 0 and calls[1] == {"0", "1"}
-
-
-def test_resume_scales_to_many_partitions(spark, lake):
-    """10k committed partitions: resume must stay an anti-join (no driver
-    collect of keys, no isin literal list in the plan)."""
-    df = spark.range(10_000).select(
-        F.col("id"), F.col("id").cast("string").alias("bucket")
-    )
-    first = lake.commit_partitions("t10k", "s1", df, "bucket")
-    assert first.count() == 10_000
-
-    # resume: all partitions already committed -> nothing written; the
-    # pending side must be filtered by a join, not an In(...) literal list
-    pending = df.join(
-        lake.committed_keys_df("t10k", "s1").withColumnRenamed(
-            "partition_key", "_done_pk"
-        ),
-        df["bucket"] == F.col("_done_pk"),
-        "left_anti",
-    )
-    plan = pending._jdf.queryExecution().executedPlan().toString()
-    assert "Join LeftAnti" in plan or "Join" in plan
-    assert " IN (" not in plan
-
-    second = lake.commit_partitions("t10k", "s1", df, "bucket")
-    assert second.count() == 0
 
 
 def test_metrics_and_lineage_fields(spark, lake):
@@ -205,13 +134,10 @@ def test_time_travel_and_snapshot_log(spark, lake):
 
 
 def test_clustered_commit_writes_one_file_per_partition(spark, lake):
-    """cluster=True repartitions by the partition column before the
-    hive write: each partition dir holds ONE file (vs one per upstream
-    task touching it — the small-files shape the delta gate measured as
-    812 files / 2.4x slower commits+reads), rows and manifest metrics
-    identical to an unclustered commit."""
-    import glob
-
+    """A commit repartitions by the partition column before the hive
+    write: each partition dir holds ONE file (vs one per upstream task
+    touching it — the small-files shape the delta gate measured as 812
+    files / 2.4x slower commits+reads)."""
     df = (
         spark.range(400)
         .repartition(8)  # every task holds rows of every bucket
@@ -219,9 +145,7 @@ def test_clustered_commit_writes_one_file_per_partition(spark, lake):
             F.col("id"), (F.col("id") % 4).cast("string").alias("bucket")
         )
     )
-    m = lake.commit_partitions(
-        "tc", "load", df, "bucket", mode="overwrite", cluster=True
-    ).collect()
+    m = lake.commit_partitions("tc", "load", df, "bucket")
     assert sorted(r.partition_key for r in m) == ["0", "1", "2", "3"]
     for pdir in glob.glob(f"{lake.root}/tc/snapshot_id=*/bucket=*"):
         files = glob.glob(f"{pdir}/part-*.parquet")
@@ -229,3 +153,42 @@ def test_clustered_commit_writes_one_file_per_partition(spark, lake):
     got = lake.read_table("tc", latest_only=True)
     assert got.count() == 400
     assert got.agg(F.sum("id")).collect()[0][0] == sum(range(400))
+
+
+def test_latest_read_is_a_plain_scan_of_winning_partitions(spark, lake):
+    """A latest read hands Spark only the winning partition directories:
+    the plan has no join, window or broadcast, a partition committed
+    again reads from its newest snapshot only, and a partition named
+    ``_part=…`` (hidden by Spark's ``_`` rule only without ``=``) is
+    read."""
+    def rows(ids, tag):
+        return spark.createDataFrame(
+            [(i, tag, str(i % 3)) for i in ids], "id long, tag string, _part string"
+        )
+
+    lake.commit_partitions("tl", "s1", rows(range(9), "old"), "_part")
+    lake.commit_partitions("tl", "s2", rows([1, 4, 10], "new"), "_part")
+    got = lake.read_table("tl", latest_only=True)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    for op in ("Join", "Window", "BroadcastExchange"):
+        assert op not in plan, plan
+    assert sorted((r.id, r.tag) for r in got.collect()) == sorted(
+        [(i, "old") for i in (0, 2, 3, 5, 6, 8)] + [(1, "new"), (4, "new"), (10, "new")]
+    )
+    assert lake.read_table("tl").count() == 12
+
+
+def test_fully_tombstoned_table_reads_empty(spark, lake):
+    """Tombstoning every live partition leaves a table that reads as zero
+    rows with its columns, not an error; time travel still sees it."""
+    df = spark.range(6).select(
+        F.col("id"), (F.col("id") % 2).cast("string").alias("bucket")
+    )
+    lake.commit_partitions("tz", "s1", df, "bucket")
+    t_data = lake.manifests().agg(F.max("committed_at_ns")).collect()[0][0]
+    lake.commit_tombstones("tz", "tombstone", ["0", "1"])
+    gone = lake.read_table("tz", latest_only=True)
+    assert gone.count() == 0 and set(gone.columns) == {"id", "bucket"}
+    assert lake.read_table("tz", as_of_ns=t_data, latest_only=True).count() == 6
+    with pytest.raises(FileNotFoundError):
+        lake.read_table("tz", as_of_ns=t_data - 1)

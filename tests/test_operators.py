@@ -544,10 +544,11 @@ class TestSampling:
         from cov_tiles_spark.operators.sampling import sample_per_group
 
         df = self._docs(spark, n=6000, groups=5)  # 1200 per group
-        fast = sample_per_group(df, ["source"], 7, "doc_id").collect()
-        slow = sample_per_group(
-            df, ["source"], 7, "doc_id", prefilter=False
-        ).collect()
+        fast_df = sample_per_group(df, ["source"], 7, "doc_id")
+        slow_df = sample_per_group(df, ["source"], 7, "doc_id", prefilter=False)
+        # both paths keep the input's columns, in order, then rank
+        assert fast_df.columns == slow_df.columns == [*df.columns, "rank"]
+        fast, slow = fast_df.collect(), slow_df.collect()
         key = lambda r: (r.source, r.rank)  # noqa: E731
         assert sorted((r.source, r.rank, r.doc_id) for r in fast) == sorted(
             (r.source, r.rank, r.doc_id) for r in slow

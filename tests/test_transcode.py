@@ -79,6 +79,22 @@ def test_transcode_self_built_tiles_verify_in_both_formats(spark, tmp_path):
         assert r.genb_bytes == len(mvt_to_genb(mvt)[0])
 
 
+def test_transcode_corrupt_file_yields_unverified_row(spark, tmp_path):
+    """One corrupt source file does not fail the job: every file gets
+    its row, and the corrupt one is unverified in both formats with no
+    payload."""
+    (tmp_path / "2_1_3.mvt").write_bytes(_self_built_tile(1))
+    (tmp_path / "2_1_4.mvt").write_bytes(_self_built_tile(2))
+    (tmp_path / "2_2_3.mvt").write_bytes(b"\x1a\x05\xff")  # truncated layer
+    rows = {r.path: r for r in transcode_mvt_directory(spark, str(tmp_path)).collect()}
+    assert sorted(rows) == ["2_1_3.mvt", "2_1_4.mvt", "2_2_3.mvt"]
+    bad = rows.pop("2_2_3.mvt")
+    assert (bad.z, bad.x, bad.y, bad.mvt_bytes) == (2, 2, 3, 3)
+    assert bad.verified is False and bad.genb_verified is False
+    assert bad.payload is None and bad.covt_bytes is None
+    assert all(r.verified and r.genb_verified and r.payload for r in rows.values())
+
+
 def test_verification_rejects_another_tiles_features():
     """The ``verified`` columns are not vacuous: a payload checked
     against another tile's MVT decode fails in both formats."""
