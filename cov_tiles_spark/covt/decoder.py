@@ -113,7 +113,7 @@ class LayerData:
 
 
 def _read_string(data: bytes, offset: int) -> tuple[str, int]:
-    (length,), offset = walk_varints(data, 1, offset)
+    length, offset = decode_varint(data, offset)
     end = offset + length
     if end > len(data):
         raise ValueError("buffer exhausted: string runs past the tile")
@@ -476,11 +476,8 @@ def _materialize_features(layer: LayerData) -> list[dict[str, Any]]:
     g = layer.geometry
     n = layer.metadata.num_features
     t = g.geometry_types
-    vb = g.vertex_buffer
     feats: list[dict[str, Any]] = []
 
-    # property cursors
-    prop_cursors: dict[str, int] = {}
     out_props: list[dict[str, Any]] = [dict() for _ in range(n)]
     for col_name, pc in layer.properties.items():
         if pc.localized:
@@ -504,34 +501,29 @@ def _materialize_features(layer: LayerData) -> list[dict[str, Any]]:
                 v = pc.data[cursor]
                 out_props[i][col_name] = float(v) if pc.data_type == ColumnDataType.FLOAT else int(v)
 
-    vo = 0  # vertex buffer cursor (in vertices)
-    go_c = po_c = ro_c = vx_c = 0
+    # one (x, y) per vertex in stream order: ICE layers index the
+    # dictionary through vertex_offsets, plain layers read it in order
+    vb = np.asarray(g.vertex_buffer).reshape(-1, 2)
+    if g.vertex_offsets is not None:
+        vb = vb[g.vertex_offsets]
+    coords = list(zip(vb[:, 0].tolist(), vb[:, 1].tolist()))
+    vo = go_c = po_c = ro_c = 0  # vertex, geometry, part and ring cursors
     for i in range(n):
         gt = int(t[i])
         parts: list[list[tuple[int, int]]] = []
         if gt == GeometryType.POINT:
-            parts = [[(int(vb[vo * 2]), int(vb[vo * 2 + 1]))]]
+            parts = [[coords[vo]]]
             vo += 1
         elif gt == GeometryType.LINESTRING:
             nv = int(g.part_offsets[po_c]); po_c += 1
-            if g.vertex_offsets is not None:
-                idx = g.vertex_offsets[vx_c : vx_c + nv]; vx_c += nv
-                parts = [[(int(vb[j * 2]), int(vb[j * 2 + 1])) for j in idx.tolist()]]
-            else:
-                parts = [[(int(vb[(vo + k) * 2]), int(vb[(vo + k) * 2 + 1])) for k in range(nv)]]
-                vo += nv
+            parts = [coords[vo : vo + nv]]
+            vo += nv
         elif gt == GeometryType.POLYGON:
             n_rings = int(g.part_offsets[po_c]); po_c += 1
             for _ in range(n_rings):
                 nv = int(g.ring_offsets[ro_c]); ro_c += 1
-                if g.vertex_offsets is not None:
-                    idx = g.vertex_offsets[vx_c : vx_c + nv]; vx_c += nv
-                    ring = [(int(vb[j * 2]), int(vb[j * 2 + 1])) for j in idx.tolist()]
-                else:
-                    ring = [
-                        (int(vb[(vo + k) * 2]), int(vb[(vo + k) * 2 + 1])) for k in range(nv)
-                    ]
-                    vo += nv
+                ring = coords[vo : vo + nv]
+                vo += nv
                 if ring[-1] != ring[0]:  # amazon fixtures store rings closed
                     ring.append(ring[0])
                 parts.append(ring)
@@ -539,36 +531,23 @@ def _materialize_features(layer: LayerData) -> list[dict[str, Any]]:
             n_ls = int(g.geometry_offsets[go_c]); go_c += 1
             for _ in range(n_ls):
                 nv = int(g.part_offsets[po_c]); po_c += 1
-                if g.vertex_offsets is not None:
-                    idx = g.vertex_offsets[vx_c : vx_c + nv]; vx_c += nv
-                    parts.append([(int(vb[j * 2]), int(vb[j * 2 + 1])) for j in idx.tolist()])
-                else:
-                    parts.append(
-                        [(int(vb[(vo + k) * 2]), int(vb[(vo + k) * 2 + 1])) for k in range(nv)]
-                    )
-                    vo += nv
+                parts.append(coords[vo : vo + nv])
+                vo += nv
         elif gt == GeometryType.MULTI_POLYGON:
             n_poly = int(g.geometry_offsets[go_c]); go_c += 1
             for _ in range(n_poly):
                 n_rings = int(g.part_offsets[po_c]); po_c += 1
                 for _ in range(n_rings):
                     nv = int(g.ring_offsets[ro_c]); ro_c += 1
-                    if g.vertex_offsets is not None:
-                        idx = g.vertex_offsets[vx_c : vx_c + nv]; vx_c += nv
-                        ring = [(int(vb[j * 2]), int(vb[j * 2 + 1])) for j in idx.tolist()]
-                    else:
-                        ring = [
-                            (int(vb[(vo + k) * 2]), int(vb[(vo + k) * 2 + 1]))
-                            for k in range(nv)
-                        ]
-                        vo += nv
+                    ring = coords[vo : vo + nv]
+                    vo += nv
                     if ring[-1] != ring[0]:  # amazon fixtures store rings closed
                         ring.append(ring[0])
                     parts.append(ring)
         elif gt == GeometryType.MULTI_POINT:
             # one 1-point part per point, as MVT loadGeometry returns it
             n_pts = int(g.geometry_offsets[go_c]); go_c += 1
-            parts = [[(int(vb[(vo + k) * 2]), int(vb[(vo + k) * 2 + 1]))] for k in range(n_pts)]
+            parts = [[c] for c in coords[vo : vo + n_pts]]
             vo += n_pts
         else:
             raise ValueError(f"unknown geometry type {gt}")

@@ -38,6 +38,10 @@ FAST_PFOR_DELTA_ZIG_ZAG streams use our from-scratch patched-FOR codec
 (`covt/pfor.py`). Each stream that can take FAST_PFOR picks it or its
 varint/RLE alternative by encoded size, as the converter does
 (`CovtConverter.java:656-668, 807-855`).
+
+:func:`decode_tile_genb` decodes every layer; its ``columns`` projection
+skips the data streams of unselected columns by their recorded byte
+lengths.
 """
 
 from __future__ import annotations
@@ -549,19 +553,17 @@ def _decode_stream_ints(
 
 
 def decode_tile_genb(
-    buf: bytes, tilejson: dict | None = None,
-    layers: "set[str] | None" = None, columns: "set[str] | None" = None,
+    buf: bytes, tilejson: dict | None = None, columns: "set[str] | None" = None,
 ) -> dict[str, LayerData]:
     """Decode a gen-B tile (`CovtParser.java:53-133` flow).
 
     FAST_PFOR streams are read as `covt/pfor.py`'s container, the one
     wire :func:`encode_tile_genb` writes.
 
-    ``layers`` / ``columns`` push projection INTO the payload: every
-    stream's byte length is in the column metadata, so unselected
-    layers' data sections and unselected columns' streams are skipped
-    with a cursor jump instead of decoded (the scan-level pruning the
-    reference's lazy-parser roadmap targets; at 100 TB a
+    ``columns`` pushes projection INTO the payload: every stream's byte
+    length is in the column metadata, so unselected columns' streams
+    are skipped with a cursor jump instead of decoded (the scan-level
+    pruning the reference's lazy-parser roadmap targets; at 100 TB a
     geometry-only or single-property read touches a fraction of the
     tile bytes). ``columns`` names property columns plus the reserved
     ``"id"`` / ``"geometry"`` names; selected members of a shared
@@ -652,16 +654,6 @@ def decode_tile_genb(
 
         # ---- data section
         nb_present = (n_features + 7) // 8
-        if layers is not None and layer_name not in layers:
-            # unselected layer: jump the cursor over its whole data
-            # section (declared stream byte lengths are exact by
-            # construction; non-boolean properties additionally carry an
-            # IMPLICIT present byte-RLE stream — `:295` — walked header
-            # by header, never materialized; pinned by the pruning tests)
-            for _n, role, dtype, _c, streams in col_list:
-                pos = _skip_column_data(buf, pos, role, dtype, streams, nb_present)
-            continue
-
         # column selection: which columns decode, and which additional
         # shared-dictionary group LEADERS must decode anyway so a
         # selected follower has its dictionary (leader = the

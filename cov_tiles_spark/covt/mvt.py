@@ -27,7 +27,12 @@ from typing import Any
 import numpy as np
 
 from cov_tiles_spark.covt.encoder import first_occurrence_codes
-from cov_tiles_spark.covt.varint import encode_varint, varint_len, varint_len_vec
+from cov_tiles_spark.covt.varint import (
+    decode_varint,
+    encode_varint,
+    varint_len,
+    varint_len_vec,
+)
 
 
 @dataclass
@@ -46,47 +51,19 @@ class MvtLayer:
     features: list[MvtFeature] = field(default_factory=list)
 
 
-def _read_varint(buf: bytes, offset: int) -> tuple[int, int]:
-    """One varint at ``offset`` -> (value, new offset), bounded as
-    `varint.walk_varints` is: the 10th byte gives only its low bit, and
-    an 11th byte or a read past the end of ``buf`` raises ValueError."""
-    try:
-        b = buf[offset]
-        if b < 0x80:
-            return b, offset + 1
-        val = b & 0x7F
-        shift = 7
-        while True:
-            offset += 1
-            b = buf[offset]
-            if b < 0x80:
-                return val | b << shift, offset + 1
-            val |= (b & 0x7F) << shift
-            shift += 7
-            if shift == 63:
-                break
-        offset += 1
-        b = buf[offset]
-    except IndexError:
-        raise ValueError("buffer exhausted: truncated MVT varint") from None
-    if b >= 0x80:
-        raise ValueError("varint longer than 10 bytes")
-    return val | (b & 1) << 63, offset + 1
-
-
 def _read_key(buf: bytes, offset: int) -> tuple[int, int, int]:
-    key, offset = _read_varint(buf, offset)
+    key, offset = decode_varint(buf, offset)
     return key >> 3, key & 0x7, offset
 
 
 def _skip(buf: bytes, offset: int, wire: int) -> int:
     if wire == 0:
-        _, offset = _read_varint(buf, offset)
+        _, offset = decode_varint(buf, offset)
         return offset
     if wire == 1:
         return offset + 8
     if wire == 2:
-        ln, offset = _read_varint(buf, offset)
+        ln, offset = decode_varint(buf, offset)
         return offset + ln
     if wire == 5:
         return offset + 4
@@ -98,7 +75,7 @@ def _decode_value(buf: bytes, start: int, end: int) -> Any:
     while offset < end:
         fid, wire, offset = _read_key(buf, offset)
         if fid == 1:  # string
-            ln, offset = _read_varint(buf, offset)
+            ln, offset = decode_varint(buf, offset)
             return buf[offset : offset + ln].decode("utf-8")
         if fid == 2:  # float32
             if offset + 4 > end:
@@ -109,16 +86,16 @@ def _decode_value(buf: bytes, start: int, end: int) -> Any:
                 raise ValueError("malformed MVT: double value overrun")
             return struct.unpack_from("<d", buf, offset)[0]
         if fid == 4:  # int64
-            v, offset = _read_varint(buf, offset)
+            v, offset = decode_varint(buf, offset)
             return v - (1 << 64) if v >= (1 << 63) else v
         if fid == 5:  # uint64
-            v, offset = _read_varint(buf, offset)
+            v, offset = decode_varint(buf, offset)
             return v
         if fid == 6:  # sint64 (zigzag)
-            v, offset = _read_varint(buf, offset)
+            v, offset = decode_varint(buf, offset)
             return (v >> 1) ^ -(v & 1)
         if fid == 7:  # bool
-            v, offset = _read_varint(buf, offset)
+            v, offset = decode_varint(buf, offset)
             return bool(v)
         offset = _skip(buf, offset, wire)
     return None
@@ -137,13 +114,13 @@ def _load_geometry(
     line: list[tuple[int, int]] | None = None
     x = y = 0
     while offset < seg_end:
-        v, offset = _read_varint(buf, offset)
+        v, offset = decode_varint(buf, offset)
         cmd = v & 0x7
         count = v >> 3
         if cmd == 1:  # MoveTo: each point starts a new line
             for _ in range(count):
-                dx, offset = _read_varint(buf, offset)
-                dy, offset = _read_varint(buf, offset)
+                dx, offset = decode_varint(buf, offset)
+                dy, offset = decode_varint(buf, offset)
                 x += (dx >> 1) ^ -(dx & 1)
                 y += (dy >> 1) ^ -(dy & 1)
                 if line is not None:
@@ -153,8 +130,8 @@ def _load_geometry(
             raise ValueError(f"malformed MVT: command {cmd} before any MoveTo")
         elif cmd == 2:  # LineTo
             for _ in range(count):
-                dx, offset = _read_varint(buf, offset)
-                dy, offset = _read_varint(buf, offset)
+                dx, offset = decode_varint(buf, offset)
+                dy, offset = decode_varint(buf, offset)
                 x += (dx >> 1) ^ -(dx & 1)
                 y += (dy >> 1) ^ -(dy & 1)
                 line.append((x, y))
@@ -180,19 +157,19 @@ def _decode_feature(
     while offset < end:
         fid, wire, offset = _read_key(buf, offset)
         if fid == 1:
-            fid_val, offset = _read_varint(buf, offset)
+            fid_val, offset = decode_varint(buf, offset)
         elif fid == 2:  # packed tags
-            ln, offset = _read_varint(buf, offset)
+            ln, offset = decode_varint(buf, offset)
             seg_end = offset + ln
             while offset < seg_end:
-                v, offset = _read_varint(buf, offset)
+                v, offset = decode_varint(buf, offset)
                 tags.append(v)
             if offset != seg_end:  # last varint straddled the boundary
                 raise ValueError("malformed MVT: tag segment overrun")
         elif fid == 3:
-            gtype, offset = _read_varint(buf, offset)
+            gtype, offset = decode_varint(buf, offset)
         elif fid == 4:  # packed geometry
-            ln, offset = _read_varint(buf, offset)
+            ln, offset = decode_varint(buf, offset)
             geometry = _load_geometry(buf, offset, offset + ln)
             offset += ln
         else:
@@ -213,25 +190,25 @@ def _decode_layer(buf: bytes, start: int, end: int) -> MvtLayer:
     while offset < end:
         fid, wire, offset = _read_key(buf, offset)
         if fid == 1:
-            ln, offset = _read_varint(buf, offset)
+            ln, offset = decode_varint(buf, offset)
             name = buf[offset : offset + ln].decode("utf-8")
             offset += ln
         elif fid == 2:
-            ln, offset = _read_varint(buf, offset)
+            ln, offset = decode_varint(buf, offset)
             feature_spans.append((offset, offset + ln))
             offset += ln
         elif fid == 3:
-            ln, offset = _read_varint(buf, offset)
+            ln, offset = decode_varint(buf, offset)
             keys.append(buf[offset : offset + ln].decode("utf-8"))
             offset += ln
         elif fid == 4:
-            ln, offset = _read_varint(buf, offset)
+            ln, offset = decode_varint(buf, offset)
             values.append(_decode_value(buf, offset, offset + ln))
             offset += ln
         elif fid == 5:
-            extent, offset = _read_varint(buf, offset)
+            extent, offset = decode_varint(buf, offset)
         elif fid == 15:
-            version, offset = _read_varint(buf, offset)
+            version, offset = decode_varint(buf, offset)
         else:
             offset = _skip(buf, offset, wire)
     if offset != end:
@@ -261,7 +238,7 @@ def decode_mvt(tile: bytes) -> list[MvtLayer]:
     while offset < n:
         fid, wire, offset = _read_key(buf, offset)
         if fid == 3 and wire == 2:
-            ln, offset = _read_varint(buf, offset)
+            ln, offset = decode_varint(buf, offset)
             if offset + ln > n:
                 raise ValueError("buffer exhausted: truncated MVT layer")
             layers.append(_decode_layer(buf, offset, offset + ln))

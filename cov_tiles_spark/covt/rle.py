@@ -22,6 +22,7 @@ from __future__ import annotations
 import numpy as np
 
 from cov_tiles_spark.covt.varint import (
+    decode_varint,
     encode_varints_with_ends,
     walk_varints,
     zigzag_decode,
@@ -65,7 +66,7 @@ def decode_int_rle(
                     d = hdr[offset + 1]
                     if d >= 128:
                         d -= 256
-                    (first,), offset = walk_varints(hdr, 1, offset + 2)
+                    first, offset = decode_varint(hdr, offset + 2)
                     if signed:
                         first = (first >> 1) ^ -(first & 1)
                     if d == 0:  # constant run: skip the generator protocol
@@ -109,7 +110,7 @@ def decode_int_rle(
         offset += 1
         if header <= 0x7F:
             d = hdr[offset]
-            (val,), offset = walk_varints(hdr, 1, offset + 1)
+            val, offset = decode_varint(hdr, offset + 1)
             r_out.append(count)
             r_len.append(header + 3)
             r_delta.append(d - 256 if d >= 128 else d)

@@ -201,9 +201,32 @@ def decode_varints(
 
 def decode_varint(buf, offset: int = 0) -> tuple[int, int]:
     """Decode a single varint from a bytes-like ``buf``; returns (value,
-    new offset)."""
-    (value,), offset = walk_varints(buf, 1, offset)
-    return value, offset
+    new offset). Bounded as :func:`walk_varints` is: the 10th byte gives
+    only its low bit, and an 11th byte or a read past the end of ``buf``
+    raises ValueError. The one-value walk without its loop and list, for
+    the header fields and MVT tags read one at a time."""
+    try:
+        b = buf[offset]
+        if b < 0x80:
+            return b, offset + 1
+        val = b & 0x7F
+        shift = 7
+        while True:
+            offset += 1
+            b = buf[offset]
+            if b < 0x80:
+                return val | b << shift, offset + 1
+            val |= (b & 0x7F) << shift
+            shift += 7
+            if shift == 63:
+                break
+        offset += 1
+        b = buf[offset]
+    except IndexError:
+        raise ValueError("buffer exhausted: truncated varint") from None
+    if b >= 0x80:
+        raise ValueError("varint longer than 10 bytes")
+    return val | (b & 1) << 63, offset + 1
 
 
 def zigzag_encode(values: np.ndarray) -> np.ndarray:

@@ -91,10 +91,9 @@ def bpe_train(
     docs: DataFrame,
     text_col: str = "text",
     n_merges: int = 40,
-    min_freq: int = 2,
 ) -> list[tuple[str, str, int]]:
     """Learn ``n_merges`` BPE merges; returns [(left, right, freq)] in
-    merge order. Stops early when no pair reaches ``min_freq``."""
+    merge order. Stops early when no pair occurs twice."""
     wc = word_counts(docs, text_col).withColumn(
         # seed symbols = characters (split on the empty pattern yields
         # the character array in both Spark and Python)
@@ -126,7 +125,7 @@ def bpe_train(
         top = pair_counts.orderBy(
             F.col("freq").desc(), F.col("l"), F.col("r")
         ).limit(1).collect()
-        if not top or top[0]["freq"] < min_freq:
+        if not top or top[0]["freq"] < 2:
             break
         left, right, freq = top[0]["l"], top[0]["r"], int(top[0]["freq"])
         merges.append((left, right, freq))

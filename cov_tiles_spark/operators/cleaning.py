@@ -36,8 +36,6 @@ def c4_clean(
     id_col: str,
     min_words_per_line: int = 3,
     badwords: list[str] | None = None,
-    require_terminal_punct: bool = False,
-    global_line_dedup: bool = True,
 ) -> DataFrame:
     """Line-filter + corpus-global line dedup + document reassembly.
 
@@ -58,19 +56,15 @@ def c4_clean(
         keep = keep & ~F.exists(
             F.split(F.col("line"), " "), lambda w: F.array_contains(bad, w)
         )
-    if require_terminal_punct:
-        keep = keep & F.col("line").rlike('[.!?"\']$')
     filtered = lines.filter(keep)
-
-    if global_line_dedup:
-        keepers = (
-            filtered.groupBy("line")
-            .agg(F.min(F.struct(F.col(id_col), F.col("line_idx"))).alias("_keeper"))
-        )
-        filtered = filtered.join(keepers, "line").filter(
-            (F.col(id_col) == F.col(f"_keeper.{id_col}"))
-            & (F.col("line_idx") == F.col("_keeper.line_idx"))
-        )
+    keepers = (
+        filtered.groupBy("line")
+        .agg(F.min(F.struct(F.col(id_col), F.col("line_idx"))).alias("_keeper"))
+    )
+    filtered = filtered.join(keepers, "line").filter(
+        (F.col(id_col) == F.col(f"_keeper.{id_col}"))
+        & (F.col("line_idx") == F.col("_keeper.line_idx"))
+    )
 
     rebuilt = filtered.groupBy(id_col).agg(
         F.array_join(

@@ -15,7 +15,10 @@ Scale shape: every step is built-in JVM DataFrame ops (groupBy-min +
 join + distinct) shuffling only (long, long) edge pairs — no Python in
 the loop; iterative lineage is truncated with ``localCheckpoint`` every
 round so the plan does not grow exponentially (the classic iterative-
-DataFrame trap); convergence is detected with a single count+bit_xor
+DataFrame trap). ``localCheckpoint`` keeps the blocks in executor
+storage and needs no checkpoint directory, but losing an executor
+mid-job loses its blocks and fails the job; the recovery is a rerun
+from scratch. Convergence is detected with a single count+bit_xor
 checksum aggregate per round (the star operators only ever shrink-or-
 keep the edge multiset, so checksum equality == fixpoint).
 """
@@ -86,7 +89,6 @@ def _edge_fingerprint(edges: DataFrame) -> tuple[int, int]:
 def connected_components(
     pairs: DataFrame,
     max_iter: int = 25,
-    checkpoint: str = "local",
 ) -> DataFrame:
     """Label every node in the pair graph with its component minimum.
 
@@ -100,36 +102,13 @@ def connected_components(
     in O(log n) rounds (~10 rounds covers 2^10-node components of any
     shape); hitting the rail raises rather than returning a partial
     clustering.
-
-    ``checkpoint`` picks how iterative lineage is truncated:
-    ``"local"`` (default) uses ``localCheckpoint`` — executor block
-    storage, no configured checkpoint dir needed, but NON-reliable:
-    losing an executor mid-job makes its blocks unrecoverable and fails
-    the job (acceptable for short local runs; rerun-from-scratch is the
-    recovery). ``"reliable"`` uses ``DataFrame.checkpoint`` against the
-    cluster's fault-tolerant checkpoint dir
-    (``spark.sparkContext.setCheckpointDir`` must be called first) —
-    the right mode for long-running 100 TB jobs where executor loss is
-    expected, at the price of one distributed write per round.
     """
-    if checkpoint not in ("local", "reliable"):
-        raise ValueError(f"unknown checkpoint mode {checkpoint!r}")
-    if checkpoint == "reliable" and pairs.sparkSession.sparkContext.getCheckpointDir() is None:
-        raise ValueError(
-            "checkpoint='reliable' needs spark.sparkContext.setCheckpointDir(...)"
-        )
-
-    def _truncate(df: DataFrame) -> DataFrame:
-        if checkpoint == "reliable":
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
-    edges = _truncate(
-        _canon(pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b")))
-    )
+    edges = _canon(
+        pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
+    ).localCheckpoint(eager=True)
     fp = _edge_fingerprint(edges)
     for it in range(max_iter):
-        edges = _truncate(_canon(_small_star(_large_star(edges))))
+        edges = _canon(_small_star(_large_star(edges))).localCheckpoint(eager=True)
         new_fp = _edge_fingerprint(edges)
         if new_fp == fp:
             logger.info("connected_components: converged after %d rounds", it + 1)

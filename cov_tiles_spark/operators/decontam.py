@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
 _P = np.uint64(1000000007)
+NGRAM = 13  # words per n-gram
 
 
 def _word_hashes(text: str) -> np.ndarray:
@@ -70,43 +71,36 @@ def _ngram_udf(n: int):
     return ngrams
 
 
-def ngram_hash_table(
-    df: DataFrame, text_col: str, id_col: str, n: int = 13
-) -> DataFrame:
+def ngram_hash_table(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, ngram_hash) pairs — one row per distinct n-gram per doc."""
     return df.select(
         F.col(id_col).alias("id"),
-        F.explode(_ngram_udf(n)(F.col(text_col))).alias("ngram_hash"),
+        F.explode(_ngram_udf(NGRAM)(F.col(text_col))).alias("ngram_hash"),
     )
 
 
-def decontaminate(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 13,
-) -> DataFrame:
-    """Flag every training doc sharing >= 1 word n-gram with the
-    ``text`` of the benchmark. Returns ``docs`` + ``is_contaminated``;
-    keep the clean set with ``.filter(~F.col("is_contaminated"))``.
+def decontaminate(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
+    """Flag every training doc (``doc_id``, ``text``) sharing >= 1 word
+    13-gram with the ``text`` of the benchmark. Returns ``docs`` +
+    ``is_contaminated``; keep the clean set with
+    ``.filter(~F.col("is_contaminated"))``.
 
     The benchmark hash table is distinct-ed and broadcast (eval sets are
     thousands of docs, not billions) — the corpus side stays map-side."""
     bench_hashes = (
         benchmark.select(
-            F.explode(_ngram_udf(n)(F.col("text"))).alias("ngram_hash")
+            F.explode(_ngram_udf(NGRAM)(F.col("text"))).alias("ngram_hash")
         )
         .distinct()
     )
     hits = (
-        ngram_hash_table(docs, text_col, id_col, n)
+        ngram_hash_table(docs, "text", "doc_id")
         .join(F.broadcast(bench_hashes), "ngram_hash", "left_semi")
         .select(F.col("id").alias("_hit_id"))
         .distinct()
     )
     return docs.join(
-        hits, docs[id_col] == hits["_hit_id"], "left"
+        hits, docs["doc_id"] == hits["_hit_id"], "left"
     ).withColumn(
         "is_contaminated", F.col("_hit_id").isNotNull()
     ).drop("_hit_id")

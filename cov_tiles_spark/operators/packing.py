@@ -135,7 +135,6 @@ def pack_bins(
     len_col: str,
     max_len: int,
     num_shards: int = 1024,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Next-fit whole-document packing.
 
@@ -158,8 +157,7 @@ def pack_bins(
     s = _sharded(df, id_col, len_col, num_shards).filter(
         F.col("_len") > 0
     )
-    p = partitions or min(num_shards, 256)
-    s = s.repartition(p, "shard").sortWithinPartitions("shard", "_h", id_col)
+    s = s.repartition(min(num_shards, 256), "shard").sortWithinPartitions("shard", "_h", id_col)
 
     def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cur_shard = None

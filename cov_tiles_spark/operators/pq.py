@@ -110,7 +110,6 @@ def pq_topk(
     query: list[float],
     k: int,
     codebooks: np.ndarray,
-    order_round: int | None = None,
 ) -> DataFrame:
     """ADC top-k over PQ codes: score = sum_j LUT[j, code_j] where LUT
     holds the query's partial dot products with every codeword — m
@@ -122,7 +121,7 @@ def pq_topk(
     and the driver gate pins exact score reproducibility against an
     independent scalar implementation."""
     scored = _pq_scored(encoded, id_col, query, codebooks)
-    return top_k(scored, "score", k, order_round).select(
+    return top_k(scored, "score", k, None).select(
         "rank", "id", F.col("score").alias("adc_score")
     )
 
@@ -160,16 +159,11 @@ def pq_candidate_ids(
     query: list[float],
     k: int,
     codebooks: np.ndarray,
-    order_round: int | None = None,
 ) -> DataFrame:
     """ADC top-k candidate ID SET (no ranks): the shortlist feeding an
     exact re-rank only needs membership, so this skips
     :func:`pq_topk`'s post-limit rank window entirely — the same scored
-    TakeOrdered, one less single-partition pass. ``order_round`` MUST
-    match the :func:`pq_topk` call it substitutes for: the k-boundary
-    is decided by the (rounded-or-raw score desc, id) key, so differing
-    keys can admit different ids when ``k`` < corpus size. With ``k``
-    >= the corpus size (the provably-exact gate setting) every id
-    qualifies under either key."""
+    TakeOrdered on the same (raw score desc, id) key, one less
+    single-partition pass."""
     scored = _pq_scored(encoded, id_col, query, codebooks)
-    return top_k(scored, "score", k, order_round).select("id")
+    return top_k(scored, "score", k, None).select("id")

@@ -11,9 +11,9 @@ UDF, no shuffle for the Bernoulli forms) that any engine can replay
 (the DuckDB oracle twins run the same integer formula).
 
 Design notes for scale:
-- `hash_sample` / `stratified_sample` are map-only: a filter on a hash
-  of the key — no shuffle, no state; stratified rates ride a broadcast
-  join (strata tables are small by definition).
+- `stratified_sample` is map-only: a filter on a hash of the key — no
+  shuffle, no state; stratified rates ride a broadcast join (strata
+  tables are small by definition).
 - `sample_per_group` bounds the per-group window fan-in with a
   hash-threshold prefilter + provable fallback (same pattern as
   `spatial/knn.py`): a group only pays a full-group window if the
@@ -56,15 +56,6 @@ def sample_hash(key: F.Column, seed: int = 0) -> F.Column:
 def threshold(rate: float) -> int:
     """Integer acceptance threshold for a [0, 1] rate."""
     return int(rate * _RING)
-
-
-def hash_sample(
-    df: DataFrame, rate: float, key_col: str, seed: int = 0
-) -> DataFrame:
-    """Reproducible Bernoulli sample: a row is kept iff
-    ``hash(key) < floor(rate * 2^31)`` — the same rows survive on every
-    run, every partitioning, every engine. Map-only (no shuffle)."""
-    return df.filter(sample_hash(F.col(key_col), seed) < F.lit(threshold(rate)))
 
 
 def stratified_sample(

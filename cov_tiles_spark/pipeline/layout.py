@@ -80,7 +80,6 @@ def cluster_write(
     prefix_bits: int = DEFAULT_PREFIX_BITS,
     n_partitions: int = 32,
     row_group_bytes: int = 1 << 20,
-    tiebreak_col: str | None = None,
 ) -> None:
     """Write ``df`` Hilbert-clustered on its ``lon``/``lat`` columns:
     ``hprefix`` directory partitions, ``hkey``-sorted rows (tight
@@ -89,13 +88,6 @@ def cluster_write(
     ``row_group_bytes`` is deliberately small by default so the skipping
     behavior is observable at test scale; production corpora should use
     the parquet default (128 MiB) — the layout math is size-agnostic.
-
-    ``tiebreak_col``: range partitioning sends IDENTICAL keys to one
-    task, so a planet-hot location (billions of records at one point →
-    one ``hkey``) becomes a straggler-and-spill task at scale.  Naming a
-    high-cardinality column (an id) adds it to the range key: ties
-    split across tasks while the curve order — and therefore row-group
-    tightness — is unchanged.
     """
     if prefix_bits >= bits:
         raise ValueError(f"prefix_bits {prefix_bits} must be < bits {bits}")
@@ -106,9 +98,8 @@ def cluster_write(
     # One range exchange on the fine key: each output task owns a
     # contiguous curve interval, so it spans few prefix directories and
     # its files' row groups cover disjoint, sorted key ranges.
-    range_keys = [KEY_COL] + ([tiebreak_col] if tiebreak_col else [])
     (
-        keyed.repartitionByRange(n_partitions, *range_keys)
+        keyed.repartitionByRange(n_partitions, KEY_COL)
         .sortWithinPartitions(KEY_COL)
         .write.mode("overwrite")
         .option("parquet.block.size", row_group_bytes)

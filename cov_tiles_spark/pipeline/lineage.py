@@ -12,9 +12,8 @@ The sandbox has no Iceberg runtime jars, so this layer gives
 - **snapshot commits** under ``table/snapshot_id=…/<partition_col>=…/``
   and **latest-wins reads**: a partition committed again supersedes its
   earlier snapshot
-- **deletes and time travel**: ``commit_tombstones`` writes a
-  manifest-only snapshot that hides keys from latest reads, and
-  ``read_table(as_of_ns=...)`` sees only snapshots committed by then
+- **deletes**: ``commit_tombstones`` writes a manifest-only snapshot
+  that hides keys from latest reads
 
 Resume is the caller's: ``delta_materialize`` stores each tile's input
 checksum beside its payload, so a rerun re-encodes only what is missing
@@ -95,8 +94,8 @@ class IcebergLite:
         its row count, logical byte size and value checksum. Returns the
         manifest rows written (none, and nothing written, when ``df`` is
         empty). A partition committed again supersedes its earlier
-        snapshot in ``read_table(latest_only=True)``; the earlier one
-        stays readable through time travel (Iceberg's upsert shape).
+        snapshot in ``read_table(latest_only=True)`` (Iceberg's upsert
+        shape).
 
         Repartitioning by ``partition_col`` first writes ONE file per
         partition directory, not one per upstream task touching it (812
@@ -151,9 +150,8 @@ class IcebergLite:
         files) with one row per key in ``keys``. ``read_table(latest_only=
         True)`` resolves the tombstone snapshot as the newest winner for
         the key and reads nothing for it, so the partition vanishes from
-        latest reads; time travel before the tombstone still sees the old
-        rows (Iceberg's delete-manifest shape). Commits nothing if
-        ``keys`` is empty."""
+        latest reads (Iceberg's delete-manifest shape). Commits nothing
+        if ``keys`` is empty."""
         if not keys:
             return
         snapshot_id = uuid.uuid4().hex[:16]
@@ -164,44 +162,29 @@ class IcebergLite:
 
     # ---------------- read path ----------------
 
-    def read_table(
-        self,
-        table: str,
-        as_of_ns: int | None = None,
-        latest_only: bool = False,
-    ) -> DataFrame:
+    def read_table(self, table: str, latest_only: bool = False) -> DataFrame:
         """Read the committed partitions of a table (manifest-gated).
 
-        ``as_of_ns`` is Iceberg-style time travel: only snapshots whose
-        manifest commit timestamp is <= the bound are visible — the view
-        any reader saw at that instant, reconstructible forever because
-        commits are append-only.
-
         ``latest_only``: upsert semantics — for every partition_key, keep
-        rows only from its newest visible snapshot (ties broken by the
+        rows only from its newest snapshot (ties broken by the
         larger snapshot id). The table's manifest rows are collected
         once and the winners picked on the driver, so Spark is handed
         exactly the winning ``snapshot_id=…/<col>=…`` directories: the
         plan is a plain scan, with no join or window. A partition whose
         winner is a tombstone is not read at all.
 
-        Raises FileNotFoundError when no snapshot with data is visible."""
+        Raises FileNotFoundError when no snapshot with data is committed."""
         base = f"{self.root}/{table}"
         rows = sorted(
-            (
-                r for r in self.manifests()
-                .filter(F.col("table") == table)
-                .select("snapshot_id", "partition_key", "n_rows", "committed_at_ns")
-                .collect()
-                if as_of_ns is None or r.committed_at_ns <= as_of_ns
-            ),
+            self.manifests()
+            .filter(F.col("table") == table)
+            .select("snapshot_id", "partition_key", "n_rows", "committed_at_ns")
+            .collect(),
             key=lambda r: (r.committed_at_ns, r.snapshot_id),
         )
         with_data = [r for r in rows if r.n_rows]  # tombstones have no directory
         if not with_data:
-            raise FileNotFoundError(
-                f"no snapshots for table {table} at as_of_ns={as_of_ns}"
-            )
+            raise FileNotFoundError(f"no snapshots for table {table}")
         if latest_only:  # a later row overwrites: each key keeps its newest
             rows = list({r.partition_key: r for r in rows}.values())
         wanted: dict[str, set[str]] = {}

@@ -25,11 +25,11 @@ direct assignment at every level.
 - The cap keeps each tile's ``k`` smallest rows by ``(key, id)``. Every
   one of a parent tile's k smallest rows lies in some child, where it
   ranks at most k — so it survived the child's cap. Induction extends
-  this through every level (including capped-but-not-encoded skip
-  levels), so "cap the union of capped children" == "cap the full
-  extent". The zoom-SALTED default key of ``materialize_tiles`` breaks
-  this premise (each level selects an independent sample), which is why
-  ``encode_assigned`` takes the key as a parameter.
+  this through every level, so "cap the union of capped children" ==
+  "cap the full extent". The zoom-SALTED default key of
+  ``materialize_tiles`` breaks this premise (each level selects an
+  independent sample), which is why ``encode_assigned`` takes the key
+  as a parameter.
 
 The per-level capped row sets are persisted: each feeds both its own
 encode and the next level's derivation, and an unpersisted lineage would
@@ -86,12 +86,9 @@ def materialize_pyramid(
     zmax: int,
     max_features_per_tile: int = 20_000,
     with_mvt_baseline: bool = True,
-    wire_format: str = "gena",
-    encode_zooms: list[int] | None = None,
     row_bound: int | None = None,
 ) -> DataFrame:
-    """records -> COVT payloads for every zoom in [zmin, zmax] (or the
-    ``encode_zooms`` subset).
+    """records -> gen-A COVT payloads for every zoom in [zmin, zmax].
 
     Byte-identical to ``encode_assigned(assign_tiles(images, zooms),
     sample_key=xxhash64(image_id))`` at every level.
@@ -109,9 +106,6 @@ def materialize_pyramid(
 
     ``row_bound``: known upper bound on the corpus row count (defaults to
     a count() of ``images``)."""
-    encode_set = set(
-        encode_zooms if encode_zooms is not None else range(zmin, zmax + 1)
-    )
     cols = ["image_id", "caption", "fmt", "w", "h", "phash", "lon", "lat"]
     zkey = F.xxhash64("image_id")
     bound = row_bound if row_bound is not None else images.count()
@@ -125,23 +119,21 @@ def materialize_pyramid(
         if tile_bound < bound:
             rows = _cap_rows(rows, max_features_per_tile).persist()
             bound = tile_bound
-        if z in encode_set:
-            # partition count scaled to the level's row bound: a coarse
-            # level holding a few thousand capped rows must not pay a
-            # full-width task wave (task-launch overhead dominated the
-            # per-level stages when every level ran default*8 partitions)
-            parallelism = rows.sparkSession.sparkContext.defaultParallelism
-            parts = int(max(16, min(parallelism * 8, bound // 4000 + 1)))
-            out.append(
-                encode_assigned(
-                    rows,
-                    max_features_per_tile=max_features_per_tile,
-                    with_mvt_baseline=with_mvt_baseline,
-                    wire_format=wire_format,
-                    sample_key=zkey,
-                    num_parts=parts,
-                )
+        # partition count scaled to the level's row bound: a coarse
+        # level holding a few thousand capped rows must not pay a
+        # full-width task wave (task-launch overhead dominated the
+        # per-level stages when every level ran default*8 partitions)
+        parallelism = rows.sparkSession.sparkContext.defaultParallelism
+        parts = int(max(16, min(parallelism * 8, bound // 4000 + 1)))
+        out.append(
+            encode_assigned(
+                rows,
+                max_features_per_tile=max_features_per_tile,
+                with_mvt_baseline=with_mvt_baseline,
+                sample_key=zkey,
+                num_parts=parts,
             )
+        )
         if z > zmin:
             rows = parent_rows(rows)
     return reduce(DataFrame.unionAll, out)

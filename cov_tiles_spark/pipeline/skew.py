@@ -28,10 +28,9 @@ def salted_join(
     on: list[str],
     factor: int,
     salt_from: str,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join with hot-key salting: same rows as ``big.join(small, on,
-    how)`` for inner/left joins, but each join key's big-side rows are
+    """Inner equi-join with hot-key salting: same rows as
+    ``big.join(small, on)``, but each join key's big-side rows are
     split across ``factor`` shuffle tasks. ``salt_from`` must be a
     big-side column (ideally unique-ish) that derives the salt."""
     b = big.withColumn(
@@ -41,4 +40,4 @@ def salted_join(
         SALT_COL,
         F.explode(F.array(*[F.lit(i) for i in range(factor)])),
     )
-    return b.join(s, on + [SALT_COL], how).drop(SALT_COL)
+    return b.join(s, on + [SALT_COL]).drop(SALT_COL)

@@ -8,16 +8,16 @@ one pipeline a user actually runs over a raw crawl:
       -> ExactSubstr span dedup      (operators/spandedup.py, 1 hash shuffle)
       -> exact doc dedup             (operators/dedup.py, hash agg)
       -> MinHash near-dup clustering (dedup.py + cluster.py, banded LSH + CC)
-      -> benchmark decontamination   (operators/decontam.py, broadcast, map)
-      -> quality gates               (text.py heuristics + ngram_lm ppl, map)
-      -> deterministic sample        (operators/sampling.py, map)
+      -> quality score               (text.py heuristics, map)
 
 Each stage is individually oracle-gated (see COVERAGE.md); this module
 adds the *composition*: stage ordering that minimizes the bytes each
 shuffle moves (cheap map-side prunes before expensive pairwise stages;
 text-mutating stages before hash-identity stages so identities are
-computed on the text that survives), a per-stage decision log for
-lineage, and a single place where the 100 TB run wires its knobs.
+computed on the text that survives) and a per-stage decision log for
+lineage. Decontamination (``operators/decontam.py``), LM perplexity
+(``operators/ngram_lm.py``) and sampling (``operators/sampling.py``) are
+map-side prunes a caller applies to the result; each has its own gate.
 
 Scale notes: stages never collect the corpus; the only corpus-sized
 shuffles are the ones the underlying operators already own (line dedup,
@@ -32,10 +32,7 @@ from pyspark.sql import functions as F
 
 from cov_tiles_spark.operators.cleaning import c4_clean
 from cov_tiles_spark.operators.cluster import dedup_clusters
-from cov_tiles_spark.operators.decontam import decontaminate
 from cov_tiles_spark.operators.dedup import minhash_near_dups
-from cov_tiles_spark.operators.ngram_lm import lm_score, ngram_lm_counts
-from cov_tiles_spark.operators.sampling import hash_sample
 from cov_tiles_spark.operators.spandedup import exact_span_dedup
 from cov_tiles_spark.operators.text import quality_score
 
@@ -50,15 +47,10 @@ def prepare_text_corpus(
     span_k: int = 8,
     min_tokens_after_dedup: int = 10,
     minhash_threshold: float = 0.8,
-    eval_set: DataFrame | None = None,
-    lm_train: DataFrame | None = None,
-    max_log_ppl: float = 4.0,
-    sample_rate: float = 1.0,
-    sample_seed: int = 1,
 ) -> DataFrame:
-    """Run the full preparation stack; returns one row per SURVIVING
-    document: (id, text, n_tokens, quality, log_ppl, cluster) with
-    ``text`` the cleaned/cut text.
+    """Run the preparation stack; returns one row per SURVIVING
+    document: (id, text, n_tokens, cluster, quality) with ``text`` the
+    cleaned/cut text.
 
     Filters drop rows; text-mutating stages rewrite ``text``.  Order:
 
@@ -68,11 +60,7 @@ def prepare_text_corpus(
        ``min_tokens_after_dedup`` tokens drop (C4 drops short docs);
     3. exact + near-dup doc dedup on the post-cut text (runs on the
        smallest possible corpus); non-canonical cluster members drop;
-    4. decontamination / perplexity / sampling are pure
-       map-side prunes over the survivors (cheapest last: they don't
-       reduce the pairwise stages' input, so they run after them only
-       if contamination must not influence dedup keepers — the
-       conventional order, which this follows).
+    4. a quality score column over the survivors.
     """
     cleaned = c4_clean(
         docs, text_col, id_col,
@@ -91,33 +79,9 @@ def prepare_text_corpus(
     pairs = minhash_near_dups(
         cut, text_col, id_col, threshold=minhash_threshold
     )
-    deduped = (
+    return (
         dedup_clusters(cut, pairs.select("id_a", "id_b"), id_col)
         .filter(F.col("is_canonical"))
         .drop("is_canonical")
+        .withColumn("quality", quality_score(F.col(text_col)))
     )
-
-    out = deduped
-    if eval_set is not None:
-        out = decontaminate(out, eval_set, text_col, id_col).filter(
-            ~F.col("is_contaminated")
-        ).drop("is_contaminated")
-
-    out = out.withColumn("quality", quality_score(F.col(text_col)))
-
-    if lm_train is not None:
-        big, uni, total = ngram_lm_counts(lm_train, text_col, id_col)
-        scores = lm_score(out, big, uni, total, text_col, id_col).select(
-            id_col,
-            F.when(
-                F.col("n_scored") > 0,
-                -F.col("logprob") / F.col("n_scored"),
-            ).otherwise(F.lit(0.0)).alias("log_ppl"),
-        )
-        out = out.join(scores, id_col).filter(F.col("log_ppl") <= max_log_ppl)
-    else:
-        out = out.withColumn("log_ppl", F.lit(0.0))
-
-    if sample_rate < 1.0:
-        out = hash_sample(out, sample_rate, id_col, seed=sample_seed)
-    return out

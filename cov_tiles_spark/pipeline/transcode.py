@@ -15,6 +15,9 @@ and compare feature-for-feature, in order, with the MVT decode — the
 reference's round-trip oracle, `BingCovtDemo.java:194-222`) runs inline
 and is reported as two boolean columns, so a 100 TB transcode is
 self-auditing.
+
+The way back is :func:`covt_to_mvt`, which exports a gen-A tile (the
+stored payload format) to MVT.
 """
 
 from __future__ import annotations
@@ -243,16 +246,11 @@ def verify_roundtrip(covt_bytes: bytes, mvt_layers: list[MvtLayer]) -> bool:
     return _features_match(decoded, mvt_layers)
 
 
-def covt_to_mvt(
-    covt_bytes: bytes | None = None,
-    *,
-    genb: bytes | None = None,
-    tilejson: dict | None = None,
-) -> bytes:
-    """Reverse transcode: a COVT tile (gen-A bytes, or gen-B bytes +
-    TileJSON sidecar) -> MVT bytes, completing the interop matrix (the
-    reference ships only MVT->COVT, `CovtConverter.java:61-140`; a user
-    leaving the format needs the way back).
+def covt_to_mvt(covt_bytes: bytes) -> bytes:
+    """Reverse transcode: a gen-A COVT tile -> MVT bytes, completing the
+    interop matrix (the reference ships only MVT->COVT,
+    `CovtConverter.java:61-140`; a user leaving the format needs the way
+    back).
 
     Geometry follows loadGeometry semantics both ways (closed polygon
     rings re-emit ClosePath; multipoints one MoveTo per point), so
@@ -261,14 +259,7 @@ def covt_to_mvt(
     not round-trip-preserved). Every layer gets extent 4096 (gen-A
     tiles do not store extent).
     """
-    if (covt_bytes is None) == (genb is None):
-        raise ValueError("pass exactly one of covt_bytes or genb")
-    if genb is not None:
-        from cov_tiles_spark.covt.genb import decode_tile_genb
-
-        decoded = decode_tile_genb(genb, tilejson)
-    else:
-        decoded = decode_covt(covt_bytes)
+    decoded = decode_covt(covt_bytes)
 
     # OGC type (geometry.ts:1-8; multi-types collapse to their base: MVT
     # carries multiplicity in the command stream, not the type byte)

@@ -54,6 +54,16 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Every SQL execution renders its physical plan to a string for
+        # its start event, whether or not a UI listens, and logs a
+        # warning when a field list passes this limit (default 25).
+        # operators/profile.py computes all columns' statistics in one
+        # aggregation by design: the partial aggregate of q_profile's
+        # five exact columns is 45 fields wide, and q_profile_approx's
+        # HLL++ sketches add 52 buffer fields per column at rsd 0.05
+        # (166 fields for three columns). 1000 fields covers an
+        # approximate profile of 18 columns.
+        .config("spark.sql.debug.maxToStringFields", "1000")
         .getOrCreate()
     )
     # Set on the live SparkConf, which Python runners read per task, not

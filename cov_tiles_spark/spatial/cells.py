@@ -79,18 +79,17 @@ def cell_stats_rollup(
     df,
     cell_col: str,
     levels: list[int],
-    value_col: str | None = None,
 ):
-    """Hierarchical per-cell aggregates (hypertable-style continuous
-    rollup): counts (+ optional value sums) at the finest level, coarser
-    levels derived from the AGGREGATE table — never from the raw rows.
+    """Hierarchical per-cell counts (hypertable-style continuous
+    rollup): counts at the finest level, coarser levels derived from
+    the AGGREGATE table — never from the raw rows.
 
     Hilbert indexes are hierarchical (a parent's four children occupy
     consecutive indices), so the parent cell at ``k`` levels up is
     exactly ``cell >> 2k`` — each coarser level is one tiny shuffle over
     pre-aggregated rows (|cells| of the level below, not |records|),
     the same telescoping shape as the tile pyramid rollup. Returns
-    ``(level, cell, n_points[, sum_value])`` for every requested level
+    ``(level, cell, n_points)`` for every requested level
     (``levels`` strictly descending, starting at ``S2_BITS``).
     """
     from pyspark.sql import functions as F
@@ -103,27 +102,20 @@ def cell_stats_rollup(
         raise ValueError(
             f"levels must descend strictly from {S2_BITS}: {levels!r}"
         )
-    aggs = [F.count("*").alias("n_points")]
-    if value_col is not None:
-        aggs.append(F.sum(value_col).alias("sum_value"))
+    out_cols = ["level", "cell", "n_points"]
     level = (
-        df.groupBy(F.col(cell_col).alias("cell")).agg(*aggs)
+        df.groupBy(F.col(cell_col).alias("cell"))
+        .agg(F.count("*").alias("n_points"))
         .withColumn("level", F.lit(S2_BITS))
-    )
-    out_cols = ["level", "cell", "n_points"] + (
-        ["sum_value"] if value_col is not None else []
     )
     out = [level.select(*out_cols)]
     prev_bits = S2_BITS
     for bits in levels[1:]:
-        re_aggs = [F.sum("n_points").alias("n_points")]
-        if value_col is not None:
-            re_aggs.append(F.sum("sum_value").alias("sum_value"))
         level = (
             level.groupBy(
                 F.shiftright("cell", 2 * (prev_bits - bits)).alias("cell")
             )
-            .agg(*re_aggs)
+            .agg(F.sum("n_points").alias("n_points"))
             .withColumn("level", F.lit(bits))
         )
         out.append(level.select(*out_cols))

@@ -24,14 +24,12 @@ def bbox_join(
     points: DataFrame,
     boxes: DataFrame,
     zoom: int = 6,
-    how: str = "inner",
 ) -> DataFrame:
-    """Join points (lon, lat, ...) to boxes (lon_min, lon_max, lat_min,
-    lat_max, ...) they fall inside (closed intervals). Returns all
-    columns of both inputs. ``how='inner'`` (default) or ``'left'``
-    (points with no box keep nulls). tile_x/tile_y clamp to the world
-    grid, so boxes reaching past the antimeridian/poles just cover the
-    edge cells."""
+    """Inner-join points (lon, lat, ...) to boxes (lon_min, lon_max,
+    lat_min, lat_max, ...) they fall inside (closed intervals). Returns
+    all columns of both inputs. tile_x/tile_y clamp to the world grid,
+    so boxes reaching past the antimeridian/poles just cover the edge
+    cells."""
     pts = points.withColumn("_cx", tile_x(F.col("lon"), zoom)).withColumn(
         "_cy", tile_y(F.col("lat"), zoom)
     )
@@ -49,18 +47,4 @@ def bbox_join(
         (F.col("lon") >= F.col("lon_min")) & (F.col("lon") <= F.col("lon_max"))
         & (F.col("lat") >= F.col("lat_min")) & (F.col("lat") <= F.col("lat_max"))
     )
-    if how == "inner":
-        return (
-            pts.join(exploded, ["_cx", "_cy"]).filter(inside)
-            .drop("_cx", "_cy")
-        )
-    if how == "left":
-        matched = pts.join(exploded, ["_cx", "_cy"]).filter(inside).drop("_cx", "_cy")
-        box_cols = [c for c in boxes.columns]
-        missing = pts.drop("_cx", "_cy").join(
-            matched.select(*points.columns).distinct(), points.columns, "left_anti"
-        )
-        for c in box_cols:
-            missing = missing.withColumn(c, F.lit(None))
-        return matched.unionByName(missing)
-    raise ValueError(f"unsupported how={how!r}")
+    return pts.join(exploded, ["_cx", "_cy"]).filter(inside).drop("_cx", "_cy")

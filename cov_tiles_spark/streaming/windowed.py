@@ -31,17 +31,16 @@ def tile_counts_windowed(
     stream: DataFrame,
     zoom: int,
     window_duration: str = "10 minutes",
-    watermark: str = "10 minutes",
 ) -> DataFrame:
     """Tumbling-window per-tile counts over event time (``ts`` column).
 
     Whole plan is codegen (mercator math + window + hash agg); the
-    watermark bounds both state and late-data acceptance. Works on a
+    10-minute watermark bounds both state and late-data acceptance. Works on a
     streaming OR batch DataFrame (batch ignores the watermark), so the
     same definition serves the backfill job and the live query.
     """
     tx, ty = _tile_cols(zoom)
-    pts = stream.withWatermark("ts", watermark) if stream.isStreaming else stream
+    pts = stream.withWatermark("ts", "10 minutes") if stream.isStreaming else stream
     return (
         pts.select(F.col("ts"), tx, ty)
         .groupBy(

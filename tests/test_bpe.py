@@ -68,9 +68,9 @@ def test_bpe_matches_python_twin(spark):
 
 
 def test_bpe_min_freq_early_stop(spark):
+    """No pair occurs twice, so training stops before its first merge."""
     docs = spark.createDataFrame([("ab cd",)], "text string")
-    assert bpe_train(docs, "text", n_merges=5, min_freq=2) == []
-    assert len(bpe_train(docs, "text", n_merges=5, min_freq=1)) > 0
+    assert bpe_train(docs, "text", n_merges=5) == []
 
 
 def _replay(word, merges):

@@ -138,15 +138,14 @@ class TestC4Clean:
         assert got[2] == ("another good line present", 2, 1)
         assert got[3] == ("", 1, 0)
 
-    def test_badwords_and_terminal_punct(self, spark):
+    def test_badwords_drop_lines(self, spark):
         rows = [(1, "this line is clean.\nthis line is spammy junk.\nno punct line here")]
         df = spark.createDataFrame(rows, "doc_id long, text string")
         out = c4_clean(
-            df, "text", "doc_id", min_words_per_line=2,
-            badwords=["spammy"], require_terminal_punct=True,
+            df, "text", "doc_id", min_words_per_line=2, badwords=["spammy"],
         ).collect()[0]
-        assert out["clean_text"] == "this line is clean."
-        assert out["n_lines"] == 3 and out["n_kept"] == 1
+        assert out["clean_text"] == "this line is clean.\nno punct line here"
+        assert out["n_lines"] == 3 and out["n_kept"] == 2
 
     def test_dedup_keeper_is_min_doc_then_line(self, spark):
         rows = [
@@ -159,11 +158,3 @@ class TestC4Clean:
         # keeper = (doc 2, line 0); doc 2's second copy and doc 5's copy drop
         assert got[2] == "shared boiler line"
         assert got[5] == "z z z z"
-
-    def test_no_dedup_mode(self, spark):
-        rows = [(1, "same line here\nsame line here")]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        out = c4_clean(
-            df, "text", "doc_id", min_words_per_line=2, global_line_dedup=False
-        ).collect()[0]
-        assert out["clean_text"] == "same line here\nsame line here"

@@ -104,22 +104,3 @@ def test_non_convergence_rail_raises(spark):
     df = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
     with pytest.raises(RuntimeError):
         connected_components(df, max_iter=0)
-
-
-def test_reliable_checkpoint_mode(spark, tmp_path):
-    """checkpoint='reliable' truncates lineage via the fault-tolerant
-    checkpoint dir and labels identically to the default mode."""
-    import pytest as _pytest
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(20)] + [(100, 101)], "id_a long, id_b long"
-    )
-    with _pytest.raises(ValueError, match="setCheckpointDir"):
-        connected_components(pairs, checkpoint="reliable")
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    got = {
-        (r.node, r.label)
-        for r in connected_components(pairs, checkpoint="reliable").collect()
-    }
-    want = {(i, 0) for i in range(21)} | {(100, 100), (101, 100)}
-    assert got == want

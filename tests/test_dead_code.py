@@ -12,8 +12,9 @@
   ``scripts/`` resolves, so deleting a def cannot leave a script that
   fails only when it runs.
 - Every defaulted parameter of a package def or of a def in
-  ``__spark_entry__.py`` is set by some call: a default nothing
-  overrides is a constant, not an option.
+  ``__spark_entry__.py`` is set by some call outside ``tests/``: a
+  default only tests override is a constant, not an option. The
+  exceptions are listed in ``TEST_SEAMS``, each with its reason.
 - Every parameter of a package def or lambda is read in its body: one
   that is accepted and never read is a settable value that changes
   nothing."""
@@ -118,19 +119,55 @@ def _callee(call: ast.Call) -> str | None:
     return f.attr if isinstance(f, ast.Attribute) else None
 
 
-def unset_params(root: Path = ROOT) -> list[str]:
-    """Defaulted parameters of package and entry defs that no call sets.
+# Defaulted parameters that only tests set, as "file def(param)": the
+# limits a test lowers to reach them on a small input, and one reference
+# path a test compares against.
+TEST_SEAMS = {
+    # the bucket cap that bounds memory on a hot LSH bucket
+    "cov_tiles_spark/operators/dedup.py minhash_near_dups(max_bucket_size)":
+        "limit a test lowers to reach it",
+    "cov_tiles_spark/operators/dedup.py simhash_near_dups(max_bucket_size)":
+        "limit a test lowers to reach it",
+    "cov_tiles_spark/operators/dedup.py embedding_near_dups(max_bucket_size)":
+        "limit a test lowers to reach it",
+    "cov_tiles_spark/operators/dedup.py ngram_jaccard_pairs(max_block_size)":
+        "limit a test lowers to reach it",
+    "cov_tiles_spark/operators/dedup.py ngram_jaccard_pairs(vocab_limit)":
+        "limit a test lowers to reach it",
+    "cov_tiles_spark/operators/semdedup.py semantic_dedup(max_cluster_size)":
+        "limit a test lowers to reach it",
+    "cov_tiles_spark/operators/semdedup.py _prune_cluster(block)":
+        "limit a test lowers to reach it",
+    "cov_tiles_spark/operators/similarity.py retrieval_eval(max_queries)":
+        "limit a test lowers to reach it",
+    "cov_tiles_spark/operators/similarity.py hard_negatives(max_queries)":
+        "limit a test lowers to reach it",
+    "cov_tiles_spark/pipeline/layout.py bbox_cover(max_cover_cells)":
+        "limit a test lowers to reach it",
+    "cov_tiles_spark/operators/cluster.py connected_components(max_iter)":
+        "safety rail a test sets to 0 to see it raise",
+    "cov_tiles_spark/operators/sampling.py sample_per_group(prefilter)":
+        "reference path its test compares the prefiltered plan against",
+}
+
+
+def unset_params(root: Path = ROOT, seams: dict[str, str] = TEST_SEAMS) -> list[str]:
+    """Defaulted parameters of package and entry defs that no call sets,
+    and ``seams`` entries that match no such parameter.
 
     Calls are read from the package, the entry, ``bench*.py``,
-    ``perfbench/``, ``scripts/`` and ``tests/``: a default that only a
-    test overrides is a test seam and stays. A call sets a parameter by
-    keyword, by passing more positional arguments than precede it, or
-    through ``*args``/``**kw``, which may set any of them. As in
-    :func:`unreachable_defs` the match is by name: a call to ``f`` or
-    ``x.f`` counts for every def named ``f``, a call to ``C`` for
-    ``C.__init__``, and a method's ``self``/``cls`` takes no position."""
+    ``perfbench/`` and ``scripts/``, not from ``tests/``: a default that
+    only a test overrides is reported unless ``seams`` lists it as
+    ``"file def(param)"``. A seam that names a def or parameter that is
+    gone, or one that a non-test call now sets, is reported as stale. A
+    call sets a parameter by keyword, by passing more positional
+    arguments than precede it, or through ``*args``/``**kw``, which may
+    set any of them. As in :func:`unreachable_defs` the match is by
+    name: a call to ``f`` or ``x.f`` counts for every def named ``f``, a
+    call to ``C`` for ``C.__init__``, and a method's ``self``/``cls``
+    takes no position."""
     srcs = [root / "__spark_entry__.py", *sorted(root.glob("bench*.py"))]
-    for d in ("cov_tiles_spark", "perfbench", "scripts", "tests"):
+    for d in ("cov_tiles_spark", "perfbench", "scripts"):
         srcs += sorted((root / d).rglob("*.py"))
     n_pos: dict[str, int] = {}
     keywords: dict[str, set[str]] = {}
@@ -150,6 +187,7 @@ def unset_params(root: Path = ROOT) -> list[str]:
                 k.arg for k in call.keywords if k.arg
             )
     out = []
+    honoured = set()
     entry = [p for p in [root / "__spark_entry__.py"] if p.exists()]
     for path in sorted((root / "cov_tiles_spark").rglob("*.py")) + entry:
         tree = ast.parse(path.read_text(encoding="utf-8"))
@@ -185,8 +223,12 @@ def unset_params(root: Path = ROOT) -> list[str]:
                     or (i is not None and n_pos.get(n, 0) > i)
                     for n in names
                 ):
-                    out.append(f"{path.relative_to(root)}:{fn.lineno} {fn.name}({arg})")
-    return out
+                    key = f"{path.relative_to(root)} {fn.name}({arg})"
+                    if key in seams:
+                        honoured.add(key)
+                    else:
+                        out.append(f"{path.relative_to(root)}:{fn.lineno} {fn.name}({arg})")
+    return out + [f"stale seam: {k}" for k in sorted(set(seams) - honoured)]
 
 
 def unread_params(root: Path = ROOT) -> list[str]:
@@ -332,7 +374,8 @@ def test_def_scan_follows_attribute_calls_into_methods(tmp_path):
 
 
 def test_every_defaulted_parameter_is_set_somewhere():
-    """A default no call overrides is a constant; inline it."""
+    """A default no call outside the tests overrides is a constant;
+    inline it, or list it in ``TEST_SEAMS`` with its reason."""
     assert unset_params() == []
 
 
@@ -348,7 +391,7 @@ def test_param_scan_flags_an_unset_default(tmp_path):
         ),
         "bench.py": "from cov_tiles_spark.mod import f, g\n\nf(1, 2)\ng(b=4)\n",
     })
-    assert unset_params(root) == ["cov_tiles_spark/mod.py:1 f(b)"]
+    assert unset_params(root, {}) == ["cov_tiles_spark/mod.py:1 f(b)"]
 
 
 def test_param_scan_covers_entry_defs(tmp_path):
@@ -362,30 +405,52 @@ def test_param_scan_covers_entry_defs(tmp_path):
             "def run():\n    return q_b(None, '', tol=4)\n"
         ),
     })
-    assert unset_params(root) == ["__spark_entry__.py:1 q_a(tol)"]
+    assert unset_params(root, {}) == ["__spark_entry__.py:1 q_a(tol)"]
 
 
 def test_param_scan_keeps_defaults_set_by_test_position_or_kw(tmp_path):
-    """A default set only by a test, only by position (a constructor's
+    """A default set only by a test is kept when it is a listed seam and
+    reported when it is not; one set only by position (a constructor's
     ``self`` takes none) or only through ``**kw`` is kept."""
     root = _tree(tmp_path, {
         "cov_tiles_spark/mod.py": (
             "def by_test(x, a=1):\n    return x + a\n\n\n"
+            "def seam(x, a=1):\n    return x + a\n\n\n"
             "def by_position(x, a=1):\n    return x + a\n\n\n"
             "def by_kw(x, a=1):\n    return x + a\n\n\n"
             "class Box:\n"
             "    def __init__(self, a=1):\n        self.a = a\n"
         ),
         "tests/test_mod.py": (
-            "from cov_tiles_spark.mod import by_test\n\n\n"
-            "def test_it():\n    assert by_test(1, a=2) == 3\n"
+            "from cov_tiles_spark.mod import by_test, seam\n\n\n"
+            "def test_it():\n    assert by_test(1, a=2) == seam(1, a=2) == 3\n"
         ),
         "bench.py": (
             "from cov_tiles_spark.mod import Box, by_kw, by_position\n\n"
             "by_position(1, 2)\nby_kw(1, **{'a': 2})\nBox(2)\n"
         ),
     })
-    assert unset_params(root) == []
+    seams = {"cov_tiles_spark/mod.py seam(a)": "a test lowers it"}
+    assert unset_params(root, seams) == ["cov_tiles_spark/mod.py:1 by_test(a)"]
+
+
+def test_param_scan_reports_stale_seams(tmp_path):
+    """A seam naming a def or parameter that is gone, or a parameter a
+    non-test call now sets, is reported, so the list cannot go stale."""
+    root = _tree(tmp_path, {
+        "cov_tiles_spark/mod.py": "def f(x, a=1):\n    return x + a\n",
+        "bench.py": "from cov_tiles_spark.mod import f\n\nf(1, a=2)\n",
+    })
+    seams = {
+        "cov_tiles_spark/mod.py f(a)": "now set by bench.py",
+        "cov_tiles_spark/mod.py f(b)": "parameter gone",
+        "cov_tiles_spark/mod.py g(a)": "def gone",
+    }
+    assert unset_params(root, seams) == [
+        "stale seam: cov_tiles_spark/mod.py f(a)",
+        "stale seam: cov_tiles_spark/mod.py f(b)",
+        "stale seam: cov_tiles_spark/mod.py g(a)",
+    ]
 
 
 def test_every_parameter_is_read():

@@ -299,24 +299,33 @@ def test_mvt_corrupt_fields_raise_value_error(feature, value):
 
 
 def test_mvt_varint_is_bounded_to_ten_bytes():
-    from cov_tiles_spark.covt.mvt import _read_varint
+    from cov_tiles_spark.covt.varint import decode_varint
 
-    assert _read_varint(bytes([0xFF] * 9 + [1]), 0) == (2**64 - 1, 10)
+    assert decode_varint(bytes([0xFF] * 9 + [1]), 0) == (2**64 - 1, 10)
     with pytest.raises(ValueError, match="longer than 10 bytes"):
-        _read_varint(bytes([0xFF] * 10 + [1]), 0)
+        decode_varint(bytes([0xFF] * 10 + [1]), 0)
     with pytest.raises(ValueError, match="buffer exhausted"):
-        _read_varint(bytes([0x80, 0x80]), 0)
+        decode_varint(bytes([0x80, 0x80]), 0)
     # a tile whose first field key is overlong
     with pytest.raises(ValueError, match="longer than 10 bytes"):
         decode_mvt(bytes([0x9A] + [0xFF] * 9 + [1]))
 
 
 def test_mvt_varint_agrees_with_the_shared_walk_and_writer():
-    """The MVT reader's varint and `varint.decode_varint` return the same
-    value and offset, or both raise ValueError, on random bytes; the
-    scalar writer matches the vectorized one."""
-    from cov_tiles_spark.covt.mvt import _read_varint
-    from cov_tiles_spark.covt.varint import decode_varint, encode_varint, encode_varints
+    """The MVT reader's single varint (`varint.decode_varint`) and the
+    shared walk return the same value and offset, or both raise
+    ValueError, on random bytes; the scalar writer matches the
+    vectorized one."""
+    from cov_tiles_spark.covt.varint import (
+        decode_varint,
+        encode_varint,
+        encode_varints,
+        walk_varints,
+    )
+
+    def walk_one(buf, offset):
+        (value,), offset = walk_varints(buf, 1, offset)
+        return value, offset
 
     def outcome(read, buf):
         try:
@@ -329,7 +338,7 @@ def test_mvt_varint_agrees_with_the_shared_walk_and_writer():
         buf = rng.integers(0, 256, int(rng.integers(1, 13)), dtype=np.uint8)
         buf[: int(rng.integers(0, len(buf) + 1))] |= 0x80  # long varints too
         buf = buf.tobytes()
-        assert outcome(_read_varint, buf) == outcome(decode_varint, buf), buf
+        assert outcome(decode_varint, buf) == outcome(walk_one, buf), buf
     for v in (0, 1, 127, 128, 300, 2**35 + 7, 2**63, 2**64 - 1):
         assert encode_varint(v) == encode_varints(np.array([v], dtype=np.uint64))
-        assert _read_varint(encode_varint(v), 0) == (v, len(encode_varint(v)))
+        assert decode_varint(encode_varint(v), 0) == (v, len(encode_varint(v)))

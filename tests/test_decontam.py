@@ -34,7 +34,7 @@ def test_planted_contamination_exact(spark):
     )
     out = {
         r.doc_id
-        for r in decontaminate(docs_df, bench_df, n=13)
+        for r in decontaminate(docs_df, bench_df)
         .filter("is_contaminated")
         .collect()
     }
@@ -53,7 +53,7 @@ def test_short_docs_and_case_normalization(spark):
     )
     out = {
         r.doc_id: r.is_contaminated
-        for r in decontaminate(docs_df, bench_df, n=13).collect()
+        for r in decontaminate(docs_df, bench_df).collect()
     }
     assert out == {0: False, 1: True}
 
@@ -85,6 +85,6 @@ def test_hash_table_shape(spark):
     docs_df = spark.createDataFrame(
         [(7, " ".join(f"x{i}" for i in range(20)))], "doc_id long, text string"
     )
-    rows = ngram_hash_table(docs_df, "text", "doc_id", n=13).collect()
+    rows = ngram_hash_table(docs_df, "text", "doc_id").collect()
     assert len(rows) == 8  # 20 - 13 + 1 distinct n-grams
     assert all(r.id == 7 for r in rows)

@@ -47,16 +47,6 @@ def _full(spark, corpus):
     }
 
 
-def _first_commit_ns(lake) -> int:
-    """Commit time of the payload table's first snapshot."""
-    return (
-        lake.manifests()
-        .filter(F.col("table") == "tiles")
-        .agg(F.min("committed_at_ns"))
-        .collect()[0][0]
-    )
-
-
 def _latest(lake):
     return {
         (r.z, r.x, r.y): bytes(r.payload)
@@ -104,16 +94,6 @@ def test_delta_runs(spark, lake):
     # and the latest-wins view equals a from-scratch recompute of v2
     assert _latest(lake) == _full(spark, v2)
 
-    # time travel still shows the v1 payloads before the second commit
-    t_v1 = _first_commit_ns(lake)
-    old = {
-        (r.z, r.x, r.y): bytes(r.payload)
-        for r in lake.read_table(
-            "tiles", as_of_ns=t_v1, latest_only=True
-        ).collect()
-    }
-    assert old == _full(spark, v1)
-
 
 def _corpus_rows(spark, rows):
     return spark.createDataFrame(
@@ -127,10 +107,9 @@ def _corpus_rows(spark, rows):
 def test_delta_removes_vanished_tiles(spark, lake, buckets):
     """A tile whose input rows all disappear must drop out of the
     latest-wins view (bucket rewrite, or bucket tombstone once the
-    bucket empties), and time travel keeps the old payload."""
+    bucket empties)."""
     v1 = _corpus(spark)
     delta_materialize(lake, v1, ZOOMS, partition_buckets=buckets)
-    t_v1 = _first_commit_ns(lake)
 
     # keep only a lone record in one corner of the world: every other
     # tile's inputs vanish entirely
@@ -150,14 +129,6 @@ def test_delta_removes_vanished_tiles(spark, lake, buckets):
     assert {r.table for r in tombs} == {"tiles"}
     assert len({r.snapshot_id for r in tombs}) == 1
     assert sorted(r.partition_key for r in tombs) == sorted(emptied)
-    # time travel before the deletion still shows v1
-    old = {
-        (r.z, r.x, r.y): bytes(r.payload)
-        for r in lake.read_table(
-            "tiles", as_of_ns=t_v1, latest_only=True
-        ).collect()
-    }
-    assert old == _full(spark, v1)
 
     # resurrection: the same corpus returns — the buckets were
     # tombstoned, so the tiles read as NEW and re-encode (not wrongly "unchanged")

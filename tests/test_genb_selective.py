@@ -1,5 +1,5 @@
-"""Selective (projected) gen-B decode: layer- and column-level pruning
-pushed INTO the tile payload.
+"""Selective (projected) gen-B decode: column-level pruning pushed INTO
+the tile payload.
 
 Every stream's byte length is in the column metadata, so the decoder can
 jump unselected data instead of parsing it — the lazy-parse scan shape
@@ -13,7 +13,6 @@ from __future__ import annotations
 import glob
 
 import numpy as np
-import pytest
 
 from cov_tiles_spark.covt.genb import decode_tile_genb, encode_tile_genb
 
@@ -46,69 +45,46 @@ def _three_layer_tile() -> tuple[bytes, dict]:
     return encode_tile_genb([_mixed_layer(), _line_layer(), _poly_layer()])
 
 
-def _assert_layer_pruned_decode_matches_full(payload, tj) -> int:
-    """Decode each layer alone and compare it with the full decode;
-    returns the number of layers checked."""
+def _assert_column_pruned_decode_matches_full(payload, tj) -> int:
+    """Decode geometry alone, then each property alone, and compare
+    with the full decode; returns the number of properties checked."""
     full = decode_tile_genb(payload, tj)
+    # geometry-only read: no ids, no properties decoded
+    geo_tile = decode_tile_genb(payload, tj, columns={"geometry"})
+    checked_props = 0
     for lname, flay in full.items():
-        only = decode_tile_genb(payload, tj, layers={lname})
-        assert set(only) == {lname}
-        lay = only[lname]
+        geo = geo_tile[lname]
         assert np.array_equal(
-            np.asarray(lay.geometry.vertex_buffer),
+            np.asarray(geo.geometry.vertex_buffer),
             np.asarray(flay.geometry.vertex_buffer),
         )
-        if flay.ids is None:
-            assert lay.ids is None
-        else:
-            assert np.array_equal(lay.ids, flay.ids)
-        assert set(lay.properties) == set(flay.properties)
+        assert geo.ids is None and geo.properties == {}
+        # column metadata stays complete even under pruning
+        assert [c.name for c in geo.metadata.columns] == [
+            c.name for c in flay.metadata.columns
+        ]
+        # single-property read (no geometry): exact per column
         for pname, pc in flay.properties.items():
-            assert _props_equal(lay.properties[pname], pc), (lname, pname)
-    return len(full)
+            one = decode_tile_genb(payload, tj, columns={pname})[lname]
+            assert one.geometry is None
+            assert set(one.properties) == {pname}
+            assert _props_equal(one.properties[pname], pc), (lname, pname)
+            checked_props += 1
+    return checked_props
 
 
-def test_layer_pruned_decode_matches_full_on_self_built_tile():
-    assert _assert_layer_pruned_decode_matches_full(*_three_layer_tile()) == 3
-
-
-def test_layer_pruned_decode_matches_full_on_reference_snapshot():
-    if not OMT:
-        pytest.skip("reference snapshot absent")
-    checked = sum(
-        _assert_layer_pruned_decode_matches_full(payload, tj)
-        for payload, tj in _encode_omt_tiles()
-    )
-    assert checked >= len(OMT)
+def test_column_pruned_decode_matches_full_on_self_built_tile():
+    """A single-property read skips the other properties' streams
+    (implicit present streams included) and every layer's id and
+    geometry streams, so each skip must land the cursor exactly."""
+    assert _assert_column_pruned_decode_matches_full(*_three_layer_tile()) > 0
 
 
 def test_column_pruned_decode_matches_full_on_reference_tiles():
-    checked_props = 0
-    for payload, tj in _encode_omt_tiles():
-        full = decode_tile_genb(payload, tj)
-        for lname, flay in full.items():
-            # geometry-only read: no ids, no properties decoded
-            geo = decode_tile_genb(
-                payload, tj, layers={lname}, columns={"geometry"}
-            )[lname]
-            assert np.array_equal(
-                np.asarray(geo.geometry.vertex_buffer),
-                np.asarray(flay.geometry.vertex_buffer),
-            )
-            assert geo.ids is None and geo.properties == {}
-            # column metadata stays complete even under pruning
-            assert [c.name for c in geo.metadata.columns] == [
-                c.name for c in flay.metadata.columns
-            ]
-            # single-property read (no geometry): exact per column
-            for pname, pc in flay.properties.items():
-                one = decode_tile_genb(
-                    payload, tj, layers={lname}, columns={pname}
-                )[lname]
-                assert one.geometry is None
-                assert set(one.properties) == {pname}
-                assert _props_equal(one.properties[pname], pc), (lname, pname)
-                checked_props += 1
+    checked_props = sum(
+        _assert_column_pruned_decode_matches_full(payload, tj)
+        for payload, tj in _encode_omt_tiles()
+    )
     assert checked_props > 50  # omt tiles are property-rich
 
 
@@ -125,9 +101,7 @@ def test_localized_follower_forces_leader_dictionary():
                 if ":" in p and pc.dictionary is not None
             ]
             for pname in followers[:3]:
-                one = decode_tile_genb(
-                    payload, tj, layers={lname}, columns={pname}
-                )[lname]
+                one = decode_tile_genb(payload, tj, columns={pname})[lname]
                 assert set(one.properties) == {pname}
                 assert _props_equal(one.properties[pname], flay.properties[pname])
                 found += 1
@@ -141,9 +115,7 @@ def test_selective_decode_under_pfor_and_id_selection():
     payload, tj, _nl, _nf = mvt_to_genb(mvt)
     full = decode_tile_genb(payload, tj)
     for lname, flay in full.items():
-        ids_only = decode_tile_genb(payload, tj, layers={lname}, columns={"id"})[
-            lname
-        ]
+        ids_only = decode_tile_genb(payload, tj, columns={"id"})[lname]
         if flay.ids is None:
             assert ids_only.ids is None
         else:

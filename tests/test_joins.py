@@ -47,22 +47,6 @@ def test_bbox_join_matches_bruteforce(spark):
     assert len(expected) > 100  # non-trivial overlap
 
 
-def test_bbox_join_left_keeps_unmatched_points(spark):
-    pts = spark.createDataFrame(
-        [(0, 10.0, 10.0), (1, 100.0, -50.0)],
-        "point_id long, lon double, lat double",
-    )
-    boxes = spark.createDataFrame(
-        [(7, 9.0, 11.0, 9.0, 11.0)],
-        "box_id long, lon_min double, lon_max double, lat_min double, lat_max double",
-    )
-    out = bbox_join(pts, boxes, zoom=4, how="left").collect()
-    assert len(out) == 2
-    by_pt = {r.point_id: r for r in out}
-    assert by_pt[0].box_id == 7
-    assert by_pt[1].box_id is None
-
-
 def test_asof_join_matches_bruteforce(spark):
     rng = np.random.default_rng(5)
     lefts, rights = [], []

@@ -184,39 +184,6 @@ def test_clustered_layout_skips_row_groups(spark, tmp_path):
     assert c_touch / c_total < 0.35, (c_touch, c_total)
 
 
-def test_hot_key_tiebreak_splits_straggler(spark, tmp_path):
-    """90% of rows at ONE location: without a tiebreaker the hot hkey
-    rides a single range task; with one it splits, and the scan result
-    is identical."""
-    n = 20000
-    hot = spark.range(n).select(
-        F.col("id").alias("pid"),
-        F.when(F.col("id") % 10 < 9, F.lit(2.05)).otherwise(
-            (((F.col("id") * 9973) % 3600) / 10.0 - 180.0 + 0.05)
-        ).alias("lon"),
-        F.when(F.col("id") % 10 < 9, F.lit(48.05)).otherwise(
-            (((F.col("id") * 7919) % 1600) / 10.0 - 80.0 + 0.05)
-        ).alias("lat"),
-    )
-    path = str(tmp_path / "hot")
-    cluster_write(hot, path, bits=BITS, prefix_bits=PREFIX_BITS,
-                  n_partitions=8, tiebreak_col="pid")
-    import glob
-    # the hot directory holds ~18k rows but was written by multiple
-    # range tasks — every file stays well under the full hot count
-    hot_dir_files = max(
-        (glob.glob(f"{d}/*.parquet") for d in glob.glob(f"{path}/{PREFIX_COL}=*")),
-        key=len,
-    )
-    assert len(hot_dir_files) >= 4, len(hot_dir_files)
-    got = (
-        bbox_scan(spark, path, (2.0, 48.0, 2.1, 48.1),
-                  bits=BITS, prefix_bits=PREFIX_BITS)
-        .count()
-    )
-    assert got == sum(1 for i in range(n) if i % 10 < 9)
-
-
 def test_degenerate_bbox_rejected():
     with pytest.raises(ValueError):
         bbox_cover((10.0, 0.0, -10.0, 5.0))

@@ -506,22 +506,6 @@ class TestSampling:
             ),
         )
 
-    def test_hash_sample_deterministic_and_rate(self, spark):
-        from cov_tiles_spark.operators.sampling import hash_sample
-
-        df = self._docs(spark)
-        a = sorted(r.doc_id for r in hash_sample(df, 0.3, "doc_id").collect())
-        b = sorted(
-            r.doc_id
-            for r in hash_sample(df.repartition(13), 0.3, "doc_id").collect()
-        )
-        assert a == b  # partitioning-independent
-        assert abs(len(a) / 4000 - 0.3) < 0.05  # binomial tolerance
-        c = sorted(
-            r.doc_id for r in hash_sample(df, 0.3, "doc_id", seed=1).collect()
-        )
-        assert a != c  # seed changes the draw
-
     def test_stratified_rates(self, spark):
         from cov_tiles_spark.operators.sampling import stratified_sample
 
@@ -573,19 +557,22 @@ class TestSampling:
         (negative keys were kept at EVERY rate), and different seeds must
         draw near-independent samples (the old post-multiply additive
         seed made every seed a rotation of one ordering: 99%+ overlap)."""
-        from cov_tiles_spark.operators.sampling import hash_sample
+        from cov_tiles_spark.operators.sampling import sample_hash, threshold
+
+        def hash_sample(df, rate, seed=0):
+            return df.filter(sample_hash(F.col("doc_id"), seed) < threshold(rate))
 
         neg = spark.range(-2000, 2000).select(F.col("id").alias("doc_id"))
-        kept = hash_sample(neg, 0.25, "doc_id").collect()
+        kept = hash_sample(neg, 0.25).collect()
         neg_kept = sum(1 for r in kept if r.doc_id < 0)
         assert 0 < neg_kept < 2000  # sampled, not all-kept / all-dropped
         assert abs(len(kept) / 4000 - 0.25) < 0.05
-        zero_rate = hash_sample(neg, 0.0, "doc_id").count()
+        zero_rate = hash_sample(neg, 0.0).count()
         assert zero_rate == 0
 
         df = spark.range(4000).select(F.col("id").alias("doc_id"))
-        a = {r.doc_id for r in hash_sample(df, 0.4, "doc_id", seed=0).collect()}
-        b = {r.doc_id for r in hash_sample(df, 0.4, "doc_id", seed=1).collect()}
+        a = {r.doc_id for r in hash_sample(df, 0.4, seed=0).collect()}
+        b = {r.doc_id for r in hash_sample(df, 0.4, seed=1).collect()}
         # independent draws overlap ~rate^2 * n / |a| = rate;
         # allow wide tolerance but rule out rotation (overlap ~= 1)
         overlap = len(a & b) / max(len(a), 1)

@@ -148,7 +148,7 @@ def test_pack_bins_partitioning_independent(docs):
         tuple(r)
         for r in pack_bins(
             docs.repartition(13), "doc_id", "n_tokens", max_len=96,
-            num_shards=8, partitions=3,
+            num_shards=8,
         ).collect()
     )
     assert a == b

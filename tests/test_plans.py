@@ -54,13 +54,6 @@ def test_small_dim_join_broadcasts(spark, lineitem):
     assert "BroadcastHashJoin" in _plan(j)
 
 
-def test_hash_sample_is_map_only(lineitem):
-    from cov_tiles_spark.operators.sampling import hash_sample
-
-    plan = _plan(hash_sample(lineitem, 0.1, "l_orderkey"))
-    assert "Exchange" not in plan  # a sample must never shuffle
-
-
 def test_bloom_prefilter_is_map_side(spark, lineitem):
     from cov_tiles_spark.operators.bloomjoin import bloom_filter_rows, build_bloom
 

@@ -196,15 +196,13 @@ def test_ann_recall_monotone_in_nprobe_and_shortlist(spark):
         prev = rec
 
 
-def test_candidate_ids_match_topk_membership_per_order_round(spark):
-    """pq_candidate_ids(order_round=r) admits exactly pq_topk(order_round=r)'s
-    ids, on a corpus with exact score ties and k < |corpus|, where the
-    rounded and raw keys cut the top-k at different ids.
+def test_candidate_ids_match_topk_membership(spark):
+    """pq_candidate_ids admits exactly pq_topk's ids, on a corpus with
+    exact score ties and k < |corpus|, so the id tiebreak decides the
+    cut.
 
     Scores are 0.04 * code for code 0..15 (one live subspace), and id i
-    has code i % 16, so every score is held by three ids. Rounded to one
-    decimal, adjacent codes tie (0.56 and 0.6 both round to 0.6) and the
-    id tiebreak then admits lower-scored ids than the raw key does."""
+    has code i % 16, so every score is held by three ids."""
     from cov_tiles_spark.operators.pq import pq_candidate_ids
 
     cb = np.zeros((M, 1 << NBITS, SUB))
@@ -215,10 +213,9 @@ def test_candidate_ids_match_topk_membership_per_order_round(spark):
         "vec_id long, pq_code array<int>",
     )
     k = 10
-    got = {}
-    for r in (None, 1):
-        topk = {x.id for x in pq_topk(enc, "vec_id", q, k, cb, order_round=r).collect()}
-        cand = [x.id for x in pq_candidate_ids(enc, "vec_id", q, k, cb, order_round=r).collect()]
-        assert len(cand) == k and set(cand) == topk, r
-        got[r] = topk
-    assert got[None] != got[1]  # the two keys really cut at different ids
+    topk = {x.id for x in pq_topk(enc, "vec_id", q, k, cb).collect()}
+    cand = [x.id for x in pq_candidate_ids(enc, "vec_id", q, k, cb).collect()]
+    assert len(cand) == k and set(cand) == topk
+    # the three ids each of codes 15, 14 and 13, then the lowest id of
+    # code 12: the tie at the cut goes to the smaller id
+    assert topk == {15, 31, 47, 14, 30, 46, 13, 29, 45, 12}

@@ -56,47 +56,3 @@ def test_rollup_equals_direct_with_cap(spark):
     direct = _payload_map(_direct(spark, imgs, [2, 3, 4, 5, 6], cap=40))
     assert roll == direct
     imgs.unpersist()
-
-
-def test_rollup_skip_levels(spark):
-    imgs = images_df(spark, 1200, partitions=8).persist()
-    roll = _payload_map(
-        materialize_pyramid(
-            imgs,
-            2,
-            6,
-            max_features_per_tile=30,
-            with_mvt_baseline=False,
-            encode_zooms=[2, 4, 6],
-        )
-    )
-    direct = _payload_map(_direct(spark, imgs, [2, 4, 6], cap=30))
-    # skip levels are capped but not encoded; encoded levels still match
-    assert roll == direct
-    imgs.unpersist()
-
-
-def test_rollup_genb(spark):
-    imgs = images_df(spark, 600, partitions=4).persist()
-    roll = _payload_map(
-        materialize_pyramid(
-            imgs, 3, 5, max_features_per_tile=25,
-            with_mvt_baseline=False, wire_format="genb",
-        )
-    )
-    direct = _payload_map(
-        encode_assigned(
-            assign_tiles(
-                imgs.select(
-                    "image_id", "caption", "fmt", "w", "h", "phash", "lon", "lat"
-                ),
-                [3, 4, 5],
-            ),
-            max_features_per_tile=25,
-            with_mvt_baseline=False,
-            wire_format="genb",
-            sample_key=F.xxhash64("image_id"),
-        )
-    )
-    assert roll == direct
-    imgs.unpersist()

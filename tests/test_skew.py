@@ -30,11 +30,3 @@ def test_salted_join_matches_plain_join(spark):
     assert salted.count() == plain.count() == 5_000
     assert salted.exceptAll(plain).count() == 0
     assert plain.exceptAll(salted).count() == 0
-
-
-def test_salted_join_left_keeps_unmatched(spark):
-    big = _hot_corpus(spark, 1_000)
-    small = spark.range(1).select(F.col("id").alias("k"), F.lit("hot").alias("tag"))
-    out = salted_join(big, small, ["k"], factor=4, salt_from="row_id", how="left")
-    assert out.count() == 1_000
-    assert out.filter(F.col("tag").isNull()).count() == 100  # the 10% non-hot

@@ -39,7 +39,7 @@ def test_windowed_tile_counts_with_watermark(spark, tmp_path):
         [(t(1), 10.0, 10.0), (t(2), 10.0, 10.0), (t(11), 10.0, 10.0)],
         schema, mtime=1_700_000_000,
     )
-    # batches 2+3: advance the watermark to 10:54. Two advancing batches
+    # batches 2+3: advance the watermark to 10:49. Two advancing batches
     # because Spark >= 3.4 tracks two watermarks — late-record filtering
     # uses the PREVIOUS batch's value (so chained stateful operators stay
     # consistent), eviction uses the current one — so a record is only
@@ -67,8 +67,7 @@ def test_windowed_tile_counts_with_watermark(spark, tmp_path):
         .parquet(f"{landing}/*")
     )
     q = (
-        tile_counts_windowed(stream, zoom=4, window_duration="10 minutes",
-                             watermark="5 minutes")
+        tile_counts_windowed(stream, zoom=4, window_duration="10 minutes")
         .writeStream.format("memory").queryName("win_counts")
         .outputMode("append")
         .option("checkpointLocation", ckpt)

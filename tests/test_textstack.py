@@ -9,9 +9,6 @@ from pyspark.sql import functions as F
 from cov_tiles_spark.pipeline.textstack import prepare_text_corpus
 
 BOILER = "click accept to agree to our cookie policy terms now please"
-BODY = "the quick brown fox jumps over the lazy dog near the river bank today"
-EVAL = ("eval sentence alpha beta gamma delta epsilon zeta eta theta "
-        "iota kappa lambda mu")
 
 
 def _corpus(spark):
@@ -30,8 +27,6 @@ def _corpus(spark):
         (4, f"unique four words lead {BOILER}"),
         (5, f"other five words start {BOILER} plus a tail that keeps "
             "this document well above the floor"),
-        # 6: contaminated (contains an eval 13-gram)
-        (6, f"prefix words here then {EVAL}"),
         # 7: too short -> dropped entirely at cleaning
         (7, "tiny doc here"),
     ]
@@ -42,21 +37,17 @@ def _corpus(spark):
 class TestPrepareTextCorpus:
     def test_composed_stack(self, spark):
         docs = _corpus(spark)
-        eval_set = spark.createDataFrame(
-            [(900, EVAL)], "doc_id long, text string",
-        )
         out = prepare_text_corpus(
             docs, "text", "doc_id",
             min_words_per_line=4,
             span_k=6,
             min_tokens_after_dedup=8,
             minhash_threshold=0.9,
-            eval_set=eval_set,
         )
         rows = {r["doc_id"]: r for r in out.collect()}
-        # doc 7 dropped (too short), doc 6 dropped (contaminated),
-        # exactly one of 2/3 survives (canonical = min id)
-        assert 7 not in rows and 6 not in rows
+        # doc 7 dropped (too short), exactly one of 2/3 survives
+        # (canonical = min id)
+        assert 7 not in rows
         assert 2 in rows and 3 not in rows
         # doc 4 keeps the boilerplate (min-(doc,pos) keeper), doc 5 lost
         # it but survives on its tail
@@ -67,42 +58,9 @@ class TestPrepareTextCorpus:
         assert rows[1]["text"].startswith("red orange")
         # decision columns present
         assert set(out.columns) == {
-            "doc_id", "text", "n_tokens", "cluster", "quality", "log_ppl"
+            "doc_id", "text", "n_tokens", "cluster", "quality"
         }
-        assert (docs.count(), out.count()) == (7, 4)
-
-    def test_lm_and_sampling_stages(self, spark):
-        docs = spark.createDataFrame(
-            [(i, f"{BODY} filler number {i % 3} words") for i in range(40)]
-            + [(100, "zz yy xx ww vv uu tt ss rr qq pp oo nn mm ll kk")],
-            "doc_id long, text string",
-        )
-        lm_train = spark.createDataFrame(
-            [(0, BODY), (1, f"{BODY} filler number words")],
-            "doc_id long, text string",
-        )
-        out = prepare_text_corpus(
-            docs, "text", "doc_id",
-            min_words_per_line=2,
-            span_k=50,              # no span cuts: k longer than any doc
-            min_tokens_after_dedup=2,
-            minhash_threshold=0.95,
-            lm_train=lm_train,
-            max_log_ppl=6.0,
-        )
-        ids = {r["doc_id"] for r in out.collect()}
-        # the OOV gibberish doc scores ~log10(1/(0.4*eps)) ~ 10.4 > 6
-        assert 100 not in ids
-        assert len(ids) > 0
-        # deterministic sampling subsets the survivors
-        sampled = prepare_text_corpus(
-            docs, "text", "doc_id",
-            min_words_per_line=2, span_k=50, min_tokens_after_dedup=2,
-            minhash_threshold=0.95, lm_train=lm_train, max_log_ppl=6.0,
-            sample_rate=0.5, sample_seed=7,
-        )
-        sids = {r["doc_id"] for r in sampled.collect()}
-        assert sids < ids and len(sids) > 0
+        assert (docs.count(), out.count()) == (6, 4)
 
     def test_runs_on_testdata_slice(self, spark):
         docs = (
